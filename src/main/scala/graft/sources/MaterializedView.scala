@@ -219,21 +219,25 @@ object MaterializedView {
   def read(spark: SparkSession, v: IncrementalView): DataFrame =
     SnapshotTable.read(spark, v.viewRoot)
 
-  /** Refresh by DELTA when possible: aggregate only the rows
-    * `SnapshotTable.diff` reports changed since the last consumed
-    * source version (insertions count +1, deletions -1), join the
-    * signed delta onto the materialized rollup, and commit the merged
-    * result. With the manifest-based snapshot log the delta READ is
-    * O(changed files) too — for an append-only source the refresh
-    * scans exactly the new batch's files, never the table (the
-    * `graft_mv_delta` observation surfaces the consumed row count so
-    * the spec can pin that property). The join is NULL-SAFE on the
-    * group keys (a NULL key is one group, and an equality join would
-    * orphan it into duplicate rows). Groups whose row count reaches
-    * zero are dropped. No-ops (view already at the source's version)
-    * return without committing. Falls back to a full recompute on
-    * first refresh or when the previously-consumed source version has
-    * been expired.
+  /** Refresh by DELTA when possible: aggregate only the source's
+    * change rows since the last consumed source version (insertions
+    * count +1, deletions -1; see [[signedRows]]), join the signed delta
+    * onto the materialized rollup, and commit the merged result. With
+    * the manifest-based snapshot log the delta READ is O(changed files)
+    * too — for an append-only source the refresh scans exactly the new
+    * batch's files, never the table. The `graft_mv_delta` observation
+    * surfaces the signed rows consumed, so the spec can pin that
+    * property: on an append-only range, the rows added; on a
+    * copy-on-write range of a COUNT/SUM/AVG view, the rows of the added
+    * files plus the rows of the removed files (a row a rewrite carried
+    * over counts twice, once per sign); on a MIN/MAX/NDV view or a
+    * merge-on-read range, the rows `SnapshotTable.diff` reports. The
+    * join is NULL-SAFE on the group keys (a NULL key is one group, and
+    * an equality join would orphan it into duplicate rows). Groups
+    * whose row count reaches zero are dropped. No-ops (view already at
+    * the source's version) return without committing. Falls back to a
+    * full recompute on first refresh or when the previously-consumed
+    * source version has been expired.
     *
     * Concurrency: the merged rollup is DERIVED from a specific view
     * version, so it commits via the CAS primitive — if another refresh
@@ -259,10 +263,8 @@ object MaterializedView {
       SnapshotTable.versions(spark, v.sourceRoot).contains(lastV)
     if (!canDelta) return refresh(spark, asView(v))
 
-    val delta = SnapshotTable.diff(spark, v.sourceRoot, lastV, curV)
+    val delta = signedRows(spark, v, lastV, curV)
       .observe("graft_mv_delta", count(lit(1)).as("delta_rows"))
-      .withColumn("__sign",
-        when(col("change_type") === "inserted", lit(1L)).otherwise(lit(-1L)))
     val (merged, cleanup) = incrDeltaFrame(spark, v, viewCur, delta, curV)
     val viewV =
       try SnapshotTable.commitExpecting(spark, v.viewRoot, merged,
@@ -277,6 +279,18 @@ object MaterializedView {
     writeFreshness(spark, v.viewRoot, curV, viewV)
     viewV
   }
+
+  /** The source's change rows from `from` to `to`, signed `__sign` =
+    * +1 (inserted) / -1 (deleted) — what both the committing refresh
+    * and [[readFresh]] fold in. A view of COUNT/SUM/AVG only takes the
+    * signed file delta on a copy-on-write range (rows a rewrite carried
+    * over appear at +1 and -1 and cancel in the aggregates); MIN/MAX
+    * and NDV views, which cannot cancel, take the exact `diff` rows.
+    * See [[SnapshotTable.signedChanges]]. */
+  private def signedRows(spark: SparkSession, v: IncrementalView,
+      from: Long, to: Long): DataFrame =
+    SnapshotTable.signedChanges(spark, v.sourceRoot, from, to,
+      exact = v.nonInvertible)
 
   /** Signed rows (`__sign` = +1 insert / -1 retract) → the keyed delta
     * rollup the merge consumes. Delta keys are renamed (`__dk_`) so the
@@ -458,7 +472,6 @@ object MaterializedView {
     * the view was never refreshed or its consumed version has been
     * expired (both still commit-free). */
   def readFresh(spark: SparkSession, v: IncrementalView): DataFrame = {
-    import org.apache.spark.sql.functions._
     val viewCur = SnapshotTable.currentVersion(spark, v.viewRoot)
     val lastV =
       if (viewCur == 0L) 0L
@@ -470,11 +483,8 @@ object MaterializedView {
       SnapshotTable.versions(spark, v.sourceRoot).contains(lastV)
     if (!canDelta)
       return rollup(SnapshotTable.readVersion(spark, v.sourceRoot, curV), v)
-    val delta = SnapshotTable.diff(spark, v.sourceRoot, lastV, curV)
-      .withColumn("__sign",
-        when(col("change_type") === "inserted", lit(1L))
-          .otherwise(lit(-1L)))
-    val (merged, cleanup) = incrDeltaFrame(spark, v, viewCur, delta, curV)
+    val (merged, cleanup) = incrDeltaFrame(spark, v, viewCur,
+      signedRows(spark, v, lastV, curV), curV)
     // the caller scans the result at an unknown later time, so the
     // delta cache can't wait for them: materialize the (view-sized,
     // bounded) frame NOW via localCheckpoint — its RDD blocks are
@@ -490,7 +500,7 @@ object MaterializedView {
     * table's commit log, and each micro-batch (one or more newly
     * committed versions) triggers one [[refreshIncremental]]. The
     * batch CONTENT is only the wake signal — the refresh derives its
-    * own signed delta from `SnapshotTable.diff`. Per tick the work is
+    * own signed delta from the source's file delta. Per tick the work is
     * O(changed files): the stream reads the added files, the diff
     * reads the changed files, the CAS-refresh merges a delta-sized
     * rollup. Checkpointed: a restart resumes from the consumed source

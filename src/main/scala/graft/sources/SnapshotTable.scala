@@ -860,13 +860,14 @@ object SnapshotTable {
           val attempt = if (tc == null) 0L else tc.taskAttemptId()
           val fsys = new Path(segStr).getFileSystem(hc.value.value)
           // one open file at a time; maxRecordsPerFile rolls to
-          // "-fNNN"-suffixed siblings (zero-padded, so name order
-          // stays ascending-key order within the sorted partition).
+          // "-fNNNNNNNNNN"-suffixed siblings, zero-padded to the width
+          // of any Int, so name order stays ascending-key order within
+          // the sorted partition however many files a task rolls.
           // The unlimited default keeps the suffix-free name.
           final class FAcc(n: Int) {
             val name =
               if (maxRecs <= 0) f"part-$pid%05d-$attempt.snappy.parquet"
-              else f"part-$pid%05d-$attempt-f$n%03d.snappy.parquet"
+              else f"part-$pid%05d-$attempt-f$n%010d.snappy.parquet"
             val path = new Path(segStr, name)
             val writer = connector.GraftDataWriter.nativeWriter(path,
               taskSchema, pconf, Some(hc.value.value))
@@ -958,6 +959,10 @@ object SnapshotTable {
         // old path's output committer) already had
         fs(spark, root).delete(seg, true)
         throw e
+    } finally {
+      // the job has ended either way: release the conf broadcast now
+      // rather than leave one per commit to the context cleaner
+      hc.destroy()
     }
     if (stats.isEmpty) {
       // an all-empty batch: df.write.parquet leaves one empty file so
@@ -4328,6 +4333,15 @@ object SnapshotTable {
     * file of a clustered table). The new segment is re-clustered on
     * `key` so stats stay tight for the next merge.
     *
+    * The distinct non-NULL update keys are collected ONCE when there
+    * are at most [[MaxBloomProbeKeys]] of them ([[probeFiles]]): the
+    * touched files are then classified on the driver and the replaced
+    * rows dropped by a membership filter on the collected keys, with no
+    * further job for either. A larger key set keeps the broadcast-join
+    * classification and anti-joins the key frame itself. Rows with a
+    * NULL key never replace anything (equality semantics): a NULL-keyed
+    * update row is appended, a NULL-keyed table row is kept.
+    *
     * Concurrency: the result is derived FROM a specific version and
     * committed with [[commitExpecting]] semantics — if another commit
     * lands first, the derivation is thrown away and re-derived against
@@ -4359,8 +4373,12 @@ object SnapshotTable {
           priorSchemaOrRead(spark, root, cur, priorSchema),
           updates.schema)
         val (tombs, dataEntries) = prior.partition(_.kind == "t")
-        val (touched, carriedData) =
-          touchedFiles(spark, root, dataEntries, updates, key)
+        // NULL keys match nothing (the anti join is an equality join),
+        // so only the non-NULL update keys classify and replace
+        val keys = updates.select(updates(key))
+          .filter(col(key).isNotNull).distinct()
+        val (touched, carriedData, probes) =
+          probeFiles(spark, root, dataEntries, keys, key)
         val carried = carriedData ++ tombs
         val rewritten =
           if (touched.isEmpty) updates
@@ -4369,11 +4387,16 @@ object SnapshotTable {
             // copy-on-write merge after merge-on-read commits cannot
             // resurrect deleted rows; allowMissingColumns lets an
             // evolving batch union with pre-evolution files (absent
-            // columns land as NULL, matching the read path)
+            // columns land as NULL, matching the read path). A
+            // collected key set drops the replaced rows with a
+            // membership filter — no job, where the anti join would
+            // evaluate or broadcast the key set again; `<=> true` keeps
+            // NULL-keyed rows, as the equality anti join does
             val existing = readEntries(spark, root, touched ++ tombs,
               priorSchema)
-            existing.join(updates.select(updates(key)).distinct(),
-              Seq(key), "left_anti")
+            probes.fold(existing.join(keys, Seq(key), "left_anti"))(p =>
+              existing.filter(
+                !(existing(key).isin(p.toSeq: _*) <=> lit(true))))
               .unionByName(updates, allowMissingColumns = true)
           }
         // size the rewritten segment by its input bytes, with `files`
@@ -4946,29 +4969,91 @@ object SnapshotTable {
     * Cost is O(CHANGED FILES), never O(table): rows in files shared by
     * both manifests are bit-identical and cancel by construction, so
     * only the files added/removed between the versions are read at
-    * all. For append-only history the removed set is empty and the
-    * diff is literally "read the new files" — one scan of the batch,
-    * zero joins, the access pattern Iceberg calls incremental scan. */
+    * all ([[fileDelta]]). For append-only history the removed set is
+    * empty and the diff is literally "read the new files" — one scan of
+    * the batch, zero joins, the access pattern Iceberg calls
+    * incremental scan. When files were both added and removed (a
+    * copy-on-write MERGE rewrote some), rows carried through the
+    * rewrite are cancelled exactly by an `exceptAll` pair — two
+    * shuffles over the rewritten files. A consumer whose aggregate is
+    * invertible does not need that cancellation: see [[signedChanges]]. */
   def diff(spark: SparkSession, root: String, from: Long, to: Long)
-  : DataFrame = {
-    import org.apache.spark.sql.functions.lit
+  : DataFrame = diffOf(spark, root, fileDelta(spark, root, from, to))
+
+  /** The file-level change between two committed versions: both
+    * manifests, the files `to` added and the files it dropped, and the
+    * schema both legs read under. Metadata only. The read schema is the
+    * UNION of the two versions' schemas: TO alone would project away
+    * FROM-only columns (backward diffs, replacing commits that dropped a
+    * column) and silently cancel rows whose only change was in the
+    * dropped column. evolveSchema is the union with the type-conflict
+    * guard built in. */
+  private final case class FileDelta(to: Long, a: Seq[FileEntry],
+      b: Seq[FileEntry], added: Seq[FileEntry], removed: Seq[FileEntry],
+      readSchema: Option[StructType]) {
+    /** A tombstone changes the LIVE rows of files both manifests
+      * share, so the bare file delta does not describe such a range. */
+    def hasTombstones: Boolean = (a ++ b).exists(_.kind == "t")
+  }
+
+  private def fileDelta(spark: SparkSession, root: String, from: Long,
+      to: Long): FileDelta = {
     val (a, fromSchema) = readManifestFull(spark, root, from)
     val (b, toSchema) = readManifestFull(spark, root, to)
-    // both legs read under the UNION of the two schemas: TO alone
-    // would project away FROM-only columns (backward diffs, replacing
-    // commits that dropped a column) and silently cancel rows whose
-    // only change was in the dropped column. evolveSchema is the union
-    // with the type-conflict guard built in.
     val readSchema = (fromSchema, toSchema) match {
       case (Some(f), Some(t)) => Some(evolveSchema(f, t))
       case (f, t) => f.orElse(t)
     }
+    val aPaths = a.map(_.path).toSet
+    val bPaths = b.map(_.path).toSet
+    FileDelta(to, a, b, b.filterNot(e => aPaths.contains(e.path)),
+      a.filterNot(e => bPaths.contains(e.path)), readSchema)
+  }
+
+  /** The change rows between two committed versions, each signed
+    * `__sign` = +1 (inserted) / -1 (deleted): the input an incremental
+    * COUNT/SUM view folds into its rollup.
+    *
+    * With `exact = false` and no tombstone in either manifest, the rows
+    * are the SIGNED FILE DELTA: every row of an added file at +1 and
+    * every row of a removed file at -1, with no cancellation. A row a
+    * copy-on-write commit carried through a rewrite appears once in
+    * each leg, so it nets to zero in any invertible aggregate (COUNT,
+    * DECIMAL SUM, non-NULL counts) — exactly, since the two copies are
+    * the same value — and the two `exceptAll` shuffles [[diff]] spends
+    * on cancelling it are skipped. On an append-only range the rows are
+    * the added files' rows, the same scan [[diff]] plans.
+    *
+    * Otherwise (`exact = true` for non-invertible aggregates such as
+    * MIN/MAX or sketches, or a merge-on-read range) the rows are
+    * [[diff]]'s, signed by change type. */
+  private[sources] def signedChanges(spark: SparkSession, root: String,
+      from: Long, to: Long, exact: Boolean): DataFrame = {
+    import org.apache.spark.sql.functions.when
+    val d = fileDelta(spark, root, from, to)
+    if (exact || d.hasTombstones || (d.added.isEmpty && d.removed.isEmpty))
+      diffOf(spark, root, d).withColumn("__sign",
+        when(col("change_type") === "inserted", lit(1L)).otherwise(lit(-1L)))
+    else {
+      def signed(es: Seq[FileEntry], sign: Long): Seq[DataFrame] =
+        if (es.isEmpty) Nil
+        else Seq(readUnder(spark, root, d.readSchema, es)
+          .withColumn("__sign", lit(sign)))
+      (signed(d.added, 1L) ++ signed(d.removed, -1L))
+        .reduce(_.unionByName(_))
+    }
+  }
+
+  private def diffOf(spark: SparkSession, root: String, d: FileDelta)
+  : DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    val readSchema = d.readSchema
     // merge-on-read histories: a tombstone changes the LIVE rows of
     // files that are in both manifests, so the plain file-delta
     // shortcut is unsound. But when the range is PURELY ACCRETIVE
-    // (every from-file, data or tombstone, still in `to` — the shape
-    // every mergeOnRead/deleteKeysOnRead commit produces), the change
-    // is still O(delta):
+    // (nothing removed: every from-file, data or tombstone, still in
+    // `to` — the shape every mergeOnRead/deleteKeysOnRead commit
+    // produces), the change is still O(delta):
     //   inserted = live-at-to rows among the ADDED data files (the
     //     range's own later tombstones applied by the seq rule);
     //   deleted  = live-at-from rows whose key an ADDED tombstone
@@ -4980,24 +5065,18 @@ object SnapshotTable {
     //   exceptAll the exact diff uses.
     // Compaction/replace commits break the accretive premise and fall
     // back to the exact (O(both versions)) bag diff.
-    if ((a ++ b).exists(_.kind == "t")) {
-      val (aTombs, aData) = a.partition(_.kind == "t")
-      val (bTombs, bData) = b.partition(_.kind == "t")
-      val bDataPaths = bData.map(_.path).toSet
-      val bTombPaths = bTombs.map(_.path).toSet
-      val accretive = aData.forall(e => bDataPaths.contains(e.path)) &&
-        aTombs.forall(e => bTombPaths.contains(e.path))
-      if (!accretive) {
-        val av = readEntries(spark, root, a, readSchema)
-        val bv = readEntries(spark, root, b, readSchema)
+    if (d.hasTombstones) {
+      if (d.removed.nonEmpty) {
+        val av = readEntries(spark, root, d.a, readSchema)
+        val bv = readEntries(spark, root, d.b, readSchema)
         return bv.exceptAll(av).withColumn("change_type", lit("inserted"))
           .unionByName(
             av.exceptAll(bv).withColumn("change_type", lit("deleted")))
       }
-      val aDataPaths = aData.map(_.path).toSet
-      val aTombPaths = aTombs.map(_.path).toSet
-      val addedData = bData.filterNot(e => aDataPaths.contains(e.path))
-      val addedTombs = bTombs.filterNot(e => aTombPaths.contains(e.path))
+      val (aTombs, aData) = d.a.partition(_.kind == "t")
+      val bTombs = d.b.filter(_.kind == "t")
+      val bData = d.b.filter(_.kind != "t")
+      val (addedTombs, addedData) = d.added.partition(_.kind == "t")
       def empty: DataFrame = readSchema match {
         case Some(st) => spark.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](),
@@ -5024,19 +5103,11 @@ object SnapshotTable {
           // classifies + bloom-prunes driver-side from one evaluation
           // of keysDf (the join form evaluated it a second time and
           // launched a classification job)
-          val probeRows = keysDf.limit(MaxBloomProbeKeys + 1).collect()
-          val probesSmall = probeRows.length <= MaxBloomProbeKeys
-          if (probesSmall)
-            tombProbe = Some((key, probeRows.map(_.get(0))))
-          val (touched, _) =
-            if (probesSmall) touchedFilesLocal(spark, aData,
-              probeRows.map(_.get(0)), keysDf.schema(key).dataType, key)
-            else touchedFiles(spark, root, aData, keysDf, key)
-          val pruned =
-            if (probesSmall)
-              bloomPrune(touched, probeRows.map(_.get(0)),
-                keysDf.schema(key).dataType, key)
-            else touched
+          val (touched, _, probes) =
+            probeFiles(spark, root, aData, keysDf, key)
+          tombProbe = probes.map(key -> _)
+          val pruned = probes.fold(touched)(p =>
+            bloomPrune(touched, p, keysDf.schema(key).dataType, key))
           if (pruned.isEmpty) empty
           else readEntries(spark, root, pruned ++ aTombs, readSchema)
             .join(keysDf, Seq(key), "left_semi")
@@ -5075,13 +5146,17 @@ object SnapshotTable {
         val f = fs(spark, root)
         addedData.map(e => entryBytes(f, root, e)).sum
       }
-      tombProbe match {
-        case Some((key, probes))
-            if ins.columns.contains(key) && addedBytes >= splitMinBytes =>
+      // the tombstone key names the column as its writer spelled it;
+      // the ins leg's column is resolved case-insensitively, like
+      // every other key lookup
+      val split = tombProbe.flatMap { case (key, probes) =>
+        ins.columns.find(_.equalsIgnoreCase(key)).map(_ -> probes) }
+      split match {
+        case Some((c, probes)) if addedBytes >= splitMinBytes =>
           val vals = probes.filter(_ != null).toSeq
           val inT =
             if (vals.isEmpty) lit(false)
-            else col(bq(key)).isin(vals: _*) <=> lit(true)
+            else col(bq(c)).isin(vals: _*) <=> lit(true)
           val insIn = ins.filter(inT)
           val insOut = ins.filter(!inT)
           return insOut.unionByName(insIn.exceptAll(del))
@@ -5094,22 +5169,18 @@ object SnapshotTable {
         .unionByName(
           del.exceptAll(ins).withColumn("change_type", lit("deleted")))
     }
-    val aPaths = a.map(_.path).toSet
-    val bPaths = b.map(_.path).toSet
-    val added = b.filterNot(e => aPaths.contains(e.path))
-    val removed = a.filterNot(e => bPaths.contains(e.path))
     def readFiles(es: Seq[FileEntry]): DataFrame =
       readUnder(spark, root, readSchema, es)
     def tag(df: DataFrame, t: String): DataFrame =
       df.withColumn("change_type", lit(t))
-    (added.nonEmpty, removed.nonEmpty) match {
-      case (true, false) => tag(readFiles(added), "inserted")
-      case (false, true) => tag(readFiles(removed), "deleted")
+    (d.added.nonEmpty, d.removed.nonEmpty) match {
+      case (true, false) => tag(readFiles(d.added), "inserted")
+      case (false, true) => tag(readFiles(d.removed), "deleted")
       case (false, false) =>
-        tag(readVersion(spark, root, to).limit(0), "inserted")
+        tag(readVersion(spark, root, d.to).limit(0), "inserted")
       case (true, true) =>
-        val ins = readFiles(added)
-        val del = readFiles(removed)
+        val ins = readFiles(d.added)
+        val del = readFiles(d.removed)
         tag(ins.exceptAll(del), "inserted")
           .unionByName(tag(del.exceptAll(ins), "deleted"))
     }
@@ -5447,24 +5518,13 @@ object SnapshotTable {
     // a point lookup's key set is collected ONCE (capped) and reused
     // as a local relation for stats pruning, bloom probing AND the
     // semi join — the caller's key derivation runs one job, not three
-    val firstBatch = castKeys.limit(MaxBloomProbeKeys + 1).collect()
-    val small = firstBatch.length <= MaxBloomProbeKeys
-    val lookup =
-      if (small) spark.createDataFrame(
-        java.util.Arrays.asList(firstBatch: _*), castKeys.schema)
-      else castKeys
-    // small key sets classify files DRIVER-SIDE against the collected
-    // probes (zero jobs); only a join-sized key set pays the
-    // broadcast-join classification job
-    val (statsTouched, _) =
-      if (small) touchedFilesLocal(spark, data,
-        firstBatch.map(_.get(0)), lookup.schema(key).dataType, key)
-      else touchedFiles(spark, root, data, lookup, key)
-    val touched =
-      if (small)
-        bloomPrune(statsTouched, firstBatch.map(_.get(0)),
-          lookup.schema(key).dataType, key)
-      else statsTouched
+    val (statsTouched, _, probes) =
+      probeFiles(spark, root, data, castKeys, key)
+    val lookup = probes.fold(castKeys)(p => spark.createDataFrame(
+      java.util.Arrays.asList(p.map(org.apache.spark.sql.Row(_)): _*),
+      castKeys.schema))
+    val touched = probes.fold(statsTouched)(p =>
+      bloomPrune(statsTouched, p, castKeys.schema(key).dataType, key))
     val base =
       if (touched.nonEmpty)
         readEntries(spark, root, touched ++ tombs, mSchema)
@@ -5482,6 +5542,31 @@ object SnapshotTable {
     * work — bloom pruning quietly steps aside (stats pruning, which
     * never collects the keys, still applies). */
   private val MaxBloomProbeKeys = 10000
+
+  /** Classify `entries` against the key set `keys` (one column named
+    * `key`, duplicate-free): (touched, carried, collected keys). Up to
+    * [[MaxBloomProbeKeys]] keys are collected in one job and classified
+    * on the driver ([[touchedFilesLocal]], no further job); the caller
+    * reuses them (bloom probes, a local relation, a membership filter)
+    * with no second evaluation of `keys`. A larger
+    * set is join-sized: it stays distributed and pays the
+    * broadcast-join classification ([[touchedFiles]]). The split
+    * depends only on the input, and MERGE, [[diff]] and [[readKeys]]
+    * all make it here. */
+  private def probeFiles(spark: SparkSession, root: String,
+      entries: Seq[FileEntry], keys: DataFrame, key: String)
+  : (Seq[FileEntry], Seq[FileEntry], Option[Array[Any]]) = {
+    val rows = keys.limit(MaxBloomProbeKeys + 1).collect()
+    if (rows.length <= MaxBloomProbeKeys) {
+      val probes = rows.map(_.get(0))
+      val (touched, carried) = touchedFilesLocal(spark, entries, probes,
+        keys.schema(key).dataType, key)
+      (touched, carried, Some(probes))
+    } else {
+      val (touched, carried) = touchedFiles(spark, root, entries, keys, key)
+      (touched, carried, None)
+    }
+  }
 
   /** Secondary-index pruning: drop data files whose manifest bloom on
     * `key` proves none of the requested keys can be present. This is

@@ -455,6 +455,79 @@ class EventPipelineSpec extends SparkSpec {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  test("lakehouse loop job budget: a warmed-up snapshotMvSink round " +
+      "with replayed keys launches at most 12 Spark jobs") {
+    implicit val sc = spark.sqlContext
+    val base = java.nio.file.Files
+      .createTempDirectory("graft-jobs").toString
+    val stream = MemoryStream[String]
+    def drainRound(): Unit = {
+      val q = EventPipeline.snapshotMvSink(
+        EventPipeline.pipeline(stream.toDF()),
+        s"$base/events_t", s"$base/events_mv", keys = Seq("event_type"),
+        sumCols = Seq("actor_id"), checkpoint = s"$base/ckpt").start()
+      try { q.processAllAvailable() } finally q.stop()
+    }
+    // every batch after the first re-delivers ids of the one before, so
+    // each merge rewrites the files holding them (the copy-on-write
+    // path) and each view refresh sees both added and removed files
+    var next = 0
+    def offer(): Unit = {
+      val replays = (math.max(0, next - 10) until next).map(i => f"j$i%05d")
+      val fresh = (next until next + 40).map(i => f"j$i%05d")
+      next += 40
+      stream.addData((fresh ++ replays).zipWithIndex.map { case (id, i) =>
+        ev(id, typ = if (i % 3 == 0) "IssuesEvent" else "PushEvent",
+          actor = s"""{"id": ${i % 7}, "login": "u$i"}""")
+      }: _*)
+      drainRound()
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val marks = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .filter(_.startsWith("job-budget-mark")) match {
+          case Some(m) => marks.put(m)
+          case None => jobs.incrementAndGet()
+        }
+    }
+    // listener delivery is asynchronous and in order: a marker job
+    // launched after the round is seen only once every job of the
+    // round has been counted
+    def barrier(tag: String): Unit = {
+      spark.sparkContext.setJobDescription(s"job-budget-mark-$tag")
+      try spark.range(1).collect()
+      finally spark.sparkContext.setJobDescription(null)
+      var seen = false
+      while (!seen) {
+        val m = marks.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+        assert(m != null, s"marker job $tag never reached the listener")
+        seen = m == s"job-budget-mark-$tag"
+      }
+    }
+    (0 until 3).foreach(_ => offer()) // bootstrap + JIT warm-up
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      (0 until 2).foreach { r =>
+        barrier(s"start$r")
+        jobs.set(0)
+        offer()
+        barrier(s"end$r")
+        // 3 for the sink's dedup + emptiness check, 4 for the merge
+        // (key collection, range sample, shuffle, write) and 5 for the
+        // view refresh. With the broadcast-join key classification and
+        // the exceptAll view delta a round launched 17
+        assert(jobs.get() <= 12,
+          s"round $r launched ${jobs.get()} Spark jobs, budget 12")
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val table = graft.sources.SnapshotTable.read(spark, s"$base/events_t")
+    assert(table.count() == next.toLong)
+  }
+
   test("merge-on-read lakehouse sink: updating batches never rewrite " +
       "a prior file, last write wins, compaction clears tombstones") {
     implicit val sc = spark.sqlContext
