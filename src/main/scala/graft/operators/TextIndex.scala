@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.sources.SnapshotTable
+import graft.streaming.SinkSession
 
 /** A persisted INVERTED INDEX over a document corpus, stored as a
   * term-bucketed snapshot table — lexical (BM25) retrieval as a
@@ -329,14 +330,13 @@ object TextIndex {
       .load()
       .writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+      .foreachBatch(SinkSession.foreachBatch(spark) {
+        (s, batch, batchId) =>
         if (!batch.isEmpty)
           applyChanges(s, root, batch, appId, batchId)
         if (purgeDelsAfter.exists(_ <= delsRows(s, root)))
           purgeTombstones(s, root, txn = Some((appId, batchId)))
-        ()
-      }
+      })
       .start()
 
   /** EXACTLY-ONCE streaming maintenance: apply one micro-batch of new
@@ -378,14 +378,13 @@ object TextIndex {
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+      .foreachBatch(SinkSession.foreachBatch(docs.sparkSession) {
+        (s, batch, batchId) =>
         if (!batch.isEmpty)
           applyBatch(s, root, batch, appId, batchId)
         if (purgeDelsAfter.exists(_ <= delsRows(s, root)))
           purgeTombstones(s, root, txn = Some((appId, batchId)))
-        ()
-      }
+      })
 
   /** Accumulated tombstone rows, metadata-priced (manifest row
     * counts — the dels table only sees appends and the purge's

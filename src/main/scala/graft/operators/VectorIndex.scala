@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.SnapshotTable
+import graft.streaming.SinkSession
 
 /** A persisted IVF (inverted-file) vector index, stored as a
   * cell-identity-partitioned snapshot table — approximate
@@ -417,14 +418,13 @@ object VectorIndex {
       .load()
       .writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+      .foreachBatch(SinkSession.foreachBatch(spark) {
+        (s, batch, batchId) =>
         if (!batch.isEmpty)
           applyChanges(s, root, batch, appId, batchId)
         if (purgeDelsAfter.exists(_ <= delsRows(s, root)))
           purgeTombstones(s, root, txn = Some((appId, batchId)))
-        ()
-      }
+      })
       .start()
 
   /** Streaming sink: keep the index at `root` (built beforehand) fresh
@@ -439,14 +439,13 @@ object VectorIndex {
     vecs.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+      .foreachBatch(SinkSession.foreachBatch(vecs.sparkSession) {
+        (s, batch, batchId) =>
         if (!batch.isEmpty)
           applyBatch(s, root, batch, appId, batchId)
         if (purgeDelsAfter.exists(_ <= delsRows(s, root)))
           purgeTombstones(s, root, txn = Some((appId, batchId)))
-        ()
-      }
+      })
 
   /** The persisted centroid matrix as the 1-row broadcast-model frame
     * the assignment/probe expressions consume. Validates the declared

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.streaming.SinkSession
 
 /** Materialized rollup over a [[SnapshotTable]] — the dashboard pattern
   * the reference serves by RE-RUNNING every aggregation per page load
@@ -580,11 +581,11 @@ object MaterializedView {
       .option("preImages", "true")
       .load()
       .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyChangeBatch(spark, v, batch)
-        retain.foreach(k => expire(spark, v.viewRoot, k))
-        ()
-      }
+      .foreachBatch(SinkSession.foreachBatch(spark) {
+        (s, batch, _) =>
+        applyChangeBatch(s, v, batch)
+        retain.foreach(k => expire(s, v.viewRoot, k))
+      })
       .option("checkpointLocation", checkpoint)
       .start()
 

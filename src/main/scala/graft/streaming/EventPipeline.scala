@@ -331,8 +331,8 @@ object EventPipeline {
     flat.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
+      .foreachBatch(SinkSession.foreachBatch(flat.sparkSession) {
+        (s, batch, _) =>
         val fresh = batch.dropDuplicates("event_id")
         val existing =
           try s.read.parquet(path).select(col("event_id")).distinct()
@@ -342,8 +342,7 @@ object EventPipeline {
           }
         fresh.join(existing, Seq("event_id"), "left_anti")
           .write.mode("append").parquet(path)
-        ()
-      }
+      })
 
   /** The full lakehouse loop as ONE sink: each micro-batch (1) MERGEs
     * into a [[graft.sources.SnapshotTable]] by event_id — replay-safe
@@ -370,15 +369,21 @@ object EventPipeline {
     *    the inter-commit window (or until a crashed batch replays) —
     *    and `MaterializedView.isStale` reports exactly that state.
     *  - Empty batches (e.g. every row failed the quality filter) are
-    *    skipped outright: no table version, no view churn. */
+    *    skipped outright: no table version, no view churn.
+    *  - Every job of a batch runs on `flat`'s session, not on the clone
+    *    the query started ([[SinkSession]]): the codegen cache key
+    *    includes the task classloader, which is per session, and each
+    *    AvailableNow round starts a query, i.e. a new clone. On the
+    *    clone a warmed round recompiled ~38 generated classes; on the
+    *    owner it compiles none. */
   def snapshotMvSink(flat: DataFrame, tableRoot: String,
       viewRoot: String, keys: Seq[String], sumCols: Seq[String],
       checkpoint: String): DataStreamWriter[Row] =
     flat.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
+      .foreachBatch(SinkSession.foreachBatch(flat.sparkSession) {
+        (s, batch, _) =>
         // persist: the deduped batch feeds BOTH sides of the merge plan
         // (anti-join keys + union branch); without it the upstream
         // parse/flatten subtree evaluates twice per commit
@@ -392,8 +397,7 @@ object EventPipeline {
                 tableRoot, viewRoot, keys, sumCols))
           }
         } finally fresh.unpersist()
-        ()
-      }
+      })
 
   /** Merge-on-read variant of the lakehouse sink: each micro-batch
     * lands via [[graft.sources.SnapshotTable.mergeOnRead]] — the commit
@@ -419,8 +423,8 @@ object EventPipeline {
     flat.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
+      .foreachBatch(SinkSession.foreachBatch(flat.sparkSession) {
+        (s, batch, _) =>
         // persist: the batch feeds both the staged segment and the
         // all-inserts manifest check
         val fresh = batch.dropDuplicates("event_id").persist()
@@ -434,8 +438,7 @@ object EventPipeline {
           }
         } finally fresh.unpersist()
         recordStaleness(s, tableRoot)
-        ()
-      }
+      })
 
   /** Bucketed-ingest sink: each micro-batch appends INTO the target
     * table's declared hash-bucket layout via
@@ -464,16 +467,15 @@ object EventPipeline {
     flat.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+      .foreachBatch(SinkSession.foreachBatch(flat.sparkSession) {
+        (s, batch, batchId) =>
         val replayed = graft.sources.SnapshotTable
           .lastCommittedTxn(s, tableRoot, appId).exists(_ >= batchId)
         if (!replayed && !batch.isEmpty)
           graft.sources.SnapshotTable.appendBucketed(s, tableRoot,
             batch, txn = Some((appId, batchId)))
         recordStaleness(s, tableRoot)
-        ()
-      }
+      })
 
   /** Identity-partitioned ingest sink: each micro-batch appends INTO
     * the target table's declared `PARTITIONED BY (col)` layout via
@@ -496,16 +498,15 @@ object EventPipeline {
     flat.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+      .foreachBatch(SinkSession.foreachBatch(flat.sparkSession) {
+        (s, batch, batchId) =>
         val replayed = graft.sources.SnapshotTable
           .lastCommittedTxn(s, tableRoot, appId).exists(_ >= batchId)
         if (!replayed && !batch.isEmpty)
           graft.sources.SnapshotTable.appendPartitioned(s, tableRoot,
             batch, txn = Some((appId, batchId)))
         recordStaleness(s, tableRoot)
-        ()
-      }
+      })
 
   /** Fixture-events ingest — the same parse→flatten→quality composition
     * specialized to the fixture `events` table shape (`event_id, ts,

@@ -2,15 +2,17 @@ package graft.tools
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Dev tooling: run a named SparkEntry query under a counting listener
-  * and print jobs / stages / tasks / shuffle bytes — the job-count
-  * evidence the optimization guide asks for on commit-heavy paths,
-  * where the serving plan alone cannot show the work that no longer
-  * happens (staging passes, classification jobs, stats read-backs).
+  * and print jobs / stages / tasks / shuffle bytes / codegen compiles
+  * — the job-count evidence the optimization guide asks for on
+  * commit-heavy paths, where the serving plan alone cannot show the
+  * work that no longer happens (staging passes, classification jobs,
+  * stats read-backs, recompiled generated classes).
   *
   * Usage: runMain graft.tools.Profile <queryName> [sfDir]
   */
@@ -71,6 +73,10 @@ object Profile {
     Thread.sleep(500)
     jobs.set(0); stages.set(0); tasks.set(0); shufW.set(0); shufR.set(0)
     timeline.clear()
+    // Janino compiles, driver and local executors alike: JVM-wide, so
+    // read as a delta around the query
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val compiles0 = compiles.getCount
     val wall0 = System.currentTimeMillis()
     val t0 = System.nanoTime()
     graft.SparkEntry.queries(name)(spark, sfDir)
@@ -80,7 +86,8 @@ object Profile {
     Thread.sleep(1000)
     println(f"[profile] $name sec=$sec%.2f jobs=${jobs.get} " +
       f"stages=${stages.get} tasks=${tasks.get} " +
-      f"shuffle_write=${shufW.get} shuffle_read=${shufR.get}")
+      f"shuffle_write=${shufW.get} shuffle_read=${shufR.get} " +
+      f"compiles=${compiles.getCount - compiles0}")
     // timeline with inter-job driver gaps (the time no job was running)
     import scala.jdk.CollectionConverters._
     val tl = timeline.asScala.toSeq.sortBy(_._2._1)

@@ -508,14 +508,24 @@ class EventPipelineSpec extends SparkSpec {
         seen = m == s"job-budget-mark-$tag"
       }
     }
+    // Janino compiles, JVM-wide (driver and local executors)
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
     (0 until 3).foreach(_ => offer()) // bootstrap + JIT warm-up
     spark.sparkContext.addSparkListener(listener)
     try {
       (0 until 2).foreach { r =>
         barrier(s"start$r")
         jobs.set(0)
+        val compiled0 = compiles.getCount
         offer()
+        val compiled = compiles.getCount - compiled0
         barrier(s"end$r")
+        // each round starts a query on a fresh session clone; run on the
+        // clone, the sink's jobs missed the codegen cache (keyed on the
+        // per-session task classloader) and recompiled ~38 classes
+        assert(compiled == 0,
+          s"round $r compiled $compiled generated classes, expected 0")
         // 3 for the sink's dedup + emptiness check, 4 for the merge
         // (key collection, range sample, shuffle, write) and 5 for the
         // view refresh. With the broadcast-join key classification and
@@ -707,6 +717,44 @@ class EventPipelineSpec extends SparkSpec {
     }
   }
 
+  test("observe() metrics survive the sink's session handover: " +
+      "snapshotMvSink reports graft_quality once per valid row") {
+    implicit val sc = spark.sqlContext
+    val base = java.nio.file.Files
+      .createTempDirectory("graft-mvobs").toString
+    val mon = graft.streaming.Monitoring.attach(spark)
+    val stream = MemoryStream[String]
+    // the dedup persist, the emptiness check, the merge and the view
+    // refresh all read the batch: the micro-batch plan (and with it
+    // the observed counters) must still run exactly once
+    stream.addData(ev("q1"), ev("q2", typ = "IssuesEvent"),
+      ev("q3", actor = "null"), ev("q3", actor = "null"), "{not json")
+    val q = EventPipeline.snapshotMvSink(
+      EventPipeline.withQualityMetrics(
+        EventPipeline.pipeline(stream.toDF())),
+      s"$base/events_t", s"$base/events_mv", keys = Seq("event_type"),
+      sumCols = Seq("actor_id"), checkpoint = s"$base/ckpt")
+      .queryName("sink_mv_obs").start()
+    try {
+      q.processAllAvailable()
+      val deadline = System.currentTimeMillis() + 30000
+      def obs = mon.snapshot.get("sink_mv_obs")
+        .flatMap(_.lastObserved.get("graft_quality"))
+      while (System.currentTimeMillis() < deadline && obs.isEmpty)
+        Thread.sleep(100)
+      val m = obs.getOrElse(fail("graft_quality never reached Monitoring"))
+      // 5 lines offered: the malformed one is dropped, the in-batch
+      // duplicate is counted (the sink dedups after the observation)
+      assert(m.getAs[Long]("rows") == 4)
+      assert(m.getAs[Long]("null_actor") == 2)
+    } finally {
+      q.stop()
+      graft.streaming.Monitoring.detach(spark, mon)
+    }
+    assert(graft.sources.SnapshotTable.read(spark, s"$base/events_t")
+      .count() == 3)
+  }
+
   test("checkpoint recovery: restart resumes offsets, no reprocessing") {
     implicit val sc = spark.sqlContext
     val tmp = java.nio.file.Files.createTempDirectory("graft-ckpt")
@@ -854,9 +902,17 @@ class EventPipelineSpec extends SparkSpec {
         checkpoint = ckpt, appId = "bsink-test").start()
       try q.processAllAvailable() finally q.stop()
     }
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
     (0 until 3).foreach { b =>
       stream.addData((0 until 8).map(i => mkEv(b, i)): _*)
+      val compiled0 = compiles.getCount
       drain(s"$base/ckpt")
+      // the second run reuses the first run's generated classes: the
+      // sink's jobs run on the owner session, not the query's clone
+      if (b == 1) assert(compiles.getCount == compiled0,
+        s"second run compiled ${compiles.getCount - compiled0} " +
+          "generated classes, expected 0")
     }
     assert(SnapshotTable.versions(spark, tableRoot).size == 4)
     assert(SnapshotTable.read(spark, tableRoot).count() == 26)
