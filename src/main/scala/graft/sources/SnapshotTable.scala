@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.functions.Bloom
-import org.apache.spark.sql.functions.{col, expr, first, hash, input_file_name, lit, pmod, max => smax, min => smin}
+import org.apache.spark.sql.functions.{col, expr, hash, input_file_name, lit, pmod, max => smax, min => smin}
 import org.apache.spark.sql.types._
 
 /** Versioned snapshot table over plain Parquet — the engine's answer to
@@ -583,8 +583,10 @@ object SnapshotTable {
       zorderWith: Option[String] = None,
       zorderExtra: Seq[String] = Nil)
   : (Path, Seq[FileEntry]) = {
-    val seg = new Path(dataDir(root),
-      s"seg-${java.util.UUID.randomUUID().toString.take(12)}")
+    (clusterKey.toSeq ++ bloomKey ++ zorderWith ++ zorderExtra).foreach(k =>
+      require(df.schema.fieldNames.exists(_.equalsIgnoreCase(k)),
+        s"stats column '$k' is not a column of the batch"))
+    val seg = newSegmentPath(root)
     // A multi-file range layout pays repartitionByRange's SAMPLE pass
     // (a second evaluation of the staged frame for range bounds).
     // Persisting the frame around bounds+write was tried and MEASURED
@@ -609,62 +611,94 @@ object SnapshotTable {
           .sortWithinPartitions(col(k))
       case _ => df
     }
-    // SINGLE-PASS staging (default): the write tasks compute every
-    // per-file stat (key range, null count, bloom, NDV registers, row
-    // count, byte length) WHILE streaming rows into parquet — the
-    // commit then needs no read-back stats pass and no per-file footer
-    // reads. At ingest scale that halves the IO of every clustered
-    // commit (one pass over the batch, not two); on the bench it
-    // removes one Spark job + O(files) driver footer reads per commit.
-    // The two-pass path stays behind the conf for A/B and the
-    // manifest-equivalence spec.
-    if (inlineStatsEnabled(spark))
-      return (seg, writeSegmentInline(spark, root, seg, shaped,
-        clusterKey, bloomKey, zorderWith, zorderExtra))
-    shaped.write.mode("error").parquet(seg.toString)
-    val f = fs(spark, root)
-    // SORTED by file name: partition ids are zero-padded, so name
-    // order = range-partition order = ascending key ranges. listStatus
-    // order is filesystem-dependent (File.list guarantees nothing), and
-    // manifest order is load-bearing for the limit/offset file-prefix
-    // pushdowns — an arbitrary order is CORRECT there (any N rows) but
-    // a deterministic one makes commits reproducible and keeps range
-    // reads of a clustered table in cluster order.
-    val parts = f.listStatus(seg).toSeq
-      .filter { st =>
-        val n = st.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      }
-      .sortBy(_.getPath.getName)
-    val rel = parts.map { st =>
-      s"_data/${seg.getName}/${st.getPath.getName}"
+    val segStr = seg.toString
+    val schemaJson = shaped.schema.json
+    val spec = inlineStatsSpec(spark, shaped.schema, clusterKey, bloomKey,
+      zorderExtra, zorderWith)
+    // df.write.parquet's session cap on rows per file (0 = unlimited)
+    val maxRecs = spark.sessionState.conf.maxRecordsPerFile
+    val written = stageFiles(spark, root, seg, shaped,
+      "graft_stage_segment") { (hc, pid, attempt) =>
+      new connector.GraftDataWriter(segStr, schemaJson, pid, attempt,
+        spec, hc, maxRecords = maxRecs)
     }
-    (seg, statsEntries(spark, root, seg, rel, clusterKey, bloomKey,
-      zorderWith, zorderExtra))
+    if (written.nonEmpty)
+      return (seg, stagedEntries(seg, written, clusterKey, bloomKey,
+        zorderWith))
+    // an all-empty batch: df.write.parquet leaves one empty file so
+    // the segment stays readable — mirror that exactly
+    val name = "part-00000-0.snappy.parquet"
+    val p = new Path(seg, name)
+    connector.GraftDataWriter.nativeWriter(p, shaped.schema,
+      spark.sessionState.newHadoopConf()).close()
+    (seg, Seq(FileEntry(s"_data/${seg.getName}/$name", clusterKey,
+      None, None, rows = Some(0L),
+      bytes = Some(fs(spark, root).getFileStatus(p).getLen))))
   }
 
-  /** Single-pass staging is the default; `false` restores the
-    * write-then-read-back stats pass (kept for A/B measurement and the
-    * equivalence spec that pins both paths to the same manifest). */
-  private def inlineStatsEnabled(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.commit.inlineStats")
-      .forall(_.toBoolean)
+  /** Runs one native staging job and returns the stats of every file
+    * it wrote. Each task of `shaped` feeds its rows to the connector
+    * writer `newWriter` builds from the job's conf broadcast, its
+    * partition id and its task attempt id, one layout per caller:
+    *  - clustered, Z-ordered and plain segments ([[stageSegment]]):
+    *    [[connector.GraftDataWriter]], one file per task, rolling at
+    *    `maxRecordsPerFile`;
+    *  - identity partitions ([[stagePartitioned]]):
+    *    [[connector.GraftPartitionedAppendWriter]], one value-pure file
+    *    per key tuple a task sees, NULL keys refused;
+    *  - bucket grids ([[stageBucketed]]):
+    *    [[connector.GraftBucketedAppendWriter]] routing on the batch's
+    *    trailing [[gridCell]] column, one file per cell a task sees.
+    * The job runs as one named SQL execution. A failed task attempt
+    * aborts its writer, which deletes every file the attempt wrote; a
+    * failed job deletes the whole segment, so files of its succeeded
+    * tasks do not wait for vacuum. The broadcast is destroyed when
+    * the job ends either way. */
+  private def stageFiles(spark: SparkSession, root: String, seg: Path,
+      shaped: DataFrame, label: String)(
+      newWriter: (org.apache.spark.broadcast.Broadcast[
+        connector.SerializableHadoopConf], Int, Long) =>
+        org.apache.spark.sql.connector.write.DataWriter[
+          org.apache.spark.sql.catalyst.InternalRow])
+  : Seq[InlineFileStats] = {
+    val hc = connector.SerializableHadoopConf.broadcast(spark)
+    val qe = shaped.queryExecution
+    try org.apache.spark.sql.execution.SQLExecution
+      .withNewExecutionId(qe, Some(label)) {
+      qe.toRdd.mapPartitionsWithIndex { (pid, it) =>
+        val tc = org.apache.spark.TaskContext.get()
+        val w = newWriter(hc, pid, if (tc == null) 0L else tc.taskAttemptId())
+        try {
+          while (it.hasNext) w.write(it.next())
+          w.commit().asInstanceOf[connector.GraftTaskFiles].files.iterator
+        } catch {
+          case e: Throwable =>
+            try w.abort() catch { case s: Throwable => e.addSuppressed(s) }
+            throw e
+        } finally w.close()
+      }.collect().toSeq
+    } catch {
+      case e: Throwable =>
+        fs(spark, root).delete(seg, true)
+        throw e
+    } finally hc.destroy()
+  }
 
-  /** Everything [[statsEntries]] derives per file, computed by the
-    * WRITE TASK itself while the rows stream into parquet. */
+  /** Everything a manifest entry records about one staged file,
+    * computed by the write task itself while the rows stream into
+    * parquet. `bucket` is the file's grid cell in a bucketed layout. */
   private[sources] case class InlineFileStats(name: String, rows: Long,
       bytes: Long, lo: Option[String], hi: Option[String], nulls: Long,
       bloom: Option[Array[Byte]],
       lo2: Option[String], hi2: Option[String],
       extras: Seq[(String, Option[String], Option[String])],
-      ndv: Seq[(String, Array[Byte])])
+      ndv: Seq[(String, Array[Byte])], bucket: Option[Int])
 
   /** Typed running min/max + null count over one column of the rows a
-    * task writes — the imperative twin of `min(c) / max(c) /
-    * sum(CASE WHEN c IS NULL ...)` in the read-back pass, using the
-    * same interpreted ordering those aggregates use. Retained values
-    * are copied when they alias task-reused buffers (UTF8String). */
-  private[sources] class MinMaxAcc(dt: DataType) extends Serializable {
+    * task writes, using the interpreted ordering Spark's `min`/`max`
+    * aggregates use. Retained values are copied when they alias
+    * task-reused buffers (UTF8String). */
+  private class MinMaxAcc(dt: DataType) {
     private val ord = org.apache.spark.sql.catalyst.util.TypeUtils
       .getInterpretedOrdering(dt)
     var lo: Any = null
@@ -682,10 +716,9 @@ object SnapshotTable {
       }
   }
 
-  /** Render a catalyst value the way the read-back pass did
-    * (`cast(x AS STRING)` under the session time zone) — manifests
-    * from both paths are bit-identical. */
-  private[sources] def renderStat(v: Any, dt: DataType, tz: String)
+  /** Render a catalyst value as `cast(x AS STRING)` does under the
+    * session time zone — the manifest's stat encoding. */
+  private def renderStat(v: Any, dt: DataType, tz: String)
   : Option[String] =
     Option(v).map { x =>
       org.apache.spark.sql.catalyst.expressions.Cast(
@@ -693,25 +726,21 @@ object SnapshotTable {
         StringType, Option(tz)).eval().toString
     }
 
-  /** Serializable per-file stats recipe for the DataSource V2 writers:
-    * which row positions to range/bloom/NDV-sketch while writing, so a
-    * V2 commit (SQL INSERT / CTAS / MERGE / DELETE rewrite) needs no
-    * read-back stats pass and no footer reads either — the same
-    * single-pass contract the native staging paths have. None when
-    * the session disabled inline staging. */
+  /** Serializable per-file stats recipe for the staging writers: which
+    * row positions to range (`ck`, the Z-order partner `zk`, the extra
+    * layout keys `ze`), bloom (`bk`) and NDV-sketch while writing. */
   private[sources] case class InlineStatsSpec(
       ck: Option[(Int, DataType)], bk: Option[(Int, DataType)],
+      zk: Option[(Int, DataType)],
       ze: Seq[(String, Int, DataType)],
       ndv: Seq[(String, Int, DataType)], tz: String)
 
   private[sources] def inlineStatsSpec(spark: SparkSession,
       schema: StructType, clusterKey: Option[String],
-      bloomKey: Option[String], gridExtra: Seq[String] = Nil)
-  : Option[InlineStatsSpec] = {
-    if (!inlineStatsEnabled(spark)) return None
+      bloomKey: Option[String], gridExtra: Seq[String] = Nil,
+      zorderWith: Option[String] = None): InlineStatsSpec = {
     // a stat column absent from this batch's schema records nothing
-    // (e.g. a DELETE's plan carries no data columns — the old
-    // read-back pass never ran for those writes either)
+    // (e.g. a DELETE's plan carries no data columns)
     def present(k: String): Boolean =
       schema.fieldNames.exists(_.equalsIgnoreCase(k))
     def spec1(k: String): (Int, DataType) = {
@@ -720,28 +749,28 @@ object SnapshotTable {
     }
     val ckP = clusterKey.filter(present)
     val bkP = bloomKey.filter(present)
+    val zkP = zorderWith.filter(present)
     val zeP = gridExtra.filter(present)
-    val passCols = (ckP.toSeq ++ bkP ++ zeP)
+    val passCols = (ckP.toSeq ++ bkP ++ zkP ++ zeP)
       .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
     val ndvCols =
       if (ckP.isEmpty && bkP.isEmpty &&
         spark.conf.getOption("spark.graft.stats.ndv.mode")
           .getOrElse("auto") != "all") Nil
       else ndvStatFields(spark, schema, passCols)
-    Some(InlineStatsSpec(ckP.map(spec1), bkP.map(spec1),
+    InlineStatsSpec(ckP.map(spec1), bkP.map(spec1), zkP.map(spec1),
       zeP.map(k => (k, spec1(k)._1, spec1(k)._2)),
       ndvCols.map(fd => (fd.name, spec1(fd.name)._1, fd.dataType)),
-      spark.sessionState.conf.sessionLocalTimeZone))
+      spark.sessionState.conf.sessionLocalTimeZone)
   }
 
   /** Task-side accumulator over one file's rows for an
-    * [[InlineStatsSpec]] — the V2 writers feed every written row
-    * through [[add]] and read the finished [[InlineFileStats]] at
-    * commit. Same primitives (interpreted orderings, Hll/Bloom adds,
-    * Cast-to-string rendering) as the native inline staging, so
-    * manifests agree with the read-back pass bit-for-bit. */
+    * [[InlineStatsSpec]]: the staging writer feeds every written row
+    * through [[add]] and reads the finished [[InlineFileStats]] when
+    * the file closes. */
   private[sources] final class InlineStatsAcc(spec: InlineStatsSpec) {
     private val ck = spec.ck.map { case (_, dt) => new MinMaxAcc(dt) }
+    private val zk = spec.zk.map { case (_, dt) => new MinMaxAcc(dt) }
     private val ze = spec.ze.map { case (_, _, dt) => new MinMaxAcc(dt) }
     private val ndvRegs =
       spec.ndv.map(_ => new Array[Byte](1 << NdvPrecision))
@@ -750,11 +779,15 @@ object SnapshotTable {
     private val bloomHashes = Bloom.hashesFor(bloomBits, BloomExpectedItems)
     private val bloomWords =
       spec.bk.map(_ => new Array[Long](bloomBits >> 6))
-    private var rows = 0L
+    private var n = 0L
+
+    def rows: Long = n
 
     def add(r: org.apache.spark.sql.catalyst.InternalRow): Unit = {
       spec.ck.foreach { case (i, dt) =>
         ck.get.add(if (r.isNullAt(i)) null else r.get(i, dt)) }
+      spec.zk.foreach { case (i, dt) =>
+        zk.get.add(if (r.isNullAt(i)) null else r.get(i, dt)) }
       var j = 0
       while (j < spec.ze.length) {
         val (_, i, dt) = spec.ze(j)
@@ -771,214 +804,43 @@ object SnapshotTable {
       spec.bk.foreach { case (i, dt) =>
         if (!r.isNullAt(i)) Bloom.add(bloomWords.get, bloomHashes,
           graft.functions.Hll.hashValue(r.get(i, dt), dt)) }
-      rows += 1
+      n += 1
     }
 
-    def finish(name: String, bytes: Long): InlineFileStats =
-      InlineFileStats(name, rows, bytes,
+    def finish(name: String, bytes: Long, bucket: Option[Int])
+    : InlineFileStats =
+      InlineFileStats(name, n, bytes,
         ck.flatMap(a => renderStat(a.lo, spec.ck.get._2, spec.tz)),
         ck.flatMap(a => renderStat(a.hi, spec.ck.get._2, spec.tz)),
         ck.map(_.nulls).getOrElse(0L),
         bloomWords.map(w => Bloom.toBytes(bloomHashes,
           Bloom.shrinkToTarget(w, bloomHashes, BloomFppPct / 100.0))),
-        None, None,
+        zk.flatMap(a => renderStat(a.lo, spec.zk.get._2, spec.tz)),
+        zk.flatMap(a => renderStat(a.hi, spec.zk.get._2, spec.tz)),
         spec.ze.zip(ze).map { case ((k, _, dt), a) =>
           (k, renderStat(a.lo, dt, spec.tz),
             renderStat(a.hi, dt, spec.tz)) },
-        spec.ndv.zip(ndvRegs).map { case ((n, _, _), regs) =>
-          (n, regs) })
+        spec.ndv.zip(ndvRegs).map { case ((c, _, _), regs) =>
+          (c, regs) },
+        bucket)
   }
 
-  /** [[FileEntry]] from a task-computed [[InlineFileStats]] — the same
-    * shaping [[statsEntries]] applies to its read-back rows. */
-  private[sources] def inlineEntry(rel: String, s: InlineFileStats,
-      clusterKey: Option[String], bloomKey: Option[String]): FileEntry =
-    FileEntry(rel, clusterKey, s.lo, s.hi,
-      bloomKey = bloomKey.filter(_ => s.bloom.isDefined),
-      bloom = s.bloom,
-      statsNulls = clusterKey.map(_ => s.nulls),
-      extraStats = s.extras.collect {
-        case (k, Some(l), Some(h)) => (k, l, h) },
-      ndv = s.ndv, rows = Some(s.rows), bytes = Some(s.bytes))
-
-  /** Write `shaped` as one parquet file per non-empty partition via
-    * the connector's native row writer, computing all per-file
-    * manifest stats in the same pass. Returns complete [[FileEntry]]s
-    * (rows and bytes included — no footer reads). A failed task
-    * attempt deletes its own partial file; a retried attempt writes
-    * under its own attempt-unique name, and only names returned by the
-    * SUCCESSFUL attempt reach the manifest (a lost twin's file stays
-    * unreferenced and is reaped with the segment by vacuum — the same
-    * contract as the DSv2 write path). */
-  private def writeSegmentInline(spark: SparkSession, root: String,
-      seg: Path, shaped: DataFrame, clusterKey: Option[String],
-      bloomKey: Option[String], zorderWith: Option[String],
-      zorderExtra: Seq[String]): Seq[FileEntry] = {
-    val schema = shaped.schema
-    def idxOf(k: String): Int = {
-      val i = schema.fieldNames.indexWhere(_.equalsIgnoreCase(k))
-      require(i >= 0, s"stats column '$k' is not a column of the batch")
-      i
-    }
-    val passCols = (clusterKey.toSeq ++ bloomKey ++ zorderWith ++
-      zorderExtra).map(_.toLowerCase(java.util.Locale.ROOT)).toSet
-    val ndvCols =
-      if (clusterKey.isEmpty && bloomKey.isEmpty &&
-        spark.conf.getOption("spark.graft.stats.ndv.mode")
-          .getOrElse("auto") != "all") Nil
-      else ndvStatFields(spark, schema, passCols)
-    val ckSpec = clusterKey.map(k => (idxOf(k), schema(idxOf(k)).dataType))
-    val bkSpec = bloomKey.map(k => (idxOf(k), schema(idxOf(k)).dataType))
-    val zkSpec = zorderWith.map(k => (idxOf(k), schema(idxOf(k)).dataType))
-    val zeSpec = zorderExtra.map(k =>
-      (k, idxOf(k), schema(idxOf(k)).dataType))
-    val ndvSpec = ndvCols.map(fd => (fd.name, idxOf(fd.name), fd.dataType))
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
-    val segStr = seg.toString
-    val schemaJson = schema.json
-    val pconf = connector.GraftDataWriter.sessionParquetConf(spark)
-    val bloomBits = Bloom.bitsFor(BloomExpectedItems, BloomFppPct / 100.0)
-    val bloomHashes = Bloom.hashesFor(bloomBits, BloomExpectedItems)
-    // session Hadoop conf, BROADCAST once for the job: tasks must not
-    // fabricate bare Configurations per file (drops credentials/fs
-    // impls on a real cluster), and the closure must ship only the
-    // broadcast handle, not the ~100 KB conf per task binary
-    val hc = connector.SerializableHadoopConf.broadcast(spark)
-    // df.write.parquet honored this session cap; the inline path rolls
-    // to a sibling file at the same threshold (0 = unlimited)
-    val maxRecs = spark.sessionState.conf.maxRecordsPerFile
-    val qe = shaped.queryExecution
-    val stats = try org.apache.spark.sql.execution.SQLExecution
-      .withNewExecutionId(qe, Some("graft_stage_segment")) {
-      qe.toRdd.mapPartitionsWithIndex {
-      (pid, it) =>
-        if (!it.hasNext) Iterator.empty
-        else {
-          val taskSchema =
-            DataType.fromJson(schemaJson).asInstanceOf[StructType]
-          val tc = org.apache.spark.TaskContext.get()
-          val attempt = if (tc == null) 0L else tc.taskAttemptId()
-          val fsys = new Path(segStr).getFileSystem(hc.value.value)
-          // one open file at a time; maxRecordsPerFile rolls to
-          // "-fNNNNNNNNNN"-suffixed siblings, zero-padded to the width
-          // of any Int, so name order stays ascending-key order within
-          // the sorted partition however many files a task rolls.
-          // The unlimited default keeps the suffix-free name.
-          final class FAcc(n: Int) {
-            val name =
-              if (maxRecs <= 0) f"part-$pid%05d-$attempt.snappy.parquet"
-              else f"part-$pid%05d-$attempt-f$n%010d.snappy.parquet"
-            val path = new Path(segStr, name)
-            val writer = connector.GraftDataWriter.nativeWriter(path,
-              taskSchema, pconf, Some(hc.value.value))
-            val ck = ckSpec.map { case (_, dt) => new MinMaxAcc(dt) }
-            val zk = zkSpec.map { case (_, dt) => new MinMaxAcc(dt) }
-            val ze = zeSpec.map { case (_, _, dt) => new MinMaxAcc(dt) }
-            val ndvRegs =
-              ndvSpec.map(_ => new Array[Byte](1 << NdvPrecision))
-            val bloomWords =
-              bkSpec.map(_ => new Array[Long](bloomBits >> 6))
-            var rows = 0L
-            def finish(): InlineFileStats = {
-              writer.close()
-              val len = fsys.getFileStatus(path).getLen
-              InlineFileStats(name, rows, len,
-                ck.flatMap(a => renderStat(a.lo, ckSpec.get._2, tz)),
-                ck.flatMap(a => renderStat(a.hi, ckSpec.get._2, tz)),
-                ck.map(_.nulls).getOrElse(0L),
-                bloomWords.map(w => Bloom.toBytes(bloomHashes,
-                  Bloom.shrinkToTarget(w, bloomHashes,
-                    BloomFppPct / 100.0))),
-                zk.flatMap(a => renderStat(a.lo, zkSpec.get._2, tz)),
-                zk.flatMap(a => renderStat(a.hi, zkSpec.get._2, tz)),
-                zeSpec.zip(ze).map { case ((k, _, dt), a) =>
-                  (k, renderStat(a.lo, dt, tz),
-                    renderStat(a.hi, dt, tz)) },
-                ndvSpec.zip(ndvRegs).map { case ((n, _, _), regs) =>
-                  (n, regs) })
-            }
-          }
-          val done =
-            scala.collection.mutable.ArrayBuffer.empty[InlineFileStats]
-          var cur = new FAcc(0)
-          var nFiles = 1
-          try {
-            while (it.hasNext) {
-              val r = it.next()
-              if (maxRecs > 0 && cur.rows >= maxRecs) {
-                done += cur.finish()
-                cur = new FAcc(nFiles)
-                nFiles += 1
-              }
-              ckSpec.foreach { case (i, dt) =>
-                cur.ck.get.add(if (r.isNullAt(i)) null else r.get(i, dt)) }
-              zkSpec.foreach { case (i, dt) =>
-                cur.zk.get.add(if (r.isNullAt(i)) null else r.get(i, dt)) }
-              var j = 0
-              while (j < zeSpec.length) {
-                val (_, i, dt) = zeSpec(j)
-                cur.ze(j).add(if (r.isNullAt(i)) null else r.get(i, dt))
-                j += 1
-              }
-              j = 0
-              while (j < ndvSpec.length) {
-                val (_, i, dt) = ndvSpec(j)
-                if (!r.isNullAt(i)) graft.functions.Hll.add(
-                  cur.ndvRegs(j),
-                  graft.functions.Hll.hashValue(r.get(i, dt), dt))
-                j += 1
-              }
-              bkSpec.foreach { case (i, dt) =>
-                if (!r.isNullAt(i)) Bloom.add(cur.bloomWords.get,
-                  bloomHashes,
-                  graft.functions.Hll.hashValue(r.get(i, dt), dt)) }
-              cur.writer.write(r)
-              cur.rows += 1
-            }
-            done += cur.finish()
-          } catch {
-            case e: Throwable =>
-              try cur.writer.close() catch { case _: Throwable => () }
-              // a failed attempt deletes EVERYTHING it wrote — the
-              // rolled siblings too, not just the open file
-              (done.map(_.name) :+ cur.name).foreach { n =>
-                try fsys.delete(new Path(segStr, n), false)
-                catch { case _: Throwable => () }
-              }
-              throw e
-          }
-          done.iterator
-        }
-    }.collect()
-    }.toSeq.sortBy(_.name)
-    catch {
-      case e: Throwable =>
-        // job-level cleanup: files landed by SUCCEEDED tasks of a
-        // FAILED job must not squat in the segment until vacuum —
-        // the same failure contract writePartitionedInline (and the
-        // old path's output committer) already had
-        fs(spark, root).delete(seg, true)
-        throw e
-    } finally {
-      // the job has ended either way: release the conf broadcast now
-      // rather than leave one per commit to the context cleaner
-      hc.destroy()
-    }
-    if (stats.isEmpty) {
-      // an all-empty batch: df.write.parquet leaves one empty file so
-      // the segment stays readable — mirror that exactly
-      val name = "part-00000-0.snappy.parquet"
-      val p = new Path(seg, name)
-      val w = connector.GraftDataWriter.nativeWriter(p, schema,
-        connector.GraftDataWriter.sessionParquetConf(spark))
-      w.close()
-      val len = fs(spark, root).getFileStatus(p).getLen
-      return Seq(FileEntry(s"_data/${seg.getName}/$name", clusterKey,
-        None, None, rows = Some(0L), bytes = Some(len)))
-    }
-    stats.map { s =>
-      val rel = s"_data/${seg.getName}/${s.name}"
-      FileEntry(rel, clusterKey, s.lo, s.hi,
+  /** The manifest entries for the files staging tasks wrote into
+    * `seg`, sorted by file name: partition ids are zero-padded, so
+    * name order is partition order — ascending key ranges for a
+    * range-clustered segment — whatever order the tasks finished in.
+    * Every commit path, native and DSv2, builds its entries here. A
+    * bucketed file records its cell in the `__bucket` slot;
+    * `partitionTail` (the tail keys of a composite identity layout)
+    * gets zero NULL counts, true BY CONSTRUCTION since the writer
+    * refused NULL keys — stamped so tuple purity is verifiable from
+    * the manifest, not the declaration. */
+  private[sources] def stagedEntries(seg: Path, files: Seq[InlineFileStats],
+      clusterKey: Option[String], bloomKey: Option[String],
+      zorderWith: Option[String] = None,
+      partitionTail: Seq[String] = Nil): Seq[FileEntry] =
+    files.sortBy(_.name).map { s =>
+      FileEntry(s"_data/${seg.getName}/${s.name}", clusterKey, s.lo, s.hi,
         bloomKey = bloomKey.filter(_ => s.bloom.isDefined),
         bloom = s.bloom,
         statsKey2 = zorderWith.filter(_ =>
@@ -986,11 +848,11 @@ object SnapshotTable {
         lo2 = s.lo2, hi2 = s.hi2,
         statsNulls = clusterKey.map(_ => s.nulls),
         extraStats = s.extras.collect {
-          case (k, Some(l), Some(h)) => (k, l, h) },
-        ndv = s.ndv,
+          case (k, Some(l), Some(h)) => (k, l, h) } ++
+          s.bucket.map(b => ("__bucket", b.toString, b.toString)),
+        ndv = s.ndv, colNulls = partitionTail.map(_ -> 0L),
         rows = Some(s.rows), bytes = Some(s.bytes))
     }
-  }
 
   /** HLL register count for per-file NDV sketches: 2^9 = 512 bytes
     * per column per file (~4.6% standard error) — small enough to ride
@@ -1031,146 +893,6 @@ object SnapshotTable {
       .filter(f => mode == "all" ||
         passCols.contains(f.name.toLowerCase(java.util.Locale.ROOT)))
       .take(maxCols)
-  }
-
-  /** Per-file manifest stats for an already-written segment: min/max
-    * on `clusterKey` (and `zorderWith`), a membership sketch on
-    * `bloomKey`, and per-column NDV (HLL) sketches, all computed in
-    * ONE column-pruned pass over the segment's files. Shared by
-    * [[stageSegment]] and the DataSource V2 write path (whose files
-    * are written by executor tasks, not `df.write`). */
-  private[sources] def statsEntries(spark: SparkSession, root: String,
-      seg: Path, rel: Seq[String], clusterKey: Option[String],
-      bloomKey: Option[String], zorderWith: Option[String] = None,
-      zorderExtra: Seq[String] = Nil)
-  : Seq[FileEntry] = {
-    // `auto` NDV mode sketches only the pass's own columns, so a
-    // plain commit (no keys) stays a zero-pass write — the footer
-    // read below is its only post-write IO
-    val passCols = (clusterKey.toSeq ++ bloomKey ++ zorderWith ++
-      zorderExtra).map(_.toLowerCase(java.util.Locale.ROOT)).toSet
-    lazy val segDf = spark.read.parquet(seg.toString)
-    val ndvCols =
-      if (clusterKey.isEmpty && bloomKey.isEmpty &&
-        spark.conf.getOption("spark.graft.stats.ndv.mode")
-          .getOrElse("auto") != "all") Nil
-      else ndvStatFields(spark, segDf.schema, passCols)
-    val entries =
-      if (clusterKey.isEmpty && bloomKey.isEmpty && ndvCols.isEmpty)
-        rel.map(FileEntry(_, None, None, None))
-      else {
-        // one column-pruned pass over the NEW files only, computing
-        // every requested per-file stat (min/max per stats column,
-        // bloom and/or NDV sketches) at once
-        graft.functions.BloomFunctions.register(spark)
-        graft.functions.HllFunctions.register(spark)
-        val cols = Seq(input_file_name().as("__f")) ++
-          clusterKey.map(k => col(k).as("__ck")) ++
-          bloomKey.map(k => col(k).as("__bk")) ++
-          zorderWith.map(k => col(k).as("__zk")) ++
-          zorderExtra.zipWithIndex.map { case (k, i) =>
-            col(k).as(s"__ze$i") } ++
-          ndvCols.zipWithIndex.map { case (fd, i) =>
-            col(bq(fd.name)).as(s"__n$i") }
-        val aggs =
-          clusterKey.toSeq.flatMap(_ => Seq(
-            smin(col("__ck")).cast("string").as("__lo"),
-            smax(col("__ck")).cast("string").as("__hi"),
-            // NULLs per file in the stats column: min/max ignore NULLs,
-            // so order-based pruning (top-N pushdown) needs this to
-            // know whether a file can contribute rows at the NULL end
-            // of a sort
-            expr("sum(CASE WHEN __ck IS NULL THEN 1 ELSE 0 END)")
-              .as("__nulls"))) ++
-          bloomKey.toSeq.map(_ => expr(
-            s"graft_bloom_sketch(__bk, $BloomExpectedItems, $BloomFppPct)")
-            .as("__bf")) ++
-          zorderWith.toSeq.flatMap(_ => Seq(
-            smin(col("__zk")).cast("string").as("__lo2"),
-            smax(col("__zk")).cast("string").as("__hi2"))) ++
-          zorderExtra.indices.flatMap(i => Seq(
-            smin(col(s"__ze$i")).cast("string").as(s"__loe$i"),
-            smax(col(s"__ze$i")).cast("string").as(s"__hie$i"))) ++
-          ndvCols.indices.map(i => expr(
-            s"graft_hll_sketch(__n$i, $NdvPrecision)").as(s"__ndv$i"))
-        // keyed by the path BELOW the segment directory, not the bare
-        // name: an identity-partitioned segment nests files under
-        // value directories and one task writing several values
-        // reuses its part number in each — and with a COMPOSITE key
-        // the nesting is multi-level, where even parent/name collides
-        // across branches (__pv0=x1/__pv1=y and __pv0=x2/__pv1=y hold
-        // same-named files from one task). ENCODING: input_file_name
-        // returns a URI-ENCODED string ("%20") while listings and rel
-        // paths carry the literal on-disk names (partition values may
-        // contain spaces) — decode the URI form so both sides key
-        // identically; a literal-space rel path fails URI parsing and
-        // falls back to the Path route, which yields the same
-        // decoded form.
-        def fileKey(s0: String): String = {
-          val s = try new java.net.URI(s0).getPath catch {
-            case _: java.net.URISyntaxException =>
-              new Path(s0).toUri.getPath
-          }
-          val tag = "/" + seg.getName + "/"
-          val i = s.indexOf(tag)
-          if (i >= 0) s.substring(i + tag.length)
-          else {
-            val p = new Path(s0)
-            s"${p.getParent.getName}/${p.getName}"
-          }
-        }
-        val statRows = segDf
-          .select(cols: _*)
-          .groupBy(col("__f"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect()
-          .map(r => fileKey(r.getAs[String]("__f")) -> r)
-          .toMap
-        def ndvOf(r: org.apache.spark.sql.Row): Seq[(String, Array[Byte])] =
-          ndvCols.zipWithIndex.flatMap { case (fd, i) =>
-            Option(r.getAs[Array[Byte]](s"__ndv$i")).map(fd.name -> _) }
-        rel.map { p =>
-          statRows.get(fileKey(p)) match {
-            case None => FileEntry(p, clusterKey, None, None)
-            case Some(r) =>
-              val lo = clusterKey.flatMap(_ =>
-                Option(r.getAs[String]("__lo")))
-              val hi = clusterKey.flatMap(_ =>
-                Option(r.getAs[String]("__hi")))
-              val bf = bloomKey.flatMap(_ =>
-                Option(r.getAs[Array[Byte]]("__bf")))
-              val lo2 = zorderWith.flatMap(_ =>
-                Option(r.getAs[String]("__lo2")))
-              val hi2 = zorderWith.flatMap(_ =>
-                Option(r.getAs[String]("__hi2")))
-              val nulls = clusterKey.flatMap(_ =>
-                Option(r.getAs[Any]("__nulls"))
-                  .map(_.asInstanceOf[Number].longValue()))
-              val extras = zorderExtra.zipWithIndex.flatMap {
-                case (k, i) =>
-                  (Option(r.getAs[String](s"__loe$i")),
-                    Option(r.getAs[String](s"__hie$i"))) match {
-                    case (Some(l), Some(h)) => Some((k, l, h))
-                    case _ => None
-                  }
-              }
-              FileEntry(p, clusterKey, lo, hi,
-                bloomKey = bloomKey.filter(_ => bf.isDefined), bloom = bf,
-                statsKey2 = zorderWith.filter(_ =>
-                  lo2.isDefined && hi2.isDefined),
-                lo2 = lo2, hi2 = hi2, statsNulls = nulls,
-                extraStats = extras, ndv = ndvOf(r))
-          }
-        }
-      }
-    // exact per-file ROW COUNTS from the parquet footers — metadata
-    // reads on files this commit just wrote, no data pass. They feed
-    // the connector's reported statistics (row-accurate join sizing)
-    // and let COUNT(*) answer from the manifest alone. Byte lengths
-    // ride along so NO query plan ever needs a per-file status RPC.
-    val f = fs(spark, root)
-    entries.map(e => e.copy(rows = footerRowCount(f, root, e.path),
-      bytes = fileLen(f, root, e.path)))
   }
 
   /** Merged NDV estimates over a set of manifest entries:
@@ -1487,18 +1209,6 @@ object SnapshotTable {
       .filter(_ > 0).getOrElse(128L << 20)
     math.max(1, math.min(cap, ((bytes + target - 1) / target).toInt))
   }
-
-  /** Row count from a parquet file's footer; None if unreadable (the
-    * manifest entry then simply carries no count — every consumer
-    * treats a missing count as "must read the data"). */
-  private def footerRowCount(f: FileSystem, root: String,
-      rel: String): Option[Long] =
-    try {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new Path(root, rel), f.getConf))
-      try Some(r.getRecordCount) finally r.close()
-    } catch { case _: Exception => None }
 
   /** The arbiter: exclusive-create of `_commits/N.claim`. Local paths
     * use NIO O_EXCL (atomic in the kernel); remote filesystems use
@@ -2124,18 +1834,18 @@ object SnapshotTable {
       case _ => false
     }
 
-  /** Stage `df` as a VALUE-PURE segment: same-value rows co-locate
-    * (hash repartition on the key), then a per-value dynamic split
-    * writes one file per distinct value per task — a duplicated
-    * "__pv" column drives the split so the REAL column stays in the
-    * parquet files. Huge values still split soundly: Spark's
-    * `maxRecordsPerFile` rolls files WITHIN a value directory, and
-    * every resulting file remains value-pure. */
+  /** Stage `df` as a VALUE-PURE segment: one hash repartition on the
+    * key tuple co-locates same-tuple rows, then each task writes one
+    * file per distinct tuple it sees, so every file holds one value
+    * of every key (its min == max stats record it). NULL keys refuse
+    * with an IllegalArgumentException, the segment deleted and
+    * nothing committed. */
   private[sources] def stagePartitioned(spark: SparkSession,
       root: String, df: DataFrame, keys: Seq[String])
   : (Path, Seq[FileEntry]) = {
     require(keys.nonEmpty, "identity partitioning needs a key")
-    val fields = keys.map(k => df.schema.fields
+    val schema = df.schema
+    val fields = keys.map(k => schema.fields
       .find(_.name.equalsIgnoreCase(k))
       .getOrElse(throw new IllegalArgumentException(
         s"partition key '$k' is not a column of the batch")))
@@ -2144,191 +1854,32 @@ object SnapshotTable {
         s"identity partitioning does not support ${field.dataType
           .simpleString} keys (int/long/short/byte/string/date)"))
     val seg = newSegmentPath(root)
-    // single-pass staging (see stageSegment): tasks split one file per
-    // distinct key tuple and compute each file's stats while writing
-    if (inlineStatsEnabled(spark)) {
-      val entries = writePartitionedInline(spark, root, seg, df, fields)
-      val tailK = fields.drop(1).map(_.name)
-      return (seg, if (tailK.isEmpty) entries
-      else entries.map(e =>
-        e.copy(colNulls = e.colNulls ++ tailK.map(_ -> 0L))))
-    }
-    // one hash repartition on the full tuple co-locates same-tuple
-    // rows, then the dynamic split writes one file per distinct tuple
-    // per task (nested __pvN=value directories — the REAL columns
-    // stay in the parquet files; the directories are a write-time
-    // splitting device)
-    val pvCols = fields.indices.map(i => s"__pv$i")
-    fields.zip(pvCols)
-      .foldLeft(df.repartition(fields.map(fd => col(bq(fd.name))): _*)) {
-        case (d, (fd, pv)) => d.withColumn(pv, col(bq(fd.name)))
-      }
-      .write.partitionBy(pvCols: _*).mode("error").parquet(seg.toString)
-    val f = fs(spark, root)
-    // dynamic-partition writes route NULL keys to the default
-    // directory AT THEIR NESTING LEVEL — detect and refuse AFTER the
-    // write (zero extra pass over the batch; the segment is
-    // unpublished, so deleting it undoes everything)
-    def walk(dir: Path, level: Int): Seq[org.apache.hadoop.fs.FileStatus] =
-      f.listStatus(dir).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory && n.startsWith("__pv")) {
-          if (n.endsWith("=__HIVE_DEFAULT_PARTITION__")) {
-            f.delete(seg, true)
-            throw new IllegalArgumentException(
-              "NULL partition key in an identity-partitioned write " +
-                "(the layout has no partition for NULL)")
-          }
-          walk(st.getPath, level + 1)
-        } else if (!st.isDirectory && !n.startsWith("_") &&
-          !n.startsWith(".") && level == keys.length) Seq(st)
-        else Seq.empty
-      }
-    val segPathStr = seg.toUri.getPath
-    val parts = walk(seg, 0)
-      .sortBy(_.getPath.toUri.getPath)
-    val rel = parts.map(st => s"_data/${seg.getName}/" +
-      st.getPath.toUri.getPath.stripPrefix(segPathStr)
-        .stripPrefix("/"))
-    // first key: the primary stats slot (value-pure min == max plus
-    // the null count); tail keys: extraStats ranges — statsFor reads
-    // both, so pruning and purity checks see every key. Tail-key
-    // NULL counts are zero BY CONSTRUCTION (the null directory check
-    // above refused them) — stamped as colNulls so readers can
-    // verify tuple purity without trusting the layout declaration.
-    val entries = statsEntries(spark, root, seg, rel,
-      Some(fields.head.name), None,
-      zorderExtra = fields.drop(1).map(_.name))
-    val tail = fields.drop(1).map(_.name)
-    (seg, if (tail.isEmpty) entries
-    else entries.map(e =>
-      e.copy(colNulls = e.colNulls ++ tail.map(_ -> 0L))))
-  }
-
-  /** Single-pass identity-partitioned staging: one hash repartition on
-    * the key tuple co-locates same-tuple rows, then each task writes
-    * one lazily-created, VALUE-PURE file per distinct tuple it sees,
-    * accumulating the same per-file stats the read-back pass recorded
-    * (head-key min == max range + null count, tail-key ranges, NDV
-    * registers, rows, bytes). NULL keys refuse with the same
-    * IllegalArgumentException the directory-walk check raised, the
-    * segment deleted and nothing committed. */
-  private def writePartitionedInline(spark: SparkSession, root: String,
-      seg: Path, df: DataFrame, fields: Seq[StructField])
-  : Seq[FileEntry] = {
-    val schema = df.schema
-    def idxOf(k: String): Int =
-      schema.fieldNames.indexWhere(_.equalsIgnoreCase(k))
-    val keySpec = fields.map(fd =>
-      (fd.name, idxOf(fd.name), fd.dataType))
-    val ndvCols = ndvStatFields(spark, schema,
-      fields.map(_.name.toLowerCase(java.util.Locale.ROOT)).toSet)
-    val ndvSpec = ndvCols.map(fd => (fd.name, idxOf(fd.name), fd.dataType))
-    val shaped = df.repartition(fields.map(fd => col(bq(fd.name))): _*)
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
     val segStr = seg.toString
     val schemaJson = schema.json
-    val pconf = connector.GraftDataWriter.sessionParquetConf(spark)
-    val hc = connector.SerializableHadoopConf.broadcast(spark)
-    val NullKeyMsg = "NULL partition key in an identity-partitioned " +
-      "write (the layout has no partition for NULL)"
-    val qe = shaped.queryExecution
-    val stats =
-      try org.apache.spark.sql.execution.SQLExecution
-        .withNewExecutionId(qe, Some("graft_stage_partitioned")) {
-        qe.toRdd.mapPartitionsWithIndex {
-        (pid, it) =>
-          val taskSchema =
-            DataType.fromJson(schemaJson).asInstanceOf[StructType]
-          val tc = org.apache.spark.TaskContext.get()
-          val attempt = if (tc == null) 0L else tc.taskAttemptId()
-          val fsys = new Path(segStr).getFileSystem(hc.value.value)
-          final class FileAcc(n: Int) {
-            val name = f"part-$pid%05d-$attempt-p$n.snappy.parquet"
-            val path = new Path(segStr, name)
-            val writer = connector.GraftDataWriter.nativeWriter(path,
-              taskSchema, pconf, Some(hc.value.value))
-            val mm = keySpec.map { case (_, _, dt) => new MinMaxAcc(dt) }
-            val ndv = ndvSpec.map(_ => new Array[Byte](1 << NdvPrecision))
-            var rows = 0L
-          }
-          val open = scala.collection.mutable.LinkedHashMap
-            .empty[Seq[Any], FileAcc]
-          // immutable tuple key: UTF8String cells alias reused buffers
-          def keyOf(r: org.apache.spark.sql.catalyst.InternalRow)
-          : Seq[Any] = keySpec.map { case (_, i, dt) =>
-            require(!r.isNullAt(i), NullKeyMsg)
-            r.get(i, dt) match {
-              case s: org.apache.spark.unsafe.types.UTF8String => s.clone()
-              case x => x
-            }
-          }
-          try {
-            while (it.hasNext) {
-              val r = it.next()
-              val acc = open.getOrElseUpdate(keyOf(r),
-                new FileAcc(open.size))
-              var j = 0
-              while (j < keySpec.length) {
-                val (_, i, dt) = keySpec(j)
-                acc.mm(j).add(r.get(i, dt))
-                j += 1
-              }
-              j = 0
-              while (j < ndvSpec.length) {
-                val (_, i, dt) = ndvSpec(j)
-                if (!r.isNullAt(i)) graft.functions.Hll.add(acc.ndv(j),
-                  graft.functions.Hll.hashValue(r.get(i, dt), dt))
-                j += 1
-              }
-              acc.writer.write(r)
-              acc.rows += 1
-            }
-            open.values.foreach(_.writer.close())
-          } catch {
-            case e: Throwable =>
-              open.values.foreach { a =>
-                try a.writer.close() catch { case _: Throwable => () }
-                try fsys.delete(a.path, false)
-                catch { case _: Throwable => () }
-              }
-              throw e
-          }
-          open.values.iterator.map { a =>
-            val len = fsys.getFileStatus(a.path).getLen
-            val k0 = a.mm.head
-            InlineFileStats(a.name, a.rows, len,
-              renderStat(k0.lo, keySpec.head._3, tz),
-              renderStat(k0.hi, keySpec.head._3, tz), k0.nulls, None,
-              None, None,
-              keySpec.zip(a.mm).drop(1).map { case ((k, _, dt), m) =>
-                (k, renderStat(m.lo, dt, tz), renderStat(m.hi, dt, tz)) },
-              ndvSpec.zip(a.ndv).map { case ((n, _, _), regs) =>
-                (n, regs) })
-          }.toList.iterator
-      }.collect()
-      }.toSeq.sortBy(_.name)
-      catch {
-        case e: Throwable =>
-          // surface the NULL-key refusal as the API-level
-          // IllegalArgumentException callers (and specs) rely on
-          var c: Throwable = e
-          var isNull = false
-          while (c != null && !isNull) {
-            isNull = Option(c.getMessage).exists(_.contains(NullKeyMsg))
-            c = c.getCause
-          }
-          fs(spark, root).delete(seg, true)
-          if (isNull) throw new IllegalArgumentException(NullKeyMsg)
-          throw e
+    val keyIdxs = fields.map(fd => schema.fields.indexOf(fd))
+    // first key: the primary stats slot (value-pure min == max plus
+    // the null count); tail keys: extraStats ranges — statsFor reads
+    // both, so pruning and purity checks see every key
+    val names = fields.map(_.name)
+    val spec = inlineStatsSpec(spark, schema, names.headOption, None,
+      names.tail)
+    val NullKey = connector.GraftPartitionedAppendWriter.NullKeyMessage
+    val written =
+      try stageFiles(spark, root, seg,
+        df.repartition(fields.map(fd => col(bq(fd.name))): _*),
+        "graft_stage_partitioned") { (hc, pid, attempt) =>
+        new connector.GraftPartitionedAppendWriter(segStr, schemaJson,
+          keyIdxs, pid, attempt, spec, hc)
+      } catch {
+        // surface the NULL-key refusal as the API-level
+        // IllegalArgumentException callers (and specs) rely on
+        case e: Throwable if Iterator.iterate(e)(_.getCause)
+          .takeWhile(_ != null)
+          .exists(c => Option(c.getMessage).exists(_.contains(NullKey))) =>
+          throw new IllegalArgumentException(NullKey)
       }
-    stats.map { s =>
-      FileEntry(s"_data/${seg.getName}/${s.name}", Some(fields.head.name),
-        s.lo, s.hi, statsNulls = Some(s.nulls),
-        extraStats = s.extras.collect {
-          case (k, Some(l), Some(h)) => (k, l, h) },
-        ndv = s.ndv, rows = Some(s.rows), bytes = Some(s.bytes))
-    }
+    (seg, stagedEntries(seg, written, names.headOption, None,
+      partitionTail = names.tail))
   }
 
   /** The grid-cell id of a key tuple: per-key `pmod(murmur3(k_i),
@@ -2358,222 +1909,35 @@ object SnapshotTable {
     out.toSeq
   }
 
+  /** Stage `df` into a bucket grid: rows hash-partition on their
+    * [[gridCell]] and each task writes one file per cell it sees,
+    * recording per-key ranges and null counts, NDV registers and the
+    * cell in the `__bucket` slot. The cell comes from Spark's own
+    * hash, so NULL keys and every hashable key type bucket. */
   private def stageBucketed(spark: SparkSession, root: String,
       df: DataFrame, keys: Seq[(String, Int)])
   : (Path, Seq[FileEntry]) = {
     require(keys.forall(_._2 > 0), "buckets must be positive")
-    val buckets = keys.map(_._2).product
-    val seg = newSegmentPath(root)
-    // single-pass staging (see stageSegment): tasks split per grid
-    // cell and compute each file's stats while writing it
-    if (inlineStatsEnabled(spark))
-      return (seg, writeBucketedInline(spark, root, seg, df, keys))
-    df.withColumn("__b", gridCell(keys))
-      .repartition(buckets, col("__b"))
-      .write.partitionBy("__b").mode("error").parquet(seg.toString)
-    val f = fs(spark, root)
-    val segUri = seg.toUri
-    val fileList = {
-      val it = f.listFiles(seg, true)
-      val buf = Seq.newBuilder[Path]
-      while (it.hasNext) {
-        val st = it.next()
-        val n = st.getPath.getName
-        if (!n.startsWith("_") && !n.startsWith(".")) buf += st.getPath
-      }
-      buf.result().sortBy(_.toUri.getPath)
-    }
-    // one column-pruned stats pass: per file, its bucket (constant by
-    // construction — partitionBy directory), per-key min/max, and the
-    // NDV sketches every other commit path records (auto mode: the
-    // bucket keys themselves, already read here)
-    val ndvCols = ndvStatFields(spark,
-      StructType(df.schema.fields.filterNot(_.name == "__b")),
-      keys.map(_._1.toLowerCase(java.util.Locale.ROOT)).toSet)
-    graft.functions.HllFunctions.register(spark)
-    val selCols = Seq(input_file_name().as("__f"), col("__b")) ++
-      keys.zipWithIndex.map { case ((k, _), i) => col(k).as(s"__k$i") } ++
-      ndvCols.zipWithIndex.map { case (fd, i) =>
-        col(bq(fd.name)).as(s"__n$i") }
-    val aggCols = Seq(first(col("__b")).as("__bv")) ++
-      keys.indices.flatMap(i => Seq(
-        smin(col(s"__k$i")).cast("string").as(s"__lo$i"),
-        smax(col(s"__k$i")).cast("string").as(s"__hi$i"),
-        expr(s"sum(CASE WHEN __k$i IS NULL THEN 1 ELSE 0 END)")
-          .as(s"__nulls$i"))) ++
-      ndvCols.indices.map(i => expr(
-        s"graft_hll_sketch(__n$i, $NdvPrecision)").as(s"__ndv$i"))
-    val statRows = spark.read.parquet(seg.toString)
-      .select(selCols: _*)
-      .groupBy(col("__f"))
-      .agg(aggCols.head, aggCols.tail: _*)
-      .collect()
-      .map(r => new Path(r.getAs[String]("__f")).toUri.getPath ->
-        (r: org.apache.spark.sql.Row)).toMap
-    val segPathStr = segUri.getPath
-    val entries = fileList.map { p =>
-      val rel = s"_data/${seg.getName}/" +
-        p.toUri.getPath.stripPrefix(segPathStr).stripPrefix("/")
-      statRows.get(p.toUri.getPath) match {
-        case None => FileEntry(rel, Some(keys.head._1), None, None)
-        case Some(r) =>
-          val b = r.getAs[Number]("__bv").longValue()
-          // keys beyond the first range-record as extra stats slots,
-          // so pruning works on every bucket column
-          val extraKeyStats = keys.zipWithIndex.drop(1).flatMap {
-            case ((k, _), i) =>
-              (Option(r.getAs[String](s"__lo$i")),
-                Option(r.getAs[String](s"__hi$i"))) match {
-                case (Some(l), Some(h)) => Some((k, l, h))
-                case _ => None
-              }
-          }
-          FileEntry(rel, Some(keys.head._1),
-            Option(r.getAs[String]("__lo0")),
-            Option(r.getAs[String]("__hi0")),
-            statsNulls = Option(r.getAs[Any]("__nulls0"))
-              .map(_.asInstanceOf[Number].longValue()),
-            extraStats = extraKeyStats :+
-              (("__bucket", b.toString, b.toString)),
-            ndv = ndvCols.zipWithIndex.flatMap { case (fd, i) =>
-              Option(r.getAs[Array[Byte]](s"__ndv$i")).map(fd.name -> _)
-            })
-      }
-    }
-    (seg, entries.map(e =>
-      e.copy(rows = footerRowCount(f, root, e.path),
-        bytes = fileLen(f, root, e.path))))
-  }
-
-  /** Single-pass bucketed staging: each task splits its rows per grid
-    * cell into one lazily-created parquet file per non-empty cell
-    * (the `__b` routing column rides as a TRAILING field the writer's
-    * schema never reads, so no per-row projection), accumulating every
-    * per-file stat the read-back pass recorded — per-key ranges and
-    * null counts, NDV registers, the `__bucket` slot, row count, byte
-    * length. Files land FLAT in the segment (the `__b=N/` directories
-    * of the two-pass path were only a write-time splitting device;
-    * readers resolve files through the manifest under the recorded
-    * schema, never through directory layout). */
-  private def writeBucketedInline(spark: SparkSession, root: String,
-      seg: Path, df: DataFrame, keys: Seq[(String, Int)])
-  : Seq[FileEntry] = {
     val schema = df.schema
-    def idxOf(k: String): Int = {
-      val i = schema.fieldNames.indexWhere(_.equalsIgnoreCase(k))
-      require(i >= 0, s"bucket key '$k' is not a column of the batch")
-      i
-    }
-    val keySpec = keys.map { case (k, _) =>
-      (k, idxOf(k), schema(idxOf(k)).dataType) }
-    val ndvCols = ndvStatFields(spark, schema,
-      keys.map(_._1.toLowerCase(java.util.Locale.ROOT)).toSet)
-    val ndvSpec = ndvCols.map(fd => (fd.name, idxOf(fd.name), fd.dataType))
-    val buckets = keys.map(_._2).product
-    val shaped = df.withColumn("__b", gridCell(keys))
-      .repartition(buckets, col("__b"))
-    val bIdx = shaped.schema.length - 1
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    keys.foreach { case (k, _) =>
+      require(schema.fieldNames.exists(_.equalsIgnoreCase(k)),
+        s"bucket key '$k' is not a column of the batch") }
+    val seg = newSegmentPath(root)
     val segStr = seg.toString
     val schemaJson = schema.json
-    val pconf = connector.GraftDataWriter.sessionParquetConf(spark)
-    val hc = connector.SerializableHadoopConf.broadcast(spark)
-    val qe = shaped.queryExecution
-    val stats = try org.apache.spark.sql.execution.SQLExecution
-      .withNewExecutionId(qe, Some("graft_stage_bucketed")) {
-      qe.toRdd.mapPartitionsWithIndex {
-      (pid, it) =>
-        val taskSchema =
-          DataType.fromJson(schemaJson).asInstanceOf[StructType]
-        val tc = org.apache.spark.TaskContext.get()
-        val attempt = if (tc == null) 0L else tc.taskAttemptId()
-        // strip the trailing __b routing field: ParquetWriteSupport
-        // writes row.numFields fields, not schema.length
-        val proj = org.apache.spark.sql.catalyst.expressions
-          .UnsafeProjection.create(taskSchema.fields.toIndexedSeq
-            .zipWithIndex.map { case (fd, i) =>
-              org.apache.spark.sql.catalyst.expressions
-                .BoundReference(i, fd.dataType, fd.nullable)
-                : org.apache.spark.sql.catalyst.expressions.Expression })
-        val fsys = new Path(segStr).getFileSystem(hc.value.value)
-        final class FileAcc(val bucket: Int) {
-          val name = f"part-$pid%05d-$attempt-b$bucket.snappy.parquet"
-          val path = new Path(segStr, name)
-          val writer = connector.GraftDataWriter.nativeWriter(path,
-            taskSchema, pconf, Some(hc.value.value))
-          val mm = keySpec.map { case (_, _, dt) => new MinMaxAcc(dt) }
-          val ndv = ndvSpec.map(_ => new Array[Byte](1 << NdvPrecision))
-          var rows = 0L
-        }
-        val open = scala.collection.mutable.LinkedHashMap
-          .empty[Int, FileAcc]
-        try {
-          while (it.hasNext) {
-            val r = it.next()
-            val acc = open.getOrElseUpdate(r.getInt(bIdx),
-              new FileAcc(r.getInt(bIdx)))
-            var j = 0
-            while (j < keySpec.length) {
-              val (_, i, dt) = keySpec(j)
-              acc.mm(j).add(if (r.isNullAt(i)) null else r.get(i, dt))
-              j += 1
-            }
-            j = 0
-            while (j < ndvSpec.length) {
-              val (_, i, dt) = ndvSpec(j)
-              if (!r.isNullAt(i)) graft.functions.Hll.add(acc.ndv(j),
-                graft.functions.Hll.hashValue(r.get(i, dt), dt))
-              j += 1
-            }
-            acc.writer.write(proj(r))
-            acc.rows += 1
-          }
-          open.values.foreach(_.writer.close())
-        } catch {
-          case e: Throwable =>
-            open.values.foreach { a =>
-              try a.writer.close() catch { case _: Throwable => () }
-              try fsys.delete(a.path, false)
-              catch { case _: Throwable => () }
-            }
-            throw e
-        }
-        open.values.iterator.map { a =>
-          val len = fsys.getFileStatus(a.path).getLen
-          val k0 = a.mm.head
-          val tail = keySpec.zip(a.mm).drop(1).flatMap {
-            case ((k, _, dt), m) =>
-              (renderStat(m.lo, dt, tz), renderStat(m.hi, dt, tz)) match {
-                case (Some(l), Some(h)) => Some((k, l, h))
-                case _ => None
-              }
-          }
-          InlineFileStats(a.name, a.rows, len,
-            renderStat(k0.lo, keySpec.head._3, tz),
-            renderStat(k0.hi, keySpec.head._3, tz), k0.nulls, None,
-            None, None,
-            tail.map { case (k, l, h) => (k, Some(l), Some(h)) } :+
-              (("__bucket", Some(a.bucket.toString),
-                Some(a.bucket.toString))),
-            ndvSpec.zip(a.ndv).map { case ((n, _, _), regs) =>
-              (n, regs) })
-        }.toList.iterator
-    }.collect()
-    }.toSeq.sortBy(_.name)
-    catch {
-      case e: Throwable =>
-        // same job-level cleanup as writeSegmentInline: a failed job
-        // leaves no committed-task files squatting in the segment
-        fs(spark, root).delete(seg, true)
-        throw e
+    val spec = inlineStatsSpec(spark, schema, Some(keys.head._1), None,
+      keys.tail.map(_._1))
+    // the cell rides as a TRAILING column the writer strips, so no
+    // key column is projected away
+    val cellIdx = schema.length
+    val written = stageFiles(spark, root, seg,
+      df.withColumn("__b", gridCell(keys))
+        .repartition(keys.map(_._2).product, col("__b")),
+      "graft_stage_bucketed") { (hc, pid, attempt) =>
+      new connector.GraftBucketedAppendWriter(segStr, schemaJson, Nil,
+        pid, attempt, spec, hc, cellIdx)
     }
-    stats.map { s =>
-      FileEntry(s"_data/${seg.getName}/${s.name}", Some(keys.head._1),
-        s.lo, s.hi, statsNulls = Some(s.nulls),
-        extraStats = s.extras.collect {
-          case (k, Some(l), Some(h)) => (k, l, h) },
-        ndv = s.ndv, rows = Some(s.rows), bytes = Some(s.bytes))
-    }
+    (seg, stagedEntries(seg, written, Some(keys.head._1), None))
   }
 
   // ---- table properties ----

@@ -1,5 +1,6 @@
 package graft.sources.connector
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder => V2SortOrder}
@@ -109,9 +110,9 @@ private[connector] class GraftRowLevelOperation(root: String,
 
 /** The ReplaceData write: executor tasks stage rewritten rows as
   * immutable parquet files (the same writer as the V2 append path),
-  * the driver commit computes the table-layout stats for the new
-  * files and swaps them in for the operation's recorded read set in
-  * one CAS manifest commit. */
+  * recording the table-layout stats of each new file as they write;
+  * the driver commit swaps them in for the operation's recorded read
+  * set in one CAS manifest commit. */
 private[connector] class GraftReplaceDataWrite(root: String,
     version: Long, schema: StructType, op: GraftRowLevelOperation)
   extends Write with RequiresDistributionAndOrdering {
@@ -275,8 +276,8 @@ private[connector] class GraftDeltaWrite(root: String,
 }
 
 private[connector] case class GraftDeltaTaskFiles(
-    data: Seq[(String, Int, Option[SnapshotTable.InlineFileStats])],
-    tomb: Option[(String, Option[SnapshotTable.InlineFileStats])])
+    data: Seq[SnapshotTable.InlineFileStats],
+    tomb: Seq[SnapshotTable.InlineFileStats])
   extends WriterCommitMessage
 
 private[connector] class GraftDeltaBatchWrite(root: String,
@@ -301,10 +302,10 @@ private[connector] class GraftDeltaBatchWrite(root: String,
   private val tombSpec = SnapshotTable.inlineStatsSpec(
     SparkSession.active, keySchema, Some(key), None)
 
-  // session Hadoop conf, broadcast once per write job (see
-  // SerializableHadoopConf)
-  private val hconf =
-    Some(SerializableHadoopConf.broadcast(SparkSession.active))
+  // session Hadoop conf, broadcast once per write job and destroyed
+  // when the job commits or aborts (see GraftBatchWrite)
+  private val hconf = SerializableHadoopConf.broadcast(SparkSession.active)
+  private lazy val release: Unit = hconf.destroy()
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
   : DeltaWriterFactory = new GraftDeltaWriterFactory(dataSeg.toString,
@@ -314,67 +315,45 @@ private[connector] class GraftDeltaBatchWrite(root: String,
     else -1,
     bucketSpec.getOrElse(0), dataSpec, tombSpec, hconf)
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    val dataFiles = messages.toSeq.collect {
-      case GraftDeltaTaskFiles(ds, _) => ds.map { case (name, b, st) =>
-        (s"_data/${dataSeg.getName}/$name", b, st) }
-    }.flatten.sortBy(_._1)
-    val dataRel = dataFiles.map(_._1)
-    val bucketOf = dataFiles.map(f => f._1 -> f._2).toMap
-    val tombFiles = messages.toSeq.collect {
-      case GraftDeltaTaskFiles(_, Some((name, st))) =>
-        (s"_data/${tombSeg.getName}/$name", st)
-    }.sortBy(_._1)
-    val tombRel = tombFiles.map(_._1)
-    val f = SnapshotTable.fs(spark, root)
-    if (dataRel.isEmpty && tombRel.isEmpty) {
-      f.delete(dataSeg, true); f.delete(tombSeg, true)
-      return // nothing matched and nothing inserted
-    }
-    val dataEntries0 =
-      if (dataRel.isEmpty) Seq.empty
-      else if (dataSpec.isDefined && dataFiles.forall(_._3.isDefined))
-        dataFiles.map { case (r, _, st) =>
-          SnapshotTable.inlineEntry(r, st.get, ck.orElse(Some(key)), bk) }
-      else SnapshotTable.statsEntries(spark, root, dataSeg, dataRel,
-        ck.orElse(Some(key)), bk)
-    val dataEntries =
-      if (bucketSpec.isEmpty) dataEntries0
-      else dataEntries0.map(e => e.copy(extraStats = e.extraStats :+
-        ("__bucket", bucketOf(e.path).toString,
-          bucketOf(e.path).toString)))
-    val tombEntries =
-      if (tombRel.isEmpty) Seq.empty
-      else if (tombSpec.isDefined && tombFiles.forall(_._2.isDefined))
-        tombFiles.map { case (r, st) =>
-          SnapshotTable.inlineEntry(r, st.get, Some(key), None) }
-      else SnapshotTable.statsEntries(spark, root, tombSeg, tombRel,
-        Some(key), None)
-    val batchSchema = if (dataRel.isEmpty) StructType(Nil) else rowSchema
-    SnapshotTable.appendDeltaStaged(spark, root,
-      Seq(dataSeg, tombSeg).filter(s =>
-        (s == dataSeg && dataRel.nonEmpty) ||
-          (s == tombSeg && tombRel.nonEmpty)),
-      dataEntries, tombEntries, key, batchSchema)
-    // clean the empty staging dir the filter above left behind
-    if (dataRel.isEmpty) f.delete(dataSeg, true)
-    if (tombRel.isEmpty) f.delete(tombSeg, true)
-  }
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    try {
+      val spark = SparkSession.active
+      val dataFiles = messages.toSeq.collect {
+        case GraftDeltaTaskFiles(ds, _) => ds }.flatten
+      val tombFiles = messages.toSeq.collect {
+        case GraftDeltaTaskFiles(_, ts) => ts }.flatten
+      val f = SnapshotTable.fs(spark, root)
+      if (dataFiles.nonEmpty || tombFiles.nonEmpty) {
+        val batchSchema =
+          if (dataFiles.isEmpty) StructType(Nil) else rowSchema
+        SnapshotTable.appendDeltaStaged(spark, root,
+          Seq(dataSeg -> dataFiles, tombSeg -> tombFiles)
+            .collect { case (s, fs) if fs.nonEmpty => s },
+          SnapshotTable.stagedEntries(dataSeg, dataFiles,
+            ck.orElse(Some(key)), bk),
+          SnapshotTable.stagedEntries(tombSeg, tombFiles, Some(key), None),
+          key, batchSchema)
+      }
+      // nothing matched and nothing inserted, or one side is empty:
+      // clean the staging dirs no manifest lists
+      if (dataFiles.isEmpty) f.delete(dataSeg, true)
+      if (tombFiles.isEmpty) f.delete(tombSeg, true)
+    } finally release
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    SnapshotTable.fs(spark, root).delete(dataSeg, true)
-    SnapshotTable.fs(spark, root).delete(tombSeg, true)
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    try {
+      val f = SnapshotTable.fs(SparkSession.active, root)
+      f.delete(dataSeg, true)
+      f.delete(tombSeg, true)
+    } finally release
 }
 
 private[connector] class GraftDeltaWriterFactory(dataSegAbs: String,
     tombSegAbs: String, rowSchemaJson: String, keySchemaJson: String,
     bucketKeyIdx: Int, buckets: Int,
-    dataSpec: Option[SnapshotTable.InlineStatsSpec] = None,
-    tombSpec: Option[SnapshotTable.InlineStatsSpec] = None,
-    hconf: Option[org.apache.spark.broadcast.Broadcast[SerializableHadoopConf]] = None)
+    dataSpec: SnapshotTable.InlineStatsSpec,
+    tombSpec: SnapshotTable.InlineStatsSpec,
+    hconf: Broadcast[SerializableHadoopConf])
   extends DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
   : DeltaWriter[org.apache.spark.sql.catalyst.InternalRow] =
@@ -394,9 +373,9 @@ private[connector] class GraftDeltaWriterFactory(dataSegAbs: String,
 private[connector] class GraftDeltaWriter(dataSegAbs: String,
     tombSegAbs: String, rowSchemaJson: String, keySchemaJson: String,
     bucketKeyIdx: Int, buckets: Int, partitionId: Int, taskId: Long,
-    dataSpec: Option[SnapshotTable.InlineStatsSpec] = None,
-    tombSpec: Option[SnapshotTable.InlineStatsSpec] = None,
-    hconf: Option[org.apache.spark.broadcast.Broadcast[SerializableHadoopConf]] = None)
+    dataSpec: SnapshotTable.InlineStatsSpec,
+    tombSpec: SnapshotTable.InlineStatsSpec,
+    hconf: Broadcast[SerializableHadoopConf])
   extends DeltaWriter[org.apache.spark.sql.catalyst.InternalRow] {
 
   import org.apache.spark.sql.catalyst.InternalRow
@@ -413,11 +392,11 @@ private[connector] class GraftDeltaWriter(dataSegAbs: String,
       // across task attempts once buckets exceed the fold base, and an
       // aliased retry's abort() deletes the committed attempt's file.
       new GraftDataWriter(dataSegAbs, rowSchemaJson, partitionId, taskId,
-        suffix = if (bucket < 0) "" else s"-b$bucket",
-        statsSpec = dataSpec, hconf = hconf))
+        dataSpec, hconf, suffix = if (bucket < 0) "" else s"-b$bucket",
+        bucket = Some(bucket).filter(_ >= 0)))
   private val tombW =
     new GraftDataWriter(tombSegAbs, keySchemaJson, partitionId, taskId,
-      statsSpec = tombSpec, hconf = hconf)
+      tombSpec, hconf)
 
   /** `pmod(murmur3(key), n)` over the row's key value — must agree
     * with the layout function in SnapshotTable.commitBucketed and the
@@ -456,14 +435,9 @@ private[connector] class GraftDeltaWriter(dataSegAbs: String,
     dataW(bucketFor(row)).write(row)
   }
 
-  override def commit(): WriterCommitMessage = {
-    val ds = dataWriters.toSeq.sortBy(_._1).flatMap { case (b, w) =>
-      val tf = w.commit().asInstanceOf[GraftTaskFile]
-      tf.name.map(n => (n, b, tf.stats))
-    }
-    val t = tombW.commit().asInstanceOf[GraftTaskFile]
-    GraftDeltaTaskFiles(ds, t.name.map(n => (n, t.stats)))
-  }
+  override def commit(): WriterCommitMessage =
+    GraftDeltaTaskFiles(dataWriters.values.toSeq.flatMap(_.files()),
+      tombW.files())
 
   override def abort(): Unit = {
     dataWriters.values.foreach(_.abort()); tombW.abort()
@@ -485,12 +459,16 @@ private[connector] class GraftReplaceBatchWrite(root: String,
   // a fresh partitioned table has no entries for layoutOf to read the
   // cluster key from — the declared keys still govern; composite-
   // layout tail keys record extraStats ranges so the rewritten files
-  // keep their tuple purity evidence. Single-pass: accumulated by the
-  // write tasks (see SnapshotTable.InlineStatsAcc).
+  // keep their tuple purity evidence
   private val statsKey = clusterKey.orElse(partitionKeys.headOption)
   private val statsSpec = SnapshotTable.inlineStatsSpec(
     SparkSession.active, schema, statsKey, bloomKey,
     partitionKeys.drop(1))
+
+  // the session Hadoop conf (its parquet.* sizing too) for the
+  // rewrite tasks, released like GraftBatchWrite's
+  private val hconf = SerializableHadoopConf.broadcast(SparkSession.active)
+  private lazy val release: Unit = hconf.destroy()
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
   : DataWriterFactory =
@@ -498,47 +476,27 @@ private[connector] class GraftReplaceBatchWrite(root: String,
       new GraftPartitionedWriterFactory(seg.toString, schema.json,
         partitionKeys.map(pk =>
           schema.fieldNames.indexWhere(_.equalsIgnoreCase(pk))),
-        statsSpec)
-    else new GraftWriterFactory(seg.toString, schema.json, statsSpec)
+        statsSpec, hconf)
+    else new GraftWriterFactory(seg.toString, schema.json, statsSpec,
+      hconf)
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    // sorted into partition order, same rule as every other commit
-    val files = messages.toSeq.flatMap {
-      case GraftTaskFile(Some(name), st) =>
-        Seq((s"_data/${seg.getName}/$name", st))
-      case GraftPartitionedTaskFiles(fs) =>
-        fs.map { case (name, st) =>
-          (s"_data/${seg.getName}/$name", st) }
-      case _ => Seq.empty
-    }.sortBy(_._1)
-    val rel = files.map(_._1)
-    val removed = op.plannedFiles.map(_.path).toSet
-    if (rel.isEmpty && removed.isEmpty) {
-      // nothing read, nothing written (e.g. the condition pruned every
-      // group and no NOT MATCHED insert fired): publish no version
-      SnapshotTable.fs(spark, root).delete(seg, true)
-      return
-    }
-    val entries0 =
-      if (rel.isEmpty) Seq.empty
-      else if (statsSpec.isDefined && files.forall(_._2.isDefined))
-        files.map { case (r, st) =>
-          SnapshotTable.inlineEntry(r, st.get, statsKey, bloomKey) }
-      else SnapshotTable.statsEntries(spark, root, seg, rel,
-        statsKey, bloomKey,
-        zorderExtra = partitionKeys.drop(1))
-    val partTail = partitionKeys.drop(1)
-    val entries =
-      if (partTail.isEmpty) entries0
-      else entries0.map(e =>
-        e.copy(colNulls = e.colNulls ++ partTail.map(_ -> 0L)))
-    SnapshotTable.replaceFilesStaged(spark, root, seg, entries,
-      removed, version, schema)
-  }
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    try {
+      val spark = SparkSession.active
+      val files = GraftTaskFiles.of(messages)
+      val removed = op.plannedFiles.map(_.path).toSet
+      if (files.isEmpty && removed.isEmpty)
+        // nothing read, nothing written (e.g. the condition pruned
+        // every group and no NOT MATCHED insert fired): publish no
+        // version
+        SnapshotTable.fs(spark, root).delete(seg, true)
+      else SnapshotTable.replaceFilesStaged(spark, root, seg,
+        SnapshotTable.stagedEntries(seg, files, statsKey, bloomKey,
+          partitionTail = partitionKeys.drop(1)),
+        removed, version, schema)
+    } finally release
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    SnapshotTable.fs(spark, root).delete(seg, true)
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    try SnapshotTable.fs(SparkSession.active, root).delete(seg, true)
+    finally release
 }

@@ -4,6 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
@@ -22,12 +23,12 @@ import graft.sources.SnapshotTable
   * }}}
   *
   * Executor tasks write immutable parquet files straight into a
-  * staging segment (parquet-mr, the writer twin of
-  * [[GraftPartitionReader]]); the driver's commit computes the same
-  * per-file manifest stats `append` would (min/max on the table's
-  * cluster key, bloom on its bloom column — one column-pruned pass)
-  * and lands the version through the SAME claim/publish CAS protocol
-  * as every native commit. A concurrent native `append` and a V2
+  * staging segment through [[GraftDataWriter]], the same per-file
+  * writer native commits use, computing the per-file manifest stats
+  * `append` records (min/max on the table's cluster key, bloom on its
+  * bloom column) as they write; the driver's commit lands the version
+  * through the SAME claim/publish CAS protocol as every native
+  * commit. A concurrent native `append` and a V2
   * write therefore serialize correctly: one wins version N, the
   * other retries onto N+1 carrying both file sets.
   *
@@ -144,22 +145,17 @@ private[connector] class GraftWrite(root: String, schema: StructType,
       bucketSpec, partitionSpec)
 }
 
-private[connector] case class GraftTaskFile(name: Option[String],
-    stats: Option[SnapshotTable.InlineFileStats] = None)
+/** Every file one write task staged, each with the manifest stats the
+  * task computed while writing it. */
+private[sources] case class GraftTaskFiles(
+    files: Seq[SnapshotTable.InlineFileStats])
   extends WriterCommitMessage
 
-/** Per-task files of a bucketed append: one (file, bucket, stats)
-  * triple per non-empty bucket the task saw. */
-private[connector] case class GraftBucketedTaskFiles(
-    files: Seq[(String, Int, Option[SnapshotTable.InlineFileStats])])
-  extends WriterCommitMessage
-
-/** Per-task files of an identity-partitioned append: one file per
-  * distinct partition value the task saw (the value itself is NOT
-  * carried — the manifest's min == max stats record it). */
-private[connector] case class GraftPartitionedTaskFiles(
-    files: Seq[(String, Option[SnapshotTable.InlineFileStats])])
-  extends WriterCommitMessage
+private[connector] object GraftTaskFiles {
+  def of(messages: Array[WriterCommitMessage])
+  : Seq[SnapshotTable.InlineFileStats] =
+    messages.toSeq.collect { case GraftTaskFiles(fs) => fs }.flatten
+}
 
 private[connector] class GraftBatchWrite(root: String,
     schema: StructType, replace: Boolean, clusterKey: Option[String],
@@ -179,17 +175,14 @@ private[connector] class GraftBatchWrite(root: String,
   private val gridExtra = (bucketSpec.toSeq.flatten.map(_._1) ++
     partitionSpec.toSeq.flatten.drop(1))
     .filterNot(k => statsKey.exists(_.equalsIgnoreCase(k)))
-  // single-pass stats (see SnapshotTable.stageSegment): the tasks
-  // compute every per-file stat while writing; None restores the
-  // read-back pass
   private val statsSpec = SnapshotTable.inlineStatsSpec(
     SparkSession.active, schema, statsKey, bloomKey, gridExtra)
 
-  // session Hadoop conf, BROADCAST once per write job: writers must
-  // not fabricate bare Configurations per file, and the factories
-  // must ship only the broadcast handle (see SerializableHadoopConf)
-  private val hconf =
-    Some(SerializableHadoopConf.broadcast(SparkSession.active))
+  // session Hadoop conf, broadcast once per write job (see
+  // SerializableHadoopConf) and destroyed when the job commits or
+  // aborts; a lazy val, because Spark aborts after a failed commit
+  private val hconf = SerializableHadoopConf.broadcast(SparkSession.active)
+  private lazy val release: Unit = hconf.destroy()
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
   : DataWriterFactory = (bucketSpec, partitionSpec) match {
@@ -205,59 +198,29 @@ private[connector] class GraftBatchWrite(root: String,
       statsSpec, hconf)
   }
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    // sorted: commit-message arrival order is task-completion order,
-    // but manifest order should be partition order (see stageSegment)
-    val files = messages.toSeq.flatMap {
-      case GraftTaskFile(Some(name), st) =>
-        Seq((s"_data/${seg.getName}/$name", -1, st))
-      case GraftBucketedTaskFiles(fs) => fs.map { case (name, b, st) =>
-        (s"_data/${seg.getName}/$name", b, st) }
-      case GraftPartitionedTaskFiles(fs) =>
-        fs.map { case (name, st) =>
-          (s"_data/${seg.getName}/$name", -1, st) }
-      case _ => Seq.empty
-    }.sortBy(_._1)
-    val rel = files.map(_._1)
-    if (rel.isEmpty && !replace) return // empty append: nothing to commit
-    val entries1 =
-      if (rel.isEmpty) Seq.empty
-      else if (statsSpec.isDefined && files.forall(_._3.isDefined))
-        files.map { case (r, _, st) =>
-          SnapshotTable.inlineEntry(r, st.get, statsKey, bloomKey) }
-      else SnapshotTable.statsEntries(spark, root, seg, rel,
-        statsKey, bloomKey, zorderExtra = gridExtra)
-    // composite identity layout: tail-key NULL counts are zero BY
-    // CONSTRUCTION (the writer refused NULL keys) — stamped so tuple
-    // purity is verifiable from the manifest, not the declaration
-    val partTail = partitionSpec.toSeq.flatten.drop(1)
-    val entries0 =
-      if (partTail.isEmpty) entries1
-      else entries1.map(e =>
-        e.copy(colNulls = e.colNulls ++ partTail.map(_ -> 0L)))
-    val bucketOf = files.map(f => f._1 -> f._2).toMap
-    val entries =
-      if (bucketSpec.isEmpty) entries0
-      else entries0.map(e => e.copy(extraStats = e.extraStats :+
-        ("__bucket", bucketOf(e.path).toString,
-          bucketOf(e.path).toString)))
-    if (replace)
-      SnapshotTable.replaceStaged(spark, root, seg, entries, schema)
-    else
-      SnapshotTable.appendStaged(spark, root, seg, entries, schema)
-  }
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    try {
+      val spark = SparkSession.active
+      val files = GraftTaskFiles.of(messages)
+      if (files.nonEmpty || replace) {
+        val entries = SnapshotTable.stagedEntries(seg, files, statsKey,
+          bloomKey, partitionTail = partitionSpec.toSeq.flatten.drop(1))
+        if (replace)
+          SnapshotTable.replaceStaged(spark, root, seg, entries, schema)
+        else
+          SnapshotTable.appendStaged(spark, root, seg, entries, schema)
+      }
+    } finally release
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    SnapshotTable.fs(spark, root).delete(seg, true)
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    try SnapshotTable.fs(SparkSession.active, root).delete(seg, true)
+    finally release
 }
 
 private[connector] class GraftBucketedWriterFactory(segAbs: String,
     schemaJson: String, bucketKeyIdxs: Seq[(Int, Int)],
-    statsSpec: Option[SnapshotTable.InlineStatsSpec] = None,
-    hconf: Option[org.apache.spark.broadcast.Broadcast[SerializableHadoopConf]] = None)
+    statsSpec: SnapshotTable.InlineStatsSpec,
+    hconf: Broadcast[SerializableHadoopConf])
   extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
   : DataWriter[InternalRow] =
@@ -273,19 +236,30 @@ private[connector] class GraftBucketedWriterFactory(segAbs: String,
   * upstream keeps the total file count bounded by the cell count.
   * NULL keys are refused — the bucket function has no bucket for
   * them, and accepting one would silently break the layout the scan
-  * reports. */
-private[connector] class GraftBucketedAppendWriter(segAbs: String,
+  * reports.
+  *
+  * With `cellIdx >= 0` (native bucketed staging) the rows instead
+  * carry their cell, computed by `gridCell` (Spark's own hash, so
+  * NULL keys and every hashable key type have one), as a trailing
+  * column at that position; it routes the row and is stripped before
+  * the row is written. */
+private[sources] class GraftBucketedAppendWriter(segAbs: String,
     schemaJson: String, bucketKeyIdxs: Seq[(Int, Int)],
     partitionId: Int, taskId: Long,
-    statsSpec: Option[SnapshotTable.InlineStatsSpec] = None,
-    hconf: Option[org.apache.spark.broadcast.Broadcast[SerializableHadoopConf]] = None)
+    statsSpec: SnapshotTable.InlineStatsSpec,
+    hconf: Broadcast[SerializableHadoopConf], cellIdx: Int = -1)
   extends DataWriter[InternalRow] {
 
-  private val keyTypes = {
-    val fields = DataType.fromJson(schemaJson)
-      .asInstanceOf[StructType].fields
-    bucketKeyIdxs.map { case (i, _) => fields(i).dataType }
-  }
+  private val fields = DataType.fromJson(schemaJson)
+    .asInstanceOf[StructType].fields
+  private val keyTypes = bucketKeyIdxs.map { case (i, _) => fields(i).dataType }
+
+  // ParquetWriteSupport writes row.numFields fields, not schema.length
+  private lazy val dropCell = org.apache.spark.sql.catalyst.expressions
+    .UnsafeProjection.create(fields.toIndexedSeq.zipWithIndex.map {
+      case (fd, i) => org.apache.spark.sql.catalyst.expressions
+        .BoundReference(i, fd.dataType, fd.nullable)
+        : org.apache.spark.sql.catalyst.expressions.Expression })
 
   private val writers =
     scala.collection.mutable.Map.empty[Int, GraftDataWriter]
@@ -296,7 +270,7 @@ private[connector] class GraftBucketedAppendWriter(segAbs: String,
   private def w(bucket: Int): GraftDataWriter =
     writers.getOrElseUpdate(bucket,
       new GraftDataWriter(segAbs, schemaJson, partitionId, taskId,
-        suffix = s"-b$bucket", statsSpec = statsSpec, hconf = hconf))
+        statsSpec, hconf, suffix = s"-b$bucket", bucket = Some(bucket)))
 
   private def bucketFor(row: InternalRow): Int = {
     var cell = 0
@@ -322,14 +296,12 @@ private[connector] class GraftBucketedAppendWriter(segAbs: String,
     cell
   }
 
-  override def write(row: InternalRow): Unit = w(bucketFor(row)).write(row)
+  override def write(row: InternalRow): Unit =
+    if (cellIdx < 0) w(bucketFor(row)).write(row)
+    else w(row.getInt(cellIdx)).write(dropCell(row))
 
   override def commit(): WriterCommitMessage =
-    GraftBucketedTaskFiles(writers.toSeq.sortBy(_._1).flatMap {
-      case (b, dw) =>
-        val tf = dw.commit().asInstanceOf[GraftTaskFile]
-        tf.name.map(n => (n, b, tf.stats))
-    })
+    GraftTaskFiles(writers.values.toSeq.flatMap(_.files()))
 
   override def abort(): Unit = writers.values.foreach(_.abort())
 
@@ -338,8 +310,8 @@ private[connector] class GraftBucketedAppendWriter(segAbs: String,
 
 private[connector] class GraftPartitionedWriterFactory(segAbs: String,
     schemaJson: String, keyIdxs: Seq[Int],
-    statsSpec: Option[SnapshotTable.InlineStatsSpec] = None,
-    hconf: Option[org.apache.spark.broadcast.Broadcast[SerializableHadoopConf]] = None)
+    statsSpec: SnapshotTable.InlineStatsSpec,
+    hconf: Broadcast[SerializableHadoopConf])
   extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
   : DataWriter[InternalRow] =
@@ -356,11 +328,11 @@ private[connector] class GraftPartitionedWriterFactory(segAbs: String,
   * layout. The per-tuple file index rides the file name ("-pN")
   * purely for uniqueness; the VALUES are recovered from the file's
   * stats, never the name. */
-private[connector] class GraftPartitionedAppendWriter(segAbs: String,
+private[sources] class GraftPartitionedAppendWriter(segAbs: String,
     schemaJson: String, keyIdxs: Seq[Int], partitionId: Int,
     taskId: Long,
-    statsSpec: Option[SnapshotTable.InlineStatsSpec] = None,
-    hconf: Option[org.apache.spark.broadcast.Broadcast[SerializableHadoopConf]] = None)
+    statsSpec: SnapshotTable.InlineStatsSpec,
+    hconf: Broadcast[SerializableHadoopConf])
   extends DataWriter[InternalRow] {
 
   private val keyTypes = {
@@ -378,8 +350,7 @@ private[connector] class GraftPartitionedAppendWriter(segAbs: String,
   private def keyOf(row: InternalRow): Seq[Any] =
     keyIdxs.zip(keyTypes).map { case (keyIdx, keyType) =>
       require(!row.isNullAt(keyIdx),
-        "NULL partition key in an identity-partitioned write (the " +
-          "layout has no partition for NULL)")
+        GraftPartitionedAppendWriter.NullKeyMessage)
       keyType match {
         case IntegerType | DateType => row.getInt(keyIdx)
         case LongType => row.getLong(keyIdx)
@@ -394,92 +365,102 @@ private[connector] class GraftPartitionedAppendWriter(segAbs: String,
   override def write(row: InternalRow): Unit =
     writers.getOrElseUpdate(keyOf(row),
       new GraftDataWriter(segAbs, schemaJson, partitionId, taskId,
-        suffix = s"-p${writers.size}", statsSpec = statsSpec,
-        hconf = hconf))
+        statsSpec, hconf, suffix = s"-p${writers.size}"))
       .write(row)
 
   override def commit(): WriterCommitMessage =
-    GraftPartitionedTaskFiles(writers.values.toSeq.flatMap { dw =>
-      val tf = dw.commit().asInstanceOf[GraftTaskFile]
-      tf.name.map(n => (n, tf.stats))
-    }.sortBy(_._1))
+    GraftTaskFiles(writers.values.toSeq.flatMap(_.files()))
 
   override def abort(): Unit = writers.values.foreach(_.abort())
 
   override def close(): Unit = writers.values.foreach(_.close())
 }
 
+private[sources] object GraftPartitionedAppendWriter {
+  val NullKeyMessage = "NULL partition key in an identity-partitioned " +
+    "write (the layout has no partition for NULL)"
+}
+
 private[connector] class GraftWriterFactory(segAbs: String,
     schemaJson: String,
-    statsSpec: Option[SnapshotTable.InlineStatsSpec] = None,
-    hconf: Option[org.apache.spark.broadcast.Broadcast[SerializableHadoopConf]] = None)
+    statsSpec: SnapshotTable.InlineStatsSpec,
+    hconf: Broadcast[SerializableHadoopConf])
   extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
   : DataWriter[InternalRow] =
     new GraftDataWriter(segAbs, schemaJson, partitionId, taskId,
-      statsSpec = statsSpec, hconf = hconf)
+      statsSpec, hconf)
 }
 
-/** One parquet file per non-empty task, written with parquet-mr's
-  * Group API under a schema translated field-by-field from the Spark
-  * one (standard logical types — the stats pass and every Spark
-  * reader read these files back natively). The file is created
-  * LAZILY on the first row, so empty partitions leave nothing to
-  * commit or clean. */
-private[connector] class GraftDataWriter(segAbs: String,
+/** The one per-file staging writer, behind every commit path: native
+  * clustered, identity-partitioned and bucketed staging, and the DSv2
+  * append, copy-on-write and merge-on-read writes. Rows stream into
+  * parquet through [[GraftDataWriter.nativeWriter]] while an
+  * [[SnapshotTable.InlineStatsAcc]] computes the file's manifest stats,
+  * so no commit reads its files back. The file is created LAZILY on
+  * the first row, so empty partitions leave nothing to commit or
+  * clean. Names are `part-<partition>-<task attempt><suffix>`, unique
+  * per attempt: a retried task never collides with its failed twin,
+  * and [[abort]] deletes every file this attempt wrote. With
+  * `maxRecords > 0` the writer rolls to a sibling file at that many
+  * rows, each name suffixed `-fNNNNNNNNNN` (zero-padded to the width
+  * of any Int, so name order stays row order). */
+private[sources] class GraftDataWriter(segAbs: String,
     schemaJson: String, partitionId: Int, taskId: Long,
-    suffix: String = "",
-    statsSpec: Option[SnapshotTable.InlineStatsSpec] = None,
-    hconf: Option[org.apache.spark.broadcast.Broadcast[SerializableHadoopConf]] = None)
+    statsSpec: SnapshotTable.InlineStatsSpec,
+    hconf: Broadcast[SerializableHadoopConf],
+    suffix: String = "", bucket: Option[Int] = None,
+    maxRecords: Long = 0L)
   extends DataWriter[InternalRow] {
 
-  // the driver-shipped session conf when the factory carried one; a
-  // bare Configuration only as a compatibility fallback
-  private def fsConf: Configuration =
-    hconf.map(_.value.value).getOrElse(new Configuration())
-
-  private val schema =
+  private lazy val schema =
     DataType.fromJson(schemaJson).asInstanceOf[StructType]
-  private val fileName =
-    f"part-$partitionId%05d-$taskId$suffix.snappy.parquet"
-  private val filePath = new Path(segAbs, fileName)
+  // every file this attempt created, finished or not
+  private val names = scala.collection.mutable.ArrayBuffer.empty[String]
+  private val done =
+    scala.collection.mutable.ArrayBuffer.empty[SnapshotTable.InlineFileStats]
   private var writer: ParquetWriter[InternalRow] = _
-  // single-pass manifest stats, accumulated while writing (see
-  // SnapshotTable.InlineStatsAcc) — shipped to the driver in the
-  // commit message so the V2 commit needs no read-back pass
-  private val acc = statsSpec.map(new SnapshotTable.InlineStatsAcc(_))
+  private var acc: SnapshotTable.InlineStatsAcc = _
 
-  /** The NATIVE write path: Spark's own [[org.apache.spark.sql
-    * .execution.datasources.parquet.ParquetWriteSupport]] streams
-    * `InternalRow`s straight into the parquet column writers — no
-    * per-row Group materialization, no boxing; the same engine (and
-    * byte-identical layouts/annotations) as `df.write.parquet`. The
-    * previous SimpleGroup writer allocated a tree of boxed values
-    * per row — measured 2-3× slower on flat rows. */
+  private def path(name: String) = new Path(segAbs, name)
+
+  private def finishFile(): Unit = {
+    writer.close()
+    writer = null
+    val len = path(names.last).getFileSystem(hconf.value.value)
+      .getFileStatus(path(names.last)).getLen
+    done += acc.finish(names.last, len, bucket)
+  }
+
   override def write(row: InternalRow): Unit = {
-    if (writer == null)
-      writer = GraftDataWriter.nativeWriter(filePath, schema,
-        base = hconf.map(_.value.value))
-    acc.foreach(_.add(row))
+    if (writer != null && maxRecords > 0 && acc.rows >= maxRecords)
+      finishFile()
+    if (writer == null) {
+      val roll = if (maxRecords > 0) f"-f${names.size}%010d" else ""
+      names += f"part-$partitionId%05d-$taskId$suffix$roll.snappy.parquet"
+      writer = GraftDataWriter.nativeWriter(path(names.last), schema,
+        hconf.value.value)
+      acc = new SnapshotTable.InlineStatsAcc(statsSpec)
+    }
+    acc.add(row)
     writer.write(row)
   }
 
-  override def commit(): WriterCommitMessage = {
-    if (writer != null) writer.close()
-    if (writer == null) GraftTaskFile(None)
-    else GraftTaskFile(Some(fileName), acc.map { a =>
-      val len = filePath
-        .getFileSystem(fsConf).getFileStatus(filePath)
-        .getLen
-      a.finish(fileName, len)
-    })
+  /** Closes the open file; every file written, with its stats. */
+  def files(): Seq[SnapshotTable.InlineFileStats] = {
+    if (writer != null) finishFile()
+    done.toSeq
   }
 
+  override def commit(): WriterCommitMessage = GraftTaskFiles(files())
+
   override def abort(): Unit = {
-    if (writer != null) {
-      writer.close()
-      new Path(segAbs).getFileSystem(fsConf)
-        .delete(filePath, false)
+    if (writer != null)
+      try writer.close() catch { case _: Throwable => () }
+    writer = null
+    val fsys = new Path(segAbs).getFileSystem(hconf.value.value)
+    names.foreach { n =>
+      try fsys.delete(path(n), false) catch { case _: Throwable => () }
     }
   }
 
@@ -492,35 +473,17 @@ private[sources] object GraftDataWriter {
     * Spark's own `ParquetWriteSupport` — the exact engine (and
     * byte-identical layouts, logical annotations, and rebase
     * behavior) behind `df.write.parquet`, minus the per-row Group
-    * tree the example writer materializes. Conf keys are pinned
-    * explicitly so executor-side writes never depend on a session:
-    * standard (non-legacy) layouts, micros timestamps, proleptic
-    * (CORRECTED) datetimes. */
-  /** The session's `parquet.*` hadoop keys (block/page/dictionary
-    * sizing and friends) — captured DRIVER-SIDE and replayed onto the
-    * task's bare Configuration so a native write honors the same
-    * writer tuning `df.write.parquet` would. */
-  def sessionParquetConf(spark: SparkSession): Seq[(String, String)] = {
-    val it = spark.sessionState.newHadoopConf().iterator()
-    val buf = Seq.newBuilder[(String, String)]
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey.startsWith("parquet.")) buf += e.getKey -> e.getValue
-    }
-    buf.result()
-  }
-
+    * tree the example writer materializes. `base` is the session
+    * Hadoop conf (its `parquet.*` sizing keys included); the writer
+    * takes a private copy, and the keys the write support reads are
+    * pinned explicitly so executor-side writes never depend on a
+    * session: standard (non-legacy) layouts, micros timestamps,
+    * proleptic (CORRECTED) datetimes. */
   def nativeWriter(filePath: Path, schema: StructType,
-      extraConf: Seq[(String, String)] = Nil,
-      base: Option[Configuration] = None)
-  : ParquetWriter[InternalRow] = {
+      base: Configuration): ParquetWriter[InternalRow] = {
     import org.apache.spark.sql.internal.SQLConf
-    // a private COPY of the serialized session conf when the caller
-    // ships one (setSchema below mutates it); a bare Configuration
-    // only when nothing better exists — on a real cluster the session
-    // conf carries credentials/fs impls a bare one silently drops
-    val conf = base.fold(new Configuration())(b => new Configuration(b))
-    extraConf.foreach { case (k, v) => conf.set(k, v) }
+    // a private COPY: setSchema below mutates it
+    val conf = new Configuration(base)
     org.apache.spark.sql.execution.datasources.parquet
       .ParquetWriteSupport.setSchema(schema, conf)
     // every key the write support / schema converter reads, pinned

@@ -3,20 +3,26 @@ package graft.tools
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+import org.apache.spark.scheduler.{SparkListener,
+  SparkListenerBlockUpdated, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.storage.BroadcastBlockId
 
 /** Dev tooling: run a named SparkEntry query under a counting listener
   * and print jobs / stages / tasks / shuffle bytes / codegen compiles
-  * — the job-count evidence the optimization guide asks for on
-  * commit-heavy paths, where the serving plan alone cannot show the
-  * work that no longer happens (staging passes, classification jobs,
-  * stats read-backs, recompiled generated classes).
+  * / broadcasts still live at query end (a count that grows with each
+  * run of a query is a leak) — the job-count evidence the
+  * optimization guide asks for on commit-heavy paths, where the
+  * serving plan alone cannot show the work that no longer happens
+  * (staging passes, classification jobs, recompiled generated
+  * classes).
   *
   * Usage: runMain graft.tools.Profile <queryName> [sfDir]
   */
 object Profile {
+  import scala.jdk.CollectionConverters._
+
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse(
       sys.error("usage: Profile <queryName> [sfDir]"))
@@ -41,6 +47,8 @@ object Profile {
     // stage completion of the job is approximated by jobEnd time
     val timeline = new java.util.concurrent.ConcurrentHashMap[
       Int, (Long, Long, String)]()
+    // driver-visible broadcast pieces -> broadcast id, from block updates
+    val pieces = new java.util.concurrent.ConcurrentHashMap[String, Long]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         jobs.incrementAndGet()
@@ -54,6 +62,14 @@ object Profile {
         val v = timeline.get(j.jobId)
         if (v != null) timeline.put(j.jobId, (v._1, j.time, v._3))
       }
+      override def onBlockUpdated(b: SparkListenerBlockUpdated): Unit =
+        b.blockUpdatedInfo.blockId match {
+          case id: BroadcastBlockId =>
+            if (b.blockUpdatedInfo.storageLevel.isValid)
+              pieces.put(id.name, id.broadcastId)
+            else pieces.remove(id.name)
+          case _ => ()
+        }
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
         stages.incrementAndGet()
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
@@ -87,9 +103,9 @@ object Profile {
     println(f"[profile] $name sec=$sec%.2f jobs=${jobs.get} " +
       f"stages=${stages.get} tasks=${tasks.get} " +
       f"shuffle_write=${shufW.get} shuffle_read=${shufR.get} " +
-      f"compiles=${compiles.getCount - compiles0}")
+      f"compiles=${compiles.getCount - compiles0} " +
+      f"broadcasts=${pieces.values.asScala.toSet.size}")
     // timeline with inter-job driver gaps (the time no job was running)
-    import scala.jdk.CollectionConverters._
     val tl = timeline.asScala.toSeq.sortBy(_._2._1)
     var prevEnd = wall0
     var gapTotal = 0L

@@ -5,8 +5,9 @@ import graft.sources.SnapshotTable
 
 /** Column statistics for the cost-based optimizer: every snapshot
   * commit records a per-file, per-column HLL sketch in the manifest
-  * (SnapshotTable.statsEntries); the connector merges the sketches of
-  * the PRUNED file set at plan time and reports distinctCount /
+  * (SnapshotTable.InlineStatsAcc, computed by the staging writer as
+  * it writes each file); the connector merges the sketches of the
+  * PRUNED file set at plan time and reports distinctCount /
   * nullCount / min / max through SupportsReportStatistics.columnStats,
   * which Spark folds into catalyst attributeStats — so
   * `spark.sql.cbo.enabled` finally has per-column cardinalities to

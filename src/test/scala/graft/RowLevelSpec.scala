@@ -373,4 +373,40 @@ class RowLevelSpec extends SparkSpec {
     assert(spark.table("graftrl.db.noop").filter(col("v") < 0)
       .count() == 0)
   }
+
+  test("a copy-on-write rewrite writes with the session Hadoop conf: " +
+      "with tiny parquet row groups set on the session, every " +
+      "rewritten file carries many row groups") {
+    spark.sql("CREATE TABLE graftrl.db.rowgroups (k BIGINT, v STRING)")
+    val root = s"$warehouse/db/rowgroups"
+    SnapshotTable.append(spark, root,
+      (1 to 200000).map(i => (i.toLong, s"pad_pad_pad_pad_$i"))
+        .toDF("k", "v"),
+      clusterKey = Some("k"), files = 2)
+    val before = SnapshotTable.manifest(spark, root, 2L).map(_.path).toSet
+    val hc = spark.sparkContext.hadoopConfiguration
+    val oldBlock = hc.get("parquet.block.size")
+    hc.setInt("parquet.block.size", 64 * 1024)
+    try spark.sql(
+      "UPDATE graftrl.db.rowgroups SET v = concat(v, '_x') WHERE k <= 1000")
+    finally {
+      if (oldBlock == null) hc.unset("parquet.block.size")
+      else hc.set("parquet.block.size", oldBlock)
+    }
+    val rewritten = SnapshotTable.manifest(spark, root,
+      SnapshotTable.currentVersion(spark, root))
+      .filterNot(e => before.contains(e.path))
+    assert(rewritten.nonEmpty && rewritten.forall(_.rows.exists(_ > 10000)))
+    rewritten.foreach { e =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(root, e.path), hc))
+      val groups = try r.getRowGroups.size finally r.close()
+      assert(groups > 1,
+        s"${e.path} has $groups row group(s): the session's " +
+          "parquet.block.size did not reach the rewrite task")
+    }
+    assert(spark.table("graftrl.db.rowgroups")
+      .filter(col("v").endsWith("_x")).count() == 1000)
+  }
 }
