@@ -484,16 +484,76 @@ object MaterializedView {
       SnapshotTable.versions(spark, v.sourceRoot).contains(lastV)
     if (!canDelta)
       return rollup(SnapshotTable.readVersion(spark, v.sourceRoot, curV), v)
-    val (merged, cleanup) = incrDeltaFrame(spark, v, viewCur,
-      signedRows(spark, v, lastV, curV), curV)
-    // the caller scans the result at an unknown later time, so the
-    // delta cache can't wait for them: materialize the (view-sized,
-    // bounded) frame NOW via localCheckpoint — its RDD blocks are
-    // reference-tracked and reclaimed by the context cleaner, unlike
-    // CacheManager entries — then release the delta cache immediately.
-    // A per-hit leak here would grow storage without bound on an
-    // always-fresh serving path.
-    try merged.localCheckpoint(true) finally cleanup()
+    memoFresh(spark, v, Seq(v.viewRoot -> viewCur,
+        v.sourceRoot -> lastV, v.sourceRoot -> curV)) {
+      val (merged, cleanup) = incrDeltaFrame(spark, v, viewCur,
+        signedRows(spark, v, lastV, curV), curV)
+      // the caller scans the result at an unknown later time, so the
+      // delta cache can't wait for them: materialize the (view-sized,
+      // bounded) frame NOW via localCheckpoint — its RDD blocks are
+      // reference-tracked and reclaimed by the context cleaner, unlike
+      // CacheManager entries — then release the delta cache immediately.
+      // A per-hit leak here would grow storage without bound on an
+      // always-fresh serving path.
+      try merged.localCheckpoint(true) finally cleanup()
+    }
+  }
+
+  /** Read-time merges memoized per session, at most this many views. */
+  private val FreshMemoMax = 16
+
+  /** One memoized read-time merge: the (root, version, manifest stamp)
+    * list it was computed at and its checkpointed rows. It holds no
+    * session, so the memo's weak session keys can be collected. */
+  private final case class FreshMerge(at: Seq[(String, Long, (Long, Long))],
+      schema: org.apache.spark.sql.types.StructType, bytes: Long,
+      rows: org.apache.spark.rdd.RDD[
+        org.apache.spark.sql.catalyst.InternalRow])
+
+  private val freshMemo = new java.util.WeakHashMap[SparkSession,
+    java.util.LinkedHashMap[AnyRef, FreshMerge]]()
+
+  /** The read-time merge of `view` at `versions` (each a root and the
+    * version of it the merge reads): `materialize` (a checkpointed
+    * frame) runs once per session and distinct versions; a repeat read
+    * runs no job. Versions are immutable, and each version's manifest
+    * stamp guards a table deleted and recreated at the same root. Every
+    * call returns a new frame over the checkpoint, with its own
+    * attribute ids, so two reads of one view still join. A replaced or
+    * evicted entry is only dropped, never unpersisted — a caller may
+    * still scan its frame — and the ContextCleaner reclaims the
+    * checkpoint once nothing references it. */
+  private def memoFresh(spark: SparkSession, view: AnyRef,
+      versions: Seq[(String, Long)])(materialize: => DataFrame): DataFrame = {
+    val at = versions.map { case (root, ver) =>
+      (root, ver, SnapshotTable.manifestStamp(spark, root, ver)) }
+    val hit = freshMemo.synchronized {
+      Option(freshMemo.get(spark)).flatMap(m => Option(m.get(view)))
+        .filter(_.at == at)
+    }
+    val m = hit.getOrElse {
+      val cp = SnapshotTable.describedJobs(spark, "graft_read_fresh")(
+        materialize)
+      val rdd = cp.queryExecution.analyzed match {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+        case p => throw new IllegalStateException(
+          s"read-time merge is not a checkpoint: ${p.nodeName}")
+      }
+      val fresh = FreshMerge(at, cp.schema,
+        cp.queryExecution.optimizedPlan.stats.sizeInBytes
+          .min(BigInt(Long.MaxValue)).toLong, rdd)
+      freshMemo.synchronized {
+        freshMemo.computeIfAbsent(spark, _ =>
+          new java.util.LinkedHashMap[AnyRef, FreshMerge](
+            FreshMemoMax, 0.75f, true) {
+            override def removeEldestEntry(e: java.util.Map.Entry[AnyRef,
+              FreshMerge]): Boolean = size() > FreshMemoMax
+          }).put(view, fresh)
+      }
+      fresh
+    }
+    spark.baseRelationToDataFrame(new SinkSession.RowsRelation(
+      spark.sqlContext, m.schema, () => m.bytes, () => m.rows))
   }
 
   /** MV maintenance as a STREAMING JOB — the CDC feed for APPEND-ONLY
@@ -1011,19 +1071,21 @@ object MaterializedView {
         v.dims.zipWithIndex.map { case (d, i) =>
           (SnapshotTable.readVersion(spark, d.root, cur(i + 1)), d) }),
         v.keys, v.allSums, v.avgCols)
-    starSignedRows(spark, v, last, cur) match {
-      case None => read(spark, v) // metadata-only staleness
-      case Some((rows, cleanup)) =>
-        // same contract as the IncrementalView readFresh: the caller
-        // scans later, so materialize the bounded view-sized merge NOW
-        // (localCheckpoint blocks are context-cleaner-reclaimed) and
-        // release the delta caches immediately
-        try mergedFrame(
-          SnapshotTable.readVersion(spark, v.viewRoot, viewCur),
-          v.keys, v.allSums, signedDelta(rows, v.keys, v.allSums),
-          avgCols = v.avgCols)
-          .localCheckpoint(true)
-        finally cleanup()
+    // canDelta with last != cur leaves a pending version on some root,
+    // so the delta below has a term
+    memoFresh(spark, v, (v.viewRoot -> viewCur) +:
+        (roots.zip(last) ++ roots.zip(cur))) {
+      val (rows, cleanup) = starSignedRows(spark, v, last, cur).get
+      // same contract as the IncrementalView readFresh: the caller
+      // scans later, so materialize the bounded view-sized merge NOW
+      // (localCheckpoint blocks are context-cleaner-reclaimed) and
+      // release the delta caches immediately
+      try mergedFrame(
+        SnapshotTable.readVersion(spark, v.viewRoot, viewCur),
+        v.keys, v.allSums, signedDelta(rows, v.keys, v.allSums),
+        avgCols = v.avgCols)
+        .localCheckpoint(true)
+      finally cleanup()
     }
   }
 

@@ -154,11 +154,25 @@ object SnapshotTable {
 
   /** Committed versions, ascending; empty for a fresh/absent table. */
   def versions(spark: SparkSession, root: String): Seq[Long] = {
-    val f = fs(spark, root)
-    val cd = commitsDir(root)
-    if (!f.exists(cd)) Seq.empty
-    else f.listStatus(cd).toSeq.map(_.getPath.getName)
-      .collect { case s if s.forall(_.isDigit) => s.toLong }.sorted
+    val names =
+      try fs(spark, root).listStatus(commitsDir(root)).toSeq
+        .map(_.getPath.getName)
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    names.collect { case s if s.forall(_.isDigit) => s.toLong }.sorted
+  }
+
+  /** `version`, or the current version when None, checked against ONE
+    * `_commits` listing: a read resolves the version it serves and its
+    * membership from the same listing. */
+  private def committedVersion(spark: SparkSession, root: String,
+      version: Option[Long]): Long = {
+    val vs = versions(spark, root)
+    val v = version.getOrElse(
+      if (branchesEnabled(fs(spark, root), root))
+        branchHead(spark, root, "main")
+      else vs.lastOption.getOrElse(0L))
+    require(vs.contains(v), s"version $v is not committed at $root")
+    v
   }
 
   /** Highest version present anywhere in the log — committed (`N`),
@@ -451,6 +465,17 @@ object SnapshotTable {
       v: Long): Option[Long] =
     cachedManifest(f, root, v).base
 
+  /** (mtime, length) of version `v`'s manifest — the validation
+    * [[cachedManifest]] uses, for callers that memoize work derived
+    * from a version (a table deleted and recreated at the same root
+    * reuses version numbers, not manifest files). */
+  private[sources] def manifestStamp(spark: SparkSession, root: String,
+      v: Long): (Long, Long) = {
+    val st = fs(spark, root).getFileStatus(
+      new Path(manifestsDir(root), v.toString))
+    (st.getModificationTime, st.getLen)
+  }
+
   private def cachedManifest(f: FileSystem, root: String,
       v: Long): CachedManifest = {
     val p = new Path(manifestsDir(root), v.toString)
@@ -649,8 +674,9 @@ object SnapshotTable {
     *  - bucket grids ([[stageBucketed]]):
     *    [[connector.GraftBucketedAppendWriter]] routing on the batch's
     *    trailing [[gridCell]] column, one file per cell a task sees.
-    * The job runs as one named SQL execution. A failed task attempt
-    * aborts its writer, which deletes every file the attempt wrote; a
+    * The job runs as one SQL execution named, and described, by
+    * `label`. A failed task attempt aborts its writer, which deletes
+    * every file the attempt wrote; a
     * failed job deletes the whole segment, so files of its succeeded
     * tasks do not wait for vacuum. The broadcast is destroyed when
     * the job ends either way. */
@@ -663,26 +689,40 @@ object SnapshotTable {
   : Seq[InlineFileStats] = {
     val hc = connector.SerializableHadoopConf.broadcast(spark)
     val qe = shaped.queryExecution
-    try org.apache.spark.sql.execution.SQLExecution
-      .withNewExecutionId(qe, Some(label)) {
-      qe.toRdd.mapPartitionsWithIndex { (pid, it) =>
-        val tc = org.apache.spark.TaskContext.get()
-        val w = newWriter(hc, pid, if (tc == null) 0L else tc.taskAttemptId())
-        try {
-          while (it.hasNext) w.write(it.next())
-          w.commit().asInstanceOf[connector.GraftTaskFiles].files.iterator
-        } catch {
-          case e: Throwable =>
-            try w.abort() catch { case s: Throwable => e.addSuppressed(s) }
-            throw e
-        } finally w.close()
-      }.collect().toSeq
+    try describedJobs(spark, label) {
+      org.apache.spark.sql.execution.SQLExecution
+        .withNewExecutionId(qe, Some(label)) {
+        qe.toRdd.mapPartitionsWithIndex { (pid, it) =>
+          val tc = org.apache.spark.TaskContext.get()
+          val w = newWriter(hc, pid, if (tc == null) 0L else tc.taskAttemptId())
+          try {
+            while (it.hasNext) w.write(it.next())
+            w.commit().asInstanceOf[connector.GraftTaskFiles].files.iterator
+          } catch {
+            case e: Throwable =>
+              try w.abort() catch { case s: Throwable => e.addSuppressed(s) }
+              throw e
+          } finally w.close()
+        }.collect().toSeq
+      }
     } catch {
       case e: Throwable =>
         fs(spark, root).delete(seg, true)
         throw e
     } finally hc.destroy()
   }
+
+  /** Runs `body` with `label` as the description of every Spark job it
+    * starts, so listeners (Profile's timeline, the UI) name graft's
+    * internal jobs; the caller's description is restored after. */
+  private[sources] def describedJobs[T](spark: SparkSession,
+      label: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(JobDescription)
+    sc.setLocalProperty(JobDescription, label)
+    try body finally sc.setLocalProperty(JobDescription, prev)
+  }
+  private val JobDescription = "spark.job.description"
 
   /** Everything a manifest entry records about one staged file,
     * computed by the write task itself while the rows stream into
@@ -3617,7 +3657,7 @@ object SnapshotTable {
 
   /** Read the current snapshot. */
   def read(spark: SparkSession, root: String): DataFrame =
-    readVersion(spark, root, currentVersion(spark, root))
+    readCommitted(spark, root, committedVersion(spark, root, None))
 
   /** The commit wall-clock of version `v`: the mtime of its commit
     * record — the instant the version became visible (the record's
@@ -4576,9 +4616,11 @@ object SnapshotTable {
   }
 
   /** Time travel: read snapshot `v` as of its commit. */
-  def readVersion(spark: SparkSession, root: String, v: Long): DataFrame = {
-    require(versions(spark, root).contains(v),
-      s"version $v is not committed at $root")
+  def readVersion(spark: SparkSession, root: String, v: Long): DataFrame =
+    readCommitted(spark, root, committedVersion(spark, root, Some(v)))
+
+  private def readCommitted(spark: SparkSession, root: String,
+      v: Long): DataFrame = {
     val (entries, schema) = readManifestFull(spark, root, v)
     if (entries.isEmpty) {
       // a freshly created table: the manifest carries only the schema
@@ -4672,8 +4714,11 @@ object SnapshotTable {
     dt match {
       case LongType | IntegerType | ShortType | ByteType =>
         Some((a, b) => java.lang.Long.compare(a.toLong, b.toLong))
+      // SQL order: -0.0 = 0.0 (adding 0.0 drops the sign), NaN = NaN
+      // and above every number, as Double.compare already has it
       case DoubleType | FloatType =>
-        Some((a, b) => java.lang.Double.compare(a.toDouble, b.toDouble))
+        Some((a, b) =>
+          java.lang.Double.compare(a.toDouble + 0.0, b.toDouble + 0.0))
       case _: DecimalType =>
         Some((a, b) => new java.math.BigDecimal(a)
           .compareTo(new java.math.BigDecimal(b)))
@@ -4753,9 +4798,7 @@ object SnapshotTable {
   private def readWherePruned(spark: SparkSession, root: String,
       preds: Seq[(String, Option[String], Option[String])],
       version: Option[Long]): DataFrame = {
-    val v = version.getOrElse(currentVersion(spark, root))
-    require(versions(spark, root).contains(v),
-      s"version $v is not committed at $root")
+    val v = committedVersion(spark, root, version)
     val (entries, mSchema) = readManifestFull(spark, root, v)
     // each predicate prunes independently; keeping the intersection
     // is sound because every pruneOf only ever SKIPS provably
@@ -4854,16 +4897,14 @@ object SnapshotTable {
     * (a DataFrame exposing the key column). Scan planning first: only
     * files whose manifest [lo, hi] can contain one of the requested
     * keys are opened — the [[touchedFiles]] shape MERGE prunes with,
-    * here serving reads — then one semi join keeps exact matches.
+    * here serving reads — then a membership filter keeps exact matches.
     * Cost is O(matching files + key set), never O(table): the
     * fetch-these-ids access a 100 TB serving layer runs constantly.
     * MOR-safe for the same reason [[readWhere]] is: tombstones always
-    * load, and the read applies them before the semi join. */
+    * load, and the read applies them before the membership filter. */
   def readKeys(spark: SparkSession, root: String, key: String,
       keys: DataFrame, version: Option[Long] = None): DataFrame = {
-    val v = version.getOrElse(currentVersion(spark, root))
-    require(versions(spark, root).contains(v),
-      s"version $v is not committed at $root")
+    val v = committedVersion(spark, root, version)
     val (entries, mSchema) = readManifestFull(spark, root, v)
     val (tombs, data) = entries.partition(_.kind == "t")
     // probe in the TABLE's key type: the manifest blooms hashed the
@@ -4873,22 +4914,32 @@ object SnapshotTable {
     // TRY-cast: a lookup value the table type cannot represent must
     // match NOTHING (what the untyped join always did), not blow up
     // the read under ANSI cast semantics; the nulls drop out of both
-    // the probe set and the semi join.
+    // the probe set and the membership filter.
     val tableKeyType = mSchema.flatMap(_.fields.find(_.name == key))
       .map(_.dataType)
     val castKeys = tableKeyType.fold(keys.select(keys(key)))(t =>
       keys.select(keys(key).try_cast(t).as(key)))
-      .filter(col(key).isNotNull).distinct()
-    // a point lookup's key set is collected ONCE (capped) and reused
-    // as a local relation for stats pruning, bloom probing AND the
-    // semi join — the caller's key derivation runs one job, not three
-    val (statsTouched, _, probes) =
-      probeFiles(spark, root, data, castKeys, key)
-    val lookup = probes.fold(castKeys)(p => spark.createDataFrame(
-      java.util.Arrays.asList(p.map(org.apache.spark.sql.Row(_)): _*),
-      castKeys.schema))
+      .filter(col(key).isNotNull)
+    val keyType = castKeys.schema(key).dataType
+    // the key set reaches the driver ONCE and serves stats pruning,
+    // bloom probing AND the filter. A key list the optimizer folds to a
+    // LocalRelation is read off the plan with no job; any other frame
+    // is collected (capped) by probeFiles
+    val (statsTouched, probes) =
+      castKeys.queryExecution.optimizedPlan match {
+        case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+          val toScala = org.apache.spark.sql.catalyst.CatalystTypeConverters
+            .createToScalaConverter(keyType)
+          val p = r.data.map(row => toScala(row.get(0, keyType)))
+            .distinct.toArray
+          (touchedFilesLocal(spark, data, p, keyType, key)._1, Some(p))
+        case _ =>
+          val (t, _, p) =
+            probeFiles(spark, root, data, castKeys.distinct(), key)
+          (t, p)
+      }
     val touched = probes.fold(statsTouched)(p =>
-      bloomPrune(statsTouched, p, castKeys.schema(key).dataType, key))
+      bloomPrune(statsTouched, p, keyType, key))
     val base =
       if (touched.nonEmpty)
         readEntries(spark, root, touched ++ tombs, mSchema)
@@ -4897,8 +4948,59 @@ object SnapshotTable {
         st => spark.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](),
           asNullable(st)))
-    base.join(lookup, Seq(key), "left_semi")
+    probes match {
+      case Some(p) if inSetMatchesJoin(keyType) =>
+        // the columns in the order the USING semi join gives: key first
+        val (k, rest) = base.columns
+          .partition(spark.sessionState.analyzer.resolver(_, key))
+        base.filter(inSet(spark, base(key), p)).select((k ++ rest)
+          .map(c => base("`" + c.replace("`", "``") + "`")): _*)
+      case Some(p) => base.join(spark.createDataFrame(
+        java.util.Arrays.asList(p.map(org.apache.spark.sql.Row(_)): _*),
+        castKeys.schema), Seq(key), "left_semi")
+      case None => base.join(castKeys.distinct(), Seq(key), "left_semi")
+    }
   }
+
+  /** Key types whose `InSet` keeps exactly the rows the equi semi join
+    * keeps AND whose generated code reads the set through a reference,
+    * so a new key set reuses the compiled class. The rest keep the
+    * join: float/double (the join normalizes NaN and -0.0, the set's
+    * boxed equality does not), binary (array identity), complex types,
+    * and byte/short/int/date, whose `InSet` codegen inlines every value
+    * into a switch below `spark.sql.optimizer.inSetSwitchThreshold`. */
+  private def inSetMatchesJoin(dt: DataType): Boolean = dt match {
+    case LongType | StringType | BooleanType | TimestampType |
+        TimestampNTZType | _: DecimalType => true
+    case _ => false
+  }
+
+  /** `c` IN `probes` (driver values of `c`'s type, non-NULL) as one
+    * catalyst `InSet`. `isin` would build `In` below 10 values, which
+    * inlines each value and compiles a class per request. The
+    * expression is built by a temp function, the public route to a
+    * catalyst expression: its builder evaluates the array argument at
+    * analysis, so the plan keeps only the set. */
+  private def inSet(spark: SparkSession, c: Column,
+      probes: Array[Any]): Column = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, InSet}
+    val reg = spark.sessionState.functionRegistry
+    // registered once per session: a replacement logs a warning per call
+    if (!reg.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(InSetFunction)))
+      reg.createOrReplaceTempFunction(InSetFunction, args => {
+        val dt = args(0).dataType
+        val set = Cast(args(1), ArrayType(dt),
+          Some(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone))
+          .eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+          .toSeq[Any](dt).toSet
+        InSet(args(0), set)
+      }, "built-in")
+    org.apache.spark.sql.functions.call_function(InSetFunction, c,
+      org.apache.spark.sql.functions.array(probes.toSeq.map(lit): _*))
+  }
+
+  private val InSetFunction = "graft_in_set"
 
   /** Point lookups stay metadata-priced up to this many distinct keys;
     * beyond it the request is a join, not a lookup, and collecting the
@@ -4919,18 +5021,20 @@ object SnapshotTable {
     * all make it here. */
   private def probeFiles(spark: SparkSession, root: String,
       entries: Seq[FileEntry], keys: DataFrame, key: String)
-  : (Seq[FileEntry], Seq[FileEntry], Option[Array[Any]]) = {
-    val rows = keys.limit(MaxBloomProbeKeys + 1).collect()
-    if (rows.length <= MaxBloomProbeKeys) {
-      val probes = rows.map(_.get(0))
-      val (touched, carried) = touchedFilesLocal(spark, entries, probes,
-        keys.schema(key).dataType, key)
-      (touched, carried, Some(probes))
-    } else {
-      val (touched, carried) = touchedFiles(spark, root, entries, keys, key)
-      (touched, carried, None)
+  : (Seq[FileEntry], Seq[FileEntry], Option[Array[Any]]) =
+    describedJobs(spark, "graft_probe_keys") {
+      val rows = keys.limit(MaxBloomProbeKeys + 1).collect()
+      if (rows.length <= MaxBloomProbeKeys) {
+        val probes = rows.map(_.get(0))
+        val (touched, carried) = touchedFilesLocal(spark, entries, probes,
+          keys.schema(key).dataType, key)
+        (touched, carried, Some(probes))
+      } else {
+        val (touched, carried) =
+          touchedFiles(spark, root, entries, keys, key)
+        (touched, carried, None)
+      }
     }
-  }
 
   /** Secondary-index pruning: drop data files whose manifest bloom on
     * `key` proves none of the requested keys can be present. This is
@@ -4947,8 +5051,13 @@ object SnapshotTable {
       keyType: DataType, key: String): Seq[FileEntry] = {
     if (!entries.exists(e => e.bloomKey.contains(key) && e.bloom.isDefined))
       return entries
-    val hashes = probes.filter(_ != null).map(v =>
-      graft.functions.Hll.hashValue(
+    // SQL equality has -0.0 = 0.0, but a sketch hashed the stored bits,
+    // so a zero probe tests both signs
+    val hashes = probes.filter(_ != null).flatMap {
+      case d: Double if d == 0.0 => Seq(0.0, -0.0)
+      case f: Float if f == 0.0f => Seq(0.0f, -0.0f)
+      case v => Seq(v)
+    }.map(v => graft.functions.Hll.hashValue(
         graft.functions.Bloom.toCatalyst(v), keyType))
     entries.filter { e =>
       if (e.bloomKey.contains(key) && e.bloom.isDefined) {

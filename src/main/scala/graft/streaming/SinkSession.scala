@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.sources.{BaseRelation, TableScan}
 import org.apache.spark.sql.types.StructType
 
@@ -34,22 +35,27 @@ object SinkSession {
   : (DataFrame, Long) => Unit = (batch, batchId) => {
     val prev = SparkSession.getActiveSession
     SparkSession.setActiveSession(owner)
-    try body(owner, owner.baseRelationToDataFrame(
-      new BatchRelation(owner.sqlContext, batch)), batchId)
+    // the batch's own size estimate, so join planning over the adopted
+    // batch sees the same statistics the clone's plan had
+    try body(owner, owner.baseRelationToDataFrame(new RowsRelation(
+      owner.sqlContext, batch.schema,
+      () => batch.queryExecution.optimizedPlan.stats.sizeInBytes
+        .min(BigInt(Long.MaxValue)).toLong,
+      () => batch.queryExecution.toRdd)), batchId)
     finally prev.fold(SparkSession.clearActiveSession())(
       SparkSession.setActiveSession)
   }
 
-  private final class BatchRelation(val sqlContext: SQLContext,
-      batch: DataFrame) extends BaseRelation with TableScan {
-    override def schema: StructType = batch.schema
-    // the batch's own size estimate, so join planning over the adopted
-    // batch sees the same statistics the clone's plan had
-    override def sizeInBytes: Long = batch.queryExecution.optimizedPlan
-      .stats.sizeInBytes.min(BigInt(Long.MaxValue)).toLong
+  /** Rows that are already catalyst rows, scanned as a relation of
+    * `sqlContext`'s session: each scan calls `rows`, and each
+    * `baseRelationToDataFrame` over it is a new frame with its own
+    * attribute ids. `size` is asked only when the planner needs it. */
+  private[graft] final class RowsRelation(val sqlContext: SQLContext,
+      override val schema: StructType, size: () => Long,
+      rows: () => RDD[InternalRow]) extends BaseRelation with TableScan {
+    override lazy val sizeInBytes: Long = size()
     override def needConversion: Boolean = false
     // rows stay InternalRow: needConversion = false tells the scan so
-    override def buildScan(): RDD[Row] =
-      batch.queryExecution.toRdd.asInstanceOf[RDD[Row]]
+    override def buildScan(): RDD[Row] = rows().asInstanceOf[RDD[Row]]
   }
 }
