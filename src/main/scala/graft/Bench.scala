@@ -38,7 +38,7 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.VectorFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     // warmup: footer reads + a scan per table + one tiny shuffle
     Tables.names.foreach { n =>
       try Tables.load(spark, sfDir, n).count()

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -292,17 +291,4 @@ case class BloomMightContain(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): BloomMightContain = copy(newLeft, newRight)
-}
-
-object BloomFunctions {
-  /** Register the membership-sketch faces on a session. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_bloom_sketch",
-      exprs => BloomSketchAgg(exprs.head,
-        SketchFunctions.intLitArg(exprs(1), "expectedItems"),
-        SketchFunctions.intLitArg(exprs(2), "fpp_pct")), "built-in")
-    reg.createOrReplaceTempFunction("graft_bloom_contains",
-      exprs => BloomMightContain(exprs(0), exprs(1)), "built-in")
-  }
 }

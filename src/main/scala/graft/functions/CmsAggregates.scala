@@ -2,7 +2,6 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -319,20 +318,4 @@ case class BottomKAgg(child: Expression, k: Int,
     copy(inputAggBufferOffset = o)
   override protected def withNewChildInternal(c: Expression): BottomKAgg =
     copy(child = c)
-}
-
-object CmsFunctions {
-  /** Register the frequency-sketch faces on a session. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_cms_sketch",
-      exprs => CmsSketchAgg(exprs.head,
-        SketchFunctions.intLitArg(exprs(1), "depth"),
-        SketchFunctions.intLitArg(exprs(2), "width")), "built-in")
-    reg.createOrReplaceTempFunction("graft_cms_est",
-      exprs => CmsEstimate(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_bottomk",
-      exprs => BottomKAgg(exprs.head,
-        SketchFunctions.intLitArg(exprs(1), "k")), "built-in")
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
@@ -315,29 +314,4 @@ case class HllEstimateScalar(child: Expression)
 
   override protected def withNewChildInternal(c: Expression)
   : HllEstimateScalar = copy(c)
-}
-
-object HllFunctions {
-  private[functions] def precisionOf(exprs: Seq[Expression]): Int =
-    if (exprs.length >= 2) SketchFunctions.intLitArg(exprs(1), "precision")
-    else Hll.DefaultPrecision
-
-  /** Register the three HLL faces on a session. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_hll",
-      exprs => HllCardinality(exprs.head, precisionOf(exprs)), "built-in")
-    reg.createOrReplaceTempFunction("graft_hll_sketch",
-      exprs => HllSketchAgg(exprs.head, precisionOf(exprs)), "built-in")
-    reg.createOrReplaceTempFunction("graft_hll_union",
-      exprs => HllUnionAgg(exprs.head, precisionOf(exprs),
-        precisionExplicit = exprs.length >= 2), "built-in")
-    reg.createOrReplaceTempFunction("graft_hll_merge",
-      exprs => HllMergeScalar(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_hll_estimate",
-      exprs => HllEstimateScalar(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_topk",
-      exprs => MisraGriesTopK(exprs.head,
-        SketchFunctions.intLitArg(exprs(1), "k")), "built-in")
-  }
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -345,18 +344,4 @@ case class QSketchQuantile(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): QSketchQuantile = copy(newLeft, newRight)
-}
-
-object QuantileFunctions {
-  /** Register the quantile-sketch faces on a session. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_qsketch",
-      exprs => QSketchAgg(exprs.head,
-        SketchFunctions.intLitArg(exprs(1), "alpha_pct")), "built-in")
-    reg.createOrReplaceTempFunction("graft_qsketch_union",
-      exprs => QSketchUnionAgg(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_qsketch_quantile",
-      exprs => QSketchQuantile(exprs(0), exprs(1)), "built-in")
-  }
 }

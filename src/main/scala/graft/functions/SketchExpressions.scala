@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -596,42 +595,4 @@ case class LongestRepeatedSubstring(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression)
   : LongestRepeatedSubstring = copy(child = newChild)
-}
-
-object SketchFunctions {
-  private[functions] def intLitArg(e: Expression, what: String): Int =
-    intLit(e, what)
-
-  private def intLit(e: Expression, what: String): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-    case _ => throw new IllegalArgumentException(s"$what must be an int literal")
-  }
-
-  /** Register graft_minhash / graft_simhash / graft_hplsh on a session.
-    * Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_minhash",
-      exprs => TokenMinHash(exprs(0),
-        intLit(exprs(1), "perms"), intLit(exprs(2), "ngram")), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash",
-      exprs => SimHash64(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_hplsh",
-      exprs => HyperplaneLsh(exprs(0),
-        intLit(exprs(1), "tables"), intLit(exprs(2), "bits")), "built-in")
-    reg.createOrReplaceTempFunction("graft_jaccard",
-      exprs => JaccardSim(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_jaccard_sorted",
-      exprs => JaccardSortedLong(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_bpe_count",
-      exprs => BpeChunkCount(exprs(0), intLit(exprs(1), "chunkLen")),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_shingles",
-      exprs => ShingleRows(exprs(0), intLit(exprs(1), "n")), "built-in")
-    reg.createOrReplaceTempFunction("graft_lrs",
-      exprs => LongestRepeatedSubstring(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_porter",
-      exprs => PorterStemExpr(exprs(0)), "built-in")
-    VectorFunctions.attachRewrite(spark)
-  }
 }

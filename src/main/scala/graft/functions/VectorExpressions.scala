@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, QuaternaryExpression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -616,29 +615,4 @@ object VectorFunctions {
       s"$name requires two ARRAY<DOUBLE> arguments, got " +
         s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
   }
-
-  /** Register `graft_cosine` / `graft_dot` for SQL + expr() use on the
-    * given session, and attach the similarity rewrite rule. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_cosine",
-      exprs => CosineSim(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_dot",
-      exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_rotate",
-      exprs => VecRotate(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_nearest",
-      exprs => NearestCentroid(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_sq8_encode",
-      exprs => Sq8Encode(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction("graft_sq8_adc",
-      exprs => Sq8AdcCos(exprs(0), exprs(1), exprs(2), exprs(3)),
-      "built-in")
-    attachRewrite(spark)
-  }
-
-  /** Attach the engine's optimizer rules to a live session (the
-    * extensions path injects them at build time instead). */
-  private[functions] def attachRewrite(spark: SparkSession): Unit =
-    graft.plans.GraftRules.attach(spark)
 }

@@ -161,7 +161,7 @@ object Dedup {
     // to the naive form (the filter admits every true pair) — same
     // DuckDB oracle, which stays the transparent all-pairs SQL.
     "dedup_token_jaccard" -> ((s, dir) => {
-      graft.functions.SketchFunctions.register(s)
+      graft.functions.GraftFunctions.register(s)
       val t = 0.8
       val d = docs(s, dir)
         .selectExpr("doc_id", "lang", "source", s"$tokSet AS toks")
@@ -209,7 +209,7 @@ object Dedup {
     // Signature comes from the native graft_minhash expression (one fused
     // pass; the higher-order formulation was interpreted and 20x slower).
     "dedup_minhash_lsh" -> ((s, dir) => {
-      graft.functions.SketchFunctions.register(s)
+      graft.functions.GraftFunctions.register(s)
       val sig = docs(s, dir)
         .selectExpr("doc_id", s"$tokSet AS toks")
         .selectExpr("doc_id", "toks",
@@ -249,7 +249,7 @@ object Dedup {
     // approximates). Catches near-dups that share phrasing, not just
     // vocabulary.
     "dedup_shingle_minhash" -> ((s, dir) => {
-      graft.functions.SketchFunctions.register(s)
+      graft.functions.GraftFunctions.register(s)
       val sig = docs(s, dir)
         .selectExpr("doc_id", s"$toks AS toks")
         // ngram=3: the native expression folds 3-token shingles as
@@ -319,7 +319,7 @@ object Dedup {
     // graft_simhash); 4x16-bit chunk banding (recall-complete for
     // hamming<=3), verify with bit_count(xor).
     "dedup_simhash" -> ((s, dir) => {
-      graft.functions.SketchFunctions.register(s)
+      graft.functions.GraftFunctions.register(s)
       val fp = docs(s, dir)
         .selectExpr("doc_id", s"graft_simhash($tokSet) AS simhash")
       val chunked = fp
@@ -387,7 +387,7 @@ object Dedup {
     // so mod-7 actually separates pair members across the
     // corpus/new boundary; mod-5 never would).
     "dedup_incremental_exact" -> ((s, dir) => {
-      graft.functions.SketchFunctions.register(s)
+      graft.functions.GraftFunctions.register(s)
       val t = 0.8
       val d = docs(s, dir)
         .selectExpr("doc_id", "lang", "source", s"$tokSet AS toks")
@@ -439,8 +439,7 @@ object Dedup {
     // native cosine. Engine-hash buckets => rows-only driver check;
     // recall vs the exact label-blocked pass asserted in DedupSpec.
     "dedup_embedding_lsh" -> ((s, dir) => {
-      graft.functions.SketchFunctions.register(s)
-      graft.functions.VectorFunctions.register(s)
+      graft.functions.GraftFunctions.register(s)
       val e = emb(s, dir)
         .selectExpr("vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS v")
         .selectExpr("vec_id", "v", "graft_hplsh(v, 16, 8) AS tables")
@@ -468,7 +467,7 @@ object Dedup {
     // the check non-vacuous at every fixture scale: the synthetic corpus
     // maxes out around cos 0.48, so a near-1 threshold verified nothing.
     "dedup_embedding_cosine" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+      graft.functions.GraftFunctions.register(s)
       val e = emb(s, dir)
         .selectExpr("vec_id", "label",
           "transform(embedding, x -> CAST(x AS DOUBLE)) AS v")
@@ -535,7 +534,7 @@ object Dedup {
   private[graft] def semanticAssignmentsOf(s: SparkSession,
       vecs: DataFrame, k: Int, iters: Int,
       trainCap: Int = 2048): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
+    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val e = unitVectors(vecs)
     val cent = lloydModel(e, k, iters, trainCap)
@@ -629,7 +628,7 @@ object Dedup {
     * vec_ids. */
   private[graft] def semanticDropped(s: SparkSession,
       assigned: DataFrame, tauPct: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
+    graft.functions.GraftFunctions.register(s)
     val a = assigned.select(col("cid"), col("vec_id").as("a_id"),
       col("v").as("a_v"), col("csim").as("a_csim"))
     val b = assigned.select(col("cid"), col("vec_id").as("b_id"),
@@ -738,7 +737,7 @@ object Dedup {
     * pair query. rep only decreases and starts at doc_id, so rep <=
     * doc_id always holds. */
   def minhashClusterAssignments(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.SketchFunctions.register(s)
+    graft.functions.GraftFunctions.register(s)
     // persist the (doc_id, bkt) edge list: the fixed-point loop below
     // references it 2x per round, and without materialization the whole
     // unrolled plan recomputes the minhash signatures every round. O(8n)
@@ -828,7 +827,7 @@ object Dedup {
     * verify is cheap, so the simple distinct is the clearer form. */
   private[graft] def incrementalLshSurvivors(s: SparkSession, dir: String)
   : DataFrame = {
-    graft.functions.SketchFunctions.register(s)
+    graft.functions.GraftFunctions.register(s)
     val newB = signatureFrame(docs(s, dir)
       .filter(col("doc_id") % 7 === 0))
       .select(col("doc_id").as("n_id"), col("lang"), col("source"),
@@ -864,7 +863,7 @@ object Dedup {
     * result-identical to the in-plan [[incrementalLshSurvivors]]. */
   private[graft] def buildLshIndex(s: SparkSession, dir: String,
       path: String): Unit = {
-    graft.functions.SketchFunctions.register(s)
+    graft.functions.GraftFunctions.register(s)
     signatureFrame(docs(s, dir).filter(col("doc_id") % 7 =!= 0))
       .select(col("lang"), col("source"), col("th"), col("bkt"))
       .write.mode("overwrite").parquet(path)
@@ -876,7 +875,7 @@ object Dedup {
     * but the corpus side is the saved index scan. */
   private[graft] def probeLshIndex(s: SparkSession, dir: String,
       indexPath: String): DataFrame = {
-    graft.functions.SketchFunctions.register(s)
+    graft.functions.GraftFunctions.register(s)
     val newB = signatureFrame(docs(s, dir)
       .filter(col("doc_id") % 7 === 0))
       .select(col("doc_id").as("n_id"), col("lang"), col("source"),

@@ -970,7 +970,7 @@ object Relational {
     // engine-specific by nature (same contract as the HLL/CMS family).
     // The spec pins the alpha-bound against exact quantiles.
     "sketch_price_quantiles" -> ((s, dir) => {
-      graft.functions.QuantileFunctions.register(s)
+      graft.functions.GraftFunctions.register(s)
       val perFlag = t(s, dir, "lineitem")
         .groupBy(col("l_returnflag"))
         .agg(expr("graft_qsketch(CAST(l_extendedprice AS DOUBLE), 1)")

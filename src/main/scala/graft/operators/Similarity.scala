@@ -298,7 +298,7 @@ object Similarity {
   private[graft] def opqDistortion(s: SparkSession, vecs: DataFrame,
       r: Seq[Seq[Double]], code: Map[(Int, Int), Seq[Double]],
       m: Int, d: Int): Double = {
-    graft.functions.VectorFunctions.register(s) // rotated needs graft_rotate
+    graft.functions.GraftFunctions.register(s) // rotated needs graft_rotate
     val cb = codebookDf(s, code)
     val sub = subSplit(rotated(vecs, rotationDf(s, r)), m, d)
     pqAssign(sub, cb)
@@ -403,7 +403,7 @@ object Similarity {
     // cosine re-rank on the (much smaller) candidate set. The corpus is
     // shuffled once on (table, bucket); probe cost ∝ bucket size.
     "knn_lsh" -> ((s, dir) => {
-      graft.functions.SketchFunctions.register(s)
+      graft.functions.GraftFunctions.register(s)
       val all = prepared(s, dir)
       val banded = all
         .withColumn("buckets", expr("graft_hplsh(v, 8, 6)"))
@@ -435,7 +435,7 @@ object Similarity {
     // (graft.functions.CosineSim) instead of zip_with/aggregate — the
     // hot-path variant; Bench compares the two.
     "knn_bruteforce_native" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+      graft.functions.GraftFunctions.register(s)
       val all = prepared(s, dir)
       val q = broadcast(all.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("v").as("q_v")))
@@ -461,7 +461,7 @@ object Similarity {
     // order is engine-specific => rows-only driver check; recall vs the
     // exact brute force is asserted in SimilaritySpec.
     "knn_ivf" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+      graft.functions.GraftFunctions.register(s)
       val nprobe = 3
       val all = prepared(s, dir)
       val centroids = all
@@ -551,7 +551,7 @@ object Similarity {
     // are approximate => rows-only driver check; recall vs the exact
     // brute force is asserted in SimilaritySpec.
     "knn_ivfpq" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+      graft.functions.GraftFunctions.register(s)
       val m = 8; val ks = 16; val nprobe = 4
       val all = prepared(s, dir)
         .withColumn("vn", expr("transform(v, x -> x / nrm)"))
@@ -646,7 +646,7 @@ object Similarity {
     // brute force and determinism are asserted in SimilaritySpec.
     "knn_sq8" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.VectorFunctions.register(s)
+      graft.functions.GraftFunctions.register(s)
       val all = prepared(s, dir)
         .withColumn("vn", expr("transform(v, x -> x / nrm)"))
       // per-dimension [lo, hi] over the normalized corpus: the model
@@ -711,7 +711,7 @@ object Similarity {
     // guarantee, rotation orthonormality and recall vs brute force
     // are asserted in SimilaritySpec.
     "knn_opq" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+      graft.functions.GraftFunctions.register(s)
       val m = 8; val ks = 16; val d = 64
       val all = prepared(s, dir)
         .withColumn("vn", expr("transform(v, x -> x / nrm)"))
@@ -773,7 +773,7 @@ object Similarity {
     // but engine-specific => rows-only driver check; recall vs the
     // exact brute force is asserted in SimilaritySpec.
     "knn_graph" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+      graft.functions.GraftFunctions.register(s)
       val k = 8          // graph degree
       val rounds = 2     // NN-Descent improvement rounds
       val beam = 12      // query beam width

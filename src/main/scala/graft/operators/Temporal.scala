@@ -157,7 +157,7 @@ object Temporal {
     // engine-specific => rows-only driver check, error bounds + exact
     // sketch-vs-direct agreement asserted in HllSpec.
     "events_hll_daily_rollup" -> ((s, dir) => {
-      graft.functions.HllFunctions.register(s)
+      graft.functions.GraftFunctions.register(s)
       ev(s, dir)
         .groupBy(col("event_type"),
           date_format(col("ts"), "yyyy-MM-dd").as("day"))

@@ -168,7 +168,7 @@ object TextAnalysis {
     // pass; the regex formulation is the portable twin (and the DuckDB
     // oracle), proven equal ∀ strings in PropertySpec.
     "text_token_stats" -> ((s, dir) => {
-      graft.functions.SketchFunctions.register(s)
+      graft.functions.GraftFunctions.register(s)
       docs(s, dir)
         .selectExpr("lang", "source", s"size($toks) AS n_toks",
           "n_chars",
@@ -337,7 +337,7 @@ object TextAnalysis {
     // so counts are exact and deterministic => DuckDB-oracle-compared;
     // the true sketch regime (k < distinct) is spec-checked.
     "term_topk_sketch" -> ((s, dir) => {
-      graft.functions.HllFunctions.register(s)
+      graft.functions.GraftFunctions.register(s)
       docs(s, dir)
         .selectExpr(s"explode($toks) AS term")
         .agg(expr("graft_topk(term, 64)").as("tk"))
@@ -543,7 +543,7 @@ object TextAnalysis {
     // raw text and the cosine leg via list_cosine_similarity.
     "docs_hybrid_rrf" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      graft.functions.VectorFunctions.register(s)
+      graft.functions.GraftFunctions.register(s)
       val root = java.nio.file.Files
         .createTempDirectory("graft-rrf-q").toString + "/ix"
       TextIndex.build(s, docs(s, dir).select("doc_id", "text"), root,
@@ -793,7 +793,7 @@ object TextAnalysis {
     // 120-char cap keeps the O(n^2) ORACLE tractable; the automaton
     // itself has no such need). */
     "docs_lrs_exact" -> ((s, dir) => {
-      graft.functions.SketchFunctions.register(s)
+      graft.functions.GraftFunctions.register(s)
       docs(s, dir).filter(col("text").isNotNull)
         .selectExpr("doc_id", "substring(text, 1, 120) AS s")
         .selectExpr("doc_id", "CAST(length(s) AS BIGINT) AS n_chars",
@@ -901,7 +901,7 @@ object TextAnalysis {
     // here uses. NOT oracle-compared: hash-addressed estimates are
     // engine-specific by nature (same contract as the HLL family).
     "sketch_term_freq_cms" -> ((s, dir) => {
-      graft.functions.CmsFunctions.register(s)
+      graft.functions.GraftFunctions.register(s)
       val terms = docs(s, dir).selectExpr(s"explode($toks) AS term")
       val sk = terms.agg(expr("graft_cms_sketch(term, 4, 4096)").as("sk"))
       terms.groupBy("term").agg(count(lit(1)).as("n_exact"))
@@ -923,7 +923,7 @@ object TextAnalysis {
     // is a profiler report row, and scalar columns keep the driver's
     // rows-only check (which sorts every column) applicable.
     "sketch_bottomk_sample" -> ((s, dir) => {
-      graft.functions.CmsFunctions.register(s)
+      graft.functions.GraftFunctions.register(s)
       docs(s, dir)
         .groupBy("lang")
         .agg(expr("array_join(graft_bottomk(source, 3), ',')")

@@ -94,7 +94,7 @@ object TextIndex {
       // (analyzeQuery), so "relational" finds docs saying "relations"
       // — the standard English retrieval analyzer, dictionary-free
       // and deterministic. Callers with a SparkSession must ensure
-      // SketchFunctions.register ran ([[reg]]).
+      // GraftFunctions.register ran ([[reg]]).
       transform(
         filter(array_remove(split(lower(text), "[^a-z0-9]+"), ""),
           t => !t.isInCollection(StopwordsEnV1)),
@@ -109,7 +109,7 @@ object TextIndex {
     * idempotent, called at every entry point that evaluates [[toks]]
     * (the `graft_porter` call resolves from the session registry). */
   private def reg(spark: SparkSession): Unit =
-    graft.functions.SketchFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
 
   /** The analyzer the index at `root` was built with. */
   private[graft] def analyzerOf(spark: SparkSession, root: String): String =
@@ -137,7 +137,7 @@ object TextIndex {
     * version) net to the new text. */
   private def postingsOf(docs: DataFrame,
       era: org.apache.spark.sql.Column = lit(0L),
-      analyzer: String = "whitespace"): DataFrame =
+      analyzer: String): DataFrame =
     docs
       .withColumn("__era", era)
       .withColumn("__toks", toks(col("text"), analyzer))
@@ -154,7 +154,7 @@ object TextIndex {
 
   /** One journal row for an installment of documents. */
   private def statsRowOf(docs: DataFrame,
-      analyzer: String = "whitespace"): DataFrame =
+      analyzer: String): DataFrame =
     docs.agg(count(lit(1)).as("n_docs"),
       sum(size(toks(col("text"), analyzer))).as("sum_dl"))
 

@@ -65,7 +65,7 @@ object VectorIndex {
       nlist: Int, iters: Int = 5, trainCap: Int = 2048,
       codec: Option[String] = None): Long = {
     require(codec.forall(_ == "sq8"), s"unsupported codec $codec")
-    graft.functions.VectorFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     // the normalized corpus feeds training, the quantizer stats, the
     // raw sidecar AND the coded commit — up to four evaluations of
@@ -147,7 +147,7 @@ object VectorIndex {
     * NEW vector is served. */
   def add(spark: SparkSession, vecs: DataFrame, root: String): Long = {
     IndexMaintenance.claim(spark, root, "manual")
-    graft.functions.VectorFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     val model = loadModel(spark, root)
     val codec = codecOf(spark, root)
     // sq8 consumes the normalized batch twice (raw sidecar + coded
@@ -209,7 +209,7 @@ object VectorIndex {
     IndexMaintenance.claim(spark, root, "manual")
     val landed = SnapshotTable.lastCommittedTxn(spark, root, appId)
       .exists(_ >= batchId)
-    graft.functions.VectorFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     val codec = codecOf(spark, root)
     // sq8: the normalized batch feeds both commits — one pass
     val cachedE = codec.contains("sq8")
@@ -308,7 +308,7 @@ object VectorIndex {
       if (anyIns &&
           !SnapshotTable.lastCommittedTxn(spark, root, appId)
             .exists(_ >= batchId)) {
-        graft.functions.VectorFunctions.register(spark)
+        graft.functions.GraftFunctions.register(spark)
         val model = loadModel(spark, root)
         val asg = unit
           .crossJoin(broadcast(model))
@@ -481,7 +481,7 @@ object VectorIndex {
     * O(|queries|·shortlist), never O(index). */
   def search(spark: SparkSession, root: String, queries: DataFrame,
       k: Int, nprobe: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     val model = loadModel(spark, root)
     val qe = Dedup.unitVectors(
         queries.select(col("q_id").as("vec_id"), col("embedding")))

@@ -179,7 +179,7 @@ object MaterializedView {
       ndvCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions._
     if (ndvCols.nonEmpty)
-      graft.functions.HllFunctions.register(df.sparkSession)
+      graft.functions.GraftFunctions.register(df.sparkSession)
     val withAvg = avgCols.foldLeft(df)((d, c) =>
       // sum is NULL when cnt hits 0 (the counting trick), so the
       // quotient is NULL exactly when SQL avg() would be
@@ -192,7 +192,7 @@ object MaterializedView {
   private def rollup(df: DataFrame, v: IncrementalView): DataFrame = {
     import org.apache.spark.sql.functions._
     if (v.ndvCols.nonEmpty)
-      graft.functions.HllFunctions.register(df.sparkSession)
+      graft.functions.GraftFunctions.register(df.sparkSession)
     // sums land as DECIMAL(20,2), the SAME type the merged refresh
     // writes — a view whose history mixes full and delta commits must
     // keep ONE schema (its own diff is the cascading-MV delta feed)
@@ -301,7 +301,7 @@ object MaterializedView {
       ndvCols: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.functions._
     if (ndvCols.nonEmpty)
-      graft.functions.HllFunctions.register(df.sparkSession)
+      graft.functions.GraftFunctions.register(df.sparkSession)
     val needsDel = mmCols.nonEmpty || ndvCols.nonEmpty
     df.groupBy(keys.map(col): _*)
       .agg(sum(col("__sign")).as("dn"),
@@ -338,11 +338,11 @@ object MaterializedView {
     * the read-time [[readFresh]] serving path. */
   private def mergedFrame(old: DataFrame, keys: Seq[String],
       sumCols: Seq[String], deltaAgg: DataFrame,
-      mmCols: Seq[String] = Nil, avgCols: Seq[String] = Nil,
+      mmCols: Seq[String] = Nil, avgCols: Seq[String],
       ndvCols: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.functions._
     if (ndvCols.nonEmpty)
-      graft.functions.HllFunctions.register(old.sparkSession)
+      graft.functions.GraftFunctions.register(old.sparkSession)
     val cond = keys.map(k => old(k) <=> deltaAgg(s"__dk_$k"))
       .reduce(_ && _)
     val zeroDec = lit(0).cast("decimal(20,2)")
@@ -453,7 +453,7 @@ object MaterializedView {
   private def mergeSignedDelta(spark: SparkSession, viewRoot: String,
       keys: Seq[String], sumCols: Seq[String],
       viewCur: Long, deltaAgg: DataFrame,
-      avgCols: Seq[String] = Nil): Long = {
+      avgCols: Seq[String]): Long = {
     val merged = mergedFrame(
       SnapshotTable.readVersion(spark, viewRoot, viewCur),
       keys, sumCols, deltaAgg, avgCols = avgCols)
@@ -881,7 +881,7 @@ object MaterializedView {
   }
 
   private def starRollup(joined: DataFrame, keys: Seq[String],
-      sumCols: Seq[String], avgCols: Seq[String] = Nil): DataFrame = {
+      sumCols: Seq[String], avgCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions._
     // DECIMAL(20,2) sums for the same one-schema reason as [[rollup]]
     withDerived(joined.groupBy(keys.map(col): _*)

@@ -593,6 +593,40 @@ object SnapshotTable {
   private val BloomExpectedItems = 50000
   private val BloomFppPct = 2
 
+  /** Interleaved Z-curve value over N key columns: each key is
+    * min/max-normalized to `b = 32/N` bits (16 for two dims, 10 for
+    * three, 8 for four — total curve precision is a fixed bit budget,
+    * the standard multi-dim trade-off), and bit i of key j lands at
+    * curve position `N*i + j`. One driver-side min/max row computes
+    * the normalization ranges; empty/all-NULL keys degrade to an
+    * unordered write instead of throwing. The interleave is a pure
+    * column expression (shift/and/or folds), fully codegen'd. */
+  private def zOrderColumnN(df: DataFrame, keys: Seq[String]): Column = {
+    import org.apache.spark.sql.functions.{floor, least, shiftleft, shiftright}
+    require(keys.nonEmpty && keys.size <= 8,
+      s"z-order supports 1..8 dims, got ${keys.size}")
+    val bits = math.max(4, math.min(16, 32 / keys.size))
+    val aggCols = keys.flatMap(k => Seq(smin(col(k)).cast("double"),
+      smax(col(k)).cast("double")))
+    val stats = df.agg(aggCols.head, aggCols.tail: _*).head()
+    if (keys.indices.exists(j => stats.isNullAt(2 * j))) return lit(0L)
+    val top = (1L << bits) - 1
+    def normB(c: Column, lo: Double, hi: Double): Column =
+      if (hi <= lo) lit(0L)
+      else least(lit(top), floor(
+        (c.cast("double") - lit(lo)) / lit(hi - lo) *
+          lit((top + 1).toDouble)).cast("long"))
+    val normed = keys.zipWithIndex.map { case (k, j) =>
+      normB(col(k), stats.getDouble(2 * j), stats.getDouble(2 * j + 1))
+    }
+    (0 until bits).foldLeft(lit(0L)) { (acc, i) =>
+      normed.zipWithIndex.foldLeft(acc) { case (a, (nk, j)) =>
+        a.bitwiseOR(shiftleft(shiftright(nk, i).bitwiseAND(lit(1L)),
+          keys.size * i + j))
+      }
+    }
+  }
+
   /** Write `df` as a new immutable segment; returns its file entries.
     * With `clusterKey` the segment is range-partitioned + sorted on the
     * key and each file's min/max is recorded — the stats MERGE prunes
@@ -627,7 +661,7 @@ object SnapshotTable {
         // curve, so every file is a compact BOX in (a, b, ...) space
         // and the min/max recorded for EACH column prunes on its own
         df.withColumn("__z",
-            Sources.zOrderColumnN(df, Seq(a, b) ++ zorderExtra))
+            zOrderColumnN(df, Seq(a, b) ++ zorderExtra))
           .repartitionByRange(math.max(1, files), col("__z"))
           .sortWithinPartitions(col("__z"))
           .drop("__z")
@@ -794,10 +828,8 @@ object SnapshotTable {
     val passCols = (ckP.toSeq ++ bkP ++ zkP ++ zeP)
       .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
     val ndvCols =
-      if (ckP.isEmpty && bkP.isEmpty &&
-        spark.conf.getOption("spark.graft.stats.ndv.mode")
-          .getOrElse("auto") != "all") Nil
-      else ndvStatFields(spark, schema, passCols)
+      if (ckP.isEmpty && bkP.isEmpty) Nil
+      else ndvStatFields(schema, passCols)
     InlineStatsSpec(ckP.map(spec1), bkP.map(spec1), zkP.map(spec1),
       zeP.map(k => (k, spec1(k)._1, spec1(k)._2)),
       ndvCols.map(fd => (fd.name, spec1(fd.name)._1, fd.dataType)),
@@ -899,30 +931,21 @@ object SnapshotTable {
     * the manifest at serving-table file counts, accurate enough for
     * CBO join-cardinality estimates.
     *
-    * WRITE-PATH COST CONTRACT (`spark.graft.stats.ndv.mode`):
-    *  - `auto` (default): sketch only columns the commit's stats pass
-    *    ALREADY reads (cluster / bloom / Z-order / bucket keys — the
-    *    table's join keys, exactly the NDVs join estimation needs).
-    *    Zero extra IO: a plain commit keeps its zero-pass write.
-    *  - `all`: sketch every hashable column (up to `.maxColumns`,
-    *    default 16) on every commit — one extra full read of each
-    *    ingested segment. Measured +32% on write-heavy rounds; at
-    *    100 TB that is a tax on all ingest, so it is opt-in.
-    *  - `off` / `.enabled=false`: no sketches.
-    * Full-column stats without the ingest tax: [[analyze]] (surfaced
-    * as `CALL graft.system.analyze`), the Iceberg ANALYZE shape —
-    * one explicit pass enriching the current manifest. */
+    * WRITE-PATH COST CONTRACT: a commit sketches only the columns its
+    * stats pass ALREADY reads (cluster / bloom / Z-order / bucket
+    * keys — the table's join keys, exactly the NDVs join estimation
+    * needs), at most [[NdvMaxColumns]] of them. Zero extra IO: a plain
+    * commit keeps its zero-pass write and records no sketch.
+    * Full-column stats without an ingest tax: [[analyze]] (surfaced
+    * as `CALL graft.system.analyze`), the Iceberg ANALYZE shape — one
+    * explicit pass enriching the current manifest. */
   private[sources] val NdvPrecision = 9
 
-  private def ndvStatFields(spark: SparkSession, schema: StructType,
-      passCols: Set[String]): Seq[StructField] = {
-    val enabled = spark.conf.getOption("spark.graft.stats.ndv.enabled")
-      .forall(_.toBoolean)
-    val mode = spark.conf.getOption("spark.graft.stats.ndv.mode")
-      .getOrElse("auto")
-    if (!enabled || mode == "off") return Nil
-    val maxCols = spark.conf.getOption("spark.graft.stats.ndv.maxColumns")
-      .map(_.toInt).getOrElse(16)
+  /** Column cap for NDV sketches, on commits and in [[analyze]]. */
+  private val NdvMaxColumns = 16
+
+  private def ndvStatFields(schema: StructType,
+      passCols: Set[String]): Seq[StructField] =
     schema.fields.toSeq
       // "__"-prefixed columns are write-path internals (e.g. the
       // identity-partition value directory, which partition discovery
@@ -930,10 +953,9 @@ object SnapshotTable {
       // never table columns, never sketched
       .filterNot(_.name.startsWith("__"))
       .filter(f => graft.functions.Hll.hashable(f.dataType))
-      .filter(f => mode == "all" ||
+      .filter(f =>
         passCols.contains(f.name.toLowerCase(java.util.Locale.ROOT)))
-      .take(maxCols)
-  }
+      .take(NdvMaxColumns)
 
   /** Merged NDV estimates over a set of manifest entries:
     * column -> distinct-count estimate from the per-file HLL register
@@ -1068,15 +1090,10 @@ object SnapshotTable {
           e.statsFor(tsuKey(fd.name)).isDefined || allNull(fd)))
   }
 
-  private def analyzableCols(spark: SparkSession,
-      schema: StructType): Seq[StructField] = {
-    val maxCols = spark.conf
-      .getOption("spark.graft.stats.ndv.maxColumns")
-      .map(_.toInt).getOrElse(16)
+  private def analyzableCols(schema: StructType): Seq[StructField] =
     schema.fields.toSeq.filter(fd =>
       graft.functions.Hll.hashable(fd.dataType))
-      .take(maxCols)
-  }
+      .take(NdvMaxColumns)
 
   /** AUTO-ANALYZE policy (opt-in): after an append on main, if the
     * fraction of data files missing full column stats exceeds
@@ -1098,8 +1115,7 @@ object SnapshotTable {
       val (entries, recorded) = readManifestFull(spark, root, cur)
       val data = entries.filter(_.kind == "d")
       if (data.isEmpty) return
-      val cols = analyzableCols(spark,
-        priorSchemaOrRead(spark, root, cur, recorded))
+      val cols = analyzableCols(priorSchemaOrRead(spark, root, cur, recorded))
       if (cols.isEmpty) return
       val stale = data.count(unsketched(_, cols))
       if (stale.toDouble / data.size > minStale) {
@@ -1156,8 +1172,7 @@ object SnapshotTable {
     val (entries, recorded) = readManifestFull(spark, root, cur)
     val data = entries.filter(_.kind == "d")
     if (data.isEmpty) return 0.0
-    val cols = analyzableCols(spark,
-      priorSchemaOrRead(spark, root, cur, recorded))
+    val cols = analyzableCols(priorSchemaOrRead(spark, root, cur, recorded))
     if (cols.isEmpty) return 0.0
     data.count(unsketched(_, cols)).toDouble / data.size
   }
@@ -1281,8 +1296,7 @@ object SnapshotTable {
     * On abort the claim, manifest and segment are cleaned up so later
     * committers skip the version. */
   private def publish(f: FileSystem, root: String, v: Long,
-      entries: Seq[FileEntry], segs: Seq[Path],
-      op: String = "commit",
+      entries: Seq[FileEntry], segs: Seq[Path], op: String,
       branchRef: Option[(String, Long)] = None): Unit = {
     def abort(reason: String): Nothing = {
       f.delete(new Path(manifestsDir(root), v.toString), false)
@@ -3116,7 +3130,7 @@ object SnapshotTable {
       val allData = entries.filter(_.kind == "d")
       if (allData.isEmpty) return (cur, Seq.empty, 0L)
       val schema = priorSchemaOrRead(spark, root, cur, recorded)
-      val cols = analyzableCols(spark, schema)
+      val cols = analyzableCols(schema)
       if (cols.isEmpty) return (cur, Seq.empty, 0L)
       // INCREMENTAL: only files missing a sketch or null count for
       // some column are re-read — repeated analyze costs O(new files)
@@ -3131,7 +3145,7 @@ object SnapshotTable {
       // legacy file, once) so plan-time sizing goes metadata-only
       val needBytes = entries.exists(_.bytes.isEmpty)
       if (data.isEmpty && !needBytes) return (cur, cols.map(_.name), 0L)
-      graft.functions.HllFunctions.register(spark)
+      graft.functions.GraftFunctions.register(spark)
       // numeric columns additionally get per-file min/max recorded as
       // extra stats slots — range pruning AND the CBO's min/max both
       // feed off them (strings stay unrecorded: collation hazards)
@@ -3413,8 +3427,7 @@ object SnapshotTable {
     val numCols =
       schema.fields.toSeq.filter(fd => cboNumeric(fd.dataType))
     if (numCols.isEmpty) return Seq.empty
-    graft.functions.QuantileFunctions.register(spark)
-    graft.functions.HllFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     val df = readAliased(spark, root, schema, data)
     // pass 1: quantile sketches -> equi-height bin boundaries, with
     // the OUTER bounds clamped to the exact min/max (the sketch is
@@ -3569,7 +3582,7 @@ object SnapshotTable {
         ("graft.hist.version" -> cur.toString))
       return true
     }
-    graft.functions.HllFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     val df = readAliased(spark, root, schema, newFiles)
     val binCols = state.zipWithIndex.map { case ((fd, bs, _, _), i) =>
       val interior = bs.slice(1, bins).map(b => s"${b}D").mkString(",")
@@ -4321,14 +4334,14 @@ object SnapshotTable {
     * (merge / deleteWhere / compact / incremental view refresh). */
   private def commitExpectingEntries(spark: SparkSession, root: String,
       seg: Path, entries: Seq[FileEntry], expectedCurrent: Long,
-      schema: StructType, op: String = "derive"): Long =
+      schema: StructType, op: String): Long =
     commitExpectingSegs(spark, root, Seq(seg), entries, expectedCurrent,
       schema, op)
 
   private def commitExpectingSegs(spark: SparkSession, root: String,
       segs: Seq[Path], entries: Seq[FileEntry],
       expectedCurrent: Long, schema: StructType,
-      op: String = "derive"): Long = {
+      op: String): Long = {
     val f = fs(spark, root)
     // branch mode: the tx-<expectedCurrent> claim IS the expected-
     // current check — if main moved past it, that transition is taken
@@ -4490,10 +4503,6 @@ object SnapshotTable {
       val ins =
         if (addedData.isEmpty) empty
         else readEntries(spark, root, addedData ++ bTombs, readSchema)
-      // when the tombstone key set is small, its collected values
-      // escape here so the mixed-commit exceptAll below can split the
-      // ins leg on key membership
-      var tombProbe: Option[(String, Array[Any])] = None
       val del =
         if (addedTombs.isEmpty) empty
         else {
@@ -4509,7 +4518,6 @@ object SnapshotTable {
           // launched a classification job)
           val (touched, _, probes) =
             probeFiles(spark, root, aData, keysDf, key)
-          tombProbe = probes.map(key -> _)
           val pruned = probes.fold(touched)(p =>
             bloomPrune(touched, p, keysDf.schema(key).dataType, key))
           if (pruned.isEmpty) empty
@@ -4524,51 +4532,8 @@ object SnapshotTable {
         return del.withColumn("change_type", lit("deleted"))
       if (addedTombs.isEmpty)
         return ins.withColumn("change_type", lit("inserted"))
-      // MIXED insert+delete commit. Every del-leg row's key is in the
-      // tombstone key set by construction (the semi join above), and
-      // NULL-keyed del rows do not exist (equality semi join) — so an
-      // ins row whose key is OUTSIDE the set can never cancel against
-      // del and passes exceptAll untouched. With the key set already
-      // collected, split ins on membership with a narrow filter: the
-      // exceptAll pair then shuffles only the tombstone-keyed slice
-      // of the added files, not the commit's whole content (§2.3
-      // shuffle fewer bytes; the filter itself shuffles nothing).
-      // The split SCANS the ins leg twice (exceptAll compares full
-      // rows, so neither scan is column-pruned) — a second read of
-      // the added files buys the smaller shuffle. That trade only
-      // pays when the added data is big enough for the shuffle to
-      // dominate, so it is gated on added bytes from the MANIFEST
-      // (metadata-only): below the threshold the classic single-scan
-      // exceptAll pair is faster (r18 A/B: the ungated split cost
-      // snapshot_mv_fresh ~+0.9 s at sf0.1, where every shuffle is
-      // KB-scale).
-      val splitMinBytes = spark.conf
-        .getOption("spark.graft.diff.splitMinBytes")
-        .flatMap(v => scala.util.Try(v.toLong).toOption)
-        .getOrElse(256L << 20)
-      lazy val addedBytes = {
-        val f = fs(spark, root)
-        addedData.map(e => entryBytes(f, root, e)).sum
-      }
-      // the tombstone key names the column as its writer spelled it;
-      // the ins leg's column is resolved case-insensitively, like
-      // every other key lookup
-      val split = tombProbe.flatMap { case (key, probes) =>
-        ins.columns.find(_.equalsIgnoreCase(key)).map(_ -> probes) }
-      split match {
-        case Some((c, probes)) if addedBytes >= splitMinBytes =>
-          val vals = probes.filter(_ != null).toSeq
-          val inT =
-            if (vals.isEmpty) lit(false)
-            else col(bq(c)).isin(vals: _*) <=> lit(true)
-          val insIn = ins.filter(inT)
-          val insOut = ins.filter(!inT)
-          return insOut.unionByName(insIn.exceptAll(del))
-            .withColumn("change_type", lit("inserted"))
-            .unionByName(del.exceptAll(insIn)
-              .withColumn("change_type", lit("deleted")))
-        case _ =>
-      }
+      // MIXED insert+delete commit: an identical re-insert of a
+      // deleted row cancels against its delete, as a bag difference
       return ins.exceptAll(del).withColumn("change_type", lit("inserted"))
         .unionByName(
           del.exceptAll(ins).withColumn("change_type", lit("deleted")))
@@ -4774,22 +4739,11 @@ object SnapshotTable {
       version: Option[Long] = None): DataFrame =
     readWherePruned(spark, root, Seq((key, lo, hi)), version)
 
-  /** Box read over a Z-ordered table: conjunctive range predicates on
-    * BOTH clustered dimensions, each pruning independently — the kept
-    * set is the intersection, so a (keyA, keyB) box over a
-    * [[commitZOrdered]] layout opens only the files whose bounding
-    * box intersects the query box (≈√files per dimension, the Z-curve
-    * guarantee a 1-D sort cannot give). */
-  def readWhereBox(spark: SparkSession, root: String,
-      keyA: String, loA: Option[String], hiA: Option[String],
-      keyB: String, loB: Option[String], hiB: Option[String],
-      version: Option[Long] = None): DataFrame =
-    readWherePruned(spark, root,
-      Seq((keyA, loA, hiA), (keyB, loB, hiB)), version)
-
   /** N-dimensional box read: one (key, lo, hi) range per curve
     * dimension, each pruning independently, kept set = intersection —
-    * the read-side face of an N-column [[commitZOrdered]]. */
+    * the read-side face of an N-column [[commitZOrdered]]: a box over
+    * that layout opens only the files whose bounding box intersects
+    * it, a guarantee a 1-D sort cannot give its second column. */
   def readWhereDims(spark: SparkSession, root: String,
       preds: Seq[(String, Option[String], Option[String])],
       version: Option[Long] = None): DataFrame =

@@ -1,9 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamReader
-import org.apache.spark.sql.types.StructType
 
 /** Source/sink surface (SURVEY.md §2.1 S1–S7) re-expressed Spark-first.
   *
@@ -15,20 +14,19 @@ import org.apache.spark.sql.types.StructType
   *   (graft.streaming.EventPipeline) — the source is a parameter.
   * - S2 binary→string projection: `kafkaValueProjection`.
   * - S3 partitioned streaming parquet sink: EventPipeline.parquetSink.
-  * - S4/S5 batch scans + DDL: `registerViews` + `sql` give the
-  *   spark.sql surface over the fixture tables; partitioned-table DDL is
-  *   `writePartitioned` (Parquet `partitionBy`, the Iceberg-table
-  *   equivalent of `api.py:205-241` — partition pruning verified in
-  *   SourcesSpec by PartitionFilters in the scan).
-  * - S6 metadata queries: `describeTable` / count via `sql`.
-  * - S7 refresh: `refreshPath` (spark.catalog.refreshByPath) for
-  *   external-writer freshness.
-  * - Multi-format IO: csv/json/orc round-trips (`writeAs`/`readAs`) —
-  *   at 100 TB, columnar (parquet/orc) is the only sane rest format;
-  *   csv/json exist for ingest edges.
-  * - Snapshot isolation / atomic commit / time travel: [[SnapshotTable]]
-  *   (the piece of the reference's Iceberg usage that `writePartitioned`
-  *   and `compactPartitioned` deliberately left out).
+  * - S4 batch scans: `registerViews` + `sql` give the spark.sql surface
+  *   over the fixture tables.
+  * - S5 partitioned-table DDL (the reference's PARTITIONED BY
+  *   (processing_date, processing_hour) Iceberg table, `api.py:205-241`):
+  *   [[SnapshotTable.commitPartitionedOn]], beside the Z-ordered
+  *   ([[SnapshotTable.commitZOrdered]]) and bucketed
+  *   ([[SnapshotTable.commitBucketedOn]]) layouts; small-file
+  *   compaction is [[SnapshotTable.compact]].
+  * - S6 metadata queries: `DESCRIBE` over the graft catalog's tables,
+  *   counts via `sql`.
+  * - S7 refresh: `spark.catalog.refreshByPath`, which every snapshot
+  *   commit already calls for its root.
+  * - Snapshot isolation / atomic commit / time travel: [[SnapshotTable]].
   */
 object Sources {
 
@@ -97,107 +95,6 @@ object Sources {
       col("value").cast("string").as("value"),
       col("topic"), col("partition"), col("offset"), col("timestamp"))
 
-  /** Text-file stream with the same downstream contract as Kafka value
-    * strings (one JSON event per line). */
-  def fileStream(spark: SparkSession, path: String): DataFrame =
-    spark.readStream.format("text").load(path)
-      .withColumnRenamed("value", "value")
-
-  // ---- batch IO (S4/S5, multi-format) ----
-
-  def writeAs(df: DataFrame, format: String, path: String): Unit =
-    df.write.format(format).mode("overwrite")
-      .option("header", "true").save(path)
-
-  /** Pass `schema` whenever it is known. Without one, csv/json read as
-    * single-pass with every column string-typed — NEVER with
-    * inferSchema, which is a FULL extra scan over the data before the
-    * real read (at 100 TB, a doubled scan for metadata the caller
-    * usually already has; self-describing formats like orc/parquet
-    * carry their schema and are unaffected). Callers that want typed
-    * columns from schemaless text data must say so with a schema. */
-  def readAs(spark: SparkSession, format: String, path: String,
-      schema: Option[StructType] = None): DataFrame = {
-    val r = spark.read.format(format).option("header", "true")
-    schema.fold(r)(r.schema).load(path)
-  }
-
-  /** S5: partitioned columnar table (the Parquet equivalent of the
-    * reference's PARTITIONED BY (processing_date, processing_hour)
-    * Iceberg DDL). */
-  def writePartitioned(df: DataFrame, path: String,
-      partitionCols: Seq[String]): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
-
-  /** Storage maintenance: rewrite a partitioned parquet dataset's small
-    * files toward `targetBytes` per file — the plain-parquet equivalent
-    * of Iceberg's rewrite_data_files / the reference's 128 MB
-    * target-file setting (`api.py:205-241`). Streaming sinks and
-    * incremental batch appends accrete one small file per trigger per
-    * partition; at 100 TB the resulting footer/open overhead dominates
-    * scan cost, so periodic compaction is part of the engine's surface,
-    * not an ops afterthought.
-    *
-    * Scale shape — one sizing pass + one shuffle:
-    *  1. bytes/row estimated from the file listing + a count.
-    *  2. per-partition-key output file counts = ceil(rows/targetRows);
-    *     rows get a deterministic salt `pmod(xxhash64(data cols),
-    *     files)` so each output file's rows COLOCATE in one task —
-    *     repartition on (partition cols, salt) spreads a skewed
-    *     partition across its several files instead of serializing it
-    *     through one writer (maxRecordsPerFile alone would roll files
-    *     sequentially in a single task).
-    *  3. written to `<path>.compacting`, then swapped in. The swap is
-    *     two renames, NOT atomic for concurrent readers — at cluster
-    *     scale that transactionality is precisely what a table format
-    *     (Iceberg/Delta) adds on top of this same rewrite job.
-    *
-    * Returns (files before, files after), counting data files only. */
-  def compactPartitioned(spark: SparkSession, path: String,
-      partitionCols: Seq[String],
-      targetBytes: Long = 128L * 1024 * 1024): (Long, Long) = {
-    import org.apache.hadoop.fs.Path
-    val hPath = new Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dataFiles(p: Path): Seq[org.apache.hadoop.fs.FileStatus] = {
-      val it = fs.listFiles(p, true)
-      val buf = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
-      while (it.hasNext) {
-        val f = it.next()
-        if (!f.getPath.getName.startsWith("_") &&
-          !f.getPath.getName.startsWith(".")) buf += f
-      }
-      buf.result()
-    }
-    val before = dataFiles(hPath)
-    val df = spark.read.parquet(path)
-    val totalRows = df.count()
-    if (totalRows == 0) return (before.size.toLong, before.size.toLong)
-    val bytesPerRow = math.max(1L, before.map(_.getLen).sum / totalRows)
-    val targetRows = math.max(1L, targetBytes / bytesPerRow)
-    val dataCols = df.columns.filterNot(partitionCols.contains).toSeq
-    val perKey = df.groupBy(partitionCols.map(col): _*)
-      .agg(ceil(count(lit(1)).cast("double") / targetRows)
-        .cast("int").as("__files"))
-    val tmp = new Path(path + ".compacting")
-    // degenerate partition-cols-only tables have nothing to salt on;
-    // maxRecordsPerFile still rolls their files at the target size
-    val salt = if (dataCols.isEmpty) lit(0L)
-      else pmod(xxhash64(dataCols.map(col): _*), col("__files"))
-    df.join(broadcast(perKey), partitionCols)
-      .withColumn("__salt", salt)
-      .repartition((partitionCols :+ "__salt").map(col): _*)
-      .drop("__files", "__salt")
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", targetRows)
-      .partitionBy(partitionCols: _*)
-      .parquet(tmp.toString)
-    fs.delete(hPath, true)
-    require(fs.rename(tmp, hPath), s"rename $tmp -> $hPath failed")
-    spark.catalog.refreshByPath(path)
-    (before.size.toLong, dataFiles(hPath).size.toLong)
-  }
-
   /** Storage clustering on one key: range-repartition + in-file sort +
     * write. Every output file then holds a DISJOINT key range, so any
     * parquet reader with a key predicate skips whole files/row-groups on
@@ -206,7 +103,7 @@ object Sources {
     * table formats call clustering; at 100 TB it is the difference
     * between a selective query scanning one file and scanning all of
     * them. `files` controls granularity: more files = finer skipping,
-    * more footers (pair with `compactPartitioned`'s sizing discipline).
+    * more footers (pair with [[SnapshotTable.compact]] to size them).
     *
     * The range boundaries come from Spark's range-partitioning sampler —
     * one lightweight sampling pass, then one shuffle; no driver-side
@@ -217,86 +114,11 @@ object Sources {
       .sortWithinPartitions(col(key))
       .write.mode("overwrite").parquet(path)
 
-  /** Two-dimensional clustering via a Z-ORDER curve: both columns are
-    * rank-normalized to 16 bits (min/max from one tiny stats pass —
-    * four scalars, not data) and bit-interleaved; range-partitioning on
-    * the interleaved value gives every file a compact bounding BOX in
-    * (a, b) space, so predicates on EITHER column alone skip most
-    * files — the property one-column sorting cannot give to the second
-    * column. The interleave is a pure column expression (shift/and/or
-    * folds), fully codegen'd, never a UDF. */
-  def writeZOrdered(df: DataFrame, path: String, keyA: String,
-      keyB: String, files: Int): Unit =
-    df.withColumn("__z", zOrderColumn(df, keyA, keyB))
-      .repartitionByRange(files, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
-
-  /** The Z-interleave as a pure column expression against `df`'s value
-    * ranges (one four-scalar stats pass). Shared with the snapshot
-    * table's Z-ordered commits. */
-  private[sources] def zOrderColumn(df: DataFrame, keyA: String,
-      keyB: String): Column = zOrderColumnN(df, Seq(keyA, keyB))
-
-  /** Interleaved Z-curve value over N key columns: each key is
-    * min/max-normalized to `b = 32/N` bits (16 for two dims, 10 for
-    * three, 8 for four — total curve precision is a fixed bit budget,
-    * the standard multi-dim trade-off), and bit i of key j lands at
-    * curve position `N*i + j`. One driver-side min/max row computes
-    * the normalization ranges; empty/all-NULL keys degrade to an
-    * unordered write instead of throwing. */
-  private[sources] def zOrderColumnN(df: DataFrame,
-      keys: Seq[String]): Column = {
-    require(keys.nonEmpty && keys.size <= 8,
-      s"z-order supports 1..8 dims, got ${keys.size}")
-    val bits = math.max(4, math.min(16, 32 / keys.size))
-    val aggCols = keys.flatMap(k => Seq(min(col(k)).cast("double"),
-      max(col(k)).cast("double")))
-    val stats = df.agg(aggCols.head, aggCols.tail: _*).head()
-    if (keys.indices.exists(j => stats.isNullAt(2 * j))) return lit(0L)
-    val top = (1L << bits) - 1
-    def normB(c: Column, lo: Double, hi: Double): Column =
-      if (hi <= lo) lit(0L)
-      else least(lit(top), floor(
-        (c.cast("double") - lit(lo)) / lit(hi - lo) *
-          lit((top + 1).toDouble)).cast("long"))
-    val normed = keys.zipWithIndex.map { case (k, j) =>
-      normB(col(k), stats.getDouble(2 * j), stats.getDouble(2 * j + 1))
-    }
-    (0 until bits).foldLeft(lit(0L)) { (acc, i) =>
-      normed.zipWithIndex.foldLeft(acc) { case (a, (nk, j)) =>
-        a.bitwiseOR(shiftleft(shiftright(nk, i).bitwiseAND(lit(1L)),
-          keys.size * i + j))
-      }
-    }
-  }
-
-  /** Bucketed table pair for co-located joins (the cluster-scale answer
-    * to fact-fact shuffles, SURVEY §7 M2 scale note): both sides
-    * `bucketBy(n, key)` + `sortBy(key)` into managed tables; a join on
-    * the bucket key then needs NO Exchange on either side — each task
-    * merge-joins bucket i against bucket i. Requires saveAsTable (bucket
-    * metadata lives in the catalog, not the files). */
-  def writeBucketed(df: DataFrame, table: String, key: String,
-      buckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(buckets, key).sortBy(key)
-      .format("parquet").saveAsTable(table)
-
   /** S4: register every fixture table as a temp view -> spark.sql. */
   def registerViews(spark: SparkSession, dir: String): Unit =
     graft.Tables.names.foreach { n =>
       graft.Tables.load(spark, dir, n).createOrReplaceTempView(n)
     }
-
-  /** S6: schema metadata of a registered table. */
-  def describeTable(spark: SparkSession, name: String): DataFrame =
-    spark.sql(s"DESCRIBE $name")
-
-  /** S7: cross-process snapshot freshness for path-based tables. */
-  def refreshPath(spark: SparkSession, path: String): Unit =
-    spark.catalog.refreshByPath(path)
 
   // ---- SQL surface queries (driver-checked) ----
 

@@ -1794,7 +1794,7 @@ private[connector] class GraftMicroBatchStream(root: String,
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory(required.json, Array.empty,
-      hconf = Some(SerializableHadoopConf.broadcast(SparkSession.active)))
+      SerializableHadoopConf.broadcast(SparkSession.active))
 }
 
 /** The CHANGELOG streaming scan (`changes=true`): each micro-batch
@@ -2425,6 +2425,7 @@ private[connector] class GraftScan(root: String, version: Long,
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory(required.json, pushed,
+      SerializableHadoopConf.broadcast(SparkSession.active),
       org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone,
       // scan-GLOBAL columnar decision (Spark refuses mixed
       // row/columnar partitions, it does not fall back). Pushed
@@ -2438,8 +2439,7 @@ private[connector] class GraftScan(root: String, version: Long,
       // Bucketed (SPJ) partitions chain COLUMNAR readers per grid
       // cell, so storage-partitioned scans stay vectorized
       columnarOk = offsetSkipFile.isEmpty &&
-        !required.fieldNames.contains(GraftFileMetadataColumn.Name),
-      hconf = Some(SerializableHadoopConf.broadcast(SparkSession.active)))
+        !required.fieldNames.contains(GraftFileMetadataColumn.Name))
 
   /** Size-accurate planning: a v2 scan without statistics defaults to
     * "unknown = huge", which forbids the planner from ever
@@ -2618,16 +2618,15 @@ private[connector] class GraftScan(root: String, version: Long,
 }
 
 private[connector] class GraftReaderFactory(requiredJson: String,
-    pushed: Array[Filter], sessionTz: String = "UTC",
-    columnarOk: Boolean = false,
-    hconf: Option[org.apache.spark.broadcast
-      .Broadcast[SerializableHadoopConf]] = None)
+    pushed: Array[Filter],
+    hconf: org.apache.spark.broadcast.Broadcast[SerializableHadoopConf],
+    sessionTz: String = "UTC", columnarOk: Boolean = false)
   extends PartitionReaderFactory {
 
   // the factory ships only the broadcast HANDLE; the conf itself is
   // deserialized once per executor (shared object in local mode).
   // Readers take their own Configuration COPY since they mutate it
-  private def baseConf: Option[Configuration] = hconf.map(_.value.value)
+  private def baseConf: Configuration = hconf.value.value
 
   /** Columnar eligibility — decided ONCE for the whole scan (Spark
     * refuses mixed row/columnar partitions, it does not fall back):
@@ -2678,7 +2677,7 @@ private[connector] class GraftReaderFactory(requiredJson: String,
             p.aliases.toMap))
         if (p.tombs.isEmpty)
           new GraftColumnarReader(p.absolutePath, required, sessionTz,
-            p.fills, p.aliases, filePushed, baseConf)
+            baseConf, p.fills, p.aliases, filePushed)
         else {
           // merge-on-read, still vectorized: decode the batch through
           // the columnar reader (key column riding as a hidden
@@ -2688,7 +2687,7 @@ private[connector] class GraftReaderFactory(requiredJson: String,
           // shape). Batches that lose no rows pass through untouched.
           val keyType = DataType.fromJson(p.keyTypeJson)
           val kills = GraftTombstones.killSet(p.tombs,
-            Option(p.tombKeyName).getOrElse(p.keyName), keyType)
+            Option(p.tombKeyName).getOrElse(p.keyName), keyType, baseConf)
           val (readSchema, killIdx) =
             required.fieldNames.indexWhere(_ == p.keyName) match {
               case -1 => (StructType(required.fields :+
@@ -2698,7 +2697,7 @@ private[connector] class GraftReaderFactory(requiredJson: String,
             }
           new GraftColumnarKillReader(
             new GraftColumnarReader(p.absolutePath, readSchema,
-              sessionTz, p.fills, p.aliases, filePushed, baseConf),
+              sessionTz, baseConf, p.fills, p.aliases, filePushed),
             required.length, killIdx, keyType, kills)
         }
     }
@@ -2745,18 +2744,18 @@ private[connector] class GraftReaderFactory(requiredJson: String,
         p.aliases.toMap))
     if (p.tombs.isEmpty && p.preImageTombs.isEmpty)
       new GraftPartitionReader(p.absolutePath, required,
-        required.length, -1, null, filePushed, p.skipRows, p.fills,
-        aliases = p.aliases, base = baseConf)
+        required.length, -1, null, baseConf, filePushed, p.skipRows,
+        p.fills, aliases = p.aliases)
     else {
       val keyType = DataType.fromJson(p.keyTypeJson)
       val tombKey = Option(p.tombKeyName).getOrElse(p.keyName)
       val kills =
         if (p.tombs.isEmpty) new java.util.HashSet[Any]()
-        else GraftTombstones.killSet(p.tombs, tombKey, keyType)
+        else GraftTombstones.killSet(p.tombs, tombKey, keyType, baseConf)
       val emits =
         if (p.preImageTombs.isEmpty) null
         else GraftTombstones.killSet(p.preImageTombs, tombKey,
-          keyType)
+          keyType, baseConf)
       // the delete key must be DECODED to filter on, even when the
       // query didn't project it — read it as a hidden trailing field
       val (readSchema, killIdx) =
@@ -2767,8 +2766,8 @@ private[connector] class GraftReaderFactory(requiredJson: String,
           case i => (required, i)
         }
       new GraftPartitionReader(p.absolutePath, readSchema,
-        required.length, killIdx, kills, filePushed, fills = p.fills,
-        emitSet = emits, aliases = p.aliases, base = baseConf)
+        required.length, killIdx, kills, baseConf, filePushed,
+        fills = p.fills, emitSet = emits, aliases = p.aliases)
     }
   }
 }
@@ -2954,12 +2953,12 @@ private[connector] object GraftTombstones {
     new java.util.concurrent.ConcurrentHashMap[String,
       java.util.HashSet[Any]]()
 
-  private def load(path: String, keyName: String,
-      keyType: DataType): java.util.HashSet[Any] = {
+  private def load(path: String, keyName: String, keyType: DataType,
+      conf: Configuration): java.util.HashSet[Any] = {
     val s = new java.util.HashSet[Any]()
     val r = new GraftPartitionReader(path,
       StructType(Seq(StructField(keyName, keyType, nullable = true))),
-      1, -1, null)
+      1, -1, null, conf)
     try {
       while (r.next()) {
         val row = r.get()
@@ -2969,8 +2968,10 @@ private[connector] object GraftTombstones {
     s
   }
 
-  def killSet(tombs: Array[TombRef], keyName: String,
-      keyType: DataType): java.util.HashSet[Any] = {
+  /** Tombstone files are read with `conf`, the scan's session Hadoop
+    * conf, like the data files they filter. */
+  def killSet(tombs: Array[TombRef], keyName: String, keyType: DataType,
+      conf: Configuration): java.util.HashSet[Any] = {
     if (cache.size() > 64) cache.clear() // bound executor memory
     val out = new java.util.HashSet[Any]()
     tombs.foreach { t =>
@@ -2978,7 +2979,7 @@ private[connector] object GraftTombstones {
       // address the same tombstone file by different epoch names
       out.addAll(cache.computeIfAbsent(
         t.absolutePath + "#" + keyName,
-        _ => load(t.absolutePath, keyName, keyType)))
+        _ => load(t.absolutePath, keyName, keyType, conf)))
     }
     out
   }
@@ -3012,6 +3013,9 @@ private[connector] object GraftTombstones {
   * is gated by [[GraftReaderFactory.supportColumnarReads]]. */
 private[graft] class GraftColumnarReader(file: String,
     required: StructType, sessionTz: String,
+    // the driver-shipped session Hadoop conf (copied — setSchema etc.
+    // mutate)
+    base: Configuration,
     fills: Array[(String, String)] = Array.empty,
     // logical -> physical names for THIS file (rename epochs): the
     // vectorized reader is handed the PHYSICAL-named schema — same
@@ -3024,11 +3028,7 @@ private[graft] class GraftColumnarReader(file: String,
     // skipping the row reader does) — Spark re-evaluates every
     // residual on the surviving rows, so this is IO reduction with
     // columnar decode, never semantics
-    pushed: Array[Filter] = Array.empty,
-    // the driver-shipped session Hadoop conf (copied — setSchema etc.
-    // mutate); a bare Configuration only as a fallback for callers
-    // with no session to capture from
-    base: Option[Configuration] = None)
+    pushed: Array[Filter] = Array.empty)
   extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
 
   private val requested: StructType =
@@ -3050,8 +3050,7 @@ private[graft] class GraftColumnarReader(file: String,
   // and let it clip the file schema — a required column the file
   // predates comes back as a constant-NULL vector, so schema
   // evolution never leaves the columnar path
-  private val conf =
-    base.fold(new Configuration())(b => new Configuration(b))
+  private val conf = new Configuration(base)
   conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requested.json)
   conf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
     classOf[ParquetReadSupport].getName)
@@ -3272,6 +3271,8 @@ private[graft] class GraftSelectionVector(
 private[graft] class GraftPartitionReader(file: String,
     readSchema: StructType, emitLen: Int, killIdx: Int,
     killSet: java.util.HashSet[Any],
+    // driver-shipped session Hadoop conf (copied before use)
+    base: Configuration,
     filters: Array[Filter] = Array.empty,
     skipRows: Long = 0L,
     fills: Array[(String, String)] = Array.empty,
@@ -3281,10 +3282,7 @@ private[graft] class GraftPartitionReader(file: String,
     emitSet: java.util.HashSet[Any] = null,
     // logical -> physical names for THIS file (renamed columns whose
     // old name this pre-rename file still stores)
-    aliases: Array[(String, String)] = Array.empty,
-    // driver-shipped session Hadoop conf; bare fallback for
-    // executor-side callers with no session (GraftTombstones)
-    base: Option[Configuration] = None)
+    aliases: Array[(String, String)] = Array.empty)
   extends PartitionReader[InternalRow] {
 
   private val physOf: Map[String, String] = aliases.toMap
@@ -3309,8 +3307,7 @@ private[graft] class GraftPartitionReader(file: String,
     n.toLowerCase(java.util.Locale.ROOT) -> v
   }.toMap
 
-  private val conf =
-    base.fold(new Configuration())(b => new Configuration(b))
+  private val conf = new Configuration(base)
   private val fileSchema: MessageType = {
     val r = ParquetFileReader.open(
       HadoopInputFile.fromPath(new Path(file), conf))

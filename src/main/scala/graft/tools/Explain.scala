@@ -23,7 +23,7 @@ object Explain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.VectorFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     val df = graft.SparkEntry.queries(name)(spark, sfDir)
     df.explain("formatted")
     if (doRun) {

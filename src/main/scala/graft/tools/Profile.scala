@@ -37,7 +37,7 @@ object Profile {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.VectorFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     val jobs = new AtomicInteger()
     val stages = new AtomicInteger()
     val tasks = new AtomicInteger()

@@ -68,13 +68,15 @@ class CboStatsSpec extends SparkSpec {
       SnapshotTable.currentVersion(spark, autoRoot))
     assert(autoE.forall(_.ndv.map(_._1) == Seq("k")),
       s"auto mode sketched ${autoE.flatMap(_.ndv.map(_._1)).distinct}")
-    // ...and a PLAIN commit stays a zero-pass write (no sketches)
+    // ...and a PLAIN commit stays a zero-pass write (no sketches),
+    // which the reader treats as stat-free
     val plainRoot = s"$warehouse/db/plaint"
     SnapshotTable.commit(spark, plainRoot,
       (1 to 100).map(i => (i.toLong, s"s$i")).toDF("k", "s"))
-    assert(SnapshotTable.manifest(spark, plainRoot,
+    val sketchless = SnapshotTable.manifest(spark, plainRoot,
       SnapshotTable.currentVersion(spark, plainRoot))
-      .forall(_.ndv.isEmpty))
+    assert(sketchless.forall(_.ndv.isEmpty))
+    assert(SnapshotTable.ndvEstimates(sketchless).isEmpty)
 
     // the ANALYZEd big table: every hashable column sketched
     val (bigRoot, _) = roots
@@ -490,31 +492,6 @@ class CboStatsSpec extends SparkSpec {
     val height = props("graft.histcol.v").split('|')(0).toDouble
     assert(math.abs(height - 32000.0 / 16) < 1.0,
       s"height $height should be total/bins = 2000")
-  }
-
-  test("NDV recording is session-togglable (mode=all / enabled=false) " +
-      "and the reader treats sketchless manifests as stat-free") {
-    val root = s"$warehouse/db/nostats"
-    withConfs("spark.graft.stats.ndv.enabled" -> "false") {
-      SnapshotTable.commit(spark, root,
-        (1 to 100).map(i => (i.toLong, s"s$i")).toDF("k", "s"),
-        clusterKey = Some("k"))
-    }
-    val entries = SnapshotTable.manifest(spark, root,
-      SnapshotTable.currentVersion(spark, root))
-    assert(entries.forall(_.ndv.isEmpty))
-    assert(SnapshotTable.ndvEstimates(entries).isEmpty)
-    // mode=all: every hashable column sketched AT COMMIT (the opt-in
-    // ingest-tax path for tables that want stats without analyze)
-    val root2 = s"$warehouse/db/allstats"
-    withConfs("spark.graft.stats.ndv.mode" -> "all") {
-      SnapshotTable.commit(spark, root2,
-        (1 to 100).map(i => (i.toLong, s"s$i")).toDF("k", "s"))
-    }
-    val e2 = SnapshotTable.manifest(spark, root2,
-      SnapshotTable.currentVersion(spark, root2))
-    assert(e2.forall(_.ndv.map(_._1).toSet == Set("k", "s")),
-      e2.flatMap(_.ndv.map(_._1)).distinct.toString)
   }
 
   test("analyze records what queries SURFACE for an ADD COLUMN " +

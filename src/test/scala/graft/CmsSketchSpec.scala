@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 class CmsSketchSpec extends SparkSpec {
   import spark.implicits._
 
-  graft.functions.CmsFunctions.register(spark)
+  graft.functions.GraftFunctions.register(spark)
 
   private lazy val terms = Tables.load(spark, sfDir, "documents")
     .selectExpr("explode(split(text, ' ')) AS term")

@@ -154,7 +154,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("embedding LSH dedup: verified pairs only, decent recall vs exact") {
-    graft.functions.VectorFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     val lsh = Dedup.queries("dedup_embedding_lsh")(spark, sfDir)
       .select("a_id", "b_id", "cos_r").as[(Long, Long, Double)].collect()
     // precision by construction: every emitted pair passed exact verify
@@ -377,7 +377,7 @@ class DedupSpec extends SparkSpec {
       "all-pairs form, pair-for-pair and score-for-score (the prefix " +
       "filter provably admits every true pair)") {
     import org.apache.spark.sql.functions._
-    graft.functions.SketchFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     val d = Tables.load(spark, sfDir, "documents")
       .selectExpr("doc_id", "lang", "source",
         "array_distinct(split(text, ' ')) AS toks")

@@ -1,13 +1,13 @@
 package graft
 
-import graft.functions.{Hll, HllFunctions}
+import graft.functions.Hll
 import graft.operators.Temporal
 import org.apache.spark.sql.functions._
 
 class HllSpec extends SparkSpec {
   import spark.implicits._
 
-  HllFunctions.register(spark)
+  graft.functions.GraftFunctions.register(spark)
 
   test("tiny cardinalities are exact via linear counting") {
     val est = Seq("a", "b", "c", "a", "b").toDF("v")

@@ -73,7 +73,7 @@ class PropertySpec extends SparkSpec {
 
   test("∀ token lists: graft_jaccard ≡ size(intersect)/size(union), " +
     "bit-for-bit, incl. duplicates and empties") {
-    graft.functions.SketchFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     val tokGen = Gen.listOf(Gen.oneOf(('a' to 'f').map(_.toString)))
     samples(Gen.zip(tokGen, tokGen), 20).foreach { case (a, b) =>
       def frame = Seq((a, b)).toDF("a", "b")
@@ -105,7 +105,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("∀ strings: graft_bpe_count ≡ regexp_count(text, '[^ ]{1,4}')") {
-    graft.functions.SketchFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     // unicode (incl. multi-byte), runs of spaces, empty strings, long
     // tokens — the byte-pass count must equal the regex count always
     val charGen = Gen.frequency(
@@ -125,7 +125,7 @@ class PropertySpec extends SparkSpec {
 
   test("jaccard null/empty-string elements match array_intersect/union " +
     "set semantics (null is its own member)") {
-    graft.functions.SketchFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     // (a, b, expected |∩|/|∪|): null and "" are DIFFERENT members
     val cases = Seq(
       (Seq(Some("x"), None), Seq(Some("x"), None), 1.0),        // {x,∅}={x,∅}
@@ -141,7 +141,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("∀ token lists: sorted-hash jaccard ≡ string-set jaccard") {
-    graft.functions.SketchFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     val tokGen = Gen.listOf(Gen.oneOf(('a' to 'h').map(_.toString)))
     samples(Gen.zip(tokGen, tokGen), 20).foreach { case (a, b) =>
       val r = Seq((a, b)).toDF("a", "b")
@@ -160,7 +160,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("∀ value streams: HLL estimate within 4-sigma of exact distinct") {
-    graft.functions.HllFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     val gen = Gen.nonEmptyListOf(Gen.choose(0L, 5000L))
     samples(gen, 6).foreach { vs =>
       val df = vs.toDF("v")
@@ -176,7 +176,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("∀ item streams: MG topk never overestimates, bounded undercount") {
-    graft.functions.HllFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     val gen = Gen.nonEmptyListOf(Gen.choose(0L, 30L))
     samples(gen, 6).foreach { vs =>
       val df = vs.toDF("v")
@@ -198,7 +198,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("∀ token lists: minhash signature estimates Jaccard within bounds") {
-    graft.functions.SketchFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     val tokGen = Gen.nonEmptyListOf(Gen.oneOf(('a' to 'z').map(_.toString)))
     samples(Gen.zip(tokGen, tokGen), 10).foreach { case (a, b) =>
       val r = Seq((a, b)).toDF("a", "b")

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class QuantileSketchSpec extends SparkSpec {
   import spark.implicits._
 
-  graft.functions.QuantileFunctions.register(spark)
+  graft.functions.GraftFunctions.register(spark)
 
   private lazy val prices = Tables.load(spark, sfDir, "lineitem")
     .selectExpr("CAST(l_extendedprice AS DOUBLE) AS x")

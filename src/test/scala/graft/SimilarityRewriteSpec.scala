@@ -1,13 +1,12 @@
 package graft
 
-import graft.functions.VectorFunctions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class SimilarityRewriteSpec extends SparkSpec {
   import spark.implicits._
 
-  VectorFunctions.register(spark) // attaches the rewrite rule
+  graft.functions.GraftFunctions.register(spark) // attaches the rewrite rule
 
   private def optimized(df: DataFrame): String =
     df.queryExecution.optimizedPlan.toString
@@ -113,7 +112,7 @@ class SimilarityRewriteSpec extends SparkSpec {
   }
 
   test("rewrite preserves the oracle-proven knn dot bit-for-bit") {
-    VectorFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     val e = Tables.load(spark, sfDir, "embeddings")
       .limit(50)
       .selectExpr("vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS v")

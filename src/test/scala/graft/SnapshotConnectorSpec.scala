@@ -246,7 +246,8 @@ class SnapshotConnectorSpec extends SparkSpec {
     def rowsSeen(filters: Array[org.apache.spark.sql.sources.Filter])
     : Long = {
       val r = new graft.sources.connector.GraftPartitionReader(
-        abs, schema, 2, -1, null, filters)
+        abs, schema, 2, -1, null, spark.sessionState.newHadoopConf(),
+        filters)
       try { var n = 0L; while (r.next()) n += 1; n } finally r.close()
     }
     val all = rowsSeen(Array.empty)
@@ -265,7 +266,8 @@ class SnapshotConnectorSpec extends SparkSpec {
     def rowsSeenColumnar(
         filters: Array[org.apache.spark.sql.sources.Filter]): Long = {
       val r = new graft.sources.connector.GraftColumnarReader(
-        abs, schema, "UTC", pushed = filters)
+        abs, schema, "UTC", spark.sessionState.newHadoopConf(),
+        pushed = filters)
       try {
         var n = 0L; while (r.next()) n += r.get().numRows(); n
       } finally r.close()
@@ -316,7 +318,8 @@ class SnapshotConnectorSpec extends SparkSpec {
     def rowsSeen(filters: Array[org.apache.spark.sql.sources.Filter])
     : Long = {
       val r = new graft.sources.connector.GraftPartitionReader(
-        abs, schema, 2, -1, null, filters)
+        abs, schema, 2, -1, null, spark.sessionState.newHadoopConf(),
+        filters)
       try { var n = 0L; while (r.next()) n += 1; n } finally r.close()
     }
     val all = rowsSeen(Array.empty)
@@ -345,7 +348,8 @@ class SnapshotConnectorSpec extends SparkSpec {
     def rowsSeenColumnar(
         filters: Array[org.apache.spark.sql.sources.Filter]): Long = {
       val r = new graft.sources.connector.GraftColumnarReader(
-        abs, schema, "UTC", pushed = filters)
+        abs, schema, "UTC", spark.sessionState.newHadoopConf(),
+        pushed = filters)
       try {
         var n = 0L; while (r.next()) n += r.get().numRows(); n
       } finally r.close()

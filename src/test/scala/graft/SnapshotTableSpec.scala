@@ -1168,8 +1168,8 @@ class SnapshotTableSpec extends SparkSpec {
     assert(rk.count() == 200)
     // a BOX predicate prunes on both dimensions at once: the kept set
     // is the intersection, so it opens no more files than either band
-    val box = SnapshotTable.readWhereBox(spark, root,
-      "a", Some("10"), Some("20"), "b", Some("10"), Some("20"))
+    val box = SnapshotTable.readWhereDims(spark, root,
+      Seq(("a", Some("10"), Some("20")), ("b", Some("10"), Some("20"))))
     assert(box.inputFiles.length <=
       math.min(ra.inputFiles.length, rb.inputFiles.length),
       s"box opened ${box.inputFiles.length} files, bands opened " +
@@ -1536,12 +1536,11 @@ class SnapshotTableSpec extends SparkSpec {
       "pruned MOR read must apply tombstones identically")
   }
 
-  test("mixed-commit diff with the key-membership split engaged " +
-      "(splitMinBytes=0) equals the classic exceptAll pair, NULL and " +
-      "re-inserted rows included") {
+  test("mixed-commit diff: identical re-inserts net out of the " +
+      "exceptAll pair, changed keys read as delete + insert and new " +
+      "keys as inserts only") {
     val root = tmpRoot()
-    // nullable key column: NULL-keyed inserts must survive the split
-    // untouched (they route to the bypass leg)
+    // nullable key column: a NULL-keyed row rides along untouched
     val base = ((1 to 5000).map(i => (java.lang.Integer.valueOf(i), i * 1.0))
       :+ ((null: java.lang.Integer), 0.5)).toDF("k", "x")
     SnapshotTable.commit(spark, root, base, clusterKey = Some("k"))
@@ -1558,17 +1557,9 @@ class SnapshotTableSpec extends SparkSpec {
       .collect()
       .map(r => (Option(r.get(0)), r.getDouble(1), r.getString(2)))
       .sortBy(_.toString).toSeq
-    val classic = rows(SnapshotTable.diff(spark, root, 1L, 2L))
-    spark.conf.set("spark.graft.diff.splitMinBytes", "0")
-    val split =
-      try rows(SnapshotTable.diff(spark, root, 1L, 2L))
-      finally spark.conf.unset("spark.graft.diff.splitMinBytes")
-    assert(split == classic,
-      "key-membership split changed the diff")
-    // sanity on the semantics: identical re-inserts net out, changed
-    // keys appear as delete+insert, new keys as inserts only
-    val ins = classic.filter(_._3 == "inserted")
-    val del = classic.filter(_._3 == "deleted")
+    val changes = rows(SnapshotTable.diff(spark, root, 1L, 2L))
+    val ins = changes.filter(_._3 == "inserted")
+    val del = changes.filter(_._3 == "deleted")
     assert(ins.count(t => t._1.exists(k => k.asInstanceOf[Int] >= 90001)) == 40)
     assert(!ins.exists(t => t._1.exists(k => { val v = k.asInstanceOf[Int]; v <= 40 })),
       "identical re-inserted rows must net out of the inserted leg")
@@ -1658,10 +1649,8 @@ class SnapshotTableSpec extends SparkSpec {
         "around the boundary")
   }
 
-  test("diff-split gate resolves the tombstone key case-insensitively: " +
-      "a key spelled 'K' over column 'k' still splits, with the " +
-      "exceptAll result") {
-    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+  test("mixed-commit diff over a tombstone key spelled 'K' for " +
+      "column 'k': 80 inserts and 40 deletes") {
     val root = tmpRoot()
     val base = ((1 to 300).map(i => (java.lang.Integer.valueOf(i), i * 1.0))
       :+ ((null: java.lang.Integer), 0.5)).toDF("k", "x")
@@ -1678,26 +1667,11 @@ class SnapshotTableSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (Option(r.get(0)), r.getDouble(1), r.getString(2)))
       .sortBy(_.toString).toSeq
-    def splits(df: org.apache.spark.sql.DataFrame): Boolean =
-      df.queryExecution.optimizedPlan.exists(_.expressions.exists(_.exists {
-        case _: In | _: InSet => true
-        case _ => false
-      }))
-    val classicDf = SnapshotTable.diff(spark, root, 1L, 3L)
-    val classic = rows(classicDf)
-    spark.conf.set("spark.graft.diff.splitMinBytes", "0")
-    val (split, engaged) =
-      try {
-        val d = SnapshotTable.diff(spark, root, 1L, 3L)
-        (rows(d), splits(d))
-      } finally spark.conf.unset("spark.graft.diff.splitMinBytes")
-    assert(!splits(classicDf), "below the gate the diff must not split")
-    assert(engaged, "a case-mismatched tombstone key must still split")
-    assert(split == classic, "key-membership split changed the diff")
-    val ins = classic.filter(_._3 == "inserted")
-    val del = classic.filter(_._3 == "deleted")
+    val changes = rows(SnapshotTable.diff(spark, root, 1L, 3L))
+    val ins = changes.filter(_._3 == "inserted")
+    val del = changes.filter(_._3 == "deleted")
     assert(ins.size == 80 && del.size == 40,
-      s"40 changed + 40 new inserts, 40 changed deletes: $classic")
+      s"40 changed + 40 new inserts, 40 changed deletes: $changes")
   }
 
   test("incremental views over copy-on-write merges: the signed file " +

@@ -15,24 +15,6 @@ class SourcesSpec extends SparkSpec {
     }
   }
 
-  test("csv / json / orc round-trips preserve data") {
-    val src = Tables.load(spark, sfDir, "nation")
-    val n = src.count()
-    Seq("csv", "json", "orc").foreach { fmt =>
-      val p = s"${tmpDir()}/nation_$fmt"
-      Sources.writeAs(src, fmt, p)
-      // schema passed for the text formats (csv has no types at all;
-      // json would otherwise run its intrinsic inference scan); orc is
-      // self-describing => exercises the schemaless path
-      val back = Sources.readAs(spark, fmt, p,
-        if (fmt == "orc") None else Some(src.schema))
-      assert(back.count() == n, s"$fmt lost rows")
-      val names = back.select("n_name").as[String].collect().sorted
-      assert(names.toSeq ==
-        src.select("n_name").as[String].collect().sorted.toSeq, s"$fmt")
-    }
-  }
-
   test("writeClustered: every output file holds a disjoint key range " +
       "(file-level min/max skipping by layout)") {
     val p = s"${tmpDir()}/events_clustered"
@@ -52,149 +34,6 @@ class SourcesSpec extends SparkSpec {
     }
     // totals survive the relayout
     assert(spark.read.parquet(p).count() == ev.count())
-  }
-
-  test("writeZOrdered: per-file bounding boxes are compact in BOTH " +
-      "dimensions, so either column's predicate can skip files") {
-    val p = s"${tmpDir()}/events_zorder"
-    val ev = Tables.load(spark, sfDir, "events")
-    Sources.writeZOrdered(ev, p, "value", "user_id", files = 16)
-    val g = ev.agg(
-      min(col("value")).cast("double"), max(col("value")).cast("double"),
-      min(col("user_id")).cast("double"),
-      max(col("user_id")).cast("double")).head()
-    val (vw, uw) = (g.getDouble(1) - g.getDouble(0),
-      g.getDouble(3) - g.getDouble(2))
-    // per-file bounding boxes in NORMALIZED (0..1) coordinates
-    val boxes = spark.read.parquet(p).inputFiles.toSeq.map { f =>
-      val r = spark.read.parquet(f).agg(
-        min(col("value")).cast("double"), max(col("value")).cast("double"),
-        min(col("user_id")).cast("double"),
-        max(col("user_id")).cast("double")).head()
-      ((r.getDouble(0) - g.getDouble(0)) / vw,
-        (r.getDouble(1) - g.getDouble(0)) / vw,
-        (r.getDouble(2) - g.getDouble(2)) / uw,
-        (r.getDouble(3) - g.getDouble(2)) / uw)
-    }
-    assert(boxes.size >= 8, s"expected many files, got ${boxes.size}")
-    val avgArea = boxes.map { case (aLo, aHi, bLo, bHi) =>
-      (aHi - aLo) * (bHi - bLo) }.sum / boxes.size
-    // one-column sorting gives area ~= width_a * 1.0; the curve must do
-    // far better on the PRODUCT
-    assert(avgArea < 0.3,
-      s"z-order boxes not compact: avg area fraction $avgArea, $boxes")
-    // a central 10%-band predicate on EITHER dimension must be able to
-    // skip at least half the files on min/max alone
-    val aHits = boxes.count { case (lo, hi, _, _) => hi >= 0.45 && lo <= 0.55 }
-    val bHits = boxes.count { case (_, _, lo, hi) => hi >= 0.45 && lo <= 0.55 }
-    assert(aHits <= boxes.size / 2,
-      s"value-band predicate hits $aHits of ${boxes.size} files")
-    assert(bHits <= boxes.size / 2,
-      s"user-band predicate hits $bHits of ${boxes.size} files")
-  }
-
-  test("partitioned write enables partition pruning on read") {
-    val p = s"${tmpDir()}/events_part"
-    val ev = Tables.load(spark, sfDir, "events")
-      .withColumn("d", date_format(col("ts"), "yyyy-MM-dd"))
-    Sources.writePartitioned(ev, p, Seq("d"))
-    val pruned = spark.read.parquet(p).filter(col("d") === "2024-01-05")
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(d"),
-      s"no partition filter in:\n$plan")
-    // pruned read returns exactly that day's rows
-    val expect = ev.filter(col("d") === "2024-01-05").count()
-    assert(pruned.count() == expect)
-  }
-
-  test("dynamic partition pruning injects the dim filter into the " +
-      "partitioned fact scan") {
-    // the 1000-executor pattern: a date-partitioned fact joined to a
-    // FILTERED dim on the partition column — DPP turns the dim filter
-    // into runtime partition pruning on the fact side, so only the
-    // surviving dates' files are read (static pruning can't see
-    // through the join)
-    val p = s"${tmpDir()}/events_dpp"
-    val ev = Tables.load(spark, sfDir, "events")
-      .withColumn("d", date_format(col("ts"), "yyyy-MM-dd"))
-    Sources.writePartitioned(ev, p, Seq("d"))
-    val dim = ev.select("d").distinct()
-      .withColumn("is_campaign_day", col("d") <= "2024-01-03")
-    val fact = spark.read.parquet(p)
-    val joined = fact
-      .join(broadcast(dim.filter(col("is_campaign_day"))), Seq("d"))
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(plan.contains("dynamicpruning"),
-      s"no DPP subquery in fact scan:\n${plan.take(3000)}")
-    // and the pruned join returns exactly the campaign days' rows
-    val expect = ev.filter(col("d") <= "2024-01-03").count()
-    assert(joined.count() == expect)
-  }
-
-  test("bucketed tables sort-merge join with zero shuffle exchanges") {
-    val li = Tables.load(spark, sfDir, "lineitem")
-      .select("l_orderkey", "l_quantity")
-    val ord = Tables.load(spark, sfDir, "orders")
-      .select("o_orderkey", "o_orderstatus")
-    Sources.writeBucketed(li, "li_bucketed", "l_orderkey", 4)
-    Sources.writeBucketed(ord, "ord_bucketed", "o_orderkey", 4)
-    try {
-      // force sort-merge so the assertion targets the co-location, not
-      // a broadcast fallback
-      val j = spark.table("li_bucketed")
-        .join(spark.table("ord_bucketed").hint("merge"),
-          col("l_orderkey") === col("o_orderkey"))
-      val plan = j.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), plan.take(1500))
-      assert(!plan.contains("Exchange hashpartitioning"), plan.take(1500))
-      assert(j.count() ==
-        li.join(ord, col("l_orderkey") === col("o_orderkey")).count())
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS li_bucketed")
-      spark.sql("DROP TABLE IF EXISTS ord_bucketed")
-    }
-  }
-
-  test("describe + refresh work on path tables") {
-    Sources.registerViews(spark, sfDir)
-    val desc = Sources.describeTable(spark, "events")
-    assert(desc.count() >= 6)
-    Sources.refreshPath(spark, s"$sfDir/events.parquet") // no-throw
-  }
-
-  test("compaction merges small files per partition, preserves data, " +
-      "and splits again under a tiny target") {
-    val p = s"${tmpDir()}/orders_small"
-    val src = Tables.load(spark, sfDir, "orders")
-    // simulate trigger-accreted small files: 8 writers per partition
-    src.repartition(8).write.mode("overwrite")
-      .partitionBy("o_orderstatus").parquet(p)
-    def files(dir: String): Seq[java.io.File] =
-      new java.io.File(dir).listFiles().toSeq.flatMap { f =>
-        if (f.isDirectory) files(f.getAbsolutePath)
-        else if (f.getName.startsWith("_") || f.getName.startsWith("."))
-          Nil
-        else Seq(f)
-      }
-    // decimal sum: a long sum of 15k hashes overflows under ANSI mode
-    def checksumOf(df: org.apache.spark.sql.DataFrame) =
-      df.agg(sum(xxhash64(src.columns.map(col): _*)
-        .cast("decimal(38,0)"))).head.getDecimal(0)
-    val checksum = checksumOf(src)
-    val nStatuses = src.select("o_orderstatus").distinct().count()
-    val (before, after) =
-      Sources.compactPartitioned(spark, p, Seq("o_orderstatus"))
-    assert(before == files(p).size + 0L || before > after) // sanity
-    assert(after == nStatuses, s"expected 1 file/partition, got $after")
-    val back = spark.read.parquet(p)
-    assert(back.count() == src.count())
-    assert(checksumOf(back).compareTo(checksum) == 0,
-      "content changed by compaction")
-    // a target below the per-partition size must yield multiple files
-    val (_, split) = Sources.compactPartitioned(spark, p,
-      Seq("o_orderstatus"), targetBytes = 2 * 1024)
-    assert(split > nStatuses, s"tiny target produced only $split files")
-    assert(spark.read.parquet(p).count() == src.count())
   }
 
   test("schema evolution: mergeSchema unifies old and new batches") {

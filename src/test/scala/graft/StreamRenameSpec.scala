@@ -43,7 +43,7 @@ class StreamRenameSpec extends SparkSpec {
         s"${p.aliases.toSeq}")
     // and the rows actually decode under the stream's schema
     val factory = new GraftReaderFactory(startSchema.json,
-      Array.empty)
+      Array.empty, SerializableHadoopConf.broadcast(spark))
     val reader = factory.createReader(b2.head)
     val rows = Iterator.continually(reader)
       .takeWhile(_.next()).map(_.get().asInstanceOf[InternalRow])
@@ -81,7 +81,8 @@ class StreamRenameSpec extends SparkSpec {
     assert(p.aliases.toSeq == Seq("y" -> "x"),
       s"pre-rename replay batch must translate via the run-start " +
         s"epochs, got ${p.aliases.toSeq}")
-    val factory = new GraftReaderFactory(schema.json, Array.empty)
+    val factory = new GraftReaderFactory(schema.json, Array.empty,
+      SerializableHadoopConf.broadcast(spark))
     val reader = factory.createReader(p)
     val rows = Iterator.continually(reader)
       .takeWhile(_.next()).map(_.get().asInstanceOf[InternalRow])

@@ -502,7 +502,7 @@ class TextAnalysisSpec extends SparkSpec {
       assert(lrs(s) == brute(s), s"mismatch on '$s'")
     }
     // through SQL + codegen, against the same brute force
-    graft.functions.SketchFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     val strs = Seq.tabulate(50)(i =>
       (i.toLong, Seq.fill(30 + i)("ab"(rnd.nextInt(2))).mkString))
     val got = strs.toDF("id", "s")

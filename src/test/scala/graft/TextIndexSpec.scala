@@ -396,7 +396,7 @@ class TextIndexSpec extends SparkSpec {
   test("graft_porter matches the published Porter-stemmer examples; " +
       "non-lowercase-alpha tokens pass through unchanged; NULL -> " +
       "NULL; codegen == interpreted") {
-    graft.functions.SketchFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     // canonical pairs from the algorithm's published vocabulary
     val cases = Seq(
       "caresses" -> "caress", "ponies" -> "poni", "cats" -> "cat",

@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFunctions
 import graft.operators.Similarity
 
 class VectorExpressionsSpec extends SparkSpec {
   import spark.implicits._
 
   test("graft_cosine matches hand-computed values incl. nulls and zeros") {
-    VectorFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     val df = Seq(
       (Array(1.0, 0.0), Array(1.0, 0.0)),   // identical -> 1
       (Array(1.0, 0.0), Array(0.0, 1.0)),   // orthogonal -> 0
@@ -28,7 +27,7 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("native expression participates in whole-stage codegen") {
-    VectorFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     // must be a non-local source: a local Seq is constant-folded into a
     // LocalTableScan before any codegen happens
     val df = Tables.load(spark, sfDir, "embeddings")
@@ -56,7 +55,7 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("graft_rotate ≡ HOF matmul; identity fixed point; shape/null -> NULL") {
-    VectorFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     // deterministic pseudo-random vectors + rotation-shaped matrix
     val vecs = (0 until 20).map(i =>
       Tuple1(Array.tabulate(8)(j => math.sin(i * 8 + j + 1))))
@@ -92,7 +91,7 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("graft_shingles generator ≡ transform+explode; null yields no rows") {
-    graft.functions.SketchFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     val docs = Seq(
       (1L, "a b c d e"), (2L, "x y"), (3L, null.asInstanceOf[String]))
       .toDF("id", "text")
@@ -113,7 +112,7 @@ class VectorExpressionsSpec extends SparkSpec {
 
   test("graft_nearest ≡ crossJoin+groupBy argmin bit-for-bit; zero " +
       "shuffle; ties keep low cid; NULL contract") {
-    VectorFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     val e = Tables.load(spark, sfDir, "embeddings")
       .selectExpr("vec_id",
         "transform(embedding, x -> CAST(x AS DOUBLE)) AS v")
@@ -178,7 +177,7 @@ class VectorExpressionsSpec extends SparkSpec {
   test("graft_sq8_encode: round-trip error <= half a quantization " +
       "step, out-of-range saturates, degenerate dim pins to lo, " +
       "shape mismatch / null element -> NULL") {
-    VectorFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     val lo = Array(-1.0, 0.0, 5.0)
     val hi = Array(1.0, 10.0, 5.0) // dim 2 degenerate (hi == lo)
     val vs = Seq(
@@ -220,7 +219,7 @@ class VectorExpressionsSpec extends SparkSpec {
   test("graft_sq8_adc == graft_cosine(q, decoded) exactly (fused ADC " +
       "vs materialized decode), participates in whole-stage codegen, " +
       "and interpreted == codegen") {
-    VectorFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     // non-local source so codegen actually runs
     val base = Tables.load(spark, sfDir, "embeddings")
       .filter(col("vec_id") < 200)

@@ -46,8 +46,7 @@ class InlineStatsSpec extends SparkSpec {
     * reference aggregates; returns the entries. */
   private def assertStats(root: String, l: Layout)
   : Seq[SnapshotTable.FileEntry] = {
-    graft.functions.BloomFunctions.register(spark)
-    graft.functions.HllFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     val es = SnapshotTable.manifest(spark, root,
       SnapshotTable.currentVersion(spark, root)).filter(_.kind == "d")
     assert(es.nonEmpty, s"no data files at $root")
