@@ -2973,8 +2973,8 @@ object SnapshotTable {
   /** ALTER TABLE ALTER COLUMN ... TYPE: widen a column's type as a
     * METADATA-ONLY commit. Files written before the widening keep the
     * narrower physical type; every reader upcasts at decode (Spark's
-    * own parquet updaters for the scan paths, the row reader's
-    * physical-type dispatch for kill-filtered files). Only lossless
+    * own parquet updaters, behind the native read and the connector's
+    * vectorized reader alike). Only lossless
     * widenings are accepted; per-file stats that would become
     * unsound are stripped from the new manifest (see [[Widenings]]).
     * Refuses the merge-on-read tombstone key and hash-bucket layout

@@ -6,7 +6,7 @@ import org.apache.spark.sql.connector.distributions.{Distribution, Distributions
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder => V2SortOrder}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.sources.SnapshotTable
@@ -380,51 +380,19 @@ private[connector] class GraftDeltaWriter(dataSegAbs: String,
 
   import org.apache.spark.sql.catalyst.InternalRow
 
-  private lazy val keyType = DataType
-    .fromJson(keySchemaJson).asInstanceOf[StructType].fields(0).dataType
-
-  private val dataWriters =
-    scala.collection.mutable.Map.empty[Int, GraftDataWriter]
-  private def dataW(bucket: Int): GraftDataWriter =
-    dataWriters.getOrElseUpdate(bucket,
-      // bucket is its own file-name component (-1 = the unbucketed
-      // singleton): folding it into taskId arithmetically aliases
-      // across task attempts once buckets exceed the fold base, and an
-      // aliased retry's abort() deletes the committed attempt's file.
+  // on a bucketed table data rows route through the bucketed append
+  // writer, whose bucket function is the layout's one definition
+  private val dataW: DataWriter[InternalRow] =
+    if (bucketKeyIdx < 0)
       new GraftDataWriter(dataSegAbs, rowSchemaJson, partitionId, taskId,
-        dataSpec, hconf, suffix = if (bucket < 0) "" else s"-b$bucket",
-        bucket = Some(bucket).filter(_ >= 0)))
+        dataSpec, hconf)
+    else new GraftBucketedAppendWriter(dataSegAbs, rowSchemaJson,
+      Seq((bucketKeyIdx, buckets)), partitionId, taskId, dataSpec, hconf)
   private val tombW =
     new GraftDataWriter(tombSegAbs, keySchemaJson, partitionId, taskId,
       tombSpec, hconf)
 
-  /** `pmod(murmur3(key), n)` over the row's key value — must agree
-    * with the layout function in SnapshotTable.commitBucketed and the
-    * catalog's V2 bucket function. */
-  private def bucketFor(row: InternalRow): Int =
-    if (bucketKeyIdx < 0) -1
-    else {
-      require(!row.isNullAt(bucketKeyIdx),
-        "merge key is null in a delta row (the row-id contract " +
-          "declares it non-null)")
-      val v: Any = keyType match {
-        case org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.DateType =>
-          row.getInt(bucketKeyIdx)
-        case org.apache.spark.sql.types.LongType =>
-          row.getLong(bucketKeyIdx)
-        case org.apache.spark.sql.types.StringType =>
-          row.getUTF8String(bucketKeyIdx)
-        case other => throw new UnsupportedOperationException(
-          s"bucketed delta write: unsupported key type $other")
-      }
-      val h = org.apache.spark.sql.catalyst.expressions
-        .Murmur3HashFunction.hash(v, keyType, 42L).toInt
-      ((h % buckets) + buckets) % buckets
-    }
-
-  override def insert(row: InternalRow): Unit =
-    dataW(bucketFor(row)).write(row)
+  override def insert(row: InternalRow): Unit = dataW.write(row)
 
   override def delete(meta: InternalRow, id: InternalRow): Unit =
     tombW.write(id)
@@ -432,19 +400,19 @@ private[connector] class GraftDeltaWriter(dataSegAbs: String,
   override def update(meta: InternalRow, id: InternalRow,
       row: InternalRow): Unit = {
     tombW.write(id)
-    dataW(bucketFor(row)).write(row)
+    dataW.write(row)
   }
 
   override def commit(): WriterCommitMessage =
-    GraftDeltaTaskFiles(dataWriters.values.toSeq.flatMap(_.files()),
+    GraftDeltaTaskFiles(GraftTaskFiles.of(Array(dataW.commit())),
       tombW.files())
 
   override def abort(): Unit = {
-    dataWriters.values.foreach(_.abort()); tombW.abort()
+    dataW.abort(); tombW.abort()
   }
 
   override def close(): Unit = {
-    dataWriters.values.foreach(_.close()); tombW.close()
+    dataW.close(); tombW.close()
   }
 }
 

@@ -6,16 +6,13 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{MessageType, PrimitiveType}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min, Sum => VSum}
@@ -186,9 +183,10 @@ private[connector] class GraftSnapshotTable(root: String, version: Long,
     * load-bearing half of the row-level contract: Spark applies the
     * ReplaceData row projection ONLY through the metadata-writing
     * task, so the row-level operation REQUIRES this column to get
-    * correctly-aligned rows to the writer. The reader synthesizes the
-    * value per partition; a data file that genuinely contains a
-    * `_file` column wins (the projection finds it), per
+    * correctly-aligned rows to the writer. The scan supplies the
+    * value per file as a constant fill over the decoded batch; a table
+    * whose schema stores a `_file` data column serves that column
+    * instead, per
     * [[org.apache.spark.sql.connector.catalog.SupportsMetadataColumns]]
     * conflict rules. */
   override def metadataColumns()
@@ -2050,10 +2048,11 @@ private[connector] case class GraftValuePartition(
 private[connector] case class GraftInputPartition(absolutePath: String,
     seq: Long, tombs: Array[TombRef], keyName: String,
     keyTypeJson: String, skipRows: Long = 0L,
-    // initial-default fills for THIS file (column -> rendered
-    // literal): columns added after the file was written, whose
-    // ADD COLUMNS declared a DEFAULT — the reader materializes the
-    // constant instead of NULL (typed via the read schema)
+    // constant fills for THIS file (column -> rendered literal):
+    // initial defaults of columns added after the file was written
+    // (the reader materializes the constant instead of NULL, typed
+    // via the read schema), the `_file` path, and the changelog's
+    // per-event columns
     fills: Array[(String, String)] = Array.empty,
     // PRE-IMAGE mode (changelog deletes): emit ONLY rows whose key is
     // in THESE tombstones' key set — after the normal `tombs` filter
@@ -2368,6 +2367,12 @@ private[connector] class GraftScan(root: String, version: Long,
   private lazy val scanHasRenames: Boolean =
     scanSchema.fields.exists(SnapshotTable.renameEpochs(_).nonEmpty)
 
+  /** `_file` is the metadata column unless the table stores a data
+    * column of that name (data columns resolve first). */
+  private lazy val fileMetaRequested: Boolean =
+    required.fieldNames.contains(GraftFileMetadataColumn.Name) &&
+      !scanSchema.fieldNames.contains(GraftFileMetadataColumn.Name)
+
   private def filePartition(e: FileEntry): GraftInputPartition = {
     val mine = tombs.filter(applies(_, e)).map(t =>
       TombRef(new Path(root, t.path).toString, t.seq)).toArray
@@ -2376,11 +2381,16 @@ private[connector] class GraftScan(root: String, version: Long,
     // could match, so dropping the file subsumes the skip
     val skip = offsetSkipFile.collect {
       case (p, n) if p == e.path => n }.getOrElse(0L)
-    GraftInputPartition(new Path(root, e.path).toString, e.seq,
+    val abs = new Path(root, e.path).toString
+    // `_file` rides the constant-fill channel: one value per file
+    val fileFill =
+      if (fileMetaRequested) Array((GraftFileMetadataColumn.Name, abs))
+      else Array.empty[(String, String)]
+    GraftInputPartition(abs, e.seq,
       mine, tombKey.orNull,
       tombKeyType.map(_.json).orNull, skip,
       scanInitFills.filter(_.addedAt > e.seq)
-        .map(f => (f.name, f.rendered)).toArray,
+        .map(f => (f.name, f.rendered)).toArray ++ fileFill,
       aliases = if (!scanHasRenames) Array.empty
         else SnapshotTable.aliasesAt(scanSchema, e.seq).toArray)
   }
@@ -2426,20 +2436,7 @@ private[connector] class GraftScan(root: String, version: Long,
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory(required.json, pushed,
       SerializableHadoopConf.broadcast(SparkSession.active),
-      org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone,
-      // scan-GLOBAL columnar decision (Spark refuses mixed
-      // row/columnar partitions, it does not fall back). Pushed
-      // filters stay columnar (row-group pruning moves into the
-      // vectorized reader's options) and so do MOR tombstones (kill
-      // sets apply as a selection over the decoded batch) — the
-      // dominant 100 TB shapes, selective scans and merge-on-read,
-      // keep columnar decode + whole-stage codegen. Row-only
-      // remainders: a pushed-offset mid-file skip, and a requested
-      // `_file` metadata column (synthesized by the row reader).
-      // Bucketed (SPJ) partitions chain COLUMNAR readers per grid
-      // cell, so storage-partitioned scans stay vectorized
-      columnarOk = offsetSkipFile.isEmpty &&
-        !required.fieldNames.contains(GraftFileMetadataColumn.Name))
+      org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
 
   /** Size-accurate planning: a v2 scan without statistics defaults to
     * "unknown = huge", which forbids the planner from ever
@@ -2620,7 +2617,7 @@ private[connector] class GraftScan(root: String, version: Long,
 private[connector] class GraftReaderFactory(requiredJson: String,
     pushed: Array[Filter],
     hconf: org.apache.spark.broadcast.Broadcast[SerializableHadoopConf],
-    sessionTz: String = "UTC", columnarOk: Boolean = false)
+    sessionTz: String = "UTC")
   extends PartitionReaderFactory {
 
   // the factory ships only the broadcast HANDLE; the conf itself is
@@ -2628,15 +2625,17 @@ private[connector] class GraftReaderFactory(requiredJson: String,
   // Readers take their own Configuration COPY since they mutate it
   private def baseConf: Configuration = hconf.value.value
 
-  /** Columnar eligibility — decided ONCE for the whole scan (Spark
-    * refuses mixed row/columnar partitions, it does not fall back):
-    * no tombstones anywhere (the kill-set filter is a row-at-a-time
-    * concern), no pushed-offset remainder, and no pushed filters
-    * (the row reader trades vectorization for parquet ROW-GROUP
-    * pruning there — with a selective filter, skipped IO beats
-    * batched decode). */
+  /** Every partition decodes through [[GraftColumnarReader]]: merge-on-
+    * read kills, changelog pre-images and the OFFSET remainder are
+    * selections over its batches, `_file` and the changelog's event
+    * columns are constant fills. */
   override def supportColumnarReads(partition: InputPartition): Boolean =
-    columnarOk
+    true
+
+  override def createReader(partition: InputPartition)
+  : PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException(
+      "graft-snapshot partitions are read columnar only")
 
   override def createColumnarReader(partition: InputPartition)
   : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
@@ -2671,105 +2670,39 @@ private[connector] class GraftReaderFactory(requiredJson: String,
         val required =
           DataType.fromJson(requiredJson).asInstanceOf[StructType]
         val p = partition.asInstanceOf[GraftInputPartition]
+        // pushed filters name LOGICAL columns; this file may store a
+        // renamed column under its physical epoch name — translate so
+        // row-group pruning keeps working on pre-rename files
         val filePushed =
           if (p.aliases.isEmpty) pushed
           else pushed.map(GraftParquetFilters.renameColumns(_,
             p.aliases.toMap))
-        if (p.tombs.isEmpty)
-          new GraftColumnarReader(p.absolutePath, required, sessionTz,
-            baseConf, p.fills, p.aliases, filePushed)
-        else {
-          // merge-on-read, still vectorized: decode the batch through
-          // the columnar reader (key column riding as a hidden
-          // trailing field when unprojected), then apply the kill set
-          // as a SELECTION over the batch — wrapper vectors index
-          // through the survivors, zero copies (the deletion-vector
-          // shape). Batches that lose no rows pass through untouched.
-          val keyType = DataType.fromJson(p.keyTypeJson)
-          val kills = GraftTombstones.killSet(p.tombs,
-            Option(p.tombKeyName).getOrElse(p.keyName), keyType, baseConf)
-          val (readSchema, killIdx) =
-            required.fieldNames.indexWhere(_ == p.keyName) match {
-              case -1 => (StructType(required.fields :+
-                StructField(p.keyName, keyType, nullable = true)),
-                required.length)
-              case i => (required, i)
-            }
-          new GraftColumnarKillReader(
-            new GraftColumnarReader(p.absolutePath, readSchema,
-              sessionTz, baseConf, p.fills, p.aliases, filePushed),
-            required.length, killIdx, keyType, kills)
-        }
-    }
-
-  override def createReader(partition: InputPartition)
-  : PartitionReader[InternalRow] = partition match {
-    case GraftValuePartition(parts, _, _) =>
-      createReader(GraftBucketedPartition(parts, Seq.empty))
-    case GraftBucketedPartition(parts, _) =>
-      // one bucket = several files: chain their readers in order
-      new PartitionReader[InternalRow] {
-        private val it = parts.iterator
-        private var cur: PartitionReader[InternalRow] = _
-        override def next(): Boolean = {
-          while (true) {
-            if (cur == null) {
-              if (!it.hasNext) return false
-              cur = createReader(it.next())
-            }
-            if (cur.next()) return true
-            cur.close(); cur = null
+        val keyed = p.tombs.nonEmpty || p.preImageTombs.nonEmpty
+        // the kill key must be DECODED to select on, even when the
+        // query didn't project it — read it as a hidden trailing field
+        val keyType =
+          if (keyed) DataType.fromJson(p.keyTypeJson) else null
+        val (readSchema, killIdx) =
+          if (!keyed) (required, -1)
+          else required.fieldNames.indexWhere(_ == p.keyName) match {
+            case -1 => (StructType(required.fields :+
+              StructField(p.keyName, keyType, nullable = true)),
+              required.length)
+            case i => (required, i)
           }
-          false
+        val reader = new GraftColumnarReader(p.absolutePath, readSchema,
+          sessionTz, baseConf, p.fills, p.aliases, filePushed)
+        if (!keyed && p.skipRows == 0) reader
+        else {
+          def keys(ts: Array[TombRef]) = GraftTombstones.killSet(ts,
+            Option(p.tombKeyName).getOrElse(p.keyName), keyType,
+            sessionTz, baseConf)
+          new GraftColumnarKillReader(reader, required.length, killIdx,
+            keyType, if (keyed) keys(p.tombs) else null,
+            if (p.preImageTombs.isEmpty) null else keys(p.preImageTombs),
+            p.skipRows)
         }
-        override def get(): InternalRow = cur.get()
-        override def close(): Unit = if (cur != null) cur.close()
-      }
-    case _ => createFileReader(partition)
-  }
-
-  private def createFileReader(partition: InputPartition)
-  : PartitionReader[InternalRow] = {
-    val required =
-      DataType.fromJson(requiredJson).asInstanceOf[StructType]
-    val p = partition.asInstanceOf[GraftInputPartition]
-    // pushed filters name LOGICAL columns; this file may store a
-    // renamed column under its physical epoch name — translate so
-    // row-group stats pruning keeps working on pre-rename files
-    // (residuals are always re-evaluated by Spark, so a filter that
-    // won't translate just prunes less, never wrong)
-    val filePushed =
-      if (p.aliases.isEmpty) pushed
-      else pushed.map(GraftParquetFilters.renameColumns(_,
-        p.aliases.toMap))
-    if (p.tombs.isEmpty && p.preImageTombs.isEmpty)
-      new GraftPartitionReader(p.absolutePath, required,
-        required.length, -1, null, baseConf, filePushed, p.skipRows,
-        p.fills, aliases = p.aliases)
-    else {
-      val keyType = DataType.fromJson(p.keyTypeJson)
-      val tombKey = Option(p.tombKeyName).getOrElse(p.keyName)
-      val kills =
-        if (p.tombs.isEmpty) new java.util.HashSet[Any]()
-        else GraftTombstones.killSet(p.tombs, tombKey, keyType, baseConf)
-      val emits =
-        if (p.preImageTombs.isEmpty) null
-        else GraftTombstones.killSet(p.preImageTombs, tombKey,
-          keyType, baseConf)
-      // the delete key must be DECODED to filter on, even when the
-      // query didn't project it — read it as a hidden trailing field
-      val (readSchema, killIdx) =
-        required.fieldNames.indexWhere(_ == p.keyName) match {
-          case -1 => (StructType(required.fields :+
-            StructField(p.keyName, keyType, nullable = true)),
-            required.length)
-          case i => (required, i)
-        }
-      new GraftPartitionReader(p.absolutePath, readSchema,
-        required.length, killIdx, kills, baseConf, filePushed,
-        fills = p.fills, emitSet = emits, aliases = p.aliases)
     }
-  }
 }
 
 /** Pushed `sources.Filter`s → a parquet `FilterPredicate` evaluated
@@ -2942,75 +2875,91 @@ private[connector] object GraftParquetFilters {
 /** Executor-side tombstone loader: reads each tombstone file once per
   * JVM (a small per-path cache — tombstone files are immutable, like
   * every snapshot file) and hands readers the union of the key sets
-  * their partition must apply. Values are stored in the same Catalyst
-  * representation the data reader produces (UTF8String for strings,
-  * micros for timestamps), so membership is an exact equality — and a
+  * their partition must apply. Loads decode through the same columnar
+  * reader as the data files and box every key through [[keyAt]], the
+  * probe's own boxing, so membership is an exact equality — and a
   * NULL tombstone key is never added, matching the read pipeline's
   * IN-semantics rule that NULL kills nothing. */
 private[connector] object GraftTombstones {
+  import org.apache.spark.sql.vectorized.ColumnVector
 
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[String,
       java.util.HashSet[Any]]()
 
+  /** The set-member form of row `r`'s key: primitives box by value,
+    * decimals as `Decimal`, and strings AND binaries as `UTF8String`
+    * (value equality over the bytes — a `byte[]` would compare by
+    * identity and never match). A `UTF8String` may view the vector's
+    * reused buffer, so it is valid only until the next batch. */
+  def keyAt(col: ColumnVector, r: Int, keyType: DataType): Any =
+    keyType match {
+      case LongType => col.getLong(r)
+      case IntegerType | DateType => col.getInt(r)
+      case DoubleType => col.getDouble(r)
+      case FloatType => col.getFloat(r)
+      case BooleanType => col.getBoolean(r)
+      case TimestampType | TimestampNTZType => col.getLong(r)
+      case d: DecimalType => col.getDecimal(r, d.precision, d.scale)
+      case _ => col.getUTF8String(r)
+    }
+
   private def load(path: String, keyName: String, keyType: DataType,
-      conf: Configuration): java.util.HashSet[Any] = {
+      sessionTz: String, conf: Configuration): java.util.HashSet[Any] = {
     val s = new java.util.HashSet[Any]()
-    val r = new GraftPartitionReader(path,
+    val r = new GraftColumnarReader(path,
       StructType(Seq(StructField(keyName, keyType, nullable = true))),
-      1, -1, null, conf)
+      sessionTz, conf)
     try {
       while (r.next()) {
-        val row = r.get()
-        if (!row.isNullAt(0)) s.add(row.get(0, keyType))
+        val b = r.get()
+        val col = b.column(0)
+        var i = 0
+        while (i < b.numRows()) {
+          // a string/binary key is a view over the vector's buffer,
+          // which the next batch overwrites: keep a copy
+          if (!col.isNullAt(i)) s.add(keyAt(col, i, keyType) match {
+            case u: UTF8String => u.clone()
+            case k => k
+          })
+          i += 1
+        }
       }
     } finally r.close()
     s
   }
 
   /** Tombstone files are read with `conf`, the scan's session Hadoop
-    * conf, like the data files they filter. */
+    * conf, and `sessionTz`, its time zone, like the data files they
+    * filter. */
   def killSet(tombs: Array[TombRef], keyName: String, keyType: DataType,
-      conf: Configuration): java.util.HashSet[Any] = {
+      sessionTz: String, conf: Configuration): java.util.HashSet[Any] = {
     if (cache.size() > 64) cache.clear() // bound executor memory
     val out = new java.util.HashSet[Any]()
     tombs.foreach { t =>
       // cache key includes the column read: concurrent scans may
       // address the same tombstone file by different epoch names
       out.addAll(cache.computeIfAbsent(
-        t.absolutePath + "#" + keyName,
-        _ => load(t.absolutePath, keyName, keyType, conf)))
+        t.absolutePath + "#" + keyName + "#" + sessionTz,
+        _ => load(t.absolutePath, keyName, keyType, sessionTz, conf)))
     }
     out
   }
 }
 
-/** Row reader over one parquet file through parquet-mr's Group API,
-  * with a projection built from the FILE's own schema (so the
-  * physical types always match and unprojected columns are never
-  * decoded). Missing columns (schema evolution: a file older than
-  * the column) read as NULL, like the explicit-schema DataFrame
-  * path.
-  *
-  * `readSchema` is what gets DECODED; only the first `emitLen` fields
-  * are emitted — merge-on-read appends the delete key as a hidden
-  * trailing field when the query didn't project it. With `killIdx >=
-  * 0`, rows whose key value (at that index of `readSchema`) is in
-  * `killSet` are skipped inside `next()` — the executor-side half of
-  * the tombstone filter; a NULL key is never killed. */
-/** VECTORIZED read path: Spark's own parquet vectorized reader
+/** The connector's one parquet decoder: Spark's own vectorized reader
   * (`VectorizedParquetRecordReader`) serves `ColumnarBatch`es straight
   * to `BatchScanExec`, so the scan → ColumnarToRow → downstream
-  * pipeline stays inside whole-stage codegen instead of materializing
-  * a `Group` object per row — the decode profile 100 TB scans need.
-  * Schema evolution is handled WITHOUT leaving the columnar path: a
-  * file that predates a required column reads its present columns
-  * vectorized, the missing columns ride in as constant-NULL
-  * "partition" vectors (`initBatch`), and the final batch presents
-  * the vectors PERMUTED into the required-schema order (a
-  * `ColumnarBatch` is just an ordered view over `ColumnVector`s — the
-  * wrapper costs one small object per batch, no copies). Eligibility
-  * is gated by [[GraftReaderFactory.supportColumnarReads]]. */
+  * pipeline stays inside whole-stage codegen — the decode profile
+  * 100 TB scans need. Batch scans, stream micro-batches and tombstone
+  * kill-set loads all decode here. Schema evolution is handled
+  * WITHOUT leaving the columnar path: a file that predates a required
+  * column reads its present columns vectorized, the missing columns
+  * ride in as constant-NULL "partition" vectors (`initBatch`), and
+  * the final batch presents the vectors PERMUTED into the
+  * required-schema order (a `ColumnarBatch` is just an ordered view
+  * over `ColumnVector`s — the wrapper costs one small object per
+  * batch, no copies). */
 private[graft] class GraftColumnarReader(file: String,
     required: StructType, sessionTz: String,
     // the driver-shipped session Hadoop conf (copied — setSchema etc.
@@ -3024,20 +2973,21 @@ private[graft] class GraftColumnarReader(file: String,
     aliases: Array[(String, String)] = Array.empty,
     // pushed filters, ALREADY translated to this file's physical
     // names: compiled against the footer schema into a parquet
-    // FilterPredicate for ROW-GROUP pruning (the same stats-only
-    // skipping the row reader does) — Spark re-evaluates every
-    // residual on the surviving rows, so this is IO reduction with
-    // columnar decode, never semantics
+    // FilterPredicate for ROW-GROUP pruning (stats-only skipping) —
+    // Spark re-evaluates every residual on the surviving rows, so
+    // this is IO reduction with columnar decode, never semantics
     pushed: Array[Filter] = Array.empty)
   extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
 
-  private val requested: StructType =
-    if (aliases.isEmpty) required
-    else {
-      val m = aliases.toMap
-      StructType(required.fields.map(f =>
-        f.copy(name = m.getOrElse(f.name, f.name))))
-    }
+  // requested NULLABLE: the vectorized reader refuses a missing
+  // non-nullable column, and a missing column is what a file older
+  // than the column, a `_file` metadata column and the changelog's
+  // event columns all are (the constant-fill channel supplies them)
+  private val requested: StructType = {
+    val m = aliases.toMap
+    StructType(required.fields.map(f =>
+      f.copy(name = m.getOrElse(f.name, f.name), nullable = true)))
+  }
   import org.apache.spark.sql.vectorized.ColumnarBatch
   import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
   import org.apache.hadoop.mapred.FileSplit
@@ -3057,7 +3007,7 @@ private[graft] class GraftColumnarReader(file: String,
   // the schema converter reads these with a bare .toBoolean — they
   // must be PRESENT (the FileFormat path copies the whole SQLConf
   // into its hadoop conf; this reader sets exactly what it needs).
-  // Values mirror the row path: Spark-written snapshots (INT96 ⇒
+  // Values: Spark-written snapshots (INT96 ⇒
   // timestamp, binary ⇄ string per write metadata), session-tz
   // timestamps (no NTZ inference — the Tables.load discipline),
   // case-insensitive resolution.
@@ -3077,10 +3027,10 @@ private[graft] class GraftColumnarReader(file: String,
   // getRowGroups then skip disproven groups before any page IO
   locally {
     if (pushed.nonEmpty) {
-      // ROW-GROUP statistics filtering ONLY — the row reader's exact
-      // discipline. Page-level (column-index) filtering must stay
-      // OFF: a predicate may reference an UNPROJECTED column (file
-      // pruning needs no values), and parquet's ColumnIndexFilter
+      // ROW-GROUP statistics filtering ONLY. Page-level
+      // (column-index) filtering must stay OFF: a predicate may
+      // reference an UNPROJECTED column (file pruning needs no
+      // values), and parquet's ColumnIndexFilter
       // resolves filter columns against the requested projection —
       // an unprojected column yields empty row ranges and silently
       // drops every row (measured: COUNT under a consumed partition
@@ -3150,47 +3100,50 @@ private[graft] class GraftColumnarReader(file: String,
   override def close(): Unit = reader.close()
 }
 
-/** Merge-on-read kills WITHOUT leaving the columnar path: the inner
-  * reader decodes the full batch vectorized (the kill key riding as a
-  * hidden trailing column when the query didn't project it), the kill
-  * set marks dead rows, and survivors surface through SELECTION
-  * vectors — wrappers that remap row indices through the survivor
-  * array with ZERO value copies (the deletion-vector execution shape;
-  * Spark's `ColumnarBatch` has no native selection concept, so the
-  * indirection lives in the vector). A batch that loses no rows
-  * passes through untouched; a fully-killed batch is skipped. Key
-  * boxing mirrors [[GraftTombstones]]' row-reader loads exactly, so
-  * set membership agrees with the row path bit for bit. */
+/** Row selection WITHOUT leaving the columnar path: the inner reader
+  * decodes the full batch vectorized (the kill key riding as a hidden
+  * trailing column when the query didn't project it), and survivors
+  * surface through SELECTION vectors — wrappers that remap row indices
+  * through the survivor array with ZERO value copies (the
+  * deletion-vector execution shape; Spark's `ColumnarBatch` has no
+  * native selection concept, so the indirection lives in the vector).
+  * A row survives when it is past the file's first `skipRows` rows
+  * (the pushed-OFFSET remainder) and, with `killIdx >= 0`, its key is
+  * NULL or not in `kills` (merge-on-read) — and, in changelog
+  * PRE-IMAGE mode (`emits` non-null), only when its key IS in `emits`.
+  * A batch that loses no rows passes through untouched; an emptied
+  * batch is skipped. Keys box through [[GraftTombstones.keyAt]], the
+  * loader's own boxing, so set membership is exact. */
 private[graft] class GraftColumnarKillReader(
     inner: GraftColumnarReader, emitCols: Int, killIdx: Int,
-    keyType: DataType, kills: java.util.HashSet[Any])
+    keyType: DataType, kills: java.util.HashSet[Any],
+    emits: java.util.HashSet[Any], skipRows: Long)
   extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
   private var out: ColumnarBatch = _
+  private var toSkip: Long = skipRows
 
-  private def keyAt(col: ColumnVector, r: Int): Any = keyType match {
-    case LongType => col.getLong(r)
-    case IntegerType | DateType => col.getInt(r)
-    case DoubleType => col.getDouble(r)
-    case FloatType => col.getFloat(r)
-    case BooleanType => col.getBoolean(r)
-    case TimestampType | TimestampNTZType => col.getLong(r)
-    case d: DecimalType => col.getDecimal(r, d.precision, d.scale)
-    case _ => col.getUTF8String(r)
-  }
+  // NULL kills nothing — the read pipeline's IN-semantics rule — and
+  // a pre-image never emits a NULL key
+  private def keeps(keyCol: ColumnVector, r: Int): Boolean =
+    if (keyCol.isNullAt(r)) emits == null
+    else {
+      val k = GraftTombstones.keyAt(keyCol, r, keyType)
+      !kills.contains(k) && (emits == null || emits.contains(k))
+    }
 
   override def next(): Boolean = {
     while (inner.next()) {
       val b = inner.get()
       val n = b.numRows()
-      val keyCol = b.column(killIdx)
+      val skip = math.min(toSkip, n.toLong).toInt
+      toSkip -= skip
       val sel = new Array[Int](n)
       var m = 0
-      var r = 0
+      var r = skip
       while (r < n) {
-        // NULL kills nothing — the read pipeline's IN-semantics rule
-        if (keyCol.isNullAt(r) || !kills.contains(keyAt(keyCol, r))) {
+        if (killIdx < 0 || keeps(b.column(killIdx), r)) {
           sel(m) = r; m += 1
         }
         r += 1
@@ -3266,310 +3219,4 @@ private[graft] class GraftSelectionVector(
   : org.apache.spark.sql.vectorized.ColumnVector =
     children.computeIfAbsent(i,
       j => new GraftSelectionVector(base.getChild(j), sel))
-}
-
-private[graft] class GraftPartitionReader(file: String,
-    readSchema: StructType, emitLen: Int, killIdx: Int,
-    killSet: java.util.HashSet[Any],
-    // driver-shipped session Hadoop conf (copied before use)
-    base: Configuration,
-    filters: Array[Filter] = Array.empty,
-    skipRows: Long = 0L,
-    fills: Array[(String, String)] = Array.empty,
-    // non-null = PRE-IMAGE mode: after the killSet suppresses rows
-    // already dead, emit ONLY rows whose key is in THIS set — the
-    // changelog's full-row delete events
-    emitSet: java.util.HashSet[Any] = null,
-    // logical -> physical names for THIS file (renamed columns whose
-    // old name this pre-rename file still stores)
-    aliases: Array[(String, String)] = Array.empty)
-  extends PartitionReader[InternalRow] {
-
-  private val physOf: Map[String, String] = aliases.toMap
-  private def phys(logical: String): String =
-    physOf.getOrElse(logical, logical)
-
-  // initial-default constants for columns this file predates, typed
-  // to catalyst values once (strings become UTF8String); keyed
-  // lower-cased so a case-mismatched projection still fills the
-  // declared default, matching the columnar reader's equalsIgnoreCase
-  private val fillValues: Map[String, Any] = fills.map { case (n, r) =>
-    val dt = readSchema.fields.find(_.name.equalsIgnoreCase(n))
-      .map(_.dataType).getOrElse(StringType)
-    val v: Any = dt match {
-      case IntegerType => r.toInt
-      case LongType => r.toLong
-      case DoubleType => r.toDouble
-      case FloatType => r.toFloat
-      case BooleanType => r.toBoolean
-      case _ => UTF8String.fromString(r)
-    }
-    n.toLowerCase(java.util.Locale.ROOT) -> v
-  }.toMap
-
-  private val conf = new Configuration(base)
-  private val fileSchema: MessageType = {
-    val r = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(file), conf))
-    try r.getFooter.getFileMetaData.getSchema finally r.close()
-  }
-  // project: the file's own types for the fields it has — looked up
-  // under each field's PHYSICAL name for this file (rename epochs)
-  private val present = readSchema.fields.filter(f =>
-    fileSchema.containsField(phys(f.name)))
-  private val projection = new MessageType("graft_projection",
-    present.map(f =>
-      fileSchema.getType(fileSchema.getFieldIndex(phys(f.name)))): _*)
-  private val reader: ParquetReader[Group] = {
-    conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-      projection.toString)
-    // ROW-GROUP statistics filtering only: whole groups whose min/max
-    // disprove the pushed predicate are skipped before any page IO.
-    // Record-level assembly filtering stays OFF — predicates may
-    // reference unprojected columns (stats need no values), and Spark
-    // evaluates the residual on every surviving row anyway.
-    conf.setBoolean("parquet.filter.record-level.enabled", false)
-    conf.setBoolean("parquet.filter.stats.enabled", true)
-    val base = ParquetReader.builder(new GroupReadSupport(), new Path(file))
-      .withConf(conf)
-    GraftParquetFilters.build(filters, fileSchema)
-      .fold(base)(p => base.withFilter(
-        org.apache.parquet.filter2.compat.FilterCompat.get(p)))
-      .build()
-  }
-  private val fieldIdx: Map[String, Int] =
-    present.map(_.name).zipWithIndex.toMap
-
-  private var current: Group = _
-
-  // pushed-offset remainder: drop the file's first `skipRows` rows
-  // before anything else sees them (guarded upstream: never combined
-  // with tombstones or filters, so physical rows == scan rows)
-  private var toSkip: Long = skipRows
-
-  // `_file` synthesized per partition when the file itself carries no
-  // such column (metadata column; a real stored `_file` wins above)
-  private val filePathValue = UTF8String.fromString(file)
-
-  // per-output-column fill, resolved once (not per row): the typed
-  // initial default for columns this file predates, else null
-  private val fillAt: Array[Any] = readSchema.fields.map(f =>
-    fillValues.getOrElse(
-      f.name.toLowerCase(java.util.Locale.ROOT), null): Any)
-
-  private def valueAt(i: Int): Any =
-    fieldIdx.get(readSchema.fields(i).name) match {
-      case None if readSchema.fields(i).name ==
-        GraftFileMetadataColumn.Name => filePathValue
-      case None => // file predates the column: initial default or NULL
-        fillAt(i)
-      case Some(gi) => fieldValue(current, gi, readSchema.fields(i).dataType)
-    }
-
-  override def next(): Boolean = {
-    while (toSkip > 0) {
-      if (reader.read() == null) return false
-      toSkip -= 1
-    }
-    while (true) {
-      current = reader.read()
-      if (current == null) return false
-      if (killIdx < 0) return true
-      val kv = valueAt(killIdx)
-      val dead = kv != null && killSet.contains(kv)
-      if (!dead) {
-        if (emitSet == null) return true
-        // pre-image mode: only the rows THIS tombstone kills surface
-        if (kv != null && emitSet.contains(kv)) return true
-      }
-      // tombstoned (or not-being-deleted in pre-image mode): scan on
-    }
-    false
-  }
-
-  override def get(): InternalRow = {
-    val row = new GenericInternalRow(emitLen)
-    var i = 0
-    while (i < emitLen) {
-      row.update(i, valueAt(i))
-      i += 1
-    }
-    row
-  }
-
-  /** One field of one group: null when absent at THIS level, else the
-    * Catalyst value — recursing through arrays / structs / maps. */
-  private def fieldValue(g: Group, gi: Int, dt: DataType): Any = {
-    if (g.getFieldRepetitionCount(gi) == 0) return null
-    dt match {
-      case ArrayType(el, _) => readArray(g, gi, el)
-      case st: StructType => readStruct(g.getGroup(gi, 0), st)
-      case mt: MapType => readMap(g.getGroup(gi, 0), mt)
-      case prim => readPrimitive(g, gi, 0, prim)
-    }
-  }
-
-  /** List decoding by STRUCTURE, covering the layouts in the wild:
-    *  - standard 3-level (`group (LIST) { repeated group list {
-    *    element } }` — Spark, and pyarrow's `item` naming);
-    *  - 2-level repeated primitive inside the LIST group;
-    *  - legacy repeated-group-IS-the-element (parquet spec rule: name
-    *    `array`/`*_tuple` or field count != 1);
-    *  - fully legacy `repeated <primitive> f` at this level. */
-  private def readArray(g: Group, gi: Int, el: DataType): Any = {
-    val fieldType = g.getType.getType(gi)
-    if (fieldType.isRepetition(
-        org.apache.parquet.schema.Type.Repetition.REPEATED)) {
-      val n = g.getFieldRepetitionCount(gi)
-      val out = new Array[Any](n)
-      var j = 0
-      while (j < n) {
-        out(j) =
-          if (fieldType.isPrimitive) readPrimitive(g, gi, j, el)
-          else el match {
-            case st: StructType => readStruct(g.getGroup(gi, j), st)
-            case other => throw new UnsupportedOperationException(
-              s"graft-snapshot reader: repeated group for " +
-                s"${other.simpleString} element")
-          }
-        j += 1
-      }
-      return new GenericArrayData(out)
-    }
-    val lg = g.getGroup(gi, 0) // the LIST wrapper group
-    val repeated = lg.getType.getType(0)
-    val n = lg.getFieldRepetitionCount(0)
-    val out = new Array[Any](n)
-    val elementIsRepeatedGroup = !repeated.isPrimitive && (el match {
-      case _: StructType =>
-        repeated.asGroupType().getFieldCount != 1 ||
-          repeated.getName == "array" ||
-          repeated.getName.endsWith("_tuple")
-      case _ => false
-    })
-    var j = 0
-    while (j < n) {
-      out(j) =
-        if (repeated.isPrimitive) readPrimitive(lg, 0, j, el)
-        else if (elementIsRepeatedGroup)
-          readStruct(lg.getGroup(0, j), el.asInstanceOf[StructType])
-        else fieldValue(lg.getGroup(0, j), 0, el) // 3-level wrapper
-      j += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  /** Subfields matched BY NAME against the file's group — a nested
-    * field the file predates reads as NULL, the same evolution rule
-    * as top level. */
-  private def readStruct(sg: Group, st: StructType): InternalRow = {
-    val row = new GenericInternalRow(st.length)
-    val gt = sg.getType
-    var i = 0
-    while (i < st.length) {
-      val f = st.fields(i)
-      row.update(i,
-        if (gt.containsField(f.name))
-          fieldValue(sg, gt.getFieldIndex(f.name), f.dataType)
-        else null)
-      i += 1
-    }
-    row
-  }
-
-  private def readMap(mg: Group, mt: MapType): Any = {
-    val n = mg.getFieldRepetitionCount(0)
-    val keys = new Array[Any](n)
-    val values = new Array[Any](n)
-    var j = 0
-    while (j < n) {
-      val kv = mg.getGroup(0, j)
-      keys(j) = fieldValue(kv, 0, mt.keyType)
-      values(j) = fieldValue(kv, 1, mt.valueType)
-      j += 1
-    }
-    ArrayBasedMapData(keys, values)
-  }
-
-  private def readPrimitive(g: Group, gi: Int, ri: Int,
-      dt: DataType): Any = dt match {
-    case IntegerType => g.getInteger(gi, ri)
-    // TYPE-WIDENED columns (ALTER COLUMN ... TYPE): files written
-    // before the widening store the narrower physical type — upcast
-    // at decode, same conversions Spark's vectorized updaters apply
-    case LongType =>
-      g.getType.getType(gi).asPrimitiveType().getPrimitiveTypeName match {
-        case PrimitiveType.PrimitiveTypeName.INT32 =>
-          g.getInteger(gi, ri).toLong
-        case _ => g.getLong(gi, ri)
-      }
-    case DoubleType =>
-      g.getType.getType(gi).asPrimitiveType().getPrimitiveTypeName match {
-        case PrimitiveType.PrimitiveTypeName.FLOAT =>
-          g.getFloat(gi, ri).toDouble
-        case PrimitiveType.PrimitiveTypeName.INT32 =>
-          g.getInteger(gi, ri).toDouble
-        case _ => g.getDouble(gi, ri)
-      }
-    case FloatType => g.getFloat(gi, ri)
-    case BooleanType => g.getBoolean(gi, ri)
-    case DateType => g.getInteger(gi, ri)
-    // decimal: whichever physical encoding the writer chose for the
-    // precision (INT32 / INT64 / fixed or variable binary), rebuilt
-    // at the REQUESTED precision — a file predating a decimal(P,S) ->
-    // decimal(P',S) widening stores the same unscaled values, so the
-    // upcast is exact (scale never changes)
-    case d: DecimalType =>
-      g.getType.getType(gi).asPrimitiveType().getPrimitiveTypeName match {
-        case PrimitiveType.PrimitiveTypeName.INT32 =>
-          org.apache.spark.sql.types.Decimal(
-            g.getInteger(gi, ri).toLong, d.precision, d.scale)
-        case PrimitiveType.PrimitiveTypeName.INT64 =>
-          org.apache.spark.sql.types.Decimal(
-            g.getLong(gi, ri), d.precision, d.scale)
-        case _ =>
-          org.apache.spark.sql.types.Decimal(
-            new java.math.BigDecimal(new java.math.BigInteger(
-              g.getBinary(gi, ri).getBytes), d.scale),
-            d.precision, d.scale)
-      }
-    case BinaryType => g.getBinary(gi, ri).getBytes
-    case StringType =>
-      UTF8String.fromBytes(g.getBinary(gi, ri).getBytes)
-    case TimestampType | TimestampNTZType =>
-      val prim = g.getType.getType(gi).asPrimitiveType()
-      prim.getPrimitiveTypeName match {
-        case PrimitiveType.PrimitiveTypeName.INT96 =>
-          int96ToMicros(g.getInt96(gi, ri))
-        case _ =>
-          val v = g.getLong(gi, ri)
-          prim.getLogicalTypeAnnotation match {
-            case t: org.apache.parquet.schema.LogicalTypeAnnotation
-              .TimestampLogicalTypeAnnotation =>
-              t.getUnit match {
-                case org.apache.parquet.schema.LogicalTypeAnnotation
-                  .TimeUnit.MILLIS => v * 1000L
-                case org.apache.parquet.schema.LogicalTypeAnnotation
-                  .TimeUnit.NANOS => v / 1000L
-                case _ => v // MICROS
-              }
-            case _ => v
-          }
-      }
-    case other => throw new UnsupportedOperationException(
-      s"graft-snapshot reader: ${other.simpleString}")
-  }
-
-  /** Parquet INT96: 8 bytes nanos-of-day (LE) + 4 bytes julian day
-    * (LE) → micros since epoch. */
-  private def int96ToMicros(b: Binary): Long = {
-    val buf = java.nio.ByteBuffer.wrap(b.getBytes)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val nanosOfDay = buf.getLong
-    val julianDay = buf.getInt
-    val epochDays = julianDay - 2440588L
-    epochDays * 86400L * 1000000L + nanosOfDay / 1000L
-  }
-
-  override def close(): Unit = reader.close()
 }

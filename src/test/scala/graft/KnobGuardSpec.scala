@@ -2,28 +2,45 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The engine's settable `spark.graft.*` keys, pinned: a new knob has
-  * to be added here, next to the three that remain. */
+/** Source-level guards over src/main/scala: the engine's settable
+  * `spark.graft.*` keys, pinned (a new knob has to be added here, next
+  * to the three that remain), and the connector's one parquet decoder
+  * (a second, parquet-mr record decoder has to edit this spec). */
 class KnobGuardSpec extends AnyFunSuite {
 
-  test("src/main reads exactly the three settable spark.graft keys") {
+  private def sources(d: java.io.File): Seq[java.io.File] =
+    Option(d.listFiles()).toSeq.flatten.flatMap { f =>
+      if (f.isDirectory) sources(f)
+      else if (f.getName.endsWith(".scala")) Seq(f)
+      else Nil
+    }
+
+  private def mainSources(): Seq[(java.io.File, String)] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"run from the project root: $root")
-    def sources(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles()).toSeq.flatten.flatMap { f =>
-        if (f.isDirectory) sources(f)
-        else if (f.getName.endsWith(".scala")) Seq(f)
-        else Nil
-      }
-    val literal = "\"(spark\\.graft\\.[A-Za-z0-9_.]*)".r
-    val keys = sources(root).flatMap { f =>
+    sources(root).map { f =>
       val src = scala.io.Source.fromFile(f, "UTF-8")
-      try literal.findAllMatchIn(src.mkString).map(_.group(1)).toList
-      finally src.close()
+      try (f, src.mkString) finally src.close()
+    }
+  }
+
+  test("src/main reads exactly the three settable spark.graft keys") {
+    val literal = "\"(spark\\.graft\\.[A-Za-z0-9_.]*)".r
+    val keys = mainSources().flatMap { case (_, text) =>
+      literal.findAllMatchIn(text).map(_.group(1)).toList
     }.toSet
     assert(keys == Set(
       "spark.graft.commit.targetFileBytes",
       "spark.graft.stats.analyze.auto",
       "spark.graft.stats.analyze.auto.minStale"), keys.toString)
+  }
+
+  test("src/main decodes parquet through one reader: nothing " +
+      "references parquet-mr's example Group API") {
+    val hits = mainSources().collect {
+      case (f, text) if text.contains("org.apache.parquet.example") ||
+          text.contains("GroupReadSupport") => f.getPath
+    }
+    assert(hits.isEmpty, s"a second parquet decoder: $hits")
   }
 }

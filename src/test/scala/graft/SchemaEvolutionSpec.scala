@@ -181,7 +181,7 @@ class SchemaEvolutionSpec extends SparkSpec {
     assert(native.columns.toSeq == Seq("k", "v", "y"))
     assert(native.select("k", "y").as[(Long, Int)].collect()
       .sorted.toSeq == Seq((1L, 10), (2L, 20), (3L, 30)))
-    // connector read path (row reader)
+    // connector read path (vectorized reader)
     assert(readFmt(root).load().select("k", "y")
       .as[(Long, Int)].collect().sorted.toSeq ==
       Seq((1L, 10), (2L, 20), (3L, 30)))
@@ -371,8 +371,8 @@ class SchemaEvolutionSpec extends SparkSpec {
     assert(desc.group(1).toInt < desc.group(2).toInt,
       s"decimal widening broke stats pruning: ${desc.matched}")
     assert(q.count() == 100) // prices i.25 for i in 100..199
-    // MOR kill path exercises the row reader's decimal decode on
-    // both physical encodings (INT64-backed narrow, binary wide)
+    // MOR kill path exercises the vectorized reader's decimal decode
+    // on both physical encodings (INT64-backed narrow, binary wide)
     SnapshotTable.mergeOnRead(spark, root,
       Seq((50L, "0.00"), (10001L, "0.00")).toDF("k", "s")
         .select(col("k"), col("s").cast("decimal(24,2)").as("price")),
@@ -408,7 +408,8 @@ class SchemaEvolutionSpec extends SparkSpec {
 
   test("widenColumn float->double strips stats that would lie (a " +
       "float-rendered bound does not bracket the widened value) and " +
-      "never wrong-prunes; the row reader upcasts kill-filtered files") {
+      "never wrong-prunes; the vectorized reader upcasts kill-filtered " +
+      "files") {
     val root = tmpRoot()
     SnapshotTable.commit(spark, root,
       (1 to 1000).map(i => (i.toLong, 0.1f * i)).toDF("k", "s"),
@@ -429,7 +430,8 @@ class SchemaEvolutionSpec extends SparkSpec {
       .collect().toSeq == Seq(9L))
     assert(t.agg(sum("s")).collect()(0).getDouble(0) ==
       (1 to 1000).map(i => (0.1f * i).toDouble).sum)
-    // MOR kill path exercises the row reader's physical-type upcast
+    // MOR kill path exercises the vectorized reader's physical-type
+    // upcast
     SnapshotTable.mergeOnRead(spark, root,
       Seq((9L, 99.0)).toDF("k", "s"), "k")                      // v3
     val after = readFmt(root).load()

@@ -243,27 +243,11 @@ class SnapshotConnectorSpec extends SparkSpec {
     val schema = StructType(Seq(StructField("k", LongType),
       StructField("v", StringType)))
     val abs = new org.apache.hadoop.fs.Path(root, big.path).toString
-    def rowsSeen(filters: Array[org.apache.spark.sql.sources.Filter])
-    : Long = {
-      val r = new graft.sources.connector.GraftPartitionReader(
-        abs, schema, 2, -1, null, spark.sessionState.newHadoopConf(),
-        filters)
-      try { var n = 0L; while (r.next()) n += 1; n } finally r.close()
-    }
-    val all = rowsSeen(Array.empty)
-    assert(all == big.rows.get)
-    val band = rowsSeen(Array(GreaterThanOrEqual("k", lo),
-      LessThanOrEqual("k", bandHi)))
-    // record-level filtering is off, so every returned row comes from
-    // a KEPT row group: far fewer rows seen == whole groups skipped
-    assert(band < all / 4,
-      s"row groups not skipped: saw $band of $all rows for a 1/20 band")
-    assert(band >= bandHi - lo + 1,
-      "a kept row group can only ADD rows, never lose matches")
-    // the VECTORIZED reader observes the same row-group skip: the
-    // pushed predicate rides its parquet options, so keeping the
-    // columnar path costs no IO vs the row path
-    def rowsSeenColumnar(
+    // the pushed predicate rides the vectorized reader's parquet
+    // options; rows are counted per returned batch, so every row seen
+    // comes from a KEPT row group: far fewer rows == whole groups
+    // skipped
+    def rowsSeen(
         filters: Array[org.apache.spark.sql.sources.Filter]): Long = {
       val r = new graft.sources.connector.GraftColumnarReader(
         abs, schema, "UTC", spark.sessionState.newHadoopConf(),
@@ -272,12 +256,14 @@ class SnapshotConnectorSpec extends SparkSpec {
         var n = 0L; while (r.next()) n += r.get().numRows(); n
       } finally r.close()
     }
-    assert(rowsSeenColumnar(Array.empty) == all)
-    val bandCol = rowsSeenColumnar(Array(GreaterThanOrEqual("k", lo),
+    val all = rowsSeen(Array.empty)
+    assert(all == big.rows.get)
+    val band = rowsSeen(Array(GreaterThanOrEqual("k", lo),
       LessThanOrEqual("k", bandHi)))
-    assert(bandCol < all / 4,
-      s"columnar row groups not skipped: $bandCol of $all")
-    assert(bandCol >= bandHi - lo + 1)
+    assert(band < all / 4,
+      s"row groups not skipped: saw $band of $all rows for a 1/20 band")
+    assert(band >= bandHi - lo + 1,
+      "a kept row group can only ADD rows, never lose matches")
     // end-to-end: the same band through the connector equals native
     val viaConnector = readFmt(root).load()
       .filter(col("k") >= lo && col("k") <= bandHi).count()
@@ -315,12 +301,14 @@ class SnapshotConnectorSpec extends SparkSpec {
     val abs = new org.apache.hadoop.fs.Path(root, big.path).toString
     val schema = StructType(Seq(StructField("k", LongType),
       StructField("price", DecimalType(12, 2))))
-    def rowsSeen(filters: Array[org.apache.spark.sql.sources.Filter])
-    : Long = {
-      val r = new graft.sources.connector.GraftPartitionReader(
-        abs, schema, 2, -1, null, spark.sessionState.newHadoopConf(),
-        filters)
-      try { var n = 0L; while (r.next()) n += 1; n } finally r.close()
+    def rowsSeen(
+        filters: Array[org.apache.spark.sql.sources.Filter]): Long = {
+      val r = new graft.sources.connector.GraftColumnarReader(
+        abs, schema, "UTC", spark.sessionState.newHadoopConf(),
+        pushed = filters)
+      try {
+        var n = 0L; while (r.next()) n += r.get().numRows(); n
+      } finally r.close()
     }
     val all = rowsSeen(Array.empty)
     assert(all == big.rows.get)
@@ -344,21 +332,6 @@ class SnapshotConnectorSpec extends SparkSpec {
       new java.math.BigDecimal("100.005"))))
     assert(finer == all,
       s"finer-scaled literal must drop out of the conjunction: $finer")
-    // the columnar path observes the same skip through its options
-    def rowsSeenColumnar(
-        filters: Array[org.apache.spark.sql.sources.Filter]): Long = {
-      val r = new graft.sources.connector.GraftColumnarReader(
-        abs, schema, "UTC", spark.sessionState.newHadoopConf(),
-        pushed = filters)
-      try {
-        var n = 0L; while (r.next()) n += r.get().numRows(); n
-      } finally r.close()
-    }
-    val bandCol = rowsSeenColumnar(Array(
-      GreaterThanOrEqual("price", dlo.bigDecimal),
-      LessThanOrEqual("price", bandHi.bigDecimal)))
-    assert(bandCol < all / 4 && bandCol >= matches,
-      s"columnar decimal skip: $bandCol of $all, matches=$matches")
     // end-to-end: the same band through the connector equals native
     val viaConnector = readFmt(root).load()
       .filter(col("price").geq(dlo.bigDecimal) &&
@@ -584,6 +557,52 @@ class SnapshotConnectorSpec extends SparkSpec {
     assert(readFmt(root).load().select("x")
       .agg(sum("x")).collect()(0).getDouble(0) ==
       native.map(_(1).asInstanceOf[Double]).sum)
+    // a BINARY key: kill sets and probes must compare key BYTES (a
+    // byte[] member compares by identity and would kill nothing)
+    val binRoot = tmpRoot()
+    SnapshotTable.commit(spark, binRoot,
+      (1 to 100).map(i => (s"b$i".getBytes("UTF-8"), i.toLong))
+        .toDF("bk", "v"))
+    SnapshotTable.deleteKeysOnRead(spark, binRoot,
+      Seq("b7", "b42").map(_.getBytes("UTF-8")).toDF("bk"), "bk")
+    def binRows(df: org.apache.spark.sql.DataFrame): Seq[(String, Long)] =
+      df.collect().map(r => (new String(r.getAs[Array[Byte]]("bk"),
+        "UTF-8"), r.getAs[Long]("v"))).sortBy(_._2).toSeq
+    val nativeBin = binRows(SnapshotTable.read(spark, binRoot))
+    assert(nativeBin.length == 98)
+    assert(binRows(readFmt(binRoot).load()) == nativeBin)
+  }
+
+  test("merge-on-read with a STRING key and more tombstone keys than " +
+      "one columnar batch holds: every deleted key stays deleted " +
+      "through the connector and the preImages changelog") {
+    // 5000 unique keys in one tombstone file: PLAIN-encoded, so the
+    // kill set must outlive the batch buffers it was decoded from
+    val root = tmpRoot()
+    SnapshotTable.commit(spark, root,
+      (1 to 10000).map(i => (s"s$i", i.toLong)).toDF("sk", "v"))
+    SnapshotTable.deleteKeysOnRead(spark, root,
+      (2 to 10000 by 2).map(i => s"s$i").toDF("sk"), "sk")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(String, Long)] =
+      df.as[(String, Long)].collect().sortBy(_._2).toSeq
+    val native = rows(SnapshotTable.read(spark, root))
+    assert(native.length == 5000)
+    assert(rows(readFmt(root).load()) == native)
+    // the changelog's pre-images select the deleted rows by the same
+    // kind of key set
+    val outDir = java.nio.file.Files
+      .createTempDirectory("graft-conn-out").toString
+    val q = spark.readStream.format("graft-snapshot")
+      .option("path", root).option("changes", "true")
+      .option("preImages", "true").load()
+      .writeStream.format("parquet").option("path", outDir)
+      .option("checkpointLocation", java.nio.file.Files
+        .createTempDirectory("graft-conn-cp").toString).start()
+    try q.processAllAvailable() finally q.stop()
+    val dels = spark.read.parquet(outDir)
+      .filter(col("_change_type") === "delete")
+      .select("sk", "v").as[(String, Long)].collect().sortBy(_._2).toSeq
+    assert(dels == (2 to 10000 by 2).map(i => (s"s$i", i.toLong)))
   }
 
   test("MOR read still prunes: a range predicate skips data files " +
@@ -733,6 +752,35 @@ class SnapshotConnectorSpec extends SparkSpec {
       .contains("ColumnarToRow"),
       "a pushed band predicate must not de-vectorize the scan")
     assert(filtered.count() == 10)
+    def native(cols: String*): Seq[Seq[Any]] =
+      SnapshotTable.read(spark, root).select(cols.map(col): _*)
+        .orderBy("k").collect().map(_.toSeq).toSeq
+    // `_file` (every copy-on-write UPDATE/MERGE/DELETE scan needs it)
+    // rides the constant-fill channel: still columnar, one path per
+    // data file, and the data columns equal the native read
+    val withFile = readFmt(root).load().select("k", "x", "_file")
+    assert(withFile.queryExecution.executedPlan.toString
+      .contains("ColumnarToRow"), "a _file scan must stay columnar")
+    val fileRows = withFile.orderBy("k").collect()
+    assert(fileRows.map(r => Seq(r.get(0), r.get(1))).toSeq ==
+      native("k", "x"))
+    val footers = SnapshotTable.manifest(spark, root,
+      SnapshotTable.currentVersion(spark, root)).filter(_.kind == "d")
+      .map(e => new org.apache.hadoop.fs.Path(root, e.path).toString ->
+        e.rows.get).toMap
+    assert(fileRows.groupBy(_.getString(2)).map { case (p, rs) =>
+      p -> rs.length.toLong } == footers)
+    // an OFFSET whose remainder lands inside a file: the skip is a
+    // selection over the first surviving file's batch, still columnar.
+    // Files are key-clustered in manifest order, so the survivors are
+    // exactly the keys past the offset
+    val off = readFmt(root).load().offset(3000)
+    val planOff = off.queryExecution.executedPlan.toString
+    assert(planOff.contains("PushedOffset: OFFSET 3000") &&
+      planOff.contains("ColumnarToRow"),
+      s"an in-file OFFSET remainder must stay columnar:\n$planOff")
+    assert(off.orderBy("k").collect().map(_.toSeq).toSeq ==
+      native("k", "x", "tag").filter(_.head.asInstanceOf[Long] > 3000))
     // MOR: kills apply as a SELECTION over the decoded batch — the
     // scan stays columnar and bit-equals the native read
     SnapshotTable.deleteKeysOnRead(spark, root, Seq(5L).toDF("k"), "k")

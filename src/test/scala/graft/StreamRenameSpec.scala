@@ -2,7 +2,7 @@ package graft.sources.connector
 
 import graft.SparkSpec
 import graft.sources.SnapshotTable
-import org.apache.spark.sql.catalyst.InternalRow
+import scala.jdk.CollectionConverters._
 
 /** A RUNNING stream captures its schema at start; a mid-stream RENAME
   * means files committed after it store the NEW physical name while
@@ -44,9 +44,9 @@ class StreamRenameSpec extends SparkSpec {
     // and the rows actually decode under the stream's schema
     val factory = new GraftReaderFactory(startSchema.json,
       Array.empty, SerializableHadoopConf.broadcast(spark))
-    val reader = factory.createReader(b2.head)
+    val reader = factory.createColumnarReader(b2.head)
     val rows = Iterator.continually(reader)
-      .takeWhile(_.next()).map(_.get().asInstanceOf[InternalRow])
+      .takeWhile(_.next()).flatMap(_.get().rowIterator().asScala)
       .map(r => (r.getLong(0), r.getInt(1))).toList
     reader.close()
     assert(rows == List((3L, 30)),
@@ -83,9 +83,9 @@ class StreamRenameSpec extends SparkSpec {
         s"epochs, got ${p.aliases.toSeq}")
     val factory = new GraftReaderFactory(schema.json, Array.empty,
       SerializableHadoopConf.broadcast(spark))
-    val reader = factory.createReader(p)
+    val reader = factory.createColumnarReader(p)
     val rows = Iterator.continually(reader)
-      .takeWhile(_.next()).map(_.get().asInstanceOf[InternalRow])
+      .takeWhile(_.next()).flatMap(_.get().rowIterator().asScala)
       .map(r => (r.getLong(0), r.getInt(1))).toList
     reader.close()
     assert(rows == List((1L, 10)),
