@@ -486,8 +486,7 @@ object MaterializedView {
       return rollup(SnapshotTable.readVersion(spark, v.sourceRoot, curV), v)
     memoFresh(spark, v, Seq(v.viewRoot -> viewCur,
         v.sourceRoot -> lastV, v.sourceRoot -> curV)) {
-      val (merged, cleanup) = incrDeltaFrame(spark, v, viewCur,
-        signedRows(spark, v, lastV, curV), curV)
+      val (merged, cleanup) = freshMerge(spark, v, viewCur, lastV, curV)
       // the caller scans the result at an unknown later time, so the
       // delta cache can't wait for them: materialize the (view-sized,
       // bounded) frame NOW via localCheckpoint — its RDD blocks are
@@ -498,6 +497,14 @@ object MaterializedView {
       try merged.localCheckpoint(true) finally cleanup()
     }
   }
+
+  /** The unmaterialized read-time merge [[readFresh]] checkpoints: view
+    * version `viewCur` ⊕ the source delta `(lastV, curV]`, with the
+    * cleanup to run once it is consumed. */
+  private[graft] def freshMerge(spark: SparkSession, v: IncrementalView,
+      viewCur: Long, lastV: Long, curV: Long): (DataFrame, () => Unit) =
+    incrDeltaFrame(spark, v, viewCur, signedRows(spark, v, lastV, curV),
+      curV)
 
   /** Read-time merges memoized per session, at most this many views. */
   private val FreshMemoMax = 16
@@ -953,7 +960,7 @@ object MaterializedView {
 
   /** The telescoping signed delta as one frame of joined rows carrying
     * `__sign` — the refresh body, exposed package-private so specs can
-    * assert the IO shape (`inputFiles`): a fact-only change never
+    * assert the IO shape (the files its scans plan): a fact-only change never
     * re-opens the fact's pre-existing files, a dim-only change opens
     * only the fact files whose stats admit the touched keys. `last` /
     * `cur` are version vectors (fact first). None = no source added

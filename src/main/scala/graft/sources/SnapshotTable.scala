@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.functions.Bloom
-import org.apache.spark.sql.functions.{col, expr, hash, input_file_name, lit, pmod, max => smax, min => smin}
+import org.apache.spark.sql.functions.{col, expr, hash, lit, pmod, max => smax, min => smin}
 import org.apache.spark.sql.types._
 
 /** Versioned snapshot table over plain Parquet — the engine's answer to
@@ -145,8 +145,30 @@ object SnapshotTable {
       }
   }
 
+  /** The table's filesystem under the SESSION's Hadoop conf — the one
+    * its reads and writes run with, so a scheme or credential set on
+    * one session resolves for that session's tables. */
   private[sources] def fs(spark: SparkSession, root: String): FileSystem =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    new Path(root).getFileSystem(sessionHadoopConf(spark))
+
+  // Building a session's Hadoop conf copies the whole context conf;
+  // metadata calls resolve a filesystem many times per query, so the
+  // conf is kept per session and rebuilt when the session's settings
+  // change.
+  private val hadoopConfs = new java.util.WeakHashMap[SparkSession,
+    (Map[String, String], org.apache.hadoop.conf.Configuration)]()
+
+  private def sessionHadoopConf(spark: SparkSession)
+  : org.apache.hadoop.conf.Configuration = {
+    val settings = spark.sessionState.conf.getAllConfs
+    hadoopConfs.synchronized {
+      Option(hadoopConfs.get(spark)).filter(_._1 == settings).fold {
+        val c = spark.sessionState.newHadoopConf()
+        hadoopConfs.put(spark, (settings, c))
+        c
+      }(_._2)
+    }
+  }
 
   private def commitsDir(root: String) = new Path(root, "_commits")
   private def manifestsDir(root: String) = new Path(root, "_manifests")
@@ -1044,34 +1066,20 @@ object SnapshotTable {
   private[graft] val TsuKeyPrefix = "__tsu:"
   private[graft] def tsuKey(name: String): String = s"$TsuKeyPrefix$name"
 
+  /** The stats passes' read schema: what data files STORE. Initial
+    * defaults are stripped (the passes record stored values; the
+    * default overrides are stamped separately); rename epochs stay, so
+    * pre-rename files read their columns under the old names instead
+    * of recording all-NULL stats onto real values. */
+  private def storedSchema(schema: StructType): StructType =
+    StructType(schema.fields.map(f => f.copy(metadata =
+      new org.apache.spark.sql.types.MetadataBuilder()
+        .withMetadata(f.metadata).remove(InitDefaultKey)
+        .remove(InitDefaultAtKey).build())))
+
   /** Does this file lack a sketch or null count for some of `cols`?
     * The staleness predicate shared by incremental [[analyze]], the
     * auto-analyze policy and `t.stats`' staleness column. */
-  /** Raw multi-file read of DATA entries under the table schema with
-    * per-epoch ALIAS translation — the stats passes' scan. Pre-rename
-    * files store renamed columns under their old names; reading them
-    * raw under the current schema would record all-NULL stats onto
-    * real values. Unlike [[readUnder]] this applies NO initial-default
-    * fills: stats passes record what files STORE, and the default
-    * overrides are stamped separately. */
-  private def readAliased(spark: SparkSession, root: String,
-      schema: StructType, entries: Seq[FileEntry]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    entries.groupBy(e => aliasesAt(schema, e.seq)).toSeq
-      .map { case (aliases, es) =>
-        val aliasMap = aliases.toMap
-        val physSchema = StructType(schema.fields.map(f => f.copy(
-          name = aliasMap.getOrElse(f.name, f.name),
-          nullable = true)))
-        val raw = spark.read.schema(physSchema)
-          .parquet(es.map(e => absolute(root, e)): _*)
-        if (aliases.isEmpty) raw
-        else raw.select(schema.fields.toSeq.map(f => col(bq(
-          aliasMap.getOrElse(f.name, f.name))).as(f.name)): _*)
-      }
-      .reduce(_.unionByName(_))
-  }
-
   private def unsketched(e: FileEntry,
       cols: Seq[StructField]): Boolean = {
     // a missing value slot (exact sum / epoch-micros ts range) is
@@ -3120,7 +3128,7 @@ object SnapshotTable {
     * Returns (version, columns sketched). */
   def analyze(spark: SparkSession, root: String,
       maxRetries: Int = 5): (Long, Seq[String], Long) = {
-    import org.apache.spark.sql.functions.{col, expr, input_file_name}
+    import org.apache.spark.sql.functions.{col, expr}
     val f = fs(spark, root)
     var attempt = 0
     while (true) {
@@ -3163,7 +3171,7 @@ object SnapshotTable {
       }
       // one pass over the live files under the table schema (files
       // that predate a column contribute nothing to its sketch)
-      val sel = Seq(input_file_name().as("__f")) ++
+      val sel = Seq(col(FileColumn).as("__f")) ++
         cols.zipWithIndex.map { case (fd, i) =>
           col(bq(fd.name)).as(s"__n$i") }
       // per-file row count rides the same pass: it backfills `rows`
@@ -3197,25 +3205,20 @@ object SnapshotTable {
       // keyed by FULL path, never basename: different segments can
       // hold same-named files (taskIds restart per application), and
       // a basename-keyed map would stamp one file's min/max onto
-      // another — wrong PRUNING, i.e. wrong query results.
-      // input_file_name() returns a percent-ENCODED URI string, so
-      // decode through java.net.URI before matching the manifest path
-      // (a root with a space or '%' must still line up).
-      def decoded(f: String): String =
-        scala.util.Try(new java.net.URI(f).getPath).getOrElse(f)
+      // another — wrong PRUNING, i.e. wrong query results. `_file` is
+      // the scan's own rendering of the manifest path.
       val byFile =
         if (data.isEmpty) Map.empty[String, org.apache.spark.sql.Row]
-        else readAliased(spark, root, schema, data)
+        else scan(spark, root, cur, data, Some(storedSchema(schema)))
           .select(sel: _*)
           .groupBy(col("__f"))
           .agg(aggs.head, aggs.tail: _*)
           .collect()
-          .map(r => decoded(r.getAs[String]("__f")) -> r).toMap
+          .map(r => r.getAs[String]("__f") -> r).toMap
       val attempted = data.map(_.path).toSet
       val enriched = entries.map { e =>
         if (e.kind != "d" || !attempted(e.path)) e
-        else byFile.get(new Path(absolute(root, e)).toUri.getPath)
-          match {
+        else byFile.get(absolute(root, e)) match {
           case None if e.rows.contains(0L) =>
             // a ZERO-ROW file yields no aggregation row; stamp it
             // with correct empty stats (blank registers, zero nulls)
@@ -3428,7 +3431,7 @@ object SnapshotTable {
       schema.fields.toSeq.filter(fd => cboNumeric(fd.dataType))
     if (numCols.isEmpty) return Seq.empty
     graft.functions.GraftFunctions.register(spark)
-    val df = readAliased(spark, root, schema, data)
+    val df = scan(spark, root, cur, data, Some(storedSchema(schema)))
     // pass 1: quantile sketches -> equi-height bin boundaries, with
     // the OUTER bounds clamped to the exact min/max (the sketch is
     // α-approximate; Spark's estimator asserts the query range fits
@@ -3583,7 +3586,7 @@ object SnapshotTable {
       return true
     }
     graft.functions.GraftFunctions.register(spark)
-    val df = readAliased(spark, root, schema, newFiles)
+    val df = scan(spark, root, cur, newFiles, Some(storedSchema(schema)))
     val binCols = state.zipWithIndex.map { case ((fd, bs, _, _), i) =>
       val interior = bs.slice(1, bins).map(b => s"${b}D").mkString(",")
       expr(s"size(filter(array($interior), " +
@@ -3809,7 +3812,7 @@ object SnapshotTable {
             // membership filter — no job, where the anti join would
             // evaluate or broadcast the key set again; `<=> true` keeps
             // NULL-keyed rows, as the equality anti join does
-            val existing = readEntries(spark, root, touched ++ tombs,
+            val existing = scan(spark, root, cur, touched ++ tombs,
               priorSchema)
             probes.fold(existing.join(keys, Seq(key), "left_anti"))(p =>
               existing.filter(
@@ -3847,9 +3850,9 @@ object SnapshotTable {
     * the batch's keys — no existing file is read, opened or
     * rewritten, so commit cost is O(batch) even when the update keys
     * hit every file's range (the case that makes copy-on-write merge
-    * O(table)). Readers pay one join against the accumulated key set
-    * (see [[readEntries]]); [[compact]] materializes the merge and
-    * clears the tombstones. Same CAS + re-derive concurrency contract
+    * O(table)). Readers pay a kill-set probe per row against the
+    * accumulated keys (see [[scan]]); [[compact]] materializes the
+    * merge and clears the tombstones. Same CAS + re-derive concurrency contract
     * as [[merge]]. */
   def mergeOnRead(spark: SparkSession, root: String, updates: DataFrame,
       key: String, files: Int = 8, maxRetries: Int = 5): Long = {
@@ -4202,26 +4205,23 @@ object SnapshotTable {
       val carriedNone = byCover.getOrElse(CoverNone, Seq.empty)
       val unknown = byCover.getOrElse(CoverUnknown, Seq.empty)
       // tier 2: one pushdown-friendly scan over the unclassified files
-      // to find the ones that actually hold matching rows. Raw files
-      // (no tombstone join — input_file_name must survive to the
-      // filter): a file whose matches are all tombstoned is rewritten
-      // needlessly but correctly.
+      // (through their tombstones) to find the ones that actually hold
+      // live matching rows, keyed by full path
       val matchedPaths: Set[String] =
         if (unknown.isEmpty) Set.empty
-        else readUnder(spark, root, priorSchema, unknown)
-          .withColumn("__file", input_file_name())
+        else scan(spark, root, cur, unknown ++ tombs, priorSchema)
           .filter(matchCond)
-          .select("__file").distinct()
-          .collect().map(r => new Path(r.getString(0)).getName).toSet
+          .select(FileColumn).distinct()
+          .collect().map(_.getString(0)).toSet
       val (rewriteSet, carriedScan) = unknown.partition(e =>
-        matchedPaths.contains(new Path(e.path).getName))
+        matchedPaths.contains(absolute(root, e)))
       if (dropped.isEmpty && rewriteSet.isEmpty)
         return DeleteStats(cur, 0, 0, data.size.toLong,
           unknown.size.toLong) // nothing matched: no commit needed
       val carriedData = carriedNone ++ carriedScan
       val kept =
         if (rewriteSet.isEmpty) None
-        else Some(readEntries(spark, root, rewriteSet ++ tombs,
+        else Some(scan(spark, root, cur, rewriteSet ++ tombs,
           priorSchema).filter(!matchCond))
       val (clusterKey, _) = layoutOf(spark, root)
       // a declared identity layout survives the rewrite (value-pure
@@ -4245,8 +4245,7 @@ object SnapshotTable {
           (Seq(seg), es)
       }
       // tombstones kill rows of data files; with no data files left
-      // they are dead weight (and readEntries' tombstone join has no
-      // base to build on) — drop them with the last data file
+      // they are dead weight — drop them with the last data file
       val carried =
         if ((carriedData ++ newEntries).isEmpty) Seq.empty
         else carriedData ++ tombs
@@ -4454,7 +4453,7 @@ object SnapshotTable {
     else {
       def signed(es: Seq[FileEntry], sign: Long): Seq[DataFrame] =
         if (es.isEmpty) Nil
-        else Seq(readUnder(spark, root, d.readSchema, es)
+        else Seq(scan(spark, root, d.to, es, d.readSchema)
           .withColumn("__sign", lit(sign)))
       (signed(d.added, 1L) ++ signed(d.removed, -1L))
         .reduce(_.unionByName(_))
@@ -4484,34 +4483,33 @@ object SnapshotTable {
     // back to the exact (O(both versions)) bag diff.
     if (d.hasTombstones) {
       if (d.removed.nonEmpty) {
-        val av = readEntries(spark, root, d.a, readSchema)
-        val bv = readEntries(spark, root, d.b, readSchema)
+        val av = scan(spark, root, d.to, d.a, readSchema)
+        val bv = scan(spark, root, d.to, d.b, readSchema)
         return bv.exceptAll(av).withColumn("change_type", lit("inserted"))
           .unionByName(
             av.exceptAll(bv).withColumn("change_type", lit("deleted")))
       }
       val (aTombs, aData) = d.a.partition(_.kind == "t")
       val bTombs = d.b.filter(_.kind == "t")
-      val bData = d.b.filter(_.kind != "t")
       val (addedTombs, addedData) = d.added.partition(_.kind == "t")
-      def empty: DataFrame = readSchema match {
-        case Some(st) => spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          asNullable(st))
-        case None => readUnder(spark, root, None, Seq(bData.head)).limit(0)
-      }
-      val ins =
-        if (addedData.isEmpty) empty
-        else readEntries(spark, root, addedData ++ bTombs, readSchema)
+      def empty: DataFrame = scan(spark, root, d.to, Nil, readSchema)
+      val ins = scan(spark, root, d.to, addedData ++ bTombs, readSchema)
       val del =
         if (addedTombs.isEmpty) empty
         else {
           val key = addedTombs.head.statsKey.getOrElse(
             throw new IllegalStateException(
               s"tombstone entry without a key column at $root"))
-          val keysDf = addedTombs.map(t =>
-            spark.read.parquet(absolute(root, t)))
-            .reduce(_.unionByName(_)).distinct()
+          // the tombstone files' keys, read as one-column data under
+          // the name they store it by
+          val keyType = readSchema
+            .getOrElse(readVersion(spark, root, d.to).schema).fields
+            .find(_.name.equalsIgnoreCase(key)).map(_.dataType)
+            .getOrElse(throw new IllegalStateException(
+              s"tombstone key '$key' is not a column of $root"))
+          val keysDf = scan(spark, root, d.to,
+            addedTombs.map(_.copy(kind = "d")),
+            Some(StructType(Seq(StructField(key, keyType))))).distinct()
           // probe rows collect FIRST: a small tombstone set then
           // classifies + bloom-prunes driver-side from one evaluation
           // of keysDf (the join form evaluated it a second time and
@@ -4520,8 +4518,7 @@ object SnapshotTable {
             probeFiles(spark, root, aData, keysDf, key)
           val pruned = probes.fold(touched)(p =>
             bloomPrune(touched, p, keysDf.schema(key).dataType, key))
-          if (pruned.isEmpty) empty
-          else readEntries(spark, root, pruned ++ aTombs, readSchema)
+          scan(spark, root, d.to, pruned ++ aTombs, readSchema)
             .join(keysDf, Seq(key), "left_semi")
         }
       // a pure-delete commit (no added data files) or a pure-insert
@@ -4539,7 +4536,7 @@ object SnapshotTable {
           del.exceptAll(ins).withColumn("change_type", lit("deleted")))
     }
     def readFiles(es: Seq[FileEntry]): DataFrame =
-      readUnder(spark, root, readSchema, es)
+      scan(spark, root, d.to, es, readSchema)
     def tag(df: DataFrame, t: String): DataFrame =
       df.withColumn("change_type", lit(t))
     (d.added.nonEmpty, d.removed.nonEmpty) match {
@@ -4587,15 +4584,7 @@ object SnapshotTable {
   private def readCommitted(spark: SparkSession, root: String,
       v: Long): DataFrame = {
     val (entries, schema) = readManifestFull(spark, root, v)
-    if (entries.isEmpty) {
-      // a freshly created table: the manifest carries only the schema
-      val st = schema.getOrElse(throw new IllegalStateException(
-        s"version $v at $root has neither files nor a recorded schema"))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        asNullable(st))
-    }
-    readEntries(spark, root, entries, schema)
+    scan(spark, root, v, entries, schema)
   }
 
   /** ROLLBACK: commit a NEW version whose contents are exactly those
@@ -4730,8 +4719,8 @@ object SnapshotTable {
     * but data files whose manifest stats prove no row can match are
     * never opened. The residual filter still runs over the kept
     * files, so stats only ever SKIP work — they cannot change the
-    * answer. MOR-safe: tombstones always load, and the tombstone join
-    * only removes rows, so pruning data files cannot resurrect
+    * answer. MOR-safe: tombstones always load, and the kill only
+    * removes rows, so pruning data files cannot resurrect
     * anything. At 100 TB this is the difference between a key-range
     * lookup costing O(matching files) and O(table). */
   def readWhere(spark: SparkSession, root: String, key: String,
@@ -4757,26 +4746,10 @@ object SnapshotTable {
     // each predicate prunes independently; keeping the intersection
     // is sound because every pruneOf only ever SKIPS provably
     // non-matching files
-    val (kept, firstSkipped) = preds.foldLeft(
-      (entries, Seq.empty[FileEntry])) {
-      case ((es, sk), (key, lo, hi)) =>
-        val (k2, sk2) = pruneOf(spark, root, es, mSchema, key, lo, hi)
-        (k2, if (sk.isEmpty) sk2 else sk)
+    val kept = preds.foldLeft(entries) { case (es, (key, lo, hi)) =>
+      pruneOf(spark, root, es, mSchema, key, lo, hi)._1
     }
-    val base =
-      if (kept.exists(_.kind != "t")) readEntries(spark, root, kept,
-        mSchema)
-      else {
-        // every data file pruned away: empty result under the SAME
-        // nullable-forced schema the non-empty paths produce (one
-        // footer read on the v1 path — manifests are never
-        // all-tombstone, so a skipped data file must exist)
-        mSchema.fold(
-          spark.read.parquet(absolute(root, firstSkipped.head)).limit(0))(
-          st => spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](),
-            asNullable(st)))
-      }
+    val base = scan(spark, root, v, kept, mSchema)
     preds.foldLeft(base) { case (df, (key, lo, hi)) =>
       val kt = df.schema(key).dataType
       df.filter(
@@ -4894,14 +4867,7 @@ object SnapshotTable {
       }
     val touched = probes.fold(statsTouched)(p =>
       bloomPrune(statsTouched, p, keyType, key))
-    val base =
-      if (touched.nonEmpty)
-        readEntries(spark, root, touched ++ tombs, mSchema)
-      else mSchema.fold(
-        spark.read.parquet(absolute(root, data.head)).limit(0))(
-        st => spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          asNullable(st)))
+    val base = scan(spark, root, v, touched ++ tombs, mSchema)
     probes match {
       case Some(p) if inSetMatchesJoin(keyType) =>
         // the columns in the order the USING semi join gives: key first
@@ -5000,9 +4966,13 @@ object SnapshotTable {
     * without a bloom on `key` (older commits, MOR segments) are
     * conservatively kept. Each filter decodes ONCE and each probe
     * hashes ONCE — the loop is (files × keys) bit tests, not (files ×
-    * keys) sketch deserializations. */
-  private def bloomPrune(entries: Seq[FileEntry], probes: Array[Any],
-      keyType: DataType, key: String): Seq[FileEntry] = {
+    * keys) sketch deserializations. `probes` are driver values of
+    * `keyType`; `key` is the name the files record their bloom under
+    * (a renamed column's physical epoch name). The connector's
+    * equality/IN pruning probes through here too. */
+  private[sources] def bloomPrune(entries: Seq[FileEntry],
+      probes: Iterable[Any], keyType: DataType,
+      key: String): Seq[FileEntry] = {
     if (!entries.exists(e => e.bloomKey.contains(key) && e.bloom.isDefined))
       return entries
     // SQL equality has -0.0 = 0.0, but a sketch hashed the stored bits,
@@ -5022,24 +4992,23 @@ object SnapshotTable {
     }
   }
 
-  /** Materialize a manifest's entries as a DataFrame, applying
-    * merge-on-read tombstones. Fast path: no tombstones → one plain
-    * multi-file scan (every pre-MOR table takes this branch, zero
-    * added cost). With tombstones: data files are scanned grouped by
-    * their add-version (`seq`), each tombstone file contributes its
-    * keys with its own seq, and a row survives iff no tombstone with
-    * a STRICTLY NEWER seq covers its key — so a MOR commit's own
-    * replacement rows live while every older copy dies. One extra
-    * join against the (delete-vector-sized) key set is the read-side
-    * price; `compact` materializes and clears it.
-    *
-    * With a manifest `schema` the data files are read under it
-    * EXPLICITLY (columns a file predates read as NULL) — schema
-    * evolution with zero footer reads at plan time. Tombstone files
-    * keep their own single-column schema; the table schema never
-    * applies to them. */
-  private def asNullable(st: StructType): StructType =
-    StructType(st.fields.map(_.copy(nullable = true)))
+  /** THE read: `entries` of version `v` — data files and the
+    * tombstones that apply to them — as a DataFrame over the
+    * connector's scan. The table decides which files; the scan reads
+    * them under `schema` (nullable; the manifest schema by default,
+    * footer-inferred on a pre-schema v1 manifest), applying rename
+    * epochs, initial defaults and merge-on-read kills (a row dies iff
+    * a tombstone with a STRICTLY NEWER seq covers its key, so a MOR
+    * commit's own replacement rows live while every older copy dies),
+    * pruning files and row groups by pushed filters, and serving
+    * `_file`. Zero data files plan an empty scan. */
+  private def scan(spark: SparkSession, root: String, v: Long,
+      entries: Seq[FileEntry], schema: Option[StructType]): DataFrame =
+    graft.sources.connector.GraftPinnedTable.frame(spark, root, v,
+      entries, schema)
+
+  /** The scan's per-row data-file path (the connector's `_file`). */
+  private val FileColumn = "_file"
 
   // ---- initial defaults (read-side ADD COLUMN DEFAULT fill) ----
   // Iceberg's initial-default: `ADD COLUMNS (c T DEFAULT v)` records
@@ -5078,79 +5047,6 @@ object SnapshotTable {
       else None
     }
 
-  /** THE explicit-schema multi-file read — the one place the
-    * nullable-forced read schema applies, so the full read, the diff
-    * legs and the pruned-empty result agree on nullability by
-    * construction. Initial defaults materialize here: entries group
-    * by which defaults predate them (almost always one group), each
-    * group scans once, and pre-evolution groups overwrite the absent
-    * column with the literal — a constant projection, no extra IO. */
-  private def readUnder(spark: SparkSession, root: String,
-      schema: Option[StructType], entries: Seq[FileEntry]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val paths = entries.map(absolute(root, _))
-    schema match {
-      case None => spark.read.parquet(paths: _*)
-      case Some(st) =>
-        val fills = initFills(st)
-        val anyRenames = st.fields.exists(renameEpochs(_).nonEmpty)
-        if ((fills.isEmpty && !anyRenames) || entries.isEmpty)
-          spark.read.schema(asNullable(st)).parquet(paths: _*)
-        else entries.groupBy(e =>
-          (fills.filter(_.addedAt > e.seq).map(_.name).toSet,
-            aliasesAt(st, e.seq)))
-          .toSeq.sortBy { case ((names, al), _) =>
-            (names.size, al.size) }
-          .map { case ((names, aliases), es) =>
-            // pre-rename files store columns under their physical
-            // epoch names: read under the physical-named schema, then
-            // project back to logical — a rename-free group reads the
-            // logical schema directly, byte-identical to before
-            val aliasMap = aliases.toMap
-            val physSchema = StructType(st.fields.map(f =>
-              f.copy(name = aliasMap.getOrElse(f.name, f.name))))
-            val raw = spark.read.schema(asNullable(physSchema))
-              .parquet(es.map(absolute(root, _)): _*)
-            val df =
-              if (aliases.isEmpty) raw
-              else raw.select(st.fields.toSeq.map(f => col(
-                aliasMap.getOrElse(f.name, f.name)).as(f.name)): _*)
-            fills.filter(f => names(f.name)).foldLeft(df)((d, f) =>
-              d.withColumn(f.name, lit(f.value).cast(f.dataType)))
-          }.reduce(_.unionByName(_))
-    }
-  }
-
-  private def readEntries(spark: SparkSession, root: String,
-      entries: Seq[FileEntry],
-      schema: Option[StructType]): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, max => smax2}
-    val (tombs, data) = entries.partition(_.kind == "t")
-    if (tombs.isEmpty)
-      readUnder(spark, root, schema, data)
-    else {
-      val key = tombs.head.statsKey.getOrElse(throw new IllegalStateException(
-        s"tombstone entry without a key column at $root"))
-      val base = data.groupBy(_.seq).toSeq.sortBy(_._1).map {
-        case (s, es) =>
-          readUnder(spark, root, schema, es).withColumn("__seq", lit(s))
-      }.reduce(_.unionByName(_))
-      val kills = tombs.map { t =>
-        spark.read.parquet(absolute(root, t))
-          .withColumn("__tseq", lit(t.seq))
-      }.reduce(_.unionByName(_))
-        .groupBy(col(key)).agg(smax2(col("__tseq")).as("__tseq"))
-        .withColumnRenamed(key, "__tk")
-      // plain equality, NOT <=>: SQL `key IN (...)` semantics — a NULL
-      // tombstone key matches nothing, and NULL-key data rows are
-      // never killed, matching what the copy-on-write merge's
-      // equality anti-join does (the spec pins MOR ≡ COW)
-      base.join(kills, base(key) === col("__tk"), "left")
-        .filter(coalesce(col("__tseq"), lit(Long.MinValue)) <= col("__seq"))
-        .drop("__tk", "__tseq", "__seq")
-    }
-  }
-
   /** Commit-time guard for the merge-on-read ops: every tombstone of a
     * table must use ONE key column, or reads would be ill-defined.
     * Failing the commit beats committing an unreadable table. */
@@ -5163,15 +5059,6 @@ object SnapshotTable {
         s"${other.mkString(",")}; cannot mix with key '$key'")
   }
 
-  /** Drop all snapshots older than the newest `keep`. Returns the
-    * versions deleted. Data files are REFERENCE-COUNTED: a file is
-    * deleted only when no SURVIVING manifest references it (versions
-    * share files, so expiring an old version must not tear files out
-    * from under the current one). Record first, then manifest, then
-    * data: a reader can never resolve a version whose data is already
-    * gone. Expiry is the ONLY operation that can invalidate an
-    * in-flight reader (one still scanning an expired file), which is
-    * why retention is a policy knob and not automatic. */
   /** AGE-based retention (Iceberg's `expire_snapshots(older_than)`):
     * drop every version committed at or before `olderThanMs` (epoch
     * millis, judged against the commit record's mtime — the same
@@ -5193,6 +5080,15 @@ object SnapshotTable {
     expireVersionSet(spark, root, aged)
   }
 
+  /** Drop all snapshots older than the newest `keep`. Returns the
+    * versions deleted. Data files are REFERENCE-COUNTED: a file is
+    * deleted only when no SURVIVING manifest references it (versions
+    * share files, so expiring an old version must not tear files out
+    * from under the current one). Record first, then manifest, then
+    * data: a reader can never resolve a version whose data is already
+    * gone. Expiry is the ONLY operation that can invalidate an
+    * in-flight reader (one still scanning an expired file), which is
+    * why retention is a policy knob and not automatic. */
   def expireSnapshots(spark: SparkSession, root: String, keep: Int)
   : Seq[Long] = {
     require(keep >= 1, "must keep at least the current snapshot")

@@ -2077,10 +2077,10 @@ private[connector] class GraftChangesTable(fullName: String,
   override def newScanBuilder(options: CaseInsensitiveStringMap)
   : ScanBuilder = kind match {
     case "changes" =>
-      new GraftScanBuilder(root, v, schema(),
+      new GraftScanBuilder(spark, root, v, schema(),
         entryView = _.filter(e => e.kind == "d" && e.seq == v))
     case "delete_keys" =>
-      new GraftScanBuilder(root, v, schema(),
+      new GraftScanBuilder(spark, root, v, schema(),
         entryView = _.collect {
           case e if e.kind == "t" && e.seq == v => e.copy(kind = "d")
         })

@@ -96,7 +96,8 @@ private[connector] class GraftRowLevelOperation(root: String,
   override def newScanBuilder(options: CaseInsensitiveStringMap)
   : ScanBuilder = {
     if (scanBuilder == null)
-      scanBuilder = new GraftScanBuilder(root, version, tableSchema,
+      scanBuilder = new GraftScanBuilder(SparkSession.active, root,
+        version, tableSchema,
         onPlan = Some(files => plannedFiles = files.filter(_.kind == "d")))
     scanBuilder
   }
@@ -210,7 +211,8 @@ private[connector] class GraftDeltaOperation(root: String,
   // so no file recording — stats/bloom pruning and runtime group
   // filtering still narrow the read
   override def newScanBuilder(options: CaseInsensitiveStringMap)
-  : ScanBuilder = new GraftScanBuilder(root, version, tableSchema)
+  : ScanBuilder =
+    new GraftScanBuilder(SparkSession.active, root, version, tableSchema)
 
   override def newWriteBuilder(info: LogicalWriteInfo)
   : DeltaWriteBuilder = new DeltaWriteBuilder {

@@ -114,13 +114,13 @@ class GraftSnapshotSource extends TableProvider with DataSourceRegister {
 }
 
 private[connector] object GraftSnapshotSource {
-  val SupportedTypes: Set[DataType] = Set(IntegerType, LongType,
-    FloatType, DoubleType, BooleanType, StringType, BinaryType,
-    TimestampType, TimestampNTZType, DateType)
+  val SupportedTypes: Set[DataType] = Set(ByteType, ShortType,
+    IntegerType, LongType, FloatType, DoubleType, BooleanType,
+    StringType, BinaryType, TimestampType, TimestampNTZType, DateType)
 
   /** Atomic leaves (decimals at any precision/scale) plus ARRAY /
-    * STRUCT / MAP compositions to any depth — the type domain both
-    * the reader and the V2 writer handle. */
+    * STRUCT / MAP compositions to any depth — the type domain Spark's
+    * `ParquetWriteSupport` writes and its vectorized reader decodes. */
   def supported(dt: DataType): Boolean = dt match {
     case ArrayType(e, _) => supported(e)
     case StructType(fs) => fs.forall(f => supported(f.dataType))
@@ -263,7 +263,8 @@ private[connector] class GraftSnapshotTable(root: String, version: Long,
         options.getBoolean("preImages", false),
         StreamLimits.from(options))
       new ScanBuilder { override def build(): Scan = scan }
-    } else new GraftScanBuilder(root, version, tableSchema,
+    } else new GraftScanBuilder(SparkSession.active, root, version,
+      tableSchema,
       streamStart = Option(options.get("startingVersion")),
       streamBranch = Option(options.get("branch")),
       streamLimits = StreamLimits.from(options))
@@ -392,6 +393,43 @@ private[connector] class GraftSnapshotTable(root: String, version: Long,
   }
 }
 
+/** A snapshot read pinned to an explicit entry set: [[SnapshotTable]]
+  * decides which files (data files plus the tombstones that apply to
+  * them), this scan reads them — rename epochs, initial defaults and
+  * merge-on-read kills, file and row-group pruning, and `_file` — so
+  * every read of a snapshot runs one engine. `readSchema` carries the
+  * field metadata the scan applies; zero data files plan an empty
+  * scan. */
+private[graft] class GraftPinnedTable(spark: SparkSession, root: String,
+    version: Long, readSchema: StructType, entries: Seq[FileEntry])
+  extends Table with SupportsRead
+  with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
+  override def name(): String = s"graft_snapshot(`$root` v$version)"
+  override def schema(): StructType = readSchema
+  override def capabilities(): util.Set[TableCapability] =
+    util.EnumSet.of(TableCapability.BATCH_READ)
+  override def metadataColumns()
+  : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
+    Array(GraftFileMetadataColumn)
+  override def newScanBuilder(options: CaseInsensitiveStringMap)
+  : ScanBuilder = new GraftScanBuilder(spark, root, version, readSchema,
+    entryView = _ => entries)
+}
+
+private[graft] object GraftPinnedTable {
+  /** `entries` of version `v` read under `schema` (nullable, metadata
+    * kept); without one — a pre-schema v1 manifest — under the first
+    * data file's footer schema. */
+  def frame(spark: SparkSession, root: String, v: Long,
+      entries: Seq[FileEntry], schema: Option[StructType])
+  : org.apache.spark.sql.DataFrame = {
+    val st = schema.fold(GraftSnapshotSource.schemaOf(spark, root, v))(s =>
+      StructType(s.fields.map(_.copy(nullable = true))))
+    org.apache.spark.sql.graft.GraftFrames.of(spark,
+      new GraftPinnedTable(spark, root, v, st, entries))
+  }
+}
+
 private[connector] object GraftFileMetadataColumn
   extends org.apache.spark.sql.connector.catalog.MetadataColumn {
   val Name = "_file"
@@ -402,8 +440,8 @@ private[connector] object GraftFileMetadataColumn
     "absolute path of the data file holding the row"
 }
 
-private[graft] class GraftScanBuilder(root: String, version: Long,
-    fullSchema: StructType,
+private[graft] class GraftScanBuilder(spark: SparkSession, root: String,
+    version: Long, fullSchema: StructType,
     onPlan: Option[Seq[FileEntry] => Unit] = None,
     entryView: Seq[FileEntry] => Seq[FileEntry] = identity,
     streamStart: Option[String] = None,
@@ -430,45 +468,32 @@ private[graft] class GraftScanBuilder(root: String, version: Long,
   // never semantics.
   override def isPartiallyPushed(): Boolean = true
 
-  /** Keep the filters this connector can turn into file pruning:
-    * comparisons and equality/IN against a column that carries
-    * min/max stats (either Z-order slot) or a bloom in the manifest.
-    * EVERYTHING is returned as residual — the connector skips files,
-    * Spark still evaluates rows, so pushdown can only cut IO. (With
-    * merge-on-read tombstones this stays sound: pruning skips DATA
-    * files only, and tombstones only ever REMOVE rows — a skipped
-    * file's rows could not have matched the filter anyway.) */
-  /** Every manifest read in this builder goes through the view hook,
-    * so a derived scan (e.g. the `t.changes` incremental table, whose
-    * view keeps only the files one commit added) prunes, counts and
-    * plans against ITS file set consistently. */
-  private def viewedEntries(spark: SparkSession)
-  : (Seq[FileEntry], Option[StructType]) = {
-    val (entries, mSchema) =
-      SnapshotTable.readManifestFull(spark, root, version)
-    (entryView(entries), mSchema)
-  }
+  /** The manifest entries this builder plans over, read once: every
+    * pushdown and the build see them through the view hook, so a
+    * derived scan (the `t.changes` incremental table, or a
+    * [[SnapshotTable]] read pinned to an explicit entry set) prunes,
+    * counts and plans against ITS file set consistently. */
+  private lazy val viewed: Seq[FileEntry] =
+    entryView(SnapshotTable.readManifest(spark, root, version))
 
+  /** The table's properties (its declared layouts), read once. */
+  private lazy val props = SnapshotTable.tableProperties(spark, root)
+
+  /** Push every comparison and equality/IN. The driver prunes files
+    * with the manifest's stats and blooms where it has them
+    * ([[GraftPruning]] keeps every file it cannot judge), and the
+    * readers prune row groups with the footers' stats, which every
+    * column carries. EVERYTHING is returned as residual — the
+    * connector skips files and row groups, Spark still evaluates
+    * rows, so pushdown can only cut IO. (With merge-on-read
+    * tombstones this stays sound: pruning skips DATA only, and
+    * tombstones only ever REMOVE rows — a skipped file's rows could
+    * not have matched the filter anyway.) */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val spark = SparkSession.active
-    val entries = viewedEntries(spark)._1
-      .filter(_.kind == "d")
-    def prunable(col: String): Boolean = {
-      // a renamed column's stats live under per-file epoch names too
-      val names = col +: fullSchema.fields
-        .find(_.name.equalsIgnoreCase(col)).toSeq
-        .flatMap(SnapshotTable.renameEpochs(_).map(_.name))
-      entries.exists(e => names.exists(n =>
-        e.statsFor(n).isDefined ||
-          (e.bloomKey.contains(n) && e.bloom.isDefined)))
-    }
+    val entries = viewed.filter(_.kind == "d")
     pushed = filters.filter {
-      case EqualTo(c, _) => prunable(c)
-      case In(c, _) => prunable(c)
-      case GreaterThan(c, _) => prunable(c)
-      case GreaterThanOrEqual(c, _) => prunable(c)
-      case LessThan(c, _) => prunable(c)
-      case LessThanOrEqual(c, _) => prunable(c)
+      case _: EqualTo | _: In | _: GreaterThan | _: GreaterThanOrEqual |
+          _: LessThan | _: LessThanOrEqual => true
       case _ => false
     }
     // CONSUME (return no residual for) filters this scan can decide
@@ -485,8 +510,7 @@ private[graft] class GraftScanBuilder(root: String, version: Long,
     // the tail keys' constants as extraStats ranges + null counts) —
     // each verified value-pure on every file, never trusted from the
     // declaration alone
-    val declared = SnapshotTable.partitionKeysOf(
-      SnapshotTable.tableProperties(spark, root))
+    val declared = SnapshotTable.partitionKeysOf(props)
     val pureCols: Seq[(String, DataType)] =
       (entries.headOption.flatMap(_.statsKey).toSeq ++ declared)
         .distinct
@@ -744,8 +768,7 @@ private[graft] class GraftScanBuilder(root: String, version: Long,
   : Option[(StructType, Array[Array[String]], String)] = {
     if (residualBlocks) return None
     if (agg.groupByExpressions().nonEmpty) return tryGrouped(agg)
-    val spark = SparkSession.active
-    val entries = viewedEntries(spark)._1
+    val entries = viewed
     val (tombs, data0) = entries.partition(_.kind == "t")
     if (tombs.nonEmpty) return None // MOR: manifest counts overcount
     val data = consumedKeep(data0)
@@ -892,8 +915,7 @@ private[graft] class GraftScanBuilder(root: String, version: Long,
            StringType | DateType =>
       case _ => return None
     })
-    val spark = SparkSession.active
-    val entries = viewedEntries(spark)._1
+    val entries = viewed
     val (tombs, data0) = entries.partition(_.kind == "t")
     if (tombs.nonEmpty || data0.isEmpty) return None
     // value-purity per file ON EVERY group column (the shared
@@ -1182,28 +1204,24 @@ private[graft] class GraftScanBuilder(root: String, version: Long,
   }
 
   private def manifestSplit(): (Seq[FileEntry], Seq[FileEntry]) = {
-    val entries = viewedEntries(SparkSession.active)._1
-    val (t, d) = entries.partition(_.kind == "t")
+    val (t, d) = viewed.partition(_.kind == "t")
     (t, d.filter(_.kind == "d"))
   }
 
   override def build(): Scan = {
-    val spark = SparkSession.active
     aggAnswer.foreach { case (outSchema, values, desc) =>
-      val total = viewedEntries(spark)._1.count(_.kind == "d")
+      val total = viewed.count(_.kind == "d")
       return new GraftAggScan(version, outSchema, values, desc, total)
     }
-    val (entries, mSchema) = viewedEntries(spark)
-    val (tombs, data) = entries.partition(_.kind == "t")
+    val (tombs, data) = viewed.partition(_.kind == "t")
     val base = offsetSkip.map(_._1)
       .orElse(limitKept.map(_._1)).getOrElse(data)
     val kept1 = pushed.foldLeft(base)((es, f) =>
-      GraftPruning.prune(spark, root, fullSchema, mSchema, es, f))
+      GraftPruning.prune(spark, root, fullSchema, es, f))
     // hash-bucket pruning: equality/IN on a declared bucket-layout
     // key keeps only the literal's own cell(s) — stats ranges rarely
     // help on a hash-scattered key, the cell id is exact
-    val kept0 = SnapshotTable.bucketLayoutOf(
-      SnapshotTable.tableProperties(spark, root)) match {
+    val kept0 = SnapshotTable.bucketLayoutOf(props) match {
       case Some(layout) => pushed.foldLeft(kept1)((es, f) =>
         GraftPruning.pruneBucket(fullSchema, layout, es, f))
       case None => kept1
@@ -1213,15 +1231,19 @@ private[graft] class GraftScanBuilder(root: String, version: Long,
     // (boundary files survive a strict '>'); re-decide each file by
     // its constant, which is total on a value-pure table
     val kept = consumedKeep(kept0)
-    val tombKey = tombs.headOption.map(_.statsKey.getOrElse(
-      throw new IllegalStateException(
-        s"tombstone entry without a key column at $root")))
-    val descs = (limitKept.map(_._2) ++ offsetSkip.map(_._3)).toSeq
-    new GraftScan(root, version, kept, data.size, required, pushed,
-      tombs, tombKey,
-      tombKey.map(k => fullSchema.fields.find(_.name == k).getOrElse(
+    // the kill key as the schema spells it (SQL resolution is
+    // case-insensitive; the files are read that way too)
+    val tombKey = tombs.headOption.map { t =>
+      val k = t.statsKey.getOrElse(throw new IllegalStateException(
+        s"tombstone entry without a key column at $root"))
+      fullSchema.fields.find(_.name.equalsIgnoreCase(k)).getOrElse(
         throw new IllegalStateException(
-          s"tombstone key '$k' missing from table schema")).dataType),
+          s"tombstone key '$k' missing from table schema"))
+    }
+    val descs = (limitKept.map(_._2) ++ offsetSkip.map(_._3)).toSeq
+    new GraftScan(spark, root, version, fullSchema, kept, data.size,
+      required, pushed, tombs, tombKey.map(_.name),
+      tombKey.map(_.dataType),
       if (descs.isEmpty) None else Some(descs.mkString(" ")),
       offsetSkip.collect { case (ks, rem, _) if rem > 0 && ks.nonEmpty =>
         (ks.head.path, rem) }, onPlan, streamStart, streamBranch,
@@ -1249,24 +1271,22 @@ private[connector] object GraftPruning {
     case _ => None
   }
 
-  /** Typed endpoints for an IN list — a LEXICAL min/max over numeric
-    * strings would invert ("10" < "9") and prune files that hold
-    * matches, so endpoints are chosen under the value type's own
-    * ordering. */
-  private def minMax(vs: Seq[Any]): (Option[String], Option[String]) = {
+  /** Endpoints for an IN list, chosen under the column type's own stat
+    * ordering — the one pruning compares bounds in. A LEXICAL min/max
+    * over numeric strings would invert ("10" < "9"), and a `double`
+    * ordering collapses longs past 2^53 (and wide decimals) onto one
+    * endpoint; either prunes files that hold matches. */
+  private def minMax(vs: Seq[Any], dt: Option[DataType])
+  : (Option[String], Option[String]) = {
     val clean = vs.filter(_ != null)
-    if (clean.isEmpty) return (None, None)
-    clean.head match {
-      case _: java.lang.Number
-        if clean.forall(_.isInstanceOf[java.lang.Number]) =>
-        val ds = clean.map(v =>
-          v.asInstanceOf[java.lang.Number].doubleValue() -> v)
-        (str(ds.minBy(_._1)._2), str(ds.maxBy(_._1)._2))
-      case _: String if clean.forall(_.isInstanceOf[String]) =>
-        val ss = clean.map(_.asInstanceOf[String])
-        (Some(ss.min), Some(ss.max))
-      case _ => (None, None)
-    }
+    val cmp = dt.flatMap(SnapshotTable.statOrdering)
+    if (clean.isEmpty || cmp.isEmpty ||
+      !(clean.forall(_.isInstanceOf[java.lang.Number]) ||
+        clean.forall(_.isInstanceOf[String]))) return (None, None)
+    // a literal the column ordering cannot parse prunes nothing
+    scala.util.Try(clean.flatMap(str).sortWith(cmp.get(_, _) < 0))
+      .toOption.fold((Option.empty[String], Option.empty[String]))(s =>
+        (s.headOption, s.lastOption))
   }
 
   /** A RENAMED column's per-file stats live under the file's PHYSICAL
@@ -1276,52 +1296,45 @@ private[connector] object GraftPruning {
     * renames: an old file whose physical `x` holds a DIFFERENT
     * logical column is only ever matched under the predicate column's
     * own epoch name for that file, never bare `x`. */
-  private def perPhysical(mSchema: Option[StructType], c: String,
+  private def perPhysical(schema: StructType, c: String,
       entries: Seq[FileEntry])(
       pruneGroup: (String, Seq[FileEntry]) => Seq[FileEntry])
-  : Seq[FileEntry] = {
-    val fd = mSchema.flatMap(_.fields.find(_.name.equalsIgnoreCase(c)))
-    fd match {
+  : Seq[FileEntry] =
+    schema.fields.find(_.name.equalsIgnoreCase(c)) match {
       case Some(field)
         if SnapshotTable.renameEpochs(field).nonEmpty =>
         entries.groupBy(e => SnapshotTable.physicalName(field, e.seq))
           .toSeq.flatMap { case (p, g) => pruneGroup(p, g) }
       case _ => pruneGroup(c, entries)
     }
-  }
 
+  /** `schema` is the schema the scan reads under, field metadata
+    * included: it types the literals and carries the rename epochs.
+    * Equality and IN also probe the blooms. */
   def prune(spark: SparkSession, root: String, schema: StructType,
-      mSchema: Option[StructType], entries: Seq[FileEntry], f: Filter)
-  : Seq[FileEntry] = f match {
-    case EqualTo(c, v) =>
-      perPhysical(mSchema, c, entries)((p, es) =>
-        byRange(spark, root, mSchema,
-          byBloom(schema, es, c, p, Seq(v)), p, str(v), str(v)))
-    case In(c, vs) =>
-      val (lo, hi) = minMax(vs.toSeq)
-      perPhysical(mSchema, c, entries)((p, es) =>
-        byRange(spark, root, mSchema,
-          byBloom(schema, es, c, p, vs.toSeq), p, lo, hi))
-    case GreaterThan(c, v) =>
-      perPhysical(mSchema, c, entries)((p, es) =>
-        byRange(spark, root, mSchema, es, p, str(v), None))
-    case GreaterThanOrEqual(c, v) =>
-      perPhysical(mSchema, c, entries)((p, es) =>
-        byRange(spark, root, mSchema, es, p, str(v), None))
-    case LessThan(c, v) =>
-      perPhysical(mSchema, c, entries)((p, es) =>
-        byRange(spark, root, mSchema, es, p, None, str(v)))
-    case LessThanOrEqual(c, v) =>
-      perPhysical(mSchema, c, entries)((p, es) =>
-        byRange(spark, root, mSchema, es, p, None, str(v)))
-    case _ => entries
+      entries: Seq[FileEntry], f: Filter): Seq[FileEntry] = {
+    def dt(c: String) =
+      schema.fields.find(_.name.equalsIgnoreCase(c)).map(_.dataType)
+    val (c, lo, hi, probes) = f match {
+      case EqualTo(c, v) => (c, str(v), str(v), Some(Seq(v)))
+      case In(c, vs) =>
+        val (lo, hi) = minMax(vs.toSeq, dt(c))
+        (c, lo, hi, Some(vs.toSeq))
+      case GreaterThan(c, v) => (c, str(v), None, None)
+      case GreaterThanOrEqual(c, v) => (c, str(v), None, None)
+      case LessThan(c, v) => (c, None, str(v), None)
+      case LessThanOrEqual(c, v) => (c, None, str(v), None)
+      case _ => return entries
+    }
+    perPhysical(schema, c, entries) { (p, es) =>
+      val probed = (probes, dt(c)) match {
+        case (Some(vs), Some(t)) => SnapshotTable.bloomPrune(es, vs, t, p)
+        case _ => es
+      }
+      SnapshotTable.pruneEntriesOf(spark, root, probed, Some(schema), p,
+        lo, hi)
+    }
   }
-
-  private def byRange(spark: SparkSession, root: String,
-      mSchema: Option[StructType], entries: Seq[FileEntry], col: String,
-      lo: Option[String], hi: Option[String]): Seq[FileEntry] =
-    SnapshotTable.pruneEntriesOf(spark, root, entries, mSchema, col,
-      lo, hi)
 
   /** Hash-bucket pruning: the writer routed every row of a layout key
     * value v into exactly one per-key bucket — `pmod(murmur3(v), n)`,
@@ -1381,30 +1394,8 @@ private[connector] object GraftPruning {
       }
     }
   }
-
-  /** `col` is the LOGICAL column (for the type lookup), `phys` the
-    * name this group of files records bloom stats under. */
-  private def byBloom(schema: StructType, entries: Seq[FileEntry],
-      col: String, phys: String, values: Seq[Any]): Seq[FileEntry] = {
-    if (!entries.exists(e =>
-      e.bloomKey.contains(phys) && e.bloom.isDefined)) return entries
-    val dt = schema.fields.find(_.name == col).map(_.dataType)
-      .getOrElse(return entries)
-    val hashes = values.filter(_ != null).map(v =>
-      graft.functions.Hll.hashValue(
-        graft.functions.Bloom.toCatalyst(v), dt))
-    entries.filter { e =>
-      if (e.bloomKey.contains(phys) && e.bloom.isDefined) {
-        val (k, words) = graft.functions.Bloom.fromBytes(e.bloom.get)
-        hashes.exists(h =>
-          graft.functions.Bloom.mightContain(words, k, h))
-      } else true
-    }
-  }
 }
 
-/** Version-number offset for the snapshot streaming source — the
-  * commit log IS the offset space. */
 /** A stream position: everything up to `version`, inclusive — except
   * that with `index >= 0` only the FIRST `index` files ADDED by
   * `version` are consumed (a rate-limited batch stopped mid-commit).
@@ -2003,9 +1994,6 @@ private[connector] class GraftChangesMicroBatchStream(root: String,
   * driver-side pre-filter. */
 private[connector] case class TombRef(absolutePath: String, seq: Long)
 
-/** One InputPartition per data file — the natural parallelism of an
-  * immutable-file table. `tombs` is empty for compacted tables;
-  * `keyName`/`keyTypeJson` are null then. */
 /** All of one grid cell's files as ONE input partition, keyed by the
   * per-key bucket tuple — the unit of a storage-partitioned join:
   * Spark matches partitions of two scans by [[partitionKey]] (one
@@ -2045,6 +2033,15 @@ private[connector] case class GraftValuePartition(
   }
 }
 
+/** Several small files of a scan without a storage layout as ONE
+  * input partition, read one after another. */
+private[connector] case class GraftFilesPartition(
+    parts: Array[GraftInputPartition]) extends InputPartition
+
+/** One data file's read — an input partition of its own, or one of
+  * the files a [[GraftFilesPartition]] or a storage-layout partition
+  * chains. `tombs` is empty for compacted tables;
+  * `keyName`/`keyTypeJson` are null then. */
 private[connector] case class GraftInputPartition(absolutePath: String,
     seq: Long, tombs: Array[TombRef], keyName: String,
     keyTypeJson: String, skipRows: Long = 0L,
@@ -2169,7 +2166,12 @@ private[connector] object GraftScan {
     }
 }
 
-private[connector] class GraftScan(root: String, version: Long,
+/** `tableSchema` is the schema the scan reads under, field metadata
+  * (initial defaults, rename epochs) included; `spark` is the session
+  * the read was planned in, for manifests, properties and the readers'
+  * Hadoop conf. */
+private[graft] class GraftScan(@transient spark: SparkSession,
+    root: String, version: Long, tableSchema: StructType,
     keptData: Seq[FileEntry], totalFiles: Int, required: StructType,
     pushed: Array[Filter], tombs: Seq[FileEntry],
     tombKey: Option[String], tombKeyType: Option[DataType],
@@ -2187,13 +2189,15 @@ private[connector] class GraftScan(root: String, version: Long,
   // starts at the compile-time pruned set
   @volatile private var runtimeKept: Seq[FileEntry] = keptData
 
+  /** The table's properties (declared layouts, histograms), read once
+    * per scan. */
+  private lazy val props = SnapshotTable.tableProperties(spark, root)
+
   /** The table's declared hash-bucket layout, honored only when EVERY
     * kept data file still carries a bucket id (maintenance that
     * rewrote files unbucketed degrades to unknown partitioning — a
     * performance downgrade, never a correctness risk). */
   private lazy val bucketSpec: Option[Seq[(String, Int)]] = {
-    val props = SnapshotTable
-      .tableProperties(SparkSession.active, root)
     // comma-joined lists = composite (grid) layout, one per-column
     // bucket transform per key; judged on the COMPILE-TIME kept set:
     // runtime filtering only ever empties a reported bucket's file
@@ -2228,13 +2232,11 @@ private[connector] class GraftScan(root: String, version: Long,
   private lazy val identitySpec: Seq[(String, DataType)] = {
     if (bucketSpec.isDefined) Seq.empty
     else {
-      val keys = SnapshotTable.partitionKeysOf(
-        SnapshotTable.tableProperties(SparkSession.active, root))
-        .flatMap(k => scanSchema.fields
+      val declared = SnapshotTable.partitionKeysOf(props)
+      val keys = declared.flatMap(k => tableSchema.fields
           .find(_.name.equalsIgnoreCase(k))
           .map(f => (f.name, f.dataType)))
-      if (keys.size == SnapshotTable.partitionKeysOf(
-          SnapshotTable.tableProperties(SparkSession.active, root)).size &&
+      if (keys.size == declared.size &&
         keys.nonEmpty && keptData.nonEmpty &&
         keys.forall { case (k, _) =>
           keptData.forall(GraftScan.pureValueOf(_, k).isDefined) })
@@ -2286,7 +2288,7 @@ private[connector] class GraftScan(root: String, version: Long,
             }.toArray, reportedValues.size)
         else
           new org.apache.spark.sql.connector.read.partitioning
-            .UnknownPartitioning(runtimeKept.size)
+            .UnknownPartitioning(packed.size)
     }
 
   /** Per-partition SORT ORDER this scan guarantees. On an identity
@@ -2315,6 +2317,10 @@ private[connector] class GraftScan(root: String, version: Long,
     }.toArray
 
   override def readSchema(): StructType = required
+
+  /** Absolute paths of the data files this scan plans to read. */
+  private[graft] def plannedFiles: Seq[String] =
+    runtimeKept.map(e => new Path(root, e.path).toString)
 
   override def description(): String =
     s"graft-snapshot v$version files=${keptData.length}/$totalFiles " +
@@ -2353,25 +2359,20 @@ private[connector] class GraftScan(root: String, version: Long,
     }
   }
 
-  /** This version's schema WITH field metadata (initial defaults,
-    * rename epochs) — evaluated once per scan (metadata only). */
-  private lazy val scanSchema: StructType = GraftSnapshotSource
-    .schemaOf(SparkSession.active, root, version)
-
   /** Initial defaults declared in this version's schema, restricted
     * to projected columns — evaluated once per scan (metadata only). */
   private lazy val scanInitFills: Seq[SnapshotTable.InitFill] =
-    SnapshotTable.initFills(scanSchema)
+    SnapshotTable.initFills(tableSchema)
       .filter(f => required.fieldNames.exists(_.equalsIgnoreCase(f.name)))
 
   private lazy val scanHasRenames: Boolean =
-    scanSchema.fields.exists(SnapshotTable.renameEpochs(_).nonEmpty)
+    tableSchema.fields.exists(SnapshotTable.renameEpochs(_).nonEmpty)
 
   /** `_file` is the metadata column unless the table stores a data
     * column of that name (data columns resolve first). */
   private lazy val fileMetaRequested: Boolean =
     required.fieldNames.contains(GraftFileMetadataColumn.Name) &&
-      !scanSchema.fieldNames.contains(GraftFileMetadataColumn.Name)
+      !tableSchema.fieldNames.contains(GraftFileMetadataColumn.Name)
 
   private def filePartition(e: FileEntry): GraftInputPartition = {
     val mine = tombs.filter(applies(_, e)).map(t =>
@@ -2392,7 +2393,7 @@ private[connector] class GraftScan(root: String, version: Long,
       scanInitFills.filter(_.addedAt > e.seq)
         .map(f => (f.name, f.rendered)).toArray ++ fileFill,
       aliases = if (!scanHasRenames) Array.empty
-        else SnapshotTable.aliasesAt(scanSchema, e.seq).toArray)
+        else SnapshotTable.aliasesAt(tableSchema, e.seq).toArray)
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
@@ -2428,15 +2429,47 @@ private[connector] class GraftScan(root: String, version: Long,
                 .map(filePartition).toArray, vs, typeJsons)
               : InputPartition
           }.toArray
-        } else
-          runtimeKept.map(filePartition(_): InputPartition).toArray
+        } else packed.map(g =>
+          (if (g.size == 1) filePartition(g.head)
+          else GraftFilesPartition(g.map(filePartition).toArray))
+            : InputPartition).toArray
     }
   }
 
+  /** The kept files grouped into input partitions the way Spark's file
+    * scan packs them (`spark.sql.files.maxPartitionBytes`,
+    * `openCostInBytes`, the leaf parallelism), so a read of many small
+    * files runs a few tasks rather than one per file. Largest files
+    * first, as Spark orders them. */
+  private def packed: Seq[Seq[FileEntry]] = {
+    val conf = spark.sessionState.conf
+    val open = conf.filesOpenCostInBytes
+    lazy val f = SnapshotTable.fs(spark, root)
+    val sized = runtimeKept.map(e =>
+      e -> e.bytes.getOrElse(SnapshotTable.entryBytes(f, root, e)))
+      .sortBy(-_._2)
+    val parallelism = conf.filesMinPartitionNum.getOrElse(
+      conf.getConf(org.apache.spark.sql.internal.SQLConf
+        .LEAF_NODE_DEFAULT_PARALLELISM)
+        .getOrElse(spark.sparkContext.defaultParallelism))
+    val maxSplit = math.min(conf.filesMaxPartitionBytes,
+      math.max(open, sized.map(_._2 + open).sum / parallelism))
+    sized.foldLeft((Vector.empty[Vector[FileEntry]], 0L)) {
+      case ((gs, size), (e, bytes)) =>
+        if (gs.nonEmpty && size + bytes <= maxSplit)
+          (gs.init :+ (gs.last :+ e), size + bytes + open)
+        else (gs :+ Vector(e), bytes + open)
+    }._1
+  }
+
+  /** A copy-on-write group read (`onPlan`) rewrites EVERY row of each
+    * planned file, so its filters only choose files: skipping row
+    * groups would drop rows the rewrite must carry over. */
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(required.json, pushed,
-      SerializableHadoopConf.broadcast(SparkSession.active),
-      org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
+    new GraftReaderFactory(required.json,
+      if (onPlan.isDefined) Array.empty[Filter] else pushed,
+      SerializableHadoopConf.broadcast(spark),
+      spark.sessionState.conf.sessionLocalTimeZone)
 
   /** Size-accurate planning: a v2 scan without statistics defaults to
     * "unknown = huge", which forbids the planner from ever
@@ -2449,7 +2482,6 @@ private[connector] class GraftScan(root: String, version: Long,
     * minute planning. */
   override def estimateStatistics(): Statistics = new Statistics {
     private val bytes: java.util.OptionalLong = {
-      val spark = SparkSession.active
       lazy val f = SnapshotTable.fs(spark, root)
       java.util.OptionalLong.of((runtimeKept ++ tombs).map(e =>
         e.bytes.getOrElse(SnapshotTable.entryBytes(f, root, e))).sum)
@@ -2491,12 +2523,12 @@ private[connector] class GraftScan(root: String, version: Long,
       // equi-height histograms (analyzeHistograms): table-level and
       // version-stamped — reported only for UNPRUNED scans of exactly
       // that version, so they never describe files a query skipped.
-      // The cheap pruning check gates the side-file read: an
-      // un-histogrammed or pruned scan never pays the properties IO.
-      lazy val props = SnapshotTable
-        .tableProperties(SparkSession.active, root)
+      // A pinned entry view is whole-version only when it keeps every
+      // data file of the version's manifest.
       val histOk = runtimeKept.size == totalFiles &&
-        props.get("graft.hist.version").contains(version.toString)
+        props.get("graft.hist.version").contains(version.toString) &&
+        totalFiles ==
+          SnapshotTable.readManifest(spark, root, version).count(_.kind == "d")
       def histFor(name: String): Option[
         org.apache.spark.sql.connector.read.colstats.Histogram] =
         if (!histOk) None
@@ -2585,9 +2617,7 @@ private[connector] class GraftScan(root: String, version: Long,
     * machinery as compile-time pushdown. */
   override def filterAttributes()
   : Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
-    val spark = SparkSession.active
-    val entries = SnapshotTable.readManifestFull(spark, root, version)._1
-      .filter(_.kind == "d")
+    val entries = keptData
     val prunable = required.fieldNames.filter(c => entries.exists(e =>
       e.statsFor(c).isDefined ||
         (e.bloomKey.contains(c) && e.bloom.isDefined)))
@@ -2596,17 +2626,13 @@ private[connector] class GraftScan(root: String, version: Long,
   }
 
   override def filter(filters: Array[Filter]): Unit = {
-    val spark = SparkSession.active
-    val mSchema =
-      SnapshotTable.readManifestFull(spark, root, version)._2
     val ranged = filters.foldLeft(runtimeKept)((es, f) =>
-      GraftPruning.prune(spark, root, required, mSchema, es, f))
+      GraftPruning.prune(spark, root, tableSchema, es, f))
     // a runtime IN on the bucket key (dynamic pruning from a joined
     // dim) narrows to the named cells — the raw declared layout, not
     // [[bucketSpec]]: pruning keeps cell-less files, so it needs no
     // every-file guarantee
-    runtimeKept = SnapshotTable.bucketLayoutOf(
-      SnapshotTable.tableProperties(spark, root)) match {
+    runtimeKept = SnapshotTable.bucketLayoutOf(props) match {
       case Some(layout) => filters.foldLeft(ranged)((es, f) =>
         GraftPruning.pruneBucket(required, layout, es, f))
       case None => ranged
@@ -2642,6 +2668,8 @@ private[connector] class GraftReaderFactory(requiredJson: String,
     partition match {
       case GraftValuePartition(parts, _, _) =>
         // one value = several files: same chained shape as a cell
+        createColumnarReader(GraftBucketedPartition(parts, Seq.empty))
+      case GraftFilesPartition(parts) =>
         createColumnarReader(GraftBucketedPartition(parts, Seq.empty))
       case GraftBucketedPartition(parts, _) =>
         // one grid cell = several files: chain their batch readers,
@@ -2756,80 +2784,60 @@ private[connector] object GraftParquetFilters {
     case _ => None
   }
 
-  /** The file column's DECIMAL scale, when it is decimal-annotated. */
-  private def decimalScale(
-      t: org.apache.parquet.schema.Type): Option[Int] =
-    t.asPrimitiveType().getLogicalTypeAnnotation match {
-      case d: org.apache.parquet.schema.LogicalTypeAnnotation
-        .DecimalLogicalTypeAnnotation => Some(d.getScale)
-      case _ => None
-    }
+  private def compare[T <: Comparable[T], C <: org.apache.parquet
+      .filter2.predicate.Operators.Column[T] with org.apache.parquet
+      .filter2.predicate.Operators.SupportsLtGt](col: C, v: T,
+      op: String): FilterPredicate = op match {
+    case "eq" => FilterApi.eq(col, v)
+    case "gt" => FilterApi.gt(col, v)
+    case "gtEq" => FilterApi.gtEq(col, v)
+    case "lt" => FilterApi.lt(col, v)
+    case "ltEq" => FilterApi.ltEq(col, v)
+  }
 
   /** One comparison leaf, or None when the file/column/literal shape
-    * does not line up exactly. */
+    * does not line up exactly. Timestamps compare as the epoch micros
+    * the engine writes (`TIMESTAMP(MICROS)`); millis, nanos and INT96
+    * columns drop out, as they would round the bound. */
   private def leaf(schema: MessageType, c: String, v: Any,
       op: String): Option[FilterPredicate] = {
     if (v == null || !schema.containsField(c)) return None
     val t = schema.getType(schema.getFieldIndex(c))
     if (!t.isPrimitive) return None
     import PrimitiveType.PrimitiveTypeName._
-    (t.asPrimitiveType().getPrimitiveTypeName, v) match {
-      case (INT32, i: java.lang.Integer)
-        if t.getLogicalTypeAnnotation == null ||
-          t.getLogicalTypeAnnotation.isInstanceOf[
-            org.apache.parquet.schema.LogicalTypeAnnotation
-              .IntLogicalTypeAnnotation] =>
-        val col = FilterApi.intColumn(c)
-        Some(op match {
-          case "eq" => FilterApi.eq(col, i)
-          case "gt" => FilterApi.gt(col, i)
-          case "gtEq" => FilterApi.gtEq(col, i)
-          case "lt" => FilterApi.lt(col, i)
-          case "ltEq" => FilterApi.ltEq(col, i)
-        })
-      case (INT64, l: java.lang.Long)
-        if t.getLogicalTypeAnnotation == null ||
-          t.getLogicalTypeAnnotation.isInstanceOf[
-            org.apache.parquet.schema.LogicalTypeAnnotation
-              .IntLogicalTypeAnnotation] =>
-        val col = FilterApi.longColumn(c)
-        Some(op match {
-          case "eq" => FilterApi.eq(col, l)
-          case "gt" => FilterApi.gt(col, l)
-          case "gtEq" => FilterApi.gtEq(col, l)
-          case "lt" => FilterApi.lt(col, l)
-          case "ltEq" => FilterApi.ltEq(col, l)
-        })
-      case (FLOAT, fl: java.lang.Float) =>
-        val col = FilterApi.floatColumn(c)
-        Some(op match {
-          case "eq" => FilterApi.eq(col, fl)
-          case "gt" => FilterApi.gt(col, fl)
-          case "gtEq" => FilterApi.gtEq(col, fl)
-          case "lt" => FilterApi.lt(col, fl)
-          case "ltEq" => FilterApi.ltEq(col, fl)
-        })
-      case (DOUBLE, d: java.lang.Double) =>
-        val col = FilterApi.doubleColumn(c)
-        Some(op match {
-          case "eq" => FilterApi.eq(col, d)
-          case "gt" => FilterApi.gt(col, d)
-          case "gtEq" => FilterApi.gtEq(col, d)
-          case "lt" => FilterApi.lt(col, d)
-          case "ltEq" => FilterApi.ltEq(col, d)
-        })
-      case (BINARY, s: String)
-        if t.getLogicalTypeAnnotation ==
-          org.apache.parquet.schema.LogicalTypeAnnotation.stringType() =>
-        val col = FilterApi.binaryColumn(c)
-        val b = Binary.fromString(s)
-        Some(op match {
-          case "eq" => FilterApi.eq(col, b)
-          case "gt" => FilterApi.gt(col, b)
-          case "gtEq" => FilterApi.gtEq(col, b)
-          case "lt" => FilterApi.lt(col, b)
-          case "ltEq" => FilterApi.ltEq(col, b)
-        })
+    import org.apache.parquet.schema.LogicalTypeAnnotation._
+    import org.apache.spark.sql.catalyst.util.DateTimeUtils
+    def int(i: Int) = Some(compare(FilterApi.intColumn(c), Int.box(i), op))
+    def long(l: Long) =
+      Some(compare(FilterApi.longColumn(c), Long.box(l), op))
+    def micros(ts: TimestampLogicalTypeAnnotation, utc: Boolean) =
+      ts.getUnit == TimeUnit.MICROS && ts.isAdjustedToUTC == utc
+    (t.asPrimitiveType().getPrimitiveTypeName,
+      t.getLogicalTypeAnnotation, v) match {
+      case (INT32, null | _: IntLogicalTypeAnnotation, i: java.lang.Integer) =>
+        int(i)
+      case (INT32, _: IntLogicalTypeAnnotation, i: java.lang.Short) =>
+        int(i.toInt)
+      case (INT32, _: IntLogicalTypeAnnotation, i: java.lang.Byte) =>
+        int(i.toInt)
+      case (INT32, _: DateLogicalTypeAnnotation,
+          d @ (_: java.sql.Date | _: java.time.LocalDate)) =>
+        int(DateTimeUtils.anyToDays(d))
+      case (INT64, null | _: IntLogicalTypeAnnotation, l: java.lang.Long) =>
+        long(l)
+      case (INT64, ts: TimestampLogicalTypeAnnotation,
+          i @ (_: java.sql.Timestamp | _: java.time.Instant))
+        if micros(ts, utc = true) =>
+        long(DateTimeUtils.anyToMicros(i))
+      case (INT64, ts: TimestampLogicalTypeAnnotation,
+          l: java.time.LocalDateTime) if micros(ts, utc = false) =>
+        long(DateTimeUtils.localDateTimeToMicros(l))
+      case (FLOAT, _, fl: java.lang.Float) =>
+        Some(compare(FilterApi.floatColumn(c), fl, op))
+      case (DOUBLE, _, d: java.lang.Double) =>
+        Some(compare(FilterApi.doubleColumn(c), d, op))
+      case (BINARY, _: StringLogicalTypeAnnotation, s: String) =>
+        Some(compare(FilterApi.binaryColumn(c), Binary.fromString(s), op))
       // DECIMAL stored compact (INT32 for p<=9, INT64 for p<=18 — the
       // overwhelmingly common shapes): compare UNSCALED values at the
       // FILE's scale. The literal must re-scale exactly (trailing
@@ -2837,36 +2845,14 @@ private[connector] object GraftParquetFilters {
       // round; unscaled order == decimal order at equal scale, so a
       // kept leaf can never wrong-prune. FLBA decimals stay
       // untranslated (residual evaluation keeps them exact).
-      case (INT32, bd: java.math.BigDecimal)
-        if decimalScale(t).isDefined =>
-        scala.util.Try[FilterPredicate] {
-          val u = java.lang.Integer.valueOf(bd
-            .setScale(decimalScale(t).get).unscaledValue()
-            .intValueExact())
-          val col = FilterApi.intColumn(c)
-          op match {
-            case "eq" => FilterApi.eq(col, u)
-            case "gt" => FilterApi.gt(col, u)
-            case "gtEq" => FilterApi.gtEq(col, u)
-            case "lt" => FilterApi.lt(col, u)
-            case "ltEq" => FilterApi.ltEq(col, u)
-          }
-        }.toOption
-      case (INT64, bd: java.math.BigDecimal)
-        if decimalScale(t).isDefined =>
-        scala.util.Try[FilterPredicate] {
-          val u = java.lang.Long.valueOf(bd
-            .setScale(decimalScale(t).get).unscaledValue()
-            .longValueExact())
-          val col = FilterApi.longColumn(c)
-          op match {
-            case "eq" => FilterApi.eq(col, u)
-            case "gt" => FilterApi.gt(col, u)
-            case "gtEq" => FilterApi.gtEq(col, u)
-            case "lt" => FilterApi.lt(col, u)
-            case "ltEq" => FilterApi.ltEq(col, u)
-          }
-        }.toOption
+      case (INT32, d: DecimalLogicalTypeAnnotation,
+          bd: java.math.BigDecimal) =>
+        scala.util.Try(bd.setScale(d.getScale).unscaledValue()
+          .intValueExact()).toOption.flatMap(int)
+      case (INT64, d: DecimalLogicalTypeAnnotation,
+          bd: java.math.BigDecimal) =>
+        scala.util.Try(bd.setScale(d.getScale).unscaledValue()
+          .longValueExact()).toOption.flatMap(long)
       case _ => None
     }
   }
@@ -2896,6 +2882,8 @@ private[connector] object GraftTombstones {
     keyType match {
       case LongType => col.getLong(r)
       case IntegerType | DateType => col.getInt(r)
+      case ShortType => col.getShort(r)
+      case ByteType => col.getByte(r)
       case DoubleType => col.getDouble(r)
       case FloatType => col.getFloat(r)
       case BooleanType => col.getBoolean(r)
@@ -3019,6 +3007,18 @@ private[graft] class GraftColumnarReader(file: String,
     conf.set(C.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key, "false")
     conf.set(C.LEGACY_PARQUET_NANOS_AS_LONG.key, "false")
   }
+  // the footer, read ONCE through the stream the reader then keeps
+  // (Spark's own file scan does the same): a footer read through
+  // `ParquetFileReader.open(InputFile)` would build its options from
+  // a fresh default Configuration, re-parsing the Hadoop XML defaults
+  // for every file
+  private val inputFile = HadoopInputFile.fromPath(new Path(file), conf)
+  private val stream = inputFile.newStream()
+  private val footer =
+    try ParquetFileReader.readFooter(inputFile,
+      org.apache.parquet.HadoopReadOptions.builder(conf, new Path(file))
+        .build(), stream)
+    catch { case t: Throwable => stream.close(); throw t }
   // row-group pruning under a pushed predicate: compile against the
   // FOOTER schema (strict name+physical-type match — schema evolution
   // never mistranslates; unsupported shapes drop out, pruning less
@@ -3037,12 +3037,8 @@ private[graft] class GraftColumnarReader(file: String,
       // filter returned 0 while collect() was exact, because count's
       // column pruning removed the filter column).
       conf.setBoolean("parquet.filter.columnindex.enabled", false)
-      val footer = {
-        val r = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new Path(file), conf))
-        try r.getFooter.getFileMetaData.getSchema finally r.close()
-      }
-      GraftParquetFilters.build(pushed, footer).foreach(p =>
+      GraftParquetFilters.build(pushed,
+        footer.getFileMetaData.getSchema).foreach(p =>
         org.apache.parquet.hadoop.ParquetInputFormat
           .setFilterPredicate(conf, p))
     }
@@ -3053,7 +3049,8 @@ private[graft] class GraftColumnarReader(file: String,
     /* useOffHeap = */ false, /* capacity = */ 4096)
   reader.initialize(
     new FileSplit(new Path(file), 0, Long.MaxValue, Array.empty[String]),
-    new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+    new TaskAttemptContextImpl(conf, new TaskAttemptID()),
+    Some(inputFile), Some(stream), Some(footer))
   reader.initBatch(StructType(Nil), new GenericInternalRow(0))
   reader.enableReturningBatches()
 

@@ -166,7 +166,7 @@ class BucketPruneSpec extends SparkSpec {
     // stay stable), so observe the FILE set through the plan hook
     var planned: Seq[graft.sources.SnapshotTable.FileEntry] = Seq.empty
     val builder = new graft.sources.connector.GraftScanBuilder(
-      root, 1L, readFmt(root).load().schema,
+      spark, root, 1L, readFmt(root).load().schema,
       onPlan = Some(es => planned = es))
     val built = builder.build()
     built.asInstanceOf[org.apache.spark.sql.connector.read.Batch]

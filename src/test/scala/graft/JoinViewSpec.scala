@@ -135,8 +135,8 @@ class JoinViewSpec extends SparkSpec {
       clusterKey = Some("c_custkey"), files = 4)
     MaterializedView.refreshJoinIncremental(spark, v) // bootstrap
 
-    val factV1Files = SnapshotTable.readVersion(spark, v.factRoot, 1L)
-      .inputFiles.toSet
+    val factV1Files =
+      plannedFiles(SnapshotTable.readVersion(spark, v.factRoot, 1L)).toSet
     assert(factV1Files.size == 8, "clustered commit should stage 8 files")
 
     // fact-only: ΔF ⋈ D_new must read ONLY the appended fact files
@@ -148,7 +148,7 @@ class JoinViewSpec extends SparkSpec {
     val curD = SnapshotTable.currentVersion(spark, v.dimRoot)
     val (rowsF, cleanF) = MaterializedView.joinSignedRows(spark, v,
       lastF = 1L, lastD = curD, curF = curF, curD = curD).get
-    val openedF = rowsF.inputFiles.toSet
+    val openedF = plannedFiles(rowsF).toSet
     cleanF()
     assert((openedF intersect factV1Files).isEmpty,
       s"fact-only delta re-opened pre-existing fact files: " +
@@ -167,7 +167,7 @@ class JoinViewSpec extends SparkSpec {
       lastF = lastF2, lastD = curD,
       curF = lastF2,
       curD = SnapshotTable.currentVersion(spark, v.dimRoot)).get
-    val openedD = rowsD.inputFiles.toSet intersect factV1Files
+    val openedD = plannedFiles(rowsD).toSet intersect factV1Files
     cleanD()
     assert(openedD.size < factV1Files.size,
       s"dim-only delta opened ${openedD.size}/${factV1Files.size} " +

@@ -4,8 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-level guards over src/main/scala: the engine's settable
   * `spark.graft.*` keys, pinned (a new knob has to be added here, next
-  * to the three that remain), and the connector's one parquet decoder
-  * (a second, parquet-mr record decoder has to edit this spec). */
+  * to the three that remain), the connector's one parquet decoder
+  * (a second, parquet-mr record decoder has to edit this spec), and
+  * SnapshotTable's one read route, the connector's scan. */
 class KnobGuardSpec extends AnyFunSuite {
 
   private def sources(d: java.io.File): Seq[java.io.File] =
@@ -42,5 +43,16 @@ class KnobGuardSpec extends AnyFunSuite {
           text.contains("GroupReadSupport") => f.getPath
     }
     assert(hits.isEmpty, s"a second parquet decoder: $hits")
+  }
+
+  test("SnapshotTable reads through the connector's scan only: no " +
+      "explicit-schema parquet read, input_file_name or left tombstone " +
+      "join") {
+    val text = mainSources().collectFirst {
+      case (f, t) if f.getName == "SnapshotTable.scala" => t
+    }.get
+    val hits = Seq("read.schema(", "input_file_name", "\"left\"")
+      .filter(text.contains)
+    assert(hits.isEmpty, s"a second read engine in SnapshotTable: $hits")
   }
 }

@@ -123,8 +123,8 @@ class MvMinMaxSpec extends SparkSpec {
       clusterKey = Some("o_orderstatus"), files = 6,
       bloomKey = Some("o_orderkey"))
     MaterializedView.refreshIncremental(spark, v)
-    val srcV1Files = SnapshotTable.readVersion(spark, v.sourceRoot, 1L)
-      .inputFiles.toSet
+    val srcV1Files =
+      plannedFiles(SnapshotTable.readVersion(spark, v.sourceRoot, 1L)).toSet
     assert(srcV1Files.size > 2, "need a multi-file source")
 
     // pending append only: the read-time frame must not touch v1 files
@@ -134,7 +134,13 @@ class MvMinMaxSpec extends SparkSpec {
         col("o_orderstatus"), col("o_totalprice")))
     val freshFrame = MaterializedView.readFresh(spark, v)
     assert(canon(freshFrame) == expected(v), "readFresh append-only")
-    assert((freshFrame.inputFiles.toSet intersect srcV1Files).isEmpty,
+    // readFresh returns its merge checkpointed: plan the merge itself
+    def mergeFiles(lastV: Long, curV: Long): Set[String] = {
+      val (merge, cleanup) = MaterializedView.freshMerge(spark, v,
+        SnapshotTable.currentVersion(spark, v.viewRoot), lastV, curV)
+      try plannedFiles(merge).toSet finally cleanup()
+    }
+    assert((mergeFiles(1L, 2L) intersect srcV1Files).isEmpty,
       "append-only min/max refresh re-read the source")
     MaterializedView.refreshIncremental(spark, v)
 
@@ -149,7 +155,7 @@ class MvMinMaxSpec extends SparkSpec {
       "o_orderkey")
     val freshDel = MaterializedView.readFresh(spark, v)
     assert(canon(freshDel) == expected(v), "readFresh delete-touched")
-    val touched = freshDel.inputFiles.toSet intersect srcV1Files
+    val touched = mergeFiles(2L, 3L) intersect srcV1Files
     assert(touched.size < srcV1Files.size,
       s"recompute opened ${touched.size}/${srcV1Files.size} source " +
         "files — group pruning lost")

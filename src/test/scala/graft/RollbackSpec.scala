@@ -24,8 +24,8 @@ class RollbackSpec extends SparkSpec {
     SnapshotTable.commit(spark, root, orders,
       clusterKey = Some("o_orderkey"))                       // v1
     val v1Rows = canon(root)
-    val v1Files = SnapshotTable.readVersion(spark, root, 1L)
-      .inputFiles.toSet
+    val v1Files =
+      plannedFiles(SnapshotTable.readVersion(spark, root, 1L)).toSet
 
     // a bad day: MOR-delete a slice, then append junk
     SnapshotTable.deleteKeysOnRead(spark, root,
@@ -41,7 +41,7 @@ class RollbackSpec extends SparkSpec {
     assert(target == 4L, "rollback mints a NEW version")
     assert(canon(root) == v1Rows, "contents restored exactly")
     // METADATA-ONLY: the restored version serves v1's physical files
-    assert(SnapshotTable.read(spark, root).inputFiles.toSet == v1Files)
+    assert(plannedFiles(SnapshotTable.read(spark, root)).toSet == v1Files)
     // history preserved: the bad versions stay time-travelable
     assert(SnapshotTable.versions(spark, root) == Seq(1L, 2L, 3L, 4L))
     assert(canon(root, Some(3L)) != v1Rows)

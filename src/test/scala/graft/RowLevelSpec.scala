@@ -130,6 +130,28 @@ class RowLevelSpec extends SparkSpec {
       Seq((2L, 20.0), (4L, 40.0)))
   }
 
+  test("a copy-on-write UPDATE carries every row of the files it " +
+      "rewrites, row groups its filter rules out included") {
+    spark.sql("CREATE TABLE graftrl.db.cowgroups (k BIGINT, v STRING)")
+    val root = s"$warehouse/db/cowgroups"
+    val hc = spark.sparkContext.hadoopConfiguration
+    val oldBlock = hc.get("parquet.block.size")
+    hc.setInt("parquet.block.size", 64 * 1024)
+    try SnapshotTable.append(spark, root,
+      (1 to 100000).map(i => (i.toLong, s"pad_pad_pad_pad_$i"))
+        .toDF("k", "v"),
+      clusterKey = Some("k"), files = 2)
+    finally {
+      if (oldBlock == null) hc.unset("parquet.block.size")
+      else hc.set("parquet.block.size", oldBlock)
+    }
+    spark.sql(
+      "UPDATE graftrl.db.cowgroups SET v = concat(v, '_x') WHERE k <= 1000")
+    val t = spark.table("graftrl.db.cowgroups")
+    assert(t.count() == 100000L)
+    assert(t.filter(col("v").endsWith("_x")).count() == 1000L)
+  }
+
   test("row-level UPDATE composes with merge-on-read state: the scan " +
       "reads through tombstones, so replacement files materialize the " +
       "merged rows and deleted keys stay deleted") {

@@ -123,12 +123,12 @@ class ScalingSpec extends SparkSpec {
     assert(total >= 16, s"expected a wide file grid, got $total")
     val byKey = SnapshotTable.readKeys(spark, root, "o_orderkey",
       Seq(1000L, 2000L, 3000L).toDF("o_orderkey"))
-    assert(byKey.inputFiles.length <= 3,
-      s"3 clustered keys opened ${byKey.inputFiles.length} of $total")
+    assert(plannedFiles(byKey).length <= 3,
+      s"3 clustered keys opened ${plannedFiles(byKey).length} of $total")
     val byBloom = SnapshotTable.readKeys(spark, root, "o_custkey",
       o.filter(col("o_custkey") === 77).select("o_custkey").limit(1))
-    assert(byBloom.inputFiles.length < total,
-      s"bloom lookup opened ${byBloom.inputFiles.length} of $total")
+    assert(plannedFiles(byBloom).length < total,
+      s"bloom lookup opened ${plannedFiles(byBloom).length} of $total")
   }
 
   test("10x storage-partitioned join: co-bucketed fact and dim still " +

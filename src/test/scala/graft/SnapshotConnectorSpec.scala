@@ -195,20 +195,19 @@ class SnapshotConnectorSpec extends SparkSpec {
     // the capability is wired: the scan names its filterable columns
     // (planner heuristics decide per-query whether to use them)
     val scan = new graft.sources.connector.GraftScanBuilder(
-      root, 1L, fact.schema)
+      spark, root, 1L, fact.schema)
     val built = scan.build()
       .asInstanceOf[org.apache.spark.sql.connector.read
         .SupportsRuntimeFiltering]
     assert(built.filterAttributes().map(_.toString).contains("k"))
-    val before = built.asInstanceOf[
-      org.apache.spark.sql.connector.read.Batch]
-      .planInputPartitions().length
+    // small files pack into fewer input partitions: count files
+    val before = built.asInstanceOf[graft.sources.connector.GraftScan]
+      .plannedFiles.length
     assert(before == total)
     built.filter(Array[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.In("k", Array(5L, 6L, 7L))))
-    val after = built.asInstanceOf[
-      org.apache.spark.sql.connector.read.Batch]
-      .planInputPartitions().length
+    val after = built.asInstanceOf[graft.sources.connector.GraftScan]
+      .plannedFiles.length
     assert(after < before,
       s"runtime IN filter pruned nothing ($after of $before)")
   }

@@ -552,7 +552,7 @@ class SnapshotTableSpec extends SparkSpec {
     // the plan must scan only the files v2 added, never v1's
     val added = SnapshotTable.manifest(spark, root, 2L).map(_.path).toSet --
       SnapshotTable.manifest(spark, root, 1L).map(_.path).toSet
-    val scanned = d.inputFiles.toSeq
+    val scanned = plannedFiles(d).toSeq
     assert(scanned.nonEmpty &&
       scanned.forall(f => added.exists(a => f.endsWith(a))),
       s"diff scanned beyond the added files: $scanned")
@@ -1153,27 +1153,27 @@ class SnapshotTableSpec extends SparkSpec {
       lo = Some("10"), hi = Some("20"))
     val rb = SnapshotTable.readWhere(spark, root, "b",
       lo = Some("10"), hi = Some("20"))
-    assert(ra.inputFiles.length < total,
-      s"a-band opened ${ra.inputFiles.length} of $total")
-    assert(rb.inputFiles.length < total,
-      s"b-band opened ${rb.inputFiles.length} of $total")
+    assert(plannedFiles(ra).length < total,
+      s"a-band opened ${plannedFiles(ra).length} of $total")
+    assert(plannedFiles(rb).length < total,
+      s"b-band opened ${plannedFiles(rb).length} of $total")
     assert(ra.count() ==
       df.filter(col("a") >= 10 && col("a") <= 20).count())
     assert(rb.count() ==
       df.filter(col("b") >= 10 && col("b") <= 20).count())
     // point lookups on the SECOND dimension ride the same box stats
     val rk = SnapshotTable.readKeys(spark, root, "b", Seq(5).toDF("b"))
-    assert(rk.inputFiles.length < total,
-      s"b-point opened ${rk.inputFiles.length} of $total")
+    assert(plannedFiles(rk).length < total,
+      s"b-point opened ${plannedFiles(rk).length} of $total")
     assert(rk.count() == 200)
     // a BOX predicate prunes on both dimensions at once: the kept set
     // is the intersection, so it opens no more files than either band
     val box = SnapshotTable.readWhereDims(spark, root,
       Seq(("a", Some("10"), Some("20")), ("b", Some("10"), Some("20"))))
-    assert(box.inputFiles.length <=
-      math.min(ra.inputFiles.length, rb.inputFiles.length),
-      s"box opened ${box.inputFiles.length} files, bands opened " +
-        s"${ra.inputFiles.length}/${rb.inputFiles.length}")
+    assert(plannedFiles(box).length <=
+      math.min(plannedFiles(ra).length, plannedFiles(rb).length),
+      s"box opened ${plannedFiles(box).length} files, bands opened " +
+        s"${plannedFiles(ra).length}/${plannedFiles(rb).length}")
     assert(box.count() == df.filter(col("a") >= 10 && col("a") <= 20 &&
       col("b") >= 10 && col("b") <= 20).count())
   }
@@ -1196,17 +1196,17 @@ class SnapshotTableSpec extends SparkSpec {
       lo = Some("4"), hi = Some("9"))
     val (ra, rb, rc) = (band("a"), band("b"), band("c"))
     for ((r, n) <- Seq((ra, "a"), (rb, "b"), (rc, "c")))
-      assert(r.inputFiles.length < total,
-        s"$n-band opened ${r.inputFiles.length} of $total")
+      assert(plannedFiles(r).length < total,
+        s"$n-band opened ${plannedFiles(r).length} of $total")
     for ((r, k) <- Seq((ra, "a"), (rb, "b"), (rc, "c")))
       assert(r.count() ==
         df.filter(col(k) >= 4 && col(k) <= 9).count())
     val box = SnapshotTable.readWhereDims(spark, root, Seq(
       ("a", Some("4"), Some("9")), ("b", Some("4"), Some("9")),
       ("c", Some("4"), Some("9"))))
-    assert(box.inputFiles.length <= Seq(ra, rb, rc)
-        .map(_.inputFiles.length).min,
-      s"3-D box opened ${box.inputFiles.length} files")
+    assert(plannedFiles(box).length <= Seq(ra, rb, rc)
+        .map(plannedFiles(_).length).min,
+      s"3-D box opened ${plannedFiles(box).length} files")
     assert(box.count() == df.filter(col("a").between(4, 9) &&
       col("b").between(4, 9) && col("c").between(4, 9)).count())
   }
@@ -1280,7 +1280,7 @@ class SnapshotTableSpec extends SparkSpec {
     val total = entries.size
     val res = SnapshotTable.readKeys(spark, root, "u",
       Seq(42L, 4242L).toDF("u"))
-    assert(res.inputFiles.length < total,
+    assert(plannedFiles(res).length < total,
       "pruning must still work after the merge")
     // lookup keys wider than the table's int key: 5 billion cannot be
     // an Int — it must simply match nothing (try_cast), not throw
@@ -1335,8 +1335,8 @@ class SnapshotTableSpec extends SparkSpec {
     // most one from-file (keys 1..50 are co-clustered), never O(table)
     val added = SnapshotTable.manifest(spark, root, 2L).map(_.path)
       .toSet -- v1Files.map(_.path).toSet
-    assert(d.inputFiles.length <= added.size + 1,
-      s"O(delta) diff opened ${d.inputFiles.length} files " +
+    assert(plannedFiles(d).length <= added.size + 1,
+      s"O(delta) diff opened ${plannedFiles(d).length} files " +
         s"(${added.size} added + 1 affected allowed)")
     // and it must agree with the exact bag diff, row for row
     val exactIns = SnapshotTable.readVersion(spark, root, 2L)
@@ -1361,8 +1361,8 @@ class SnapshotTableSpec extends SparkSpec {
     assert(total > 1, "table must span multiple files to prove pruning")
     val res = SnapshotTable.readKeys(spark, root, "u",
       Seq(42L, 4242L).toDF("u"))
-    assert(res.inputFiles.length < total,
-      s"bloom lookup opened ${res.inputFiles.length} of $total files")
+    assert(plannedFiles(res).length < total,
+      s"bloom lookup opened ${plannedFiles(res).length} of $total files")
     val got = res.select("k", "u").collect()
       .map(r => (r.getInt(0), r.getLong(1))).sorted.toSeq
     val want = df.filter(col("u").isin(42L, 4242L))
@@ -1402,8 +1402,8 @@ class SnapshotTableSpec extends SparkSpec {
     assert(total > 1, "view must span multiple files to prove pruning")
     val res = SnapshotTable.readKeys(spark, iv.viewRoot, "k",
       Seq(7, 8, 9).toDF("k"))
-    assert(res.inputFiles.length < total,
-      s"serving read ${res.inputFiles.length} of $total view files")
+    assert(plannedFiles(res).length < total,
+      s"serving read ${plannedFiles(res).length} of $total view files")
     val ns = res.select("k", "n").collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     // base: 20000 rows over 4000 groups = 5 each; appended batch adds
@@ -1467,7 +1467,7 @@ class SnapshotTableSpec extends SparkSpec {
     val got = SnapshotTable.readWhere(spark, root, "o_orderkey",
       lo = Some("1000"), hi = Some("5000"))
     // the scan only opens kept files
-    val opened = got.select(input_file_name()).distinct()
+    val opened = got.select(col("_file")).distinct()
       .as[String].collect().toSet
     val keptPaths = kept.map(e =>
       new org.apache.hadoop.fs.Path(root, e.path).toString).toSet
@@ -1494,8 +1494,8 @@ class SnapshotTableSpec extends SparkSpec {
       .filter(col("o_orderkey").between(1000L, 1200L))
       .select("o_orderkey")
     val res = SnapshotTable.readKeys(spark, root, "o_orderkey", wanted)
-    assert(res.inputFiles.length < totalFiles,
-      s"lookup read ${res.inputFiles.length} of $totalFiles files — " +
+    assert(plannedFiles(res).length < totalFiles,
+      s"lookup read ${plannedFiles(res).length} of $totalFiles files — " +
         "stats pruned nothing")
     val keySet = wanted.as[Long].collect().toSet
     val got = res.select("o_orderkey").as[Long].collect().sorted.toSeq
@@ -1591,7 +1591,7 @@ class SnapshotTableSpec extends SparkSpec {
     assert(got == (1 to 10000).toSeq)
     val pruned = SnapshotTable.readWhere(spark, root, "k",
       lo = Some("1"), hi = Some("100"))
-    assert(pruned.inputFiles.length < entries.size,
+    assert(plannedFiles(pruned).length < entries.size,
       "per-rolled-file stats must prune range reads")
     assert(pruned.count() == 100)
   }

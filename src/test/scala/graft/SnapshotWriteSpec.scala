@@ -82,7 +82,7 @@ class SnapshotWriteSpec extends SparkSpec {
     // opens fewer data files than the table holds
     val pruned = SnapshotTable.readWhere(spark, root, "k",
       Some("25000"), Some("25100"))
-    assert(pruned.inputFiles.length < entries.size)
+    assert(plannedFiles(pruned).length < entries.size)
     assert(pruned.count() == 101)
   }
 
@@ -103,7 +103,7 @@ class SnapshotWriteSpec extends SparkSpec {
     // a key that exists only in the OLD half: blooms skip new files
     val lookup = SnapshotTable.readKeys(spark, root, "user",
       Seq("u7").toDF("user"))
-    assert(lookup.inputFiles.length < entries.size,
+    assert(plannedFiles(lookup).length < entries.size,
       "bloom pruning must skip files that cannot hold the key")
     assert(lookup.count() == base.filter($"user" === "u7").count())
   }

@@ -23,4 +23,19 @@ object TestSpark {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sfDir: String = TestSpark.sfDir
+
+  /** The distinct data files the graft-snapshot scans in `df`'s
+    * optimized plan keep after pruning, as absolute paths. Fails when
+    * the plan holds no such scan, so a "fewer files" bound can never
+    * pass on a plan that reads around the connector
+    * (`Dataset.inputFiles` reports nothing for a DSv2 scan). */
+  def plannedFiles(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    val scans = df.queryExecution.optimizedPlan.collectWithSubqueries {
+      case r: org.apache.spark.sql.execution.datasources.v2
+          .DataSourceV2ScanRelation => r.scan
+    }.collect { case s: graft.sources.connector.GraftScan => s }
+    assert(scans.nonEmpty, "no graft-snapshot scan in the plan:\n" +
+      df.queryExecution.optimizedPlan)
+    scans.flatMap(_.plannedFiles).distinct
+  }
 }
