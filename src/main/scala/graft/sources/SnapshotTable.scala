@@ -149,26 +149,7 @@ object SnapshotTable {
     * its reads and writes run with, so a scheme or credential set on
     * one session resolves for that session's tables. */
   private[sources] def fs(spark: SparkSession, root: String): FileSystem =
-    new Path(root).getFileSystem(sessionHadoopConf(spark))
-
-  // Building a session's Hadoop conf copies the whole context conf;
-  // metadata calls resolve a filesystem many times per query, so the
-  // conf is kept per session and rebuilt when the session's settings
-  // change.
-  private val hadoopConfs = new java.util.WeakHashMap[SparkSession,
-    (Map[String, String], org.apache.hadoop.conf.Configuration)]()
-
-  private def sessionHadoopConf(spark: SparkSession)
-  : org.apache.hadoop.conf.Configuration = {
-    val settings = spark.sessionState.conf.getAllConfs
-    hadoopConfs.synchronized {
-      Option(hadoopConfs.get(spark)).filter(_._1 == settings).fold {
-        val c = spark.sessionState.newHadoopConf()
-        hadoopConfs.put(spark, (settings, c))
-        c
-      }(_._2)
-    }
-  }
+    new Path(root).getFileSystem(connector.SessionHadoopConf.conf(spark))
 
   private def commitsDir(root: String) = new Path(root, "_commits")
   private def manifestsDir(root: String) = new Path(root, "_manifests")
@@ -711,7 +692,7 @@ object SnapshotTable {
     val name = "part-00000-0.snappy.parquet"
     val p = new Path(seg, name)
     connector.GraftDataWriter.nativeWriter(p, shaped.schema,
-      spark.sessionState.newHadoopConf()).close()
+      connector.SessionHadoopConf.conf(spark)).close()
     (seg, Seq(FileEntry(s"_data/${seg.getName}/$name", clusterKey,
       None, None, rows = Some(0L),
       bytes = Some(fs(spark, root).getFileStatus(p).getLen))))
@@ -719,7 +700,7 @@ object SnapshotTable {
 
   /** Runs one native staging job and returns the stats of every file
     * it wrote. Each task of `shaped` feeds its rows to the connector
-    * writer `newWriter` builds from the job's conf broadcast, its
+    * writer `newWriter` builds from the session's conf broadcast, its
     * partition id and its task attempt id, one layout per caller:
     *  - clustered, Z-ordered and plain segments ([[stageSegment]]):
     *    [[connector.GraftDataWriter]], one file per task, rolling at
@@ -734,38 +715,57 @@ object SnapshotTable {
     * `label`. A failed task attempt aborts its writer, which deletes
     * every file the attempt wrote; a
     * failed job deletes the whole segment, so files of its succeeded
-    * tasks do not wait for vacuum. The broadcast is destroyed when
-    * the job ends either way. */
+    * tasks do not wait for vacuum. */
   private def stageFiles(spark: SparkSession, root: String, seg: Path,
-      shaped: DataFrame, label: String)(
-      newWriter: (org.apache.spark.broadcast.Broadcast[
-        connector.SerializableHadoopConf], Int, Long) =>
-        org.apache.spark.sql.connector.write.DataWriter[
-          org.apache.spark.sql.catalyst.InternalRow])
+      shaped: DataFrame, label: String)(newWriter: StageWriter)
   : Seq[InlineFileStats] = {
-    val hc = connector.SerializableHadoopConf.broadcast(spark)
+    val task = new StageTask(connector.SessionHadoopConf.broadcast(spark),
+      newWriter)
     val qe = shaped.queryExecution
     try describedJobs(spark, label) {
       org.apache.spark.sql.execution.SQLExecution
         .withNewExecutionId(qe, Some(label)) {
-        qe.toRdd.mapPartitionsWithIndex { (pid, it) =>
-          val tc = org.apache.spark.TaskContext.get()
-          val w = newWriter(hc, pid, if (tc == null) 0L else tc.taskAttemptId())
-          try {
-            while (it.hasNext) w.write(it.next())
-            w.commit().asInstanceOf[connector.GraftTaskFiles].files.iterator
-          } catch {
-            case e: Throwable =>
-              try w.abort() catch { case s: Throwable => e.addSuppressed(s) }
-              throw e
-          } finally w.close()
-        }.collect().toSeq
+        val rdd = qe.toRdd
+        val written = new Array[Seq[InlineFileStats]](rdd.getNumPartitions)
+        spark.sparkContext.runJob(rdd, task, written.indices,
+          (pid: Int, files: Seq[InlineFileStats]) => written(pid) = files)
+        written.toSeq.flatten
       }
     } catch {
       case e: Throwable =>
         fs(spark, root).delete(seg, true)
         throw e
-    } finally hc.destroy()
+    }
+  }
+
+  private type StageWriter = (org.apache.spark.broadcast.Broadcast[
+    connector.SerializableHadoopConf], Int, Long) =>
+    org.apache.spark.sql.connector.write.DataWriter[
+      org.apache.spark.sql.catalyst.InternalRow]
+
+  /** [[stageFiles]]' task body, run directly by `runJob`. A named
+    * class, not a lambda: Spark's closure cleaner reads and scans the
+    * class file that declares a lambda on every job it cleans, and for
+    * a lambda declared here (or RDD.collect's, declared in RDD and
+    * SparkContext) that is a class file of hundreds of KB per job. */
+  private final class StageTask(hc: org.apache.spark.broadcast.Broadcast[
+      connector.SerializableHadoopConf], newWriter: StageWriter)
+    extends ((org.apache.spark.TaskContext,
+      Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
+      Seq[InlineFileStats]) with Serializable {
+    override def apply(tc: org.apache.spark.TaskContext,
+        it: Iterator[org.apache.spark.sql.catalyst.InternalRow])
+    : Seq[InlineFileStats] = {
+      val w = newWriter(hc, tc.partitionId(), tc.taskAttemptId())
+      try {
+        while (it.hasNext) w.write(it.next())
+        w.commit().asInstanceOf[connector.GraftTaskFiles].files
+      } catch {
+        case e: Throwable =>
+          try w.abort() catch { case s: Throwable => e.addSuppressed(s) }
+          throw e
+      } finally w.close()
+    }
   }
 
   /** Runs `body` with `label` as the description of every Spark job it

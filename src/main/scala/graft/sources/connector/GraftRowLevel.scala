@@ -304,10 +304,7 @@ private[connector] class GraftDeltaBatchWrite(root: String,
   private val tombSpec = SnapshotTable.inlineStatsSpec(
     SparkSession.active, keySchema, Some(key), None)
 
-  // session Hadoop conf, broadcast once per write job and destroyed
-  // when the job commits or aborts (see GraftBatchWrite)
-  private val hconf = SerializableHadoopConf.broadcast(SparkSession.active)
-  private lazy val release: Unit = hconf.destroy()
+  private val hconf = SessionHadoopConf.broadcast(SparkSession.active)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
   : DeltaWriterFactory = new GraftDeltaWriterFactory(dataSeg.toString,
@@ -317,37 +314,35 @@ private[connector] class GraftDeltaBatchWrite(root: String,
     else -1,
     bucketSpec.getOrElse(0), dataSpec, tombSpec, hconf)
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    try {
-      val spark = SparkSession.active
-      val dataFiles = messages.toSeq.collect {
-        case GraftDeltaTaskFiles(ds, _) => ds }.flatten
-      val tombFiles = messages.toSeq.collect {
-        case GraftDeltaTaskFiles(_, ts) => ts }.flatten
-      val f = SnapshotTable.fs(spark, root)
-      if (dataFiles.nonEmpty || tombFiles.nonEmpty) {
-        val batchSchema =
-          if (dataFiles.isEmpty) StructType(Nil) else rowSchema
-        SnapshotTable.appendDeltaStaged(spark, root,
-          Seq(dataSeg -> dataFiles, tombSeg -> tombFiles)
-            .collect { case (s, fs) if fs.nonEmpty => s },
-          SnapshotTable.stagedEntries(dataSeg, dataFiles,
-            ck.orElse(Some(key)), bk),
-          SnapshotTable.stagedEntries(tombSeg, tombFiles, Some(key), None),
-          key, batchSchema)
-      }
-      // nothing matched and nothing inserted, or one side is empty:
-      // clean the staging dirs no manifest lists
-      if (dataFiles.isEmpty) f.delete(dataSeg, true)
-      if (tombFiles.isEmpty) f.delete(tombSeg, true)
-    } finally release
+  override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    val spark = SparkSession.active
+    val dataFiles = messages.toSeq.collect {
+      case GraftDeltaTaskFiles(ds, _) => ds }.flatten
+    val tombFiles = messages.toSeq.collect {
+      case GraftDeltaTaskFiles(_, ts) => ts }.flatten
+    val f = SnapshotTable.fs(spark, root)
+    if (dataFiles.nonEmpty || tombFiles.nonEmpty) {
+      val batchSchema =
+        if (dataFiles.isEmpty) StructType(Nil) else rowSchema
+      SnapshotTable.appendDeltaStaged(spark, root,
+        Seq(dataSeg -> dataFiles, tombSeg -> tombFiles)
+          .collect { case (s, fs) if fs.nonEmpty => s },
+        SnapshotTable.stagedEntries(dataSeg, dataFiles,
+          ck.orElse(Some(key)), bk),
+        SnapshotTable.stagedEntries(tombSeg, tombFiles, Some(key), None),
+        key, batchSchema)
+    }
+    // nothing matched and nothing inserted, or one side is empty:
+    // clean the staging dirs no manifest lists
+    if (dataFiles.isEmpty) f.delete(dataSeg, true)
+    if (tombFiles.isEmpty) f.delete(tombSeg, true)
+  }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    try {
-      val f = SnapshotTable.fs(SparkSession.active, root)
-      f.delete(dataSeg, true)
-      f.delete(tombSeg, true)
-    } finally release
+  override def abort(messages: Array[WriterCommitMessage]): Unit = {
+    val f = SnapshotTable.fs(SparkSession.active, root)
+    f.delete(dataSeg, true)
+    f.delete(tombSeg, true)
+  }
 }
 
 private[connector] class GraftDeltaWriterFactory(dataSegAbs: String,
@@ -436,9 +431,8 @@ private[connector] class GraftReplaceBatchWrite(root: String,
     partitionKeys.drop(1))
 
   // the session Hadoop conf (its parquet.* sizing too) for the
-  // rewrite tasks, released like GraftBatchWrite's
-  private val hconf = SerializableHadoopConf.broadcast(SparkSession.active)
-  private lazy val release: Unit = hconf.destroy()
+  // rewrite tasks
+  private val hconf = SessionHadoopConf.broadcast(SparkSession.active)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
   : DataWriterFactory =
@@ -450,23 +444,21 @@ private[connector] class GraftReplaceBatchWrite(root: String,
     else new GraftWriterFactory(seg.toString, schema.json, statsSpec,
       hconf)
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    try {
-      val spark = SparkSession.active
-      val files = GraftTaskFiles.of(messages)
-      val removed = op.plannedFiles.map(_.path).toSet
-      if (files.isEmpty && removed.isEmpty)
-        // nothing read, nothing written (e.g. the condition pruned
-        // every group and no NOT MATCHED insert fired): publish no
-        // version
-        SnapshotTable.fs(spark, root).delete(seg, true)
-      else SnapshotTable.replaceFilesStaged(spark, root, seg,
-        SnapshotTable.stagedEntries(seg, files, statsKey, bloomKey,
-          partitionTail = partitionKeys.drop(1)),
-        removed, version, schema)
-    } finally release
+  override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    val spark = SparkSession.active
+    val files = GraftTaskFiles.of(messages)
+    val removed = op.plannedFiles.map(_.path).toSet
+    if (files.isEmpty && removed.isEmpty)
+      // nothing read, nothing written (e.g. the condition pruned
+      // every group and no NOT MATCHED insert fired): publish no
+      // version
+      SnapshotTable.fs(spark, root).delete(seg, true)
+    else SnapshotTable.replaceFilesStaged(spark, root, seg,
+      SnapshotTable.stagedEntries(seg, files, statsKey, bloomKey,
+        partitionTail = partitionKeys.drop(1)),
+      removed, version, schema)
+  }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    try SnapshotTable.fs(SparkSession.active, root).delete(seg, true)
-    finally release
+    SnapshotTable.fs(SparkSession.active, root).delete(seg, true)
 }

@@ -257,7 +257,8 @@ private[connector] class GraftSnapshotTable(root: String, version: Long,
           "spark.readStream.format(\"graft-snapshot\")" +
           ".option(\"path\", root).option(\"changes\", \"true\") — " +
           "for batch change sets use t.changes / t.delete_keys")
-      val scan = new GraftChangesScan(root, tableSchema,
+      val scan = new GraftChangesScan(SparkSession.active, root,
+        tableSchema,
         Option(options.get("startingVersion")),
         Option(options.get("branch")),
         options.getBoolean("preImages", false),
@@ -1513,8 +1514,8 @@ private[connector] object StreamLimits {
   * deletes) is not expressible as an append stream, and the stream
   * fails with a pointer instead of silently re-emitting rewritten
   * rows — Delta draws the same line (`ignoreChanges`). */
-private[connector] class GraftMicroBatchStream(root: String,
-    required: StructType, startingVersion: Option[String] = None,
+private[connector] class GraftMicroBatchStream(spark: SparkSession,
+    root: String, required: StructType, startingVersion: Option[String] = None,
     branch: Option[String] = None,
     limits: StreamLimits = StreamLimits.none)
   extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
@@ -1523,8 +1524,6 @@ private[connector] class GraftMicroBatchStream(root: String,
   import org.apache.spark.sql.connector.read.streaming.{Offset,
     ReadLimit, ReadMaxFiles, ReadMaxBytes, ReadMaxRows, ReadMinRows,
     CompositeReadLimit}
-
-  private def spark = SparkSession.active
 
   /** The stream's moving tip: main's current version, or — with
     * `option("branch", name)` — that branch's head, so a stream can
@@ -1783,7 +1782,7 @@ private[connector] class GraftMicroBatchStream(root: String,
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory(required.json, Array.empty,
-      SerializableHadoopConf.broadcast(SparkSession.active))
+      SessionHadoopConf.broadcast(spark))
 }
 
 /** The CHANGELOG streaming scan (`changes=true`): each micro-batch
@@ -1791,8 +1790,8 @@ private[connector] class GraftMicroBatchStream(root: String,
   * twin of the catalog's `t.changes` / `t.delete_keys` batch tables.
   * Batch reads are refused with the pointer (a changelog is a stream
   * by nature; the batch surface already exists). */
-private[connector] class GraftChangesScan(root: String,
-    cdcSchema: StructType, streamStart: Option[String],
+private[connector] class GraftChangesScan(spark: SparkSession,
+    root: String, cdcSchema: StructType, streamStart: Option[String],
     streamBranch: Option[String] = None,
     preImages: Boolean = false,
     limits: StreamLimits = StreamLimits.none)
@@ -1806,7 +1805,7 @@ private[connector] class GraftChangesScan(root: String,
         "t.delete_keys tables or SnapshotTable.diff(from, to)")
   override def toMicroBatchStream(checkpointLocation: String)
   : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new GraftChangesMicroBatchStream(root, cdcSchema, streamStart,
+    new GraftChangesMicroBatchStream(spark, root, cdcSchema, streamStart,
       streamBranch, preImages, limits)
 }
 
@@ -1829,14 +1828,13 @@ private[connector] class GraftChangesScan(root: String,
   * `t.changes` draws. The per-event columns ride the reader's
   * constant-fill channel (the initial-default machinery), so no data
   * is copied or widened on disk. */
-private[connector] class GraftChangesMicroBatchStream(root: String,
+private[connector] class GraftChangesMicroBatchStream(
+    spark: SparkSession, root: String,
     cdcSchema: StructType, startingVersion: Option[String] = None,
     branch: Option[String] = None, preImages: Boolean = false,
     limits: StreamLimits = StreamLimits.none)
-  extends GraftMicroBatchStream(root, cdcSchema, startingVersion,
+  extends GraftMicroBatchStream(spark, root, cdcSchema, startingVersion,
     branch, limits) {
-
-  private def session = SparkSession.active
 
   /** Changelog batches carry WHOLE source versions, always. The base
     * stream's admission control may stop mid-version (`version#index`)
@@ -1871,8 +1869,8 @@ private[connector] class GraftChangesMicroBatchStream(root: String,
     if (vE < vS || (vE == vS && so.index < 0)) return Array.empty
     val before =
       if (vS == 0L) Seq.empty
-      else SnapshotTable.readManifestFull(session, root, vS)._1
-    val after = SnapshotTable.readManifestFull(session, root, vE)._1
+      else SnapshotTable.readManifestFull(spark, root, vS)._1
+    val after = SnapshotTable.readManifestFull(spark, root, vE)._1
     val beforePaths = before.map(_.path).toSet
     val afterPaths = after.map(_.path).toSet
     val dropped = before.filter(e => !afterPaths.contains(e.path))
@@ -2338,7 +2336,7 @@ private[graft] class GraftScan(@transient spark: SparkSession,
     * for the accretive-range rule. */
   override def toMicroBatchStream(checkpointLocation: String)
   : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new GraftMicroBatchStream(root, required, streamStart,
+    new GraftMicroBatchStream(spark, root, required, streamStart,
       streamBranch, streamLimits)
 
   /** Can tombstone `t` kill anything in data file `e`? Sequence rule
@@ -2468,7 +2466,7 @@ private[graft] class GraftScan(@transient spark: SparkSession,
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory(required.json,
       if (onPlan.isDefined) Array.empty[Filter] else pushed,
-      SerializableHadoopConf.broadcast(spark),
+      SessionHadoopConf.broadcast(spark),
       spark.sessionState.conf.sessionLocalTimeZone)
 
   /** Size-accurate planning: a v2 scan without statistics defaults to
@@ -2978,7 +2976,7 @@ private[graft] class GraftColumnarReader(file: String,
   }
   import org.apache.spark.sql.vectorized.ColumnarBatch
   import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
-  import org.apache.hadoop.mapred.FileSplit
+  import org.apache.hadoop.mapred.{FileSplit, JobConf}
   import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
   import org.apache.hadoop.mapreduce.TaskAttemptID
 
@@ -2987,8 +2985,10 @@ private[graft] class GraftColumnarReader(file: String,
   // timestamps): hand ParquetReadSupport the required CATALYST schema
   // and let it clip the file schema — a required column the file
   // predates comes back as a constant-NULL vector, so schema
-  // evolution never leaves the columnar path
-  private val conf = new Configuration(base)
+  // evolution never leaves the columnar path. The reader's private
+  // copy of the shared session conf is a JobConf, the one copy per
+  // file: TaskAttemptContextImpl copies any other Configuration again
+  private val conf = new JobConf(base)
   conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requested.json)
   conf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
     classOf[ParquetReadSupport].getName)

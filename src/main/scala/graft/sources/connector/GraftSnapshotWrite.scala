@@ -178,11 +178,7 @@ private[connector] class GraftBatchWrite(root: String,
   private val statsSpec = SnapshotTable.inlineStatsSpec(
     SparkSession.active, schema, statsKey, bloomKey, gridExtra)
 
-  // session Hadoop conf, broadcast once per write job (see
-  // SerializableHadoopConf) and destroyed when the job commits or
-  // aborts; a lazy val, because Spark aborts after a failed commit
-  private val hconf = SerializableHadoopConf.broadcast(SparkSession.active)
-  private lazy val release: Unit = hconf.destroy()
+  private val hconf = SessionHadoopConf.broadcast(SparkSession.active)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
   : DataWriterFactory = (bucketSpec, partitionSpec) match {
@@ -198,23 +194,21 @@ private[connector] class GraftBatchWrite(root: String,
       statsSpec, hconf)
   }
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    try {
-      val spark = SparkSession.active
-      val files = GraftTaskFiles.of(messages)
-      if (files.nonEmpty || replace) {
-        val entries = SnapshotTable.stagedEntries(seg, files, statsKey,
-          bloomKey, partitionTail = partitionSpec.toSeq.flatten.drop(1))
-        if (replace)
-          SnapshotTable.replaceStaged(spark, root, seg, entries, schema)
-        else
-          SnapshotTable.appendStaged(spark, root, seg, entries, schema)
-      }
-    } finally release
+  override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    val spark = SparkSession.active
+    val files = GraftTaskFiles.of(messages)
+    if (files.nonEmpty || replace) {
+      val entries = SnapshotTable.stagedEntries(seg, files, statsKey,
+        bloomKey, partitionTail = partitionSpec.toSeq.flatten.drop(1))
+      if (replace)
+        SnapshotTable.replaceStaged(spark, root, seg, entries, schema)
+      else
+        SnapshotTable.appendStaged(spark, root, seg, entries, schema)
+    }
+  }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    try SnapshotTable.fs(SparkSession.active, root).delete(seg, true)
-    finally release
+    SnapshotTable.fs(SparkSession.active, root).delete(seg, true)
 }
 
 private[connector] class GraftBucketedWriterFactory(segAbs: String,

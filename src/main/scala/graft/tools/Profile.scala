@@ -11,8 +11,10 @@ import org.apache.spark.storage.BroadcastBlockId
 
 /** Dev tooling: run a named SparkEntry query under a counting listener
   * and print jobs / stages / tasks / shuffle bytes / codegen compiles
-  * / broadcasts still live at query end (a count that grows with each
-  * run of a query is a leak) — the job-count evidence the
+  * / Hadoop-conf broadcasts minted during the query (0 once the
+  * session's one is built) / broadcasts still live at query end (a
+  * GC-dependent total: task binaries go only when a GC collects their
+  * stage) — the job-count evidence the
   * optimization guide asks for on commit-heavy paths, where the
   * serving plan alone cannot show the work that no longer happens
   * (staging passes, classification jobs, recompiled generated
@@ -93,6 +95,8 @@ object Profile {
     // read as a delta around the query
     val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
     val compiles0 = compiles.getCount
+    import graft.sources.connector.SessionHadoopConf
+    val mints0 = SessionHadoopConf.mints
     val wall0 = System.currentTimeMillis()
     val t0 = System.nanoTime()
     graft.SparkEntry.queries(name)(spark, sfDir)
@@ -104,6 +108,7 @@ object Profile {
       f"stages=${stages.get} tasks=${tasks.get} " +
       f"shuffle_write=${shufW.get} shuffle_read=${shufR.get} " +
       f"compiles=${compiles.getCount - compiles0} " +
+      f"confBroadcasts=${SessionHadoopConf.mints - mints0} " +
       f"broadcasts=${pieces.values.asScala.toSet.size}")
     // timeline with inter-job driver gaps (the time no job was running)
     val tl = timeline.asScala.toSeq.sortBy(_._2._1)

@@ -457,6 +457,7 @@ class EventPipelineSpec extends SparkSpec {
 
   test("lakehouse loop job budget: a warmed-up snapshotMvSink round " +
       "with replayed keys launches at most 12 Spark jobs") {
+    import graft.sources.connector.SessionHadoopConf
     implicit val sc = spark.sqlContext
     val base = java.nio.file.Files
       .createTempDirectory("graft-jobs").toString
@@ -518,14 +519,20 @@ class EventPipelineSpec extends SparkSpec {
         barrier(s"start$r")
         jobs.set(0)
         val compiled0 = compiles.getCount
+        val minted0 = SessionHadoopConf.mints
         offer()
         val compiled = compiles.getCount - compiled0
+        val minted = SessionHadoopConf.mints - minted0
         barrier(s"end$r")
         // each round starts a query on a fresh session clone; run on the
         // clone, the sink's jobs missed the codegen cache (keyed on the
         // per-session task classloader) and recompiled ~38 classes
         assert(compiled == 0,
           s"round $r compiled $compiled generated classes, expected 0")
+        // the session's one Hadoop-conf broadcast serves every scan and
+        // staging job; minting one per job was 11 per round
+        assert(minted == 0,
+          s"round $r minted $minted conf broadcasts, expected 0")
         // 3 for the sink's dedup + emptiness check, 4 for the merge
         // (key collection, range sample, shuffle, write) and 5 for the
         // view refresh. With the broadcast-join key classification and

@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source-level guards over src/main/scala: the engine's settable
   * `spark.graft.*` keys, pinned (a new knob has to be added here, next
   * to the three that remain), the connector's one parquet decoder
-  * (a second, parquet-mr record decoder has to edit this spec), and
-  * SnapshotTable's one read route, the connector's scan. */
+  * (a second, parquet-mr record decoder has to edit this spec),
+  * SnapshotTable's one read route, the connector's scan, and the
+  * session Hadoop conf's one holder. */
 class KnobGuardSpec extends AnyFunSuite {
 
   private def sources(d: java.io.File): Seq[java.io.File] =
@@ -54,5 +55,29 @@ class KnobGuardSpec extends AnyFunSuite {
     val hits = Seq("read.schema(", "input_file_name", "\"left\"")
       .filter(text.contains)
     assert(hits.isEmpty, s"a second read engine in SnapshotTable: $hits")
+  }
+
+  test("graft.sources builds and broadcasts the session Hadoop conf " +
+      "only in its holder") {
+    val holder = "SerializableHadoopConf.scala"
+    val hits = mainSources().collect {
+      case (f, text) if f.getPath.contains("graft/sources") &&
+          f.getName != holder &&
+          Seq("newHadoopConf()", "SerializableHadoopConf.broadcast(",
+            "new SerializableHadoopConf(").exists(text.contains) =>
+        f.getPath
+    }
+    assert(hits.isEmpty, s"a conf built or broadcast outside $holder: $hits")
+  }
+
+  test("SnapshotTable passes no lambda to mapPartitions") {
+    // the closure cleaner re-reads the declaring class file of a
+    // lambda on every job; here that class is all of SnapshotTable
+    val text = mainSources().collectFirst {
+      case (f, t) if f.getName == "SnapshotTable.scala" => t
+    }.get
+    val lambda = "mapPartitions\\w*\\s*[({]\\s*(\\(|_|case\\b|\\w+\\s*=>)".r
+    val hits = lambda.findAllIn(text).toList
+    assert(hits.isEmpty, s"a mapPartitions lambda in SnapshotTable: $hits")
   }
 }

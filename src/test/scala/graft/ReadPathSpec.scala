@@ -37,6 +37,16 @@ class ReadPathSpec extends SparkSpec {
     val band = SnapshotTable.readWhere(other, root, "k", Some("10"),
       Some("19")).count()
     assert(band == 10L)
+    // a streaming read tails the table under the session whose scan
+    // built the stream
+    val q = other.readStream.format("graft-snapshot").option("path", root)
+      .load().writeStream.format("memory").queryName("graftfx_tail")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    try q.awaitTermination() finally q.stop()
+    val streamed = other.table("graftfx_tail").collect()
+      .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    assert(streamed == rows)
   }
 
   test("tinyint and smallint columns round-trip through read, readWhere " +

@@ -9,12 +9,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.{MaterializedView, SnapshotTable}
+import graft.sources.connector.SessionHadoopConf
 
 /** The dashboard serving path: `readFresh` answers a repeat read at
   * unchanged versions from its memo, and `readKeys` over a literal key
   * list plans with no job, runs one, and reuses its compiled code for a
   * new key set — with the same answers as a plain GROUP BY and a plain
-  * semi join. */
+  * semi join. A warmed table read mints no Hadoop-conf broadcast. */
 class ServingPathSpec extends SparkSpec {
   import spark.implicits._
 
@@ -150,6 +151,7 @@ class ServingPathSpec extends SparkSpec {
       want(Seq(3L, 1500L)))
     val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
     val compiled0 = compiles.getCount
+    val minted0 = SessionHadoopConf.mints
     val (df, planJobs) = jobsOf {
       val d = lookup(Seq(17L, 1999L))
       d.queryExecution.executedPlan
@@ -161,6 +163,10 @@ class ServingPathSpec extends SparkSpec {
     assert(rows.map(_.toString).toSeq.sorted == want(Seq(17L, 1999L)))
     val compiled = compiles.getCount - compiled0
     assert(compiled == 0, s"a second key set compiled $compiled classes")
+    // the scan ships the session's conf broadcast, minted before
+    assert(SnapshotTable.read(spark, root).count() == 2000L)
+    val minted = SessionHadoopConf.mints - minted0
+    assert(minted == 0, s"warmed table reads minted $minted conf broadcasts")
   }
 
   test("readKeys: NULL, NaN, -0.0, decimal and timestamp keys, listed " +

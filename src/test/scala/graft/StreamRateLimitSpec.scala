@@ -49,7 +49,7 @@ class StreamRateLimitSpec extends SparkSpec {
     SnapshotTable.append(spark, root,
       (41 to 60).map(i => (i.toLong, s"v$i")).toDF("k", "v")
         .repartition(2))                                        // v2: 2 files
-    val stream = new GraftMicroBatchStream(root, schemaOf(root),
+    val stream = new GraftMicroBatchStream(spark, root, schemaOf(root),
       limits = StreamLimits(Some(3), None, None))
     val limit = stream.getDefaultReadLimit
 
@@ -83,7 +83,7 @@ class StreamRateLimitSpec extends SparkSpec {
     SnapshotTable.commit(spark, root,
       (1 to 30).map(i => (i.toLong, s"v$i")).toDF("k", "v")
         .repartition(3))                                        // v1: 3 files
-    val stream = new GraftMicroBatchStream(root, schemaOf(root))
+    val stream = new GraftMicroBatchStream(spark, root, schemaOf(root))
     val o0 = GraftOffset(0)
 
     // rows: 10 per file; cap 15 → first batch exactly one file
@@ -110,7 +110,7 @@ class StreamRateLimitSpec extends SparkSpec {
     val root = tmpRoot()
     SnapshotTable.commit(spark, root,
       (1 to 10).map(i => (i.toLong, s"v$i")).toDF("k", "v"))    // v1
-    val stream = new GraftMicroBatchStream(root, schemaOf(root),
+    val stream = new GraftMicroBatchStream(spark, root, schemaOf(root),
       limits = StreamLimits(Some(100), None, None))
     stream.prepareForTriggerAvailableNow()
     SnapshotTable.append(spark, root,
@@ -133,7 +133,7 @@ class StreamRateLimitSpec extends SparkSpec {
     SnapshotTable.mergeOnRead(spark, root,
       (1 to 5).map(i => (i.toLong, "upd")).toDF("k", "v"), "k") // v2: +data +tomb
     val cdc = GraftSnapshotSource.withCdcColumns(schemaOf(root))
-    val stream = new GraftChangesMicroBatchStream(root, cdc,
+    val stream = new GraftChangesMicroBatchStream(spark, root, cdc,
       limits = StreamLimits(Some(1), None, None))
     val limit = stream.getDefaultReadLimit
     var o = stream.initialOffset().asInstanceOf[GraftOffset]
@@ -172,7 +172,7 @@ class StreamRateLimitSpec extends SparkSpec {
     SnapshotTable.commit(spark, root,
       (1 to 10).map(i => (i.toLong, s"v$i")).toDF("k", "v")
         .coalesce(1))                                           // v1: 10 rows
-    val held = new GraftMicroBatchStream(root, schemaOf(root),
+    val held = new GraftMicroBatchStream(spark, root, schemaOf(root),
       limits = StreamLimits(None, None, None,
         minRows = Some(25), maxDelayMs = Some(3600000L)))
     val hl = held.getDefaultReadLimit
@@ -191,14 +191,14 @@ class StreamRateLimitSpec extends SparkSpec {
       GraftOffset(3), "30 pending rows >= min=25 must release")
 
     // a lapsed delay releases whatever is pending, however small
-    val impatient = new GraftMicroBatchStream(root, schemaOf(root),
+    val impatient = new GraftMicroBatchStream(spark, root, schemaOf(root),
       limits = StreamLimits(None, None, None,
         minRows = Some(1000000), maxDelayMs = Some(0L)))
     assert(impatient.latestOffset(o0, impatient.getDefaultReadLimit)
       == GraftOffset(3), "maxTriggerDelay=0 must fire immediately")
 
     // min composes with max: once released, the batch is still capped
-    val both = new GraftMicroBatchStream(root, schemaOf(root),
+    val both = new GraftMicroBatchStream(spark, root, schemaOf(root),
       limits = StreamLimits(Some(2), None, None,
         minRows = Some(25), maxDelayMs = Some(3600000L)))
     val bo = both.latestOffset(o0, both.getDefaultReadLimit)
@@ -207,7 +207,7 @@ class StreamRateLimitSpec extends SparkSpec {
       s"released batch must still honor maxFilesPerTrigger=2, got $bo")
 
     // AvailableNow: the gate never wedges a drain
-    val drain = new GraftMicroBatchStream(root, schemaOf(root),
+    val drain = new GraftMicroBatchStream(spark, root, schemaOf(root),
       limits = StreamLimits(None, None, None,
         minRows = Some(1000000), maxDelayMs = Some(3600000L)))
     drain.prepareForTriggerAvailableNow()

@@ -23,7 +23,7 @@ class StreamRenameSpec extends SparkSpec {
       Seq((1L, 10), (2L, 20)).toDF("k", "x").coalesce(1))       // v1
     val startSchema = GraftSnapshotSource.schemaOf(spark, root, 1L)
     assert(startSchema.fieldNames.toSeq == Seq("k", "x"))
-    val stream = new GraftMicroBatchStream(root, startSchema)
+    val stream = new GraftMicroBatchStream(spark, root, startSchema)
     val o0 = stream.initialOffset()
     val o1 = stream.latestOffset()
     // batch 1: pre-rename file, no aliases needed
@@ -43,7 +43,7 @@ class StreamRenameSpec extends SparkSpec {
         s"${p.aliases.toSeq}")
     // and the rows actually decode under the stream's schema
     val factory = new GraftReaderFactory(startSchema.json,
-      Array.empty, SerializableHadoopConf.broadcast(spark))
+      Array.empty, SessionHadoopConf.broadcast(spark))
     val reader = factory.createColumnarReader(b2.head)
     val rows = Iterator.continually(reader)
       .takeWhile(_.next()).flatMap(_.get().rowIterator().asScala)
@@ -70,7 +70,7 @@ class StreamRenameSpec extends SparkSpec {
     // where schemaOf(vE) carries neither 'y' nor any epochs — the
     // regression mode was silently NULL 'y' for the whole replay
     val schema = GraftSnapshotSource.schemaOf(spark, root, 4L)
-    val stream = new GraftMicroBatchStream(root, schema,
+    val stream = new GraftMicroBatchStream(spark, root, schema,
       limits = StreamLimits(Some(1), None, None))
     val limit = stream.getDefaultReadLimit
     val o0 = stream.initialOffset().asInstanceOf[GraftOffset]
@@ -82,7 +82,7 @@ class StreamRenameSpec extends SparkSpec {
       s"pre-rename replay batch must translate via the run-start " +
         s"epochs, got ${p.aliases.toSeq}")
     val factory = new GraftReaderFactory(schema.json, Array.empty,
-      SerializableHadoopConf.broadcast(spark))
+      SessionHadoopConf.broadcast(spark))
     val reader = factory.createColumnarReader(p)
     val rows = Iterator.continually(reader)
       .takeWhile(_.next()).flatMap(_.get().rowIterator().asScala)
